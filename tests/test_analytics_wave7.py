@@ -111,6 +111,15 @@ def test_kcore_matches_pure_python_rederivation(spark, sf_smoke):
         assert r["core_deg"] == len(core[r["node"]]) and r["core_deg"] >= k
 
 
+def test_kcore_result_is_frozen(spark, sf_smoke):
+    """graph_kcore freezes its result inside the iteration scope: the
+    returned plan is a bare checkpoint scan, so the final degree
+    aggregate and sort already ran at the pinned width."""
+    plan = OPS["graph_kcore"].fn(spark, sf_smoke)._jdf.queryExecution().analyzed()
+    assert plan.nodeName() in ("LogicalRDD", "ExistingRDD"), plan.toString()
+    assert plan.children().isEmpty()
+
+
 def test_skew_report_shares_are_consistent(spark, sf_smoke):
     rows = OPS["etl_skew_report"].fn(spark, sf_smoke).collect()
     assert len(rows) == 10

@@ -561,9 +561,10 @@ def test_connected_components_paths_agree(spark, sf_smoke, monkeypatch):
     """The size-gated union-find (small graphs) and the iterative
     min-label propagation (unbounded graphs) must return IDENTICAL
     (node, label) maps — the min-label fixpoint is unique, so this
-    pins both implementations to it.  Forcing the threshold to 0 via
-    SPARK_GRAFT_CC_LOCAL_EDGES exercises the distributed loop on the
-    same edges the small path handles by default."""
+    pins both implementations to it.  Forcing the CC_LOCAL_EDGES
+    threshold to 0 exercises the distributed loop on the same edges the
+    small path handles by default."""
+    from un_datapipeline_spark.operators import advanced
     from un_datapipeline_spark.operators.advanced import (
         _dup_edges,
         connected_components,
@@ -572,7 +573,7 @@ def test_connected_components_paths_agree(spark, sf_smoke, monkeypatch):
     d = load_table(spark, sf_smoke, "documents")
     edges = _dup_edges(d).localCheckpoint()
     small = {r.node: r.label for r in connected_components(edges).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")
+    monkeypatch.setattr(advanced, "CC_LOCAL_EDGES", 0)
     big = {r.node: r.label for r in connected_components(edges).collect()}
     assert small == big
     assert small, "sf0.001 dup graph must be non-empty"

@@ -134,3 +134,60 @@ def test_graft_checkpoint_durability_gate(spark, tmp_path, monkeypatch):
     assert sorted(map(tuple, durable.collect())) == [(i, 2 * i) for i in range(100)]
     written = [p for p in target.rglob("*") if p.is_file()]
     assert written, "reliable checkpoint dir must contain materialized blocks"
+
+
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+def test_iteration_scope_pins_and_restores_width(spark, monkeypatch):
+    """iteration_scope pins the shuffle width to SPARK_GRAFT_ITER_PARTITIONS
+    for its body and restores the caller's width on exit — also when the
+    body raises."""
+    from un_datapipeline_spark.session import iteration_scope
+
+    monkeypatch.setenv("SPARK_GRAFT_ITER_PARTITIONS", "3")
+    before = spark.conf.get(_WIDTH)
+    assert before != "3"
+    with iteration_scope(spark):
+        assert spark.conf.get(_WIDTH) == "3"
+    assert spark.conf.get(_WIDTH) == before
+
+    with pytest.raises(RuntimeError, match="loop body failed"):
+        with iteration_scope(spark):
+            assert spark.conf.get(_WIDTH) == "3"
+            raise RuntimeError("loop body failed")
+    assert spark.conf.get(_WIDTH) == before
+
+
+def test_iteration_scope_static_and_freeze(spark):
+    """A .static() relation is cached inside the scope and released on
+    exit; a .freeze()d result keeps its rows after the scope (and the
+    static relation it was computed from) is gone."""
+    from pyspark.storagelevel import StorageLevel
+
+    from un_datapipeline_spark.session import iteration_scope
+
+    with iteration_scope(spark) as it:
+        static = it.static(spark.range(50).selectExpr("id", "id % 5 AS g"))
+        assert static.storageLevel != StorageLevel.NONE
+        frozen = it.freeze(static.groupBy("g").count())
+    assert static.storageLevel == StorageLevel.NONE
+    assert sorted(map(tuple, frozen.collect())) == [(g, 10) for g in range(5)]
+
+
+def test_connected_components_uses_checkpoint_dir(spark, sf_smoke, tmp_path, monkeypatch):
+    """Every connected_components materialization goes through the
+    durability gate: with SPARK_GRAFT_CHECKPOINT_DIR set, the run writes
+    reliable checkpoint files into that dir.  The dir is also set on the
+    context, because graft_checkpoint keeps a checkpoint dir an earlier
+    test already set there."""
+    from un_datapipeline_spark.operators.advanced import _dup_edges, connected_components
+    from un_datapipeline_spark.tables import load_table
+
+    target = tmp_path / "cc_ckpt"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(target))
+    spark.sparkContext.setCheckpointDir(str(target))
+    labels = connected_components(_dup_edges(load_table(spark, sf_smoke, "documents")))
+    assert labels.count() > 0
+    written = [p for p in target.rglob("*") if p.is_file()]
+    assert written, "connected_components bypassed the checkpoint dir"

@@ -51,46 +51,38 @@ REFRESH_COUNT = 5
 # first, pure refactors last.  (Forced entries are never truncated —
 # see main() — so ordering is about review priority, not survival.)
 FORCE_REFRESH: tuple[str, ...] = (
-    # -- ROUND 13: pruned at round start — CORRECTNESS_r12 re-stamped
-    # ALL 26 r12 forced names green (verified programmatically at the
-    # r13 round boundary: every name present, zero non-green verdicts).
-    # Round-13 OPTIMIZATION edits below, risk-first.  All are code-only
-    # (oracles unchanged) and verified row-identical locally — strict
-    # driver-canonicalizer mirror at sf0.01 AND sf0.1 for the hash ops
-    # (tools/mirror_ops_r13.py), pytest invariants + the partitioning-
-    # invariance pin for the rows-only ones.
+    # -- Pruned: CORRECTNESS_r13 re-stamped all 19 earlier forced names
+    # green.  The iteration-scope / shared-edge-helper edits below,
+    # risk-first.  All are code-only (oracles unchanged).
     #
-    # Structural edits first (new materialization/persist sites):
-    "llm_line_dedup_reconstruct",  # deduped corpus spread + DISK_ONLY
-    #                                materialized once (fed 5 consumers)
-    "graph_label_propagation",   # pinned iteration width; bidir
-    #                              pre-partitioned by join key v + persist
-    "graph_modularity",          # same shared _lpa_state
-    "graph_bfs_layers",          # pinned width; bidir pre-partitioned by
-    #                              u + persist; edge build checkpointed
-    "graph_pagerank",            # pinned iteration width (75.9→16.4 s
-    #                              solo); edges checkpoint → DISK_ONLY
-    "graph_kcore",               # pinned width around the peel loop
-    # parallelize_scan sites (round-robin spread of a 1-task scan's
-    # per-row compute; no-op when the scan parallelizes — pure plan
-    # change, per-row values untouched):
-    "llm_canonical_select",      # _dup_edges gram lane
-    "llm_dedup_cluster",         # same shared _dup_edges site
-    "llm_contamination_check",   # 8-gram + md5 lane
-    "llm_dedup_minhash_ml",      # shingle/LSH pipeline partitioning
-    "fn_xml_roundtrip",          # per-row double parse spread
-    "fn_math",                   # 15 math exprs spread + column prune
-    "fn_cast_types",             # cast battery spread
-    # checkpoint-durability gate (VERDICT r12 item 7): localCheckpoint
-    # call sites switched to session.ckpt — identical local behavior
-    # (pinned by test_graft_checkpoint_durability_gate), but the call
-    # syntax is new code so the old stamps are void:
-    "graph_triangle_count",
-    "graph_local_clustering",
-    "llm_dedup_near_minhash",
-    "llm_neardup_cluster",
-    "llm_doc_fingerprint",
-    "llm_ann_brp_lsh",
+    # Plan changes (work now runs at the pinned iteration width, or a
+    # knob is gone):
+    "graph_kcore",               # final degree table frozen inside the
+    #                              iteration scope (was outside the pin)
+    "graph_label_propagation",   # result frozen inside the scope; the
+    #                              edge build is the shared helper
+    "graph_modularity",          # same shared _lpa_state + scope
+    "llm_dedup_cluster",         # connected_components on the scope;
+    #                              its two env knobs retired
+    "llm_canonical_select",      # same connected_components
+    "llm_neardup_cluster",       # same connected_components
+    # checkpoint-durability gate: the last plain localCheckpoint sites
+    # switched to session.ckpt — identical local behavior, new syntax:
+    "llm_dedup_ngram_jaccard",
+    "llm_dedup_containment",
+    "llm_dedup_incremental",
+    "llm_dedup_simhash",
+    "mm_phash_dedup",
+    "join_runtime_bloom",
+    "llm_ranker_agreement",
+    # pure refactors (same plans, shared helpers):
+    "graph_pagerank",            # iteration scope replaces try/finally
+    "graph_bfs_layers",          # iteration scope + shared edge helper
+    "graph_triangle_count",      # shared _degree_oriented_edges
+    "graph_local_clustering",    # shared _degree_oriented_edges
+    "graph_degree_stats",        # shared _cust_supp_edges
+    "graph_jaccard_neighbors",   # shared _cust_supp_edges
+    "graph_link_predict_aa",     # shared _cust_supp_edges
 )
 
 # Round-10's window overflow mechanism (kept for the procedure doc): when

@@ -18,6 +18,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import ckpt, iteration_scope
 from un_datapipeline_spark.operators.dedup_extras import trigram_array
 from un_datapipeline_spark.tables import (
     capped_text_sql,
@@ -513,44 +514,40 @@ def _dup_edges(d: DataFrame) -> DataFrame:
     return jedges.union(medges).distinct()
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
+# Size gate between the two connected_components paths: dup-edge graphs
+# are a tiny fraction of the corpus (only docs with a candidate pair — 256
+# edges for 60k docs at sf0.1), but every distributed round costs ~1 s of
+# fixed job-scheduling/checkpoint overhead × diameter rounds.  At or below
+# this many undirected edges, exact union-find runs on the driver: the
+# collect is BOUNDED by the constant (never grows with corpus size), and
+# the min-label fixpoint is unique, so both paths return bit-identical
+# labels.  Above it, the iterative key-partitioned propagation is the
+# path that scales to any graph.
+CC_LOCAL_EDGES = 200_000
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, label) with label = min node id in the component, by
     iterative min-label propagation over undirected edges (a, b).
 
-    Shuffle partitions are pinned small for the loop: the edge graph is
-    a tiny fraction of the corpus (only docs with a dup candidate), and
-    every iteration pays per-partition task overhead × rounds — 200
-    near-empty tasks per round dominated the runtime at test scale
-    (15 s → 3 s).  On a cluster, size SPARK_GRAFT_CC_PARTITIONS to the
-    edge count, not the corpus."""
-    import os
-
+    Runs in the shared iteration scope (session.iteration_scope): the
+    edge graph is a tiny fraction of the corpus (only docs with a dup
+    candidate), and every iteration pays per-partition task overhead ×
+    rounds — 200 near-empty tasks per round dominated the runtime at test
+    scale (15 s → 3 s with the pinned width)."""
     spark = edges.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    spark.conf.set(key, os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "8"))
-    try:
+    with iteration_scope(spark):
         # Materialize the edge list ONCE before mirroring: the union has
         # two branches over the same (expensive — n-gram shuffle) edge
         # plan, and without this checkpoint the materialization of
         # `bidir` executes that plan twice (measured ~2× the edge-build
         # cost at sf0.1).
-        edges = edges.localCheckpoint()
+        edges = edges.transform(ckpt())
         bidir = edges.union(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).localCheckpoint()
+        ).transform(ckpt())
 
-        # Size-gated small path: dup-edge graphs are a tiny fraction of the
-        # corpus (only docs with a candidate pair — 256 edges for 60k docs
-        # at sf0.1), but every distributed round costs ~1 s of fixed
-        # job-scheduling/checkpoint overhead × diameter rounds.  Below the
-        # threshold, run exact union-find on the driver: the collect is
-        # BOUNDED by the constant threshold (never grows with corpus size),
-        # and the min-label fixpoint is unique, so both paths return
-        # bit-identical labels.  Above it, the iterative key-partitioned
-        # propagation below is the path that scales to any graph.
-        threshold = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "200000"))
-        if bidir.count() <= 2 * threshold:
+        if bidir.count() <= 2 * CC_LOCAL_EDGES:
             parent: dict = {}
 
             def find(x):
@@ -586,10 +583,10 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
         labels = (
             bidir.select(F.col("a").alias("node")).distinct()
             .withColumn("label", F.col("node"))
-            .localCheckpoint()
+            .transform(ckpt())
         )
         prev_sum = None
-        for _ in range(max_rounds):
+        for _ in range(20):  # hard safety cap; rounds needed = diameter
             prop = bidir.join(labels, bidir.a == labels.node).select(
                 F.col("b").alias("node"), "label"
             )
@@ -597,15 +594,13 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
                 labels.union(prop)
                 .groupBy("node")
                 .agg(F.min("label").alias("label"))
-                .localCheckpoint()
+                .transform(ckpt())
             )
             cur_sum = labels.agg(F.sum("label")).collect()[0][0]
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
         return labels
-    finally:
-        spark.conf.set(key, before)
 
 
 _CLUSTER_ORACLE = _CLUSTER_ORACLE.replace("CAPPED_TEXT_SQL", capped_text_sql())

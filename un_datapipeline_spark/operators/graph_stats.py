@@ -22,9 +22,53 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from un_datapipeline_spark.session import ckpt
+from un_datapipeline_spark.session import ckpt, iteration_scope
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table
+
+
+def _cust_supp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (cust, supp) pairs: a customer↔supplier edge wherever a
+    customer's order contained a supplier's line."""
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
+        .distinct()
+    )
+
+
+def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected (u, v), u < v, of parts sharing ≥ 2 distinct orders —
+    the signal edges of the co-purchase graph.  Checkpointed once: every
+    consumer (kcore's peel, the BFS/LPA bidir union's two branches)
+    re-reads it, and the pair-join build behind it is the expensive plan."""
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
+    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
+    return (
+        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+        .select("u", "v")
+        .transform(ckpt())
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, d): the degree of every node of the undirected edges (u, v)."""
+    return (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
 
 
 def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,16 +81,9 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and builds the label strings only for the ~5x-smaller distinct set.
     Same output rows by construction (concat after distinct = distinct
     of concats; the int pair determines the string pair 1:1)."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
+    e = _cust_supp_edges(spark, sf_dir).select(
+        F.concat(F.lit("c"), F.col("cust").cast("string")).alias("src"),
+        F.concat(F.lit("s"), F.col("supp").cast("string")).alias("dst"),
     )
     return e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
@@ -121,36 +158,25 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(ckpt())
     )
     # Round-13 (guide §2.2, VERDICT r12 item 4): the static layout and
-    # the 10 iterations run under a pinned small shuffle width
-    # (session.pinned_shuffle_width, env-parameterized): under the
-    # driver's plain session every per-iteration stage previously
-    # dispatched 200 near-empty reduce tasks, and the task dispatch —
-    # not compute — dominated each ~6-7 s iteration at test scale.
-    # Rank/degree state is node-sized, so 8 partitions carry it here; a
-    # cluster sizes SPARK_GRAFT_ITER_PARTITIONS to the state table.
-    # Rows-only op: width only changes float merge order, which the
-    # rows-only contract already covers.  The static relation MUST be
-    # laid out at the same width (its repartition("src") is inside the
-    # pin) or every iteration would re-exchange it.
-    from un_datapipeline_spark.session import pinned_shuffle_width
-
-    with pinned_shuffle_width(spark):
-        return _pagerank_iterations(spark, edges, deg)
-
-
-def _pagerank_iterations(
-    spark: SparkSession, edges: DataFrame, deg: DataFrame
-) -> DataFrame:
-    # Pre-partition the static relation by the per-iteration join key
-    # (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): every iteration joins static on `src`, so persisting it
-    # already hash-partitioned lets the iteration reuse the layout
-    # instead of re-shuffling the (large) edge relation 10 times.  At
-    # test scale the rank side broadcasts and the exchange never appears;
-    # at cluster scale ranks ~ nodes outgrow the broadcast threshold and
-    # this becomes the shape that shuffles only the rank table.
-    static = edges.join(deg, "src").repartition("src").persist()
-    try:
+    # the 10 iterations run in the iteration scope's pinned small shuffle
+    # width: under a plain session every per-iteration stage
+    # previously dispatched 200 near-empty reduce tasks, and the task
+    # dispatch — not compute — dominated each ~6-7 s iteration at test
+    # scale.  Rows-only op: width only changes float merge order, which
+    # the rows-only contract already covers.  The static relation MUST
+    # be laid out at the same width (its repartition("src") is inside
+    # the scope) or every iteration would re-exchange it.
+    with iteration_scope(spark) as it:
+        # Pre-partition the static relation by the per-iteration join
+        # key (guide §2.4 "two operations keyed the same way can share
+        # one exchange"): every iteration joins static on `src`, so
+        # persisting it already hash-partitioned lets the iteration reuse
+        # the layout instead of re-shuffling the (large) edge relation 10
+        # times.  At test scale the rank side broadcasts and the exchange
+        # never appears; at cluster scale ranks ~ nodes outgrow the
+        # broadcast threshold and this becomes the shape that shuffles
+        # only the rank table.
+        static = it.static(edges.join(deg, "src").repartition("src"))
         ranks = deg.select("src", F.lit(1.0).alias("rank"))
         for _ in range(10):
             # SHUFFLE_HASH on the rank side (guide §3.1): the checkpointed
@@ -169,7 +195,7 @@ def _pagerank_iterations(
                 F.col("dst").alias("src"),
                 (0.15 + 0.85 * F.col("mass")).alias("rank"),
             ).transform(ckpt(eager=False))
-        out = (
+        return it.freeze(
             ranks.join(deg, "src")
             .select(
                 F.col("src").alias("node"),
@@ -179,15 +205,6 @@ def _pagerank_iterations(
             .orderBy(F.desc("rank"), "node")
             .limit(20)
         )
-        # Freeze the 20-row result before unpersisting `static`: a lazy
-        # plan would recompute the whole 10-iteration lineage against the
-        # now-uncached relation when the caller finally acts on it.
-        # localCheckpoint materializes the partitions cluster-side (no
-        # driver round-trip, unlike createDataFrame(collect())).
-        out = out.transform(ckpt())
-    finally:
-        static.unpersist()
-    return out
 
 
 _JACCARD_ORACLE = """
@@ -229,13 +246,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree join, deterministic (jaccard DESC, s1, s2) order; the
     division is a single float op on exact integers, so it hash-matches
     bit-for-bit."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
+    e = _cust_supp_edges(spark, sf_dir)
     deg = e.groupBy("supp").agg(F.count(F.lit(1)).alias("d"))
     a = e.alias("a")
     b = e.alias("b")
@@ -264,6 +275,64 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("jaccard"), "s1", "s2")
         .limit(20)
     )
+
+
+def _degree_oriented_edges(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(deg, o) of the part co-purchase graph for the compact-forward
+    triangle enumeration: ``deg`` = (node, d), and ``o`` = every
+    undirected edge oriented from its lower-(degree, id) endpoint,
+    (src, dst, dst_d) with dst_d the degree of dst.  Shared by
+    graph_triangle_count and graph_local_clustering."""
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
+    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
+    # Materialize the edge list and (below) the oriented table ONCE:
+    # both feed 3-4 downstream branches (degrees, orientation, both
+    # wedge sides, closure), and without the checkpoint each branch
+    # re-executes the distinct pair-join edge build — measured 2.5x
+    # end-to-end at sf0.1 (13.9 s -> 5.4 s cold).  At cluster scale
+    # this is the standard materialize-reused-dataset pattern; the
+    # checkpointed data is shuffle-sized (the edge list itself).
+    e = (
+        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
+        .select("u", "v")
+        .distinct()
+        # DISK_ONLY: the edge list is shuffle-sized — default
+        # MEMORY_AND_DISK pins it on the executor heap for the session
+        # and OOMs a default-memory driver at 10x data (probed at
+        # sf0.1); disk blocks cost one local read and never evict or
+        # crowd execution memory
+        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
+    )
+    # Round-12: the degree table feeds three consumers (both orientation
+    # sides and the final stats/credit join); checkpointing it makes the
+    # union+aggregate over the edge list run once instead of three times.
+    deg = _degrees(e).transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    lower_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    # degree table = one row per node: joined plain (NOT F.broadcast) so
+    # the same plan survives billion-node graphs; AQE picks broadcast
+    # when it fits.
+    o = (
+        e.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+            F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("dst_d"),
+        )
+        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
+    )
+    return deg, o
 
 
 # ---------------------------------------------------------------------------
@@ -335,59 +404,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     all shuffle-partitioned by node, no driver state.  Wedge/edge/node
     counts and the x10^6-scaled clustering coefficient come out exact
     BIGINT."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    # Materialize the edge list and (below) the oriented table ONCE:
-    # both feed 3-4 downstream branches (degrees, orientation, both
-    # wedge sides, closure), and without the checkpoint each branch
-    # re-executes the distinct pair-join edge build — measured 2.5x
-    # end-to-end at sf0.1 (13.9 s -> 5.4 s cold).  At cluster scale
-    # this is the standard materialize-reused-dataset pattern; the
-    # checkpointed data is shuffle-sized (the edge list itself).
-    e = (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
-        .select("u", "v")
-        .distinct()
-        # DISK_ONLY: the edge list is shuffle-sized — default
-        # MEMORY_AND_DISK pins it on the executor heap for the session
-        # and OOMs a default-memory driver at 10x data (probed at
-        # sf0.1); disk blocks cost one local read and never evict or
-        # crowd execution memory
-        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    )
-    # Round-12: the degree table feeds three consumers (both orientation
-    # sides and the final stats/credit join); checkpointing it makes the
-    # union+aggregate over the edge list run once instead of three times.
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    # degree table = one row per node: joined plain (NOT F.broadcast) so
-    # the same plan survives billion-node graphs; AQE picks broadcast
-    # when it fits.
-    o = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("dst_d"),
-        )
-        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    )
+    deg, o = _degree_oriented_edges(spark, sf_dir)
     w1 = o.select(F.col("src").alias("s"), F.col("dst").alias("v"),
                   F.col("dst_d").alias("vd"))
     w2 = o.select(F.col("src").alias("s"), F.col("dst").alias("w"),
@@ -479,13 +496,7 @@ def graph_link_predict_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-small-graph end of the ladder — the per-customer self-join is
     O(deg²); at 100 TB you cap or sample high-degree hubs first
     (MAX_GRAM_DF discipline) or fall back to the MinHash/LSH end."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
+    e = _cust_supp_edges(spark, sf_dir)
     cdeg = e.groupBy("cust").agg(F.count(F.lit(1)).alias("d"))
     a, b = e.alias("a"), e.alias("b")
     pairs = a.join(
@@ -580,56 +591,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     full (s, v, w) triple so each triangle credits ALL THREE corners
     via a 3-way explode before the per-node count.  The coefficient is
     a ×10⁶ integer division of exact counts — bit-deterministic."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    # Materialize the edge list and (below) the oriented table ONCE:
-    # both feed 3-4 downstream branches (degrees, orientation, both
-    # wedge sides, closure), and without the checkpoint each branch
-    # re-executes the distinct pair-join edge build — measured 2.5x
-    # end-to-end at sf0.1 (13.9 s -> 5.4 s cold).  At cluster scale
-    # this is the standard materialize-reused-dataset pattern; the
-    # checkpointed data is shuffle-sized (the edge list itself).
-    e = (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
-        .select("u", "v")
-        .distinct()
-        # DISK_ONLY: the edge list is shuffle-sized — default
-        # MEMORY_AND_DISK pins it on the executor heap for the session
-        # and OOMs a default-memory driver at 10x data (probed at
-        # sf0.1); disk blocks cost one local read and never evict or
-        # crowd execution memory
-        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    )
-    # Round-12: the degree table feeds three consumers (both orientation
-    # sides and the final stats/credit join); checkpointing it makes the
-    # union+aggregate over the edge list run once instead of three times.
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    o = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("dst_d"),
-        )
-        .transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    )
+    deg, o = _degree_oriented_edges(spark, sf_dir)
     w1 = o.select(F.col("src").alias("s"), F.col("dst").alias("v"),
                   F.col("dst_d").alias("vd"))
     w2 = o.select(F.col("src").alias("s2"), F.col("dst").alias("w"),
@@ -694,31 +656,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + one semi-join edge prune, localCheckpoint truncates
     lineage, and the ONLY driver traffic is one scalar (bad-node count)
     per round; ≤ 20 rounds bounds the loop."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .transform(ckpt())
-    )
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-
-    deg0 = degrees(edges)
+    edges = _repeat_copurchase_edges(spark, sf_dir)
+    deg0 = _degrees(edges)
     # exact P75: the degree at ascending rank ceil(0.75·n), (d, node) order
     from pyspark.sql import Window as W
 
@@ -739,48 +678,44 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Round-13 (guide §2.2, VERDICT r12 item 4 family): the peel loop —
     # a degree aggregate + two anti-joins per round, each re-checkpointed
-    # — runs under the pinned iteration width (the pagerank /
-    # connected_components precedent; the driver's plain session gave
-    # every round 200 near-empty reduce tasks).  All state is exact
-    # integers, so width cannot change the unique k-core fixed point.
-    from un_datapipeline_spark.session import pinned_shuffle_width
-
-    with pinned_shuffle_width(spark):
-        return _kcore_peel(spark, edges, degrees, k)
-
-
-def _kcore_peel(spark, edges, degrees, k):
-    while True:
-        cur = edges
-        for _ in range(30):
-            # Round-12: materialize the peel set ONCE per round.  The old
-            # loop ran the degree aggregate twice per round — once under
-            # the emptiness probe and again when the un-cached `bad`
-            # lineage re-executed inside the anti-join checkpoint (and a
-            # third time for the second anti-join side under it).  The
-            # eager checkpoint pins the aggregate's result so the probe
-            # and both anti-joins read materialized rows.
-            deg = degrees(cur)
-            bad = (
-                deg.filter(F.col("d") < k)
-                .select("node")
-                .transform(ckpt())
-            )
-            if bad.limit(1).count() == 0:
+    # — runs in the iteration scope's pinned width (a plain session
+    # gave every round 200 near-empty reduce tasks), and so does
+    # the final degree table, frozen before the scope restores the
+    # width.  All state is exact integers, so width cannot change the
+    # unique k-core fixed point.
+    with iteration_scope(spark) as it:
+        while True:
+            cur = edges
+            for _ in range(30):
+                # Round-12: materialize the peel set ONCE per round.  The
+                # old loop ran the degree aggregate twice per round — once
+                # under the emptiness probe and again when the un-cached
+                # `bad` lineage re-executed inside the anti-join
+                # checkpoint (and a third time for the second anti-join
+                # side under it).  The eager checkpoint pins the
+                # aggregate's result so the probe and both anti-joins read
+                # materialized rows.
+                bad = (
+                    _degrees(cur)
+                    .filter(F.col("d") < k)
+                    .select("node")
+                    .transform(ckpt())
+                )
+                if bad.limit(1).count() == 0:
+                    break
+                cur = (
+                    cur.join(bad, cur.u == bad.node, "left_anti")
+                    .join(bad, cur.v == bad.node, "left_anti")
+                    .transform(ckpt())
+                )
+            if k <= 1 or cur.limit(1).count() > 0:
                 break
-            cur = (
-                cur.join(bad, cur.u == bad.node, "left_anti")
-                .join(bad, cur.v == bad.node, "left_anti")
-                .transform(ckpt())
-            )
-        if k <= 1 or cur.limit(1).count() > 0:
-            break
-        k //= 2  # core collapsed — retry the full edge set at half k
-    return (
-        degrees(cur)
-        .select("node", F.col("d").alias("core_deg"), F.lit(int(k)).alias("k"))
-        .orderBy(F.desc("core_deg"), "node")
-    )
+            k //= 2  # core collapsed — retry the full edge set at half k
+        return it.freeze(
+            _degrees(cur)
+            .select("node", F.col("d").alias("core_deg"), F.lit(int(k)).alias("k"))
+            .orderBy(F.desc("core_deg"), "node")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -830,38 +765,19 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative pattern).  State lives in DataFrames partitioned by node;
     the driver never sees a frontier, only loop control.  4 levels =
     4 shuffles, independent of graph size."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    e = (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        # materialize the co-purchase edge build once: the bidir union
-        # has TWO branches over this (expensive) plan (the _lpa_state /
-        # connected_components lesson)
-        .transform(ckpt())
-    )
+    e = _repeat_copurchase_edges(spark, sf_dir)
     # Round-13 (guide §2.2/§2.4, VERDICT r12 items 4+6): frontier loop
-    # under the pinned iteration width (each level previously dispatched
-    # 200 near-empty tasks under the driver's plain session), adjacency
-    # PRE-PARTITIONED by the per-level join key `u` and persisted — each
-    # level then shuffles only the (frontier-sized) node set, the
-    # pagerank repartition("src") shape.  BFS distances are exact sets:
-    # width cannot change values, the op stays hash-matched.
-    from un_datapipeline_spark.session import pinned_shuffle_width
-
-    with pinned_shuffle_width(spark):
-        bidir = (
+    # in the iteration scope's pinned width (each level previously
+    # dispatched 200 near-empty tasks under a plain session),
+    # adjacency PRE-PARTITIONED by the per-level join key `u` and
+    # persisted — each level then shuffles only the (frontier-sized)
+    # node set, the pagerank repartition("src") shape.  BFS distances
+    # are exact sets: width cannot change values, the op stays
+    # hash-matched.
+    with iteration_scope(spark) as it:
+        bidir = it.static(
             e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .repartition("u")
-            .persist()
         )
         deg = bidir.groupBy(F.col("u").alias("node")).agg(
             F.count(F.lit(1)).alias("d")
@@ -882,12 +798,13 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nxt.select("node", F.lit(level).alias("dist"))
             ).transform(ckpt())
             frontier = nxt
-        out = visited.groupBy("dist").agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.min("node").alias("min_node"),
-            F.max("node").alias("max_node"),
+        return it.freeze(
+            visited.groupBy("dist").agg(
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.min("node").alias("min_node"),
+                F.max("node").alias("max_node"),
+            )
         )
-        return _freeze_and_release(out, bidir)
 
 
 # ---------------------------------------------------------------------------
@@ -954,84 +871,49 @@ LIMIT 20"""
 _LPA_ORACLE = _lpa_oracle()
 
 
-def _lpa_state(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(undirected edges u<v, bidirectional edges, converged labels) of
-    the synchronous 3-round LPA — shared by graph_label_propagation and
-    graph_modularity so the partition both report is the same object.
+def _lpa_state(e: DataFrame, it: iteration_scope) -> tuple[DataFrame, DataFrame]:
+    """(bidirectional edges, converged labels) of the synchronous 3-round
+    LPA over the repeat-co-purchase edges ``e`` — shared by
+    graph_label_propagation and graph_modularity so the partition both
+    report is the same object.  Runs in the caller's iteration scope
+    ``it``; the caller freezes its output through ``it`` too.
 
     Round-13 (guide §2.2/§2.4, VERDICT r12 items 4+6): the label loop
-    runs under the pinned iteration width (the pagerank /
-    connected_components precedent — under the driver's plain session
-    each round's three stages dispatched 200 near-empty tasks), and the
+    runs at the scope's pinned width (under a plain session each
+    round's three stages dispatched 200 near-empty tasks), and the
     bidir edge relation is PRE-PARTITIONED by the per-round join key
-    `v` and persisted, so each round shuffles only the (node-sized)
-    label table while the edge relation's layout is built once — the
-    pagerank `repartition("src")` shape.  The returned `bidir` is
-    persisted; callers unpersist it after freezing their output
-    (_release_lpa_state).  All loop state is exact integers (counts,
-    min-labels), so width cannot change values — the ops stay
-    hash-matched."""
-    from un_datapipeline_spark.session import pinned_shuffle_width
+    `v` and persisted for the scope, so each round shuffles only the
+    (node-sized) label table while the edge relation's layout is built
+    once — the pagerank `repartition("src")` shape.  All loop state is
+    exact integers (counts, min-labels), so width cannot change values
+    — the ops stay hash-matched."""
+    from pyspark.sql import Window
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
+    bidir = it.static(
+        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .repartition("v")
     )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    e = (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
+    labels = (
+        bidir.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lbl"))
         .transform(ckpt())
     )
-    with pinned_shuffle_width(spark):
-        bidir = (
-            e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .repartition("v")
-            .persist()
+    w = Window.partitionBy("node")
+    for _ in range(_LPA_ITERATIONS):
+        cnt = (
+            bidir.join(labels.select(F.col("node").alias("v"), "lbl"), "v")
+            .groupBy(F.col("u").alias("node"), F.col("lbl"))
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-
-        from pyspark.sql import Window
-
         labels = (
-            bidir.select(F.col("u").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("lbl"))
+            cnt.withColumn("mc", F.max("c").over(w))
+            .filter(F.col("c") == F.col("mc"))
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"))
             .transform(ckpt())
         )
-        w = Window.partitionBy("node")
-        for _ in range(_LPA_ITERATIONS):
-            cnt = (
-                bidir.join(
-                    labels.select(F.col("node").alias("v"), "lbl"), "v"
-                )
-                .groupBy(F.col("u").alias("node"), F.col("lbl"))
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            labels = (
-                cnt.withColumn("mc", F.max("c").over(w))
-                .filter(F.col("c") == F.col("mc"))
-                .groupBy("node")
-                .agg(F.min("lbl").alias("lbl"))
-                .transform(ckpt())
-            )
-    return e, bidir, labels
-
-
-def _freeze_and_release(out: DataFrame, bidir: DataFrame) -> DataFrame:
-    """Materialize a (small) result, then unpersist the shared bidir
-    relation — the pagerank freeze-before-unpersist pattern: a lazy
-    plan would re-execute the label lineage against the now-uncached
-    relation when the caller finally acts on it."""
-    out = out.transform(ckpt())
-    bidir.unpersist()
-    return out
+    return bidir, labels
 
 
 @register("graph_label_propagation", oracle=_LPA_ORACLE, tier="T3")
@@ -1056,21 +938,22 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round keeps the plan flat (the iterative-algorithm pattern
     shared with graph_pagerank / graph_bfs_layers); rounds are fixed at
     3, independent of graph size."""
-    _e, bidir, labels = _lpa_state(spark, sf_dir)
-    out = (
-        labels.groupBy("lbl")
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.min("node").alias("min_node"),
-            F.max("node").alias("max_node"),
+    e = _repeat_copurchase_edges(spark, sf_dir)
+    with iteration_scope(spark) as it:
+        _bidir, labels = _lpa_state(e, it)
+        return it.freeze(
+            labels.groupBy("lbl")
+            .agg(
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.min("node").alias("min_node"),
+                F.max("node").alias("max_node"),
+            )
+            .select(
+                F.col("lbl").alias("community"), "n_nodes", "min_node", "max_node"
+            )
+            .orderBy(F.desc("n_nodes"), "community")
+            .limit(20)
         )
-        .select(
-            F.col("lbl").alias("community"), "n_nodes", "min_node", "max_node"
-        )
-        .orderBy(F.desc("n_nodes"), "community")
-        .limit(20)
-    )
-    return _freeze_and_release(out, bidir)
 
 
 # ---------------------------------------------------------------------------
@@ -1127,58 +1010,59 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label table (join key = node, |E| rows); d_c one degree
     aggregation; the m spine is the house 1-row broadcast.  No
     per-community loop, no driver-side state."""
-    e, bidir, labels = _lpa_state(spark, sf_dir)
-    dg = bidir.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    # (result frozen + bidir released at the end — _freeze_and_release)
-    lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lbl_u"))
-    lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lbl_v"))
-    ec = (
-        e.join(lu, "u")
-        .join(lv, "v")
-        .filter(F.col("lbl_u") == F.col("lbl_v"))
-        .groupBy(F.col("lbl_u").alias("lbl"))
-        .agg(F.count(F.lit(1)).alias("e_in"))
-    )
-    dc = (
-        dg.join(labels, "node")
-        .groupBy("lbl")
-        .agg(F.sum("d").cast("long").alias("d_sum"))
-    )
-    mm = e.agg(F.count(F.lit(1)).alias("m"))
-    per = dc.join(ec, "lbl", "left").select(
-        "lbl",
-        F.coalesce(F.col("e_in"), F.lit(0)).cast("long").alias("e_in"),
-        "d_sum",
-    )
-    q_num = F.sum(
-        4 * F.col("m") * F.col("e_in") - F.col("d_sum") * F.col("d_sum")
-    ).cast("long")
-    out = (
-        per.crossJoin(mm)  # 1-row broadcast spine (house share-of-total)
-        .groupBy("m")
-        .agg(
-            F.count(F.lit(1)).alias("n_communities"),
-            F.sum(F.when(F.col("e_in") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias("n_internal_communities"),
-            q_num.alias("q_num"),
+    e = _repeat_copurchase_edges(spark, sf_dir)
+    with iteration_scope(spark) as it:
+        bidir, labels = _lpa_state(e, it)
+        dg = bidir.groupBy(F.col("u").alias("node")).agg(
+            F.count(F.lit(1)).alias("d")
         )
-        .select(
-            "n_communities",
-            "n_internal_communities",
-            F.col("m").alias("m_edges"),
-            "q_num",
-            (
-                F.floor(
-                    F.col("q_num").cast("double")
-                    / (4.0 * F.col("m") * F.col("m"))
-                    * 1000000
-                    + 0.5
-                )
-                / 1000000.0
-            ).alias("modularity"),
+        lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lbl_u"))
+        lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lbl_v"))
+        ec = (
+            e.join(lu, "u")
+            .join(lv, "v")
+            .filter(F.col("lbl_u") == F.col("lbl_v"))
+            .groupBy(F.col("lbl_u").alias("lbl"))
+            .agg(F.count(F.lit(1)).alias("e_in"))
         )
-    )
-    return _freeze_and_release(out, bidir)
+        dc = (
+            dg.join(labels, "node")
+            .groupBy("lbl")
+            .agg(F.sum("d").cast("long").alias("d_sum"))
+        )
+        mm = e.agg(F.count(F.lit(1)).alias("m"))
+        per = dc.join(ec, "lbl", "left").select(
+            "lbl",
+            F.coalesce(F.col("e_in"), F.lit(0)).cast("long").alias("e_in"),
+            "d_sum",
+        )
+        q_num = F.sum(
+            4 * F.col("m") * F.col("e_in") - F.col("d_sum") * F.col("d_sum")
+        ).cast("long")
+        out = (
+            per.crossJoin(mm)  # 1-row broadcast spine (house share-of-total)
+            .groupBy("m")
+            .agg(
+                F.count(F.lit(1)).alias("n_communities"),
+                F.sum(F.when(F.col("e_in") > 0, 1).otherwise(0))
+                .cast("long")
+                .alias("n_internal_communities"),
+                q_num.alias("q_num"),
+            )
+            .select(
+                "n_communities",
+                "n_internal_communities",
+                F.col("m").alias("m_edges"),
+                "q_num",
+                (
+                    F.floor(
+                        F.col("q_num").cast("double")
+                        / (4.0 * F.col("m") * F.col("m"))
+                        * 1000000
+                        + 0.5
+                    )
+                    / 1000000.0
+                ).alias("modularity"),
+            )
+        )
+        return it.freeze(out)

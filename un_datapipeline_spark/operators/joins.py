@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import ckpt
 from un_datapipeline_spark.tables import (
     cents_sum,
     latest_event,
@@ -658,7 +659,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass the exact hash join, so the result is identical to the plain
     join (the oracle).  The filter only exists under the runtime-filter
     confs, which are plan-time state — the joined aggregate (≤3 rows) is
-    frozen via eager localCheckpoint while they are set, then the
+    frozen via an eager session.ckpt while they are set, then the
     session confs are restored (a lazily-collected plan would otherwise
     optimize AFTER the finally block, silently dropping the bloom path —
     the same leak ``join_sort_merge`` avoids with a plan-local hint).
@@ -702,7 +703,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("revenue"),
             )
             .orderBy("l_returnflag")
-            .localCheckpoint(eager=True)
+            .transform(ckpt(eager=True))
         )
     finally:
         for k, v in saved.items():

@@ -43,6 +43,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import ckpt
 from un_datapipeline_spark.tables import load_table
 
 _N_QUERIES = 10          # query docs: doc_id < 10
@@ -660,7 +661,7 @@ def llm_ranker_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `inter` feeds THREE consumers (the two re-rank windows and both
     # sides of the Kendall pair join); materialize the Q×k intersection
     # once so the two-ranker pipeline behind it runs once, not 3×.
-    inter = u.join(b, ["q_id", "c_id"]).localCheckpoint()
+    inter = u.join(b, ["q_id", "c_id"]).transform(ckpt())
     wa = Window.partitionBy("q_id").orderBy("ru")
     wb = Window.partitionBy("q_id").orderBy("rb")
     rr = inter.select(

@@ -1,7 +1,7 @@
 """Driver-pass ordering for the operator registry.
 
 GENERATED by tools/regen_priority.py from the union of
-CORRECTNESS_r02.json, CORRECTNESS_r03.json, CORRECTNESS_r04.json, CORRECTNESS_r05.json, CORRECTNESS_r06.json, CORRECTNESS_r07.json, CORRECTNESS_r08.json, CORRECTNESS_r09.json, CORRECTNESS_r10.json, CORRECTNESS_r11.json, CORRECTNESS_r12.json — regenerate after every
+CORRECTNESS_r03.json, CORRECTNESS_r04.json, CORRECTNESS_r05.json, CORRECTNESS_r06.json, CORRECTNESS_r07.json, CORRECTNESS_r08.json, CORRECTNESS_r09.json, CORRECTNESS_r10.json, CORRECTNESS_r11.json, CORRECTNESS_r12.json, CORRECTNESS_r13.json — regenerate after every
 round instead of editing by hand.  Groups (sort_key codes):
 
 0. never driver-verified / latest verdict not green — first;
@@ -26,62 +26,31 @@ NEVER_VERIFIED = (
 # driver stamp — see tools/regen_priority.py FORCE_REFRESH) lead;
 # the rest are the stalest greens, one per name family.
 STALE_REFRESH = (
-    "llm_line_dedup_reconstruct",  # forced: re-edited since last stamp
+    "graph_kcore",  # forced: re-edited since last stamp
     "graph_label_propagation",  # forced: re-edited since last stamp
     "graph_modularity",  # forced: re-edited since last stamp
-    "graph_bfs_layers",  # forced: re-edited since last stamp
-    "graph_pagerank",  # forced: re-edited since last stamp
-    "graph_kcore",  # forced: re-edited since last stamp
-    "llm_canonical_select",  # forced: re-edited since last stamp
     "llm_dedup_cluster",  # forced: re-edited since last stamp
-    "llm_contamination_check",  # forced: re-edited since last stamp
-    "llm_dedup_minhash_ml",  # forced: re-edited since last stamp
-    "fn_xml_roundtrip",  # forced: re-edited since last stamp
-    "fn_math",  # forced: re-edited since last stamp
-    "fn_cast_types",  # forced: re-edited since last stamp
+    "llm_canonical_select",  # forced: re-edited since last stamp
+    "llm_neardup_cluster",  # forced: re-edited since last stamp
+    "llm_dedup_ngram_jaccard",  # forced: re-edited since last stamp
+    "llm_dedup_containment",  # forced: re-edited since last stamp
+    "llm_dedup_incremental",  # forced: re-edited since last stamp
+    "llm_dedup_simhash",  # forced: re-edited since last stamp
+    "mm_phash_dedup",  # forced: re-edited since last stamp
+    "join_runtime_bloom",  # forced: re-edited since last stamp
+    "llm_ranker_agreement",  # forced: re-edited since last stamp
+    "graph_pagerank",  # forced: re-edited since last stamp
+    "graph_bfs_layers",  # forced: re-edited since last stamp
     "graph_triangle_count",  # forced: re-edited since last stamp
     "graph_local_clustering",  # forced: re-edited since last stamp
-    "llm_dedup_near_minhash",  # forced: re-edited since last stamp
-    "llm_neardup_cluster",  # forced: re-edited since last stamp
-    "llm_doc_fingerprint",  # forced: re-edited since last stamp
-    "llm_ann_brp_lsh",  # forced: re-edited since last stamp
+    "graph_degree_stats",  # forced: re-edited since last stamp
+    "graph_jaccard_neighbors",  # forced: re-edited since last stamp
+    "graph_link_predict_aa",  # forced: re-edited since last stamp
 )
 
 # 351 green names, stalest verdict first.
 DRIVER_GREEN = (
-    # latest verdict: round 2
-    "stream_session_window",
-    "stream_foreach_batch_sink",
-    "udf_pandas_scalar",
-    "udaf_grouped_agg",
-    "udtf_split_words",
-    "win_ranking",
-    "win_running_sum",
-    "win_topk_per_group",
-    "win_analytic",
-    "etl_scd2_snapshot",
-    "llm_sessionize_funnel",
-    "llm_simsearch_multiprobe",
-    "etl_sample_hash",
-    "agg_mode",
-    "join_skew_salted",
     # latest verdict: round 3
-    "agg_corr_pearson",
-    "agg_approx_percentile",
-    "agg_iqr_outliers",
-    "ts_ewma_smooth",
-    "llm_ngram_lm",
-    "fn_explode_pos",
-    "llm_type_token_ratio",
-    "llm_pii_redact",
-    "llm_length_curriculum",
-    "set_intersect_all",
-    "set_except_all",
-    "reshape_pivot",
-    "reshape_unpivot",
-    "agg_sketch_mergeable",
-    "agg_freq_sketch_cms",
-    "llm_vocab_coverage",
     "win_streaks",
     "win_dedup_debounce",
     "win_funnel_attribution",
@@ -177,9 +146,6 @@ DRIVER_GREEN = (
     "fn_month_arithmetic",
     "fn_group_by_all",
     "graph_link_predict_aa",
-    "graph_bfs_layers",
-    "graph_label_propagation",
-    "graph_modularity",
     "join_asof_forward",
     "join_scd2_pointintime",
     "join_shuffle_hash",
@@ -250,7 +216,6 @@ DRIVER_GREEN = (
     "etl_dq_validate",
     "etl_train_split",
     "fn_datetime",
-    "fn_cast_types",
     "fn_bitwise",
     "join_broadcast_dim",
     "join_sort_merge",
@@ -263,7 +228,6 @@ DRIVER_GREEN = (
     "etl_scd3_prev_value",
     "llm_lang_id",
     "fn_url_parse",
-    "fn_xml_roundtrip",
     "fn_aes_roundtrip",
     "fn_sql_scripting",
     "fn_map",
@@ -294,12 +258,10 @@ DRIVER_GREEN = (
     "llm_simsearch_ivf",
     "llm_vector_pq",
     "llm_kmeans_cluster",
-    "llm_ann_brp_lsh",
     "llm_simsearch_lsh",
     "llm_dedup_ngram_jaccard",
     "llm_dedup_containment",
     "llm_ngram_novelty",
-    "llm_line_dedup_reconstruct",
     "llm_fim_transform",
     "src_text_wholetext",
     "src_binary_files",
@@ -313,11 +275,8 @@ DRIVER_GREEN = (
     "win_event_pattern",
     "ts_local_day_dst",
     "llm_dedup_incremental",
-    "llm_dedup_cluster",
-    "llm_canonical_select",
     "llm_span_corruption",
     # latest verdict: round 11
-    "llm_dedup_minhash_ml",
     "src_text_lines",
     "stream_watermark_late",
     "llm_simsearch_hnsw",
@@ -350,7 +309,6 @@ DRIVER_GREEN = (
     "fn_variant_json",
     "etl_quarantine_bad_rows",
     "llm_knn_join",
-    "llm_contamination_check",
     "llm_boilerplate_ngrams",
     "llm_dedup_substr",
     "llm_leakage_safe_split",
@@ -378,21 +336,13 @@ DRIVER_GREEN = (
     "llm_doc_chunking",
     "llm_bpe_pair_counts",
     "llm_pmi_collocations",
-    "llm_doc_fingerprint",
     "graph_degree_stats",
-    "graph_pagerank",
-    "graph_kcore",
-    "graph_triangle_count",
-    "graph_local_clustering",
     "llm_bpe_train",
-    "llm_dedup_near_minhash",
-    "llm_neardup_cluster",
     "llm_tfidf_topterms",
     "llm_dedup_exact",
     "mm_binary_stats",
     "agg_collect_sorted",
     "fn_string",
-    "fn_math",
     "proj_select_expr",
     "filter_complex_pred",
     "filter_case_when",
@@ -411,6 +361,57 @@ DRIVER_GREEN = (
     "sink_parquet_write",
     "src_stream_file",
     "stream_sliding_window",
+    # latest verdict: round 13
+    "llm_line_dedup_reconstruct",
+    "graph_label_propagation",
+    "graph_modularity",
+    "graph_bfs_layers",
+    "graph_pagerank",
+    "graph_kcore",
+    "llm_canonical_select",
+    "llm_dedup_cluster",
+    "llm_contamination_check",
+    "llm_dedup_minhash_ml",
+    "fn_xml_roundtrip",
+    "fn_math",
+    "fn_cast_types",
+    "graph_triangle_count",
+    "graph_local_clustering",
+    "llm_dedup_near_minhash",
+    "llm_neardup_cluster",
+    "llm_doc_fingerprint",
+    "llm_ann_brp_lsh",
+    "stream_session_window",
+    "stream_foreach_batch_sink",
+    "udf_pandas_scalar",
+    "udaf_grouped_agg",
+    "udtf_split_words",
+    "win_ranking",
+    "win_running_sum",
+    "win_topk_per_group",
+    "win_analytic",
+    "etl_scd2_snapshot",
+    "llm_sessionize_funnel",
+    "llm_simsearch_multiprobe",
+    "etl_sample_hash",
+    "agg_mode",
+    "join_skew_salted",
+    "agg_corr_pearson",
+    "agg_approx_percentile",
+    "agg_iqr_outliers",
+    "ts_ewma_smooth",
+    "llm_ngram_lm",
+    "fn_explode_pos",
+    "llm_type_token_ratio",
+    "llm_pii_redact",
+    "llm_length_curriculum",
+    "set_intersect_all",
+    "set_except_all",
+    "reshape_pivot",
+    "reshape_unpivot",
+    "agg_sketch_mergeable",
+    "agg_freq_sketch_cms",
+    "llm_vocab_coverage",
 )
 
 # Operators added mid-round AFTER the 50-slot window was already full of

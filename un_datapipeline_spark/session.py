@@ -17,7 +17,11 @@ Hard requirements (SURVEY.md §1.2, verified empirically):
 Scale posture: AQE on (coalesce + skew-join split at runtime), shuffle
 partitions sized for the local test data but overridable via
 ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` — on a real cluster you would leave
-the default 200+ and let AQE coalesce.
+the default 200+ and let AQE coalesce.  Iterative operators run their
+loops inside :class:`iteration_scope`, which pins its own width
+(``SPARK_GRAFT_ITER_PARTITIONS``), and every materialization in the
+package goes through :func:`graft_checkpoint` / :func:`ckpt`, the one
+durability gate (``SPARK_GRAFT_CHECKPOINT_DIR``).
 """
 
 from __future__ import annotations
@@ -96,8 +100,8 @@ def graft_checkpoint(df, eager: bool = True, storage_level=None):
     For the iterative ops this is the standard latency trade and the
     right local default; a cluster run that cannot accept it sets
     ``SPARK_GRAFT_CHECKPOINT_DIR`` to a durable path (HDFS/object
-    store) and every load-bearing materialization in the iterative /
-    corpus pipelines switches to ``Dataset.checkpoint`` against it —
+    store) and every materialization in the package (all of them are
+    routed through here) switches to ``Dataset.checkpoint`` against it —
     same semantics, executor-loss-safe, one more write+read per
     materialization.  No behavior change while the env is unset
     (SCALING.md "Checkpoint durability posture")."""
@@ -124,42 +128,59 @@ def ckpt(eager: bool = True, storage_level=None):
     return apply
 
 
-class pinned_shuffle_width:
-    """Scope a small shuffle width around an ITERATIVE operator's loop
-    (round 13, guide §2.2 "fewer, larger reduce partitions").
+class iteration_scope:
+    """The one scope every ITERATIVE operator's fixpoint loop runs in
+    (graph pagerank / kcore / BFS / LPA / modularity and
+    connected_components).  It does three things:
 
-    The iterative graph/dedup ops re-shuffle node-sized state every
-    round; under the grading driver's plain session that is 200 reduce
-    partitions per stage — thousands of near-empty tasks per operator
-    whose dispatch dominates the runtime at test scale (the
-    connected_components precedent: 15 s → 3 s with a pinned width).
-    The width is env-parameterized (`SPARK_GRAFT_ITER_PARTITIONS`,
-    default 8): a cluster run sizes it to the state table, exactly like
-    SPARK_GRAFT_CC_PARTITIONS.  Value-safe wherever the loop state is
+    * pins ``spark.sql.shuffle.partitions`` to
+      ``SPARK_GRAFT_ITER_PARTITIONS`` (default 8) for the body, and
+      restores the caller's width on exit — also when the body raises;
+    * ``static(df)`` persists a relation the loop re-reads every round
+      and unpersists it on exit;
+    * ``freeze(df)`` materializes a result through :func:`ckpt` while the
+      width is still pinned, so nothing the caller later acts on runs
+      outside the pin or against an unpersisted static relation.
+
+    Why a small width (guide §2.2 "fewer, larger reduce partitions"):
+    the loops re-shuffle node-sized state every round; under a plain
+    session that is 200 reduce partitions per stage — thousands of
+    near-empty tasks per operator whose dispatch dominates the runtime at
+    test scale (connected_components: 15 s → 3 s).  A cluster run sizes
+    the width to the state table.  Value-safe wherever the loop state is
     exact (integer counts/min-labels/BFS sets) or the op is declared
-    rows-only (float fixpoints like PageRank).
-
-    Usage::
-
-        with pinned_shuffle_width(spark):
-            ... build + run the loop ...
+    rows-only (float fixpoints like PageRank).  The loop itself stays a
+    plain ``for``/``while`` in the operator, inside the ``with`` block.
     """
 
     KEY = "spark.sql.shuffle.partitions"
 
-    def __init__(self, spark: SparkSession, env: str = "SPARK_GRAFT_ITER_PARTITIONS",
-                 default: int = 8):
+    def __init__(self, spark: SparkSession):
         self._spark = spark
-        self._width = os.environ.get(env, str(default))
+        self._width = os.environ.get("SPARK_GRAFT_ITER_PARTITIONS", "8")
         self._before: str | None = None
+        self._static: list = []
 
-    def __enter__(self) -> "pinned_shuffle_width":
+    def __enter__(self) -> "iteration_scope":
         self._before = self._spark.conf.get(self.KEY)
         self._spark.conf.set(self.KEY, self._width)
         return self
 
+    def static(self, df):
+        """Persist ``df`` for the scope's lifetime."""
+        df = df.persist()
+        self._static.append(df)
+        return df
+
+    def freeze(self, df):
+        """Materialize ``df`` at the pinned width (:func:`ckpt`)."""
+        return df.transform(ckpt())
+
     def __exit__(self, *exc) -> None:
-        if self._before is not None:
+        try:
+            for df in self._static:
+                df.unpersist()
+        finally:
             self._spark.conf.set(self.KEY, self._before)
 
 
