@@ -31,7 +31,8 @@ order (l_orderkey, l_linenumber) is NOT unique, and the ORIGINAL
 DuckDB text is not even self-stable (two runs of the identical text
 return different tie-dependent running sums — measured), so for that
 query the verified bar is: identical key sequence, values differing
-only within window-peer tie order, on both texts (tools/exp_r13.py).
+only within window-peer tie order, on both texts (script:
+``git show 851bd3a:tools/exp_r13.py``).
 
 Round-13 change (VERDICT r12 item 2 — scale-adaptive posture): the
 local-mode session twiddles (AQE off, REDUCE_WIDTH, 4 MB splits) are
@@ -192,8 +193,9 @@ ORDER BY revenue DESC
 # threshold pre-filter keeps EVERY row of each surviving custkey, so each
 # window partition is complete and row_number assignment inside it is
 # unchanged (verified row-for-row identical vs the unfiltered text at
-# sf0.1, tools/exp_r12.py).  Plan: full 150k-row single-task sort +
-# WindowGroupLimit -> a TakeOrdered threshold probe + a ~1k-row window.
+# sf0.1, `git show 851bd3a:tools/exp_r12.py`).  Plan: full 150k-row
+# single-task sort + WindowGroupLimit -> a TakeOrdered threshold probe +
+# a ~1k-row window.
 topk_per_group_window = _sql("""
 WITH ck AS (SELECT DISTINCT o_custkey FROM orders ORDER BY o_custkey LIMIT 100)
 SELECT o_custkey, o_orderkey, o_totalprice, rn
@@ -219,8 +221,8 @@ LIMIT 100
 # (118k dup pairs), so an exact-100 pre-limit would pick different tied
 # rows; the orderkey-threshold form is the tie-safe one — verified
 # bitwise-identical to the unfiltered text at widths 1 and 8
-# (tools/exp2_r12.py).  Plan: 600k-row shuffle + full window -> one
-# TakeOrdered threshold probe + a ~400-row window.
+# (`git show 851bd3a:tools/exp2_r12.py`).  Plan: 600k-row shuffle + full
+# window -> one TakeOrdered threshold probe + a ~400-row window.
 running_sum_window = _sql("""
 WITH t AS (
   SELECT l_orderkey, l_linenumber, l_extendedprice
@@ -247,8 +249,9 @@ LIMIT 100
 # THAT is the standard decomposition; sums stay bitwise-identical because
 # l_quantity is integer-valued (max 50, total 1.5e7 << 2^53: every
 # partial in either order is an exact integer-valued double).  Verified
-# row-for-row identical at sf0.1 (tools/exp3_r12.py).  At 100 TB this is
-# also the right shape: the rollup's Expand never sees the fact table.
+# row-for-row identical at sf0.1 (`git show 851bd3a:tools/exp3_r12.py`).
+# At 100 TB this is also the right shape: the rollup's Expand never sees
+# the fact table.
 rollup_agg = _sql("""
 SELECT l_returnflag, l_linestatus, sum(sq) AS sq
 FROM (SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sq
@@ -280,8 +283,9 @@ LIMIT 200
 # one huge unsplittable file ... repartition immediately after the
 # read").  avg over ints is an exact long sum + one division, so the
 # result is partition-order-proof under ANY width (verified identical,
-# tools/exp_r12.py).  The width is the module's parameterised shuffle
-# knob, not a constant: a cluster run inherits its (high) width, where
+# `git show 851bd3a:tools/exp_r12.py`).  The width is the module's
+# parameterised shuffle knob, not a constant: a cluster run inherits its
+# (high) width, where
 # the hint degenerates to one narrow exchange ahead of a scan that
 # already parallelizes via row groups.
 def _bench_width() -> int:
@@ -707,8 +711,9 @@ def main() -> None:
         # 1 MB splits just dispatched ~10 empty tasks per lineitem scan
         # (the one split containing the row-group start does all the
         # work).  Measured q1 best-of-7: 1m 0.246s / 4m 0.223s / 128m
-        # 0.227s (tools/exp_r12.py).  4m keeps a few splits per file
-        # should a future generation ship multiple row groups, without
+        # 0.227s (`git show 851bd3a:tools/exp_r12.py`).  4m keeps a few
+        # splits per file should a future generation ship multiple row
+        # groups, without
         # the empty-task overhead.  At real scale the default (or
         # larger) is correct; the SF gate keeps it test-scale-only.
         spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")

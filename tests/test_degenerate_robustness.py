@@ -449,7 +449,7 @@ def timewarp_sf(tmp_path_factory):
 
 
 # one representative per timestamp-validity hazard class (tables.py
-# valid_ts contract; corpus: tools/probe_timewarp_r10.py)
+# valid_ts contract; corpus: sweep_degenerate.py --timewarp)
 TIMEWARP_OPS = [
     "ts_resample_ffill",      # bounded-spine: one decades-out ts would
     #                           materialize a 150-year hourly grid (OOM
@@ -505,7 +505,7 @@ def magnitude_sf(tmp_path_factory):
 
 
 # one representative per round-10 --magnitude mechanism
-# (R10_MAGNITUDE_PLAN.md; corpus: tools/probe_magnitude_r10.py)
+# (R10_MAGNITUDE_PLAN.md; corpus: sweep_degenerate.py --magnitude)
 MAGNITUDE_OPS = [
     "ts_lttb_downsample",       # exact-cents CAST(round(value*100) AS
     #                             BIGINT) lane — int64 overflow at 1e18
@@ -551,7 +551,7 @@ def mixdim_sf(tmp_path_factory):
     return str(d)
 
 
-# one representative per --mixdim mechanism (tools/probe_mixdim_r10.py)
+# one representative per --mixdim mechanism (sweep_degenerate.py)
 MIXDIM_OPS = [
     "llm_simsearch_cosine_topk",  # matrix kernel: ragged lengths crashed
     #                               np.stack before the EMBED_DIM layer
@@ -578,7 +578,7 @@ def bigdoc_sf(tmp_path_factory):
 
 
 # one representative per round-10 --bigdoc mechanism (R10_BIGDOC_PLAN;
-# the TIMING gate is tools/probe_bigdoc_r10.py's subprocess-per-op run)
+# the TIMING gate is sweep_degenerate.py --bigdoc --solo)
 BIGDOC_OPS = [
     "llm_dedup_ngram_jaccard",   # capped gram signature + linear build
     "llm_dedup_fuzzy_edit",      # 4 KB edit-distance verify cap
@@ -858,7 +858,7 @@ def orphans_sf(tmp_path_factory):
 
 
 # one representative per orphan-FK risk class the round-12 probe named
-# (tools/probe_orphans_r12.py; full-registry catalog on the corpus was
+# (sweep_degenerate.py --orphans; full-registry catalog on the corpus was
 # 329 ok + 22 rows-only, fail=0 — the class was already covered by the
 # round-9 NULL contracts, this pins it in the suite)
 ORPHAN_OPS = [

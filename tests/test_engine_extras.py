@@ -183,8 +183,8 @@ def test_rolling_corr_tiny_data_no_div_by_zero(spark, sf_smoke):
     """At sf0.001 some 7-day windows hold a constant daily count, making
     the correlation denominator zero — must yield NULL (undefined
     correlation), not an ANSI divide-by-zero error.  Full-registry tiny-
-    data sweep lives in tools/sweep_sf0001.py (runs every op at
-    sf0.001; too slow for the suite)."""
+    data sweep is ``tools/sweep_degenerate.py --sf <sf0.001 dir>`` (runs
+    every op at sf0.001; too slow for the suite)."""
     from un_datapipeline_spark.registry import all_operators
 
     rows = all_operators()["win_rolling_corr"].fn(spark, sf_smoke).collect()

@@ -12,6 +12,8 @@ object that raises controlled exceptions.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from un_datapipeline_spark import session as sess_mod
@@ -178,16 +180,55 @@ def test_iteration_scope_static_and_freeze(spark):
 def test_connected_components_uses_checkpoint_dir(spark, sf_smoke, tmp_path, monkeypatch):
     """Every connected_components materialization goes through the
     durability gate: with SPARK_GRAFT_CHECKPOINT_DIR set, the run writes
-    reliable checkpoint files into that dir.  The dir is also set on the
-    context, because graft_checkpoint keeps a checkpoint dir an earlier
-    test already set there."""
+    reliable checkpoint files into that dir — even when an earlier test
+    left another checkpoint dir on the context."""
     from un_datapipeline_spark.operators.advanced import _dup_edges, connected_components
     from un_datapipeline_spark.tables import load_table
 
     target = tmp_path / "cc_ckpt"
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(target))
-    spark.sparkContext.setCheckpointDir(str(target))
     labels = connected_components(_dup_edges(load_table(spark, sf_smoke, "documents")))
     assert labels.count() > 0
     written = [p for p in target.rglob("*") if p.is_file()]
     assert written, "connected_components bypassed the checkpoint dir"
+
+
+def test_graft_checkpoint_replaces_mismatched_context_dir(spark, tmp_path, monkeypatch):
+    """A checkpoint dir already set on the context (dir A) must not
+    swallow the configured SPARK_GRAFT_CHECKPOINT_DIR (dir B): the
+    materialization lands in B, and A gets nothing."""
+    from un_datapipeline_spark.session import graft_checkpoint
+
+    dir_a, dir_b = tmp_path / "ckpt_a", tmp_path / "ckpt_b"
+    spark.sparkContext.setCheckpointDir(str(dir_a))
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(dir_b))
+    out = graft_checkpoint(spark.range(10))
+    assert out.count() == 10
+    assert [p for p in dir_b.rglob("*") if p.is_file()], "nothing written to the env dir"
+    assert not [p for p in dir_a.rglob("*") if p.is_file()]
+
+
+_SET_KEY = "spark.sql.files.openCostInBytes"
+_UNSET_KEY = "spark.sql.sources.partitionOverwriteMode"
+
+
+@pytest.mark.parametrize("raises", [False, True], ids=["normal_exit", "raise"])
+def test_conf_scope_restores_set_and_unset_keys(spark, raises):
+    """conf_scope restores a key that was set to its old value and
+    unsets a key that was unset — on a normal exit and when the body
+    raises."""
+    from un_datapipeline_spark.session import conf_scope
+
+    spark.conf.set(_SET_KEY, "12345")
+    spark.conf.unset(_UNSET_KEY)
+    try:
+        with pytest.raises(RuntimeError) if raises else contextlib.nullcontext():
+            with conf_scope(spark, {_SET_KEY: "999", _UNSET_KEY: "dynamic"}):
+                assert spark.conf.get(_SET_KEY) == "999"
+                assert spark.conf.get(_UNSET_KEY) == "dynamic"
+                if raises:
+                    raise RuntimeError("body failed")
+        assert spark.conf.get(_SET_KEY) == "12345"
+        assert spark.conf.get(_UNSET_KEY, None) is None
+    finally:
+        spark.conf.unset(_SET_KEY)

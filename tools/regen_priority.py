@@ -83,6 +83,26 @@ FORCE_REFRESH: tuple[str, ...] = (
     "graph_degree_stats",        # shared _cust_supp_edges
     "graph_jaccard_neighbors",   # shared _cust_supp_edges
     "graph_link_predict_aa",     # shared _cust_supp_edges
+    # session.conf_scope replaces hand-rolled conf save/set/restore
+    # blocks (same keys and values; join_runtime_bloom above is one):
+    "etl_compact_files",
+    "etl_backfill_partitions",
+    # every op that enters streaming.stream_shuffle_partitions:
+    "src_stream_file",
+    "stream_checkpoint_resume",
+    "stream_custom_stateful",
+    "stream_dedup",
+    "stream_foreach_batch_sink",
+    "stream_kafka_source",
+    "stream_session_dynamic_gap",
+    "stream_session_window",
+    "stream_sliding_topk",
+    "stream_sliding_window",
+    "stream_stateful_running",
+    "stream_static_join",
+    "stream_stream_join",
+    "stream_tumbling_window",
+    "stream_watermark_late",
 )
 
 # Round-10's window overflow mechanism (kept for the procedure doc): when

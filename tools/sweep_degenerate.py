@@ -49,7 +49,7 @@ op downstream of ingest.  Without the contract, 38 ops diverged
 "out of range" on Inf — probed round 8).
 
 A seventh mode (--timewarp, promoted round 9 from
-tools/probe_timewarp_r10.py) stripes decades-out corrupt timestamps
+its standalone probe) stripes decades-out corrupt timestamps
 into ``events.ts`` (pre-1970 negative epochs + 2099 futures) and
 ``orders.o_orderdate`` (1968).  The stripe is deliberately DENSE (one
 in three events rows, one in eleven order dates) so the classes trigger
@@ -63,7 +63,7 @@ honest row behind one far-future event (stream_dedup lost 47/210).
 Full-registry fail=0 since the round-9 second wave.
 
 An eighth mode (--magnitude, promoted round 10 from
-tools/probe_magnitude_r10.py; corpus rebuilt round 11 for the raised
+its standalone probe; corpus rebuilt round 11 for the raised
 bound) stripes FINITE but absurd magnitudes into ``events.value`` —
 the unit-bug / mis-parsed-id shape the --nonfinite contract does not
 catch.  44 ops crashed before the round-10 ingest-contract extension;
@@ -80,10 +80,10 @@ the three canonical hot keys of a 100 TB feed: one user owning 50% of
 events, one lang owning 90% of documents, and a 30% near-duplicate /
 exact-duplicate document+embedding cluster (one hot LSH bucket).
 Parity gate here; the per-op WALL-TIME straggler catalog is
-tools/probe_skew_r11.py (subprocess-per-op, the bigdoc pattern).
+``--skew --solo`` (one fresh process per op, the bigdoc pattern).
 
 A fourteenth mode (--mixdim, promoted round 10 from
-tools/probe_mixdim_r10.py) mixes 32- and 72-dim vectors into the 64-dim
+its standalone probe) mixes 32- and 72-dim vectors into the 64-dim
 embeddings table — the model-version-mix shape; the EMBED_DIM dimension
 layer of the vector-validity contract excludes off-width vectors on
 both engines (10 of 16 vector ops crashed before it).
@@ -91,19 +91,19 @@ both engines (10 of 16 vector ops crashed before it).
 Twelfth and thirteenth modes (round 10): --bigdoc splices ~130 KB and
 ~520 KB documents into the corpus (PARITY check of the bounded-prefix
 signature contract; the straggler TIMING gate is
-tools/probe_bigdoc_r10.py's subprocess-per-op run), and --ctrlchars
+``--bigdoc --solo``), and --ctrlchars
 stripes embedded newlines / CRLF / quotes / tabs / NUL bytes into
 documents.text (serialization boundaries; src_text_lines' typed
 ContractViolation fail-fast counts as a contracted pass).
 
 An eleventh mode (--badjson, promoted round 10 from
-tools/probe_badjson_r10.py) stripes real-feed JSON corruption into
+its standalone probe) stripes real-feed JSON corruption into
 ``events.props`` (truncated objects, bare text, empty strings, null
 literals, wrong types, duplicate keys).  4 ops failed before the
 json_usable/try_parse_json guards — including the quarantine op
 crashing on exactly the rows it exists to quarantine.
 
-A tenth mode (--empty, promoted round 10 from tools/probe_empty_r10.py)
+A tenth mode (--empty, promoted round 10 from its standalone probe)
 writes events/documents/embeddings as 0-row parquet with the shipped
 schemas — the day-one shape of every scheduled pipeline.  9 ops failed
 before the round-10 wave (explicit read-back schemas, count_if for
@@ -111,14 +111,14 @@ match counters, 0-row short-circuits for driver-side sample/fit, a
 TIMESTAMP relabel for the 0-row DATE dtype).
 
 A ninth mode (--dupkeys, promoted round 10 from
-tools/probe_dupkeys_r10.py) replays surrogate keys with differing
+its standalone probe) replays surrogate keys with differing
 payloads (1/10 event_ids, 1/7 doc_ids, 1/8 vec_ids) — at-least-once
 delivery / re-crawl / re-embed.  14 ops failed before the
 deterministic-per-key-winner contract (tables.winner_document /
 winner_embedding / latest_event), two of them SILENT wrong answers
 (Jaccard 1.878, containment 2.0 — values the metrics can never take).
 
-A sixth mode (--nulls, promoted round 9 from tools/probe_nulls_r09.py)
+A sixth mode (--nulls, promoted round 9 from its standalone probe)
 stripes NULLs into every nullable non-key column — the shape a real
 100 TB feed always carries.  It found 45 divergent/crashing ops in
 round 8 (catalog: R09_NULLS_PLAN.md); the round-9 class fixes (NULL
@@ -144,17 +144,32 @@ Usage:
     python tools/sweep_degenerate.py --bigdoc [ops...]   # 130/520 KB docs
     python tools/sweep_degenerate.py --ctrlchars [ops...] # control chars
     python tools/sweep_degenerate.py --mixdim [ops...]   # 32/72-dim vectors
+
+    # strict mirror on an existing corpus directory instead of a built one
+    python tools/sweep_degenerate.py --sf SF_DIR [ops...]
+
+    # one fresh process per op, timed, hard limit (default 120 s); takes
+    # any one mode or --sf
+    python tools/sweep_degenerate.py --bigdoc --solo [--timeout S] [ops...]
+    python tools/sweep_degenerate.py --sf SF_DIR --solo [ops...]
+
+Each op prints one verdict line (OK / ROWS_ONLY / CONTRACT / FAIL) with
+``rows=`` and ``spark_s=``; ``--solo`` appends the child's ``wall_s=``
+or prints TIMEOUT.  Exit status is 1 on any FAIL or TIMEOUT.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
-import traceback
+import time
+from typing import Callable, NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 import pandas as pd
@@ -413,7 +428,7 @@ def build_nonfinite_dataset(d: str) -> None:
 
 def build_magnitude_dataset(d: str) -> None:
     """Absurd-magnitude corpus (--magnitude, promoted round 10 from
-    tools/probe_magnitude_r10.py; rebuilt round 11 for the raised 9e15
+    its standalone probe; rebuilt round 11 for the raised 9e15
     ingest bound, ADVICE r10): events.value striped with FINITE but
     non-physical magnitudes in BOTH contract regimes —
 
@@ -534,8 +549,8 @@ def build_skew_dataset(d: str) -> None:
     Values/timestamps stay sane (this corpus tests skew, not
     magnitude).  n_chars mirrors len(text) — the generator invariant.
     Correctness on this corpus is the parity gate; the WALL-TIME
-    catalog (stragglers from hot keys) is tools/probe_skew_r11.py's
-    subprocess-per-op run, same split as the round-10 bigdoc pair."""
+    catalog (stragglers from hot keys) is ``--skew --solo``, same split
+    as the round-10 bigdoc pair."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -595,7 +610,7 @@ def build_skew_dataset(d: str) -> None:
 
 def build_badjson_dataset(d: str) -> None:
     """Malformed-JSON corpus (--badjson, promoted round 10 from
-    tools/probe_badjson_r10.py after the fix wave): ``events.props``
+    its standalone probe after the fix wave): ``events.props``
     striped (1/7 rows) with real-feed corruption — truncated objects,
     bare non-JSON text, empty strings, ``null`` literals, wrong-type
     payloads, duplicate-key objects.  Spark's JSON surfaces NULL
@@ -642,7 +657,7 @@ def build_badjson_dataset(d: str) -> None:
 
 def build_mixdim_dataset(d: str) -> None:
     """Mixed-embedding-dimension corpus (--mixdim, promoted round 10
-    from tools/probe_mixdim_r10.py after the EMBED_DIM contract): ~1/9
+    from its standalone probe after the EMBED_DIM contract): ~1/9
     embedding rows truncated to 32 dims, ~1/17 padded to 72 — the
     model-version mix every production embedding table accumulates (a
     re-embed job lands different-width rows; list<float> is unbounded).
@@ -682,7 +697,7 @@ def build_mixdim_dataset(d: str) -> None:
 
 def build_bigdoc_dataset(d: str) -> None:
     """Oversized-document corpus (--bigdoc, promoted round 10 from
-    tools/probe_bigdoc_r10.py after the bounded-prefix + linear-kernel
+    its standalone probe after the bounded-prefix + linear-kernel
     wave): the first two documents replaced with ~130 KB (20k-word) and
     ~520 KB (80k-word) outliers — the multi-MB crawl artifacts
     (concatenated logs, minified JS, OCR dumps) that turn super-linear
@@ -717,7 +732,7 @@ def build_bigdoc_dataset(d: str) -> None:
 
 def build_ctrlchars_dataset(d: str) -> None:
     """Control-character corpus (--ctrlchars, promoted round 10 from
-    tools/probe_ctrlchars_r10.py): documents.text striped with embedded
+    its standalone probe): documents.text striped with embedded
     newlines, CRLF, quotes+commas, tabs, NUL bytes, and literal
     backslash-n — serialization-boundary stress for the text/CSV
     writers.  src_text_lines raises its typed ContractViolation here
@@ -757,7 +772,7 @@ def build_ctrlchars_dataset(d: str) -> None:
 
 def build_empty_dataset(d: str) -> None:
     """Zero-row corpus (--empty, promoted round 10 from
-    tools/probe_empty_r10.py after the fix wave): events, documents and
+    its standalone probe after the fix wave): events, documents and
     embeddings written as 0-row parquet with the exact shipped schemas
     (pyarrow ``schema.empty_table()``); relational tables intact.  The
     day-one shape of every scheduled pipeline — a new partition/tenant
@@ -776,7 +791,7 @@ def build_empty_dataset(d: str) -> None:
 
 def build_dupkeys_dataset(d: str) -> None:
     """Duplicate-surrogate-key corpus (--dupkeys, promoted round 10 from
-    tools/probe_dupkeys_r10.py after the deterministic-winner wave):
+    its standalone probe after the deterministic-winner wave):
     1/10 event_ids replayed (shifted ts, different value/event_type),
     1/7 doc_ids re-crawled (different text), 1/8 vec_ids re-embedded
     (different vector) — the at-least-once-delivery shape every real
@@ -829,7 +844,7 @@ def build_dupkeys_dataset(d: str) -> None:
 
 
 def build_nulls_dataset(d: str) -> None:
-    """NULL-bulk corpus (--nulls, promoted from tools/probe_nulls_r09.py
+    """NULL-bulk corpus (--nulls, promoted from its standalone probe
     after the round-9 fix wave): NULLs striped into every nullable
     non-key column — NULL text/lang/source, NULL value/props/event_type,
     NULL o_totalprice/o_orderpriority, NULL l_discount/l_tax/
@@ -923,7 +938,7 @@ def build_nulls_dataset(d: str) -> None:
 
 def build_orphans_dataset(d: str) -> None:
     """Referential-violation corpus (--orphans, promoted round 12 from
-    tools/probe_orphans_r12.py): dangling foreign keys striped into the
+    its standalone probe): dangling foreign keys striped into the
     three fact->dim edges — the single most common real-feed corruption
     after NULLs (deleted accounts, GDPR erasure, partial ingestion,
     cross-system id spaces):
@@ -984,7 +999,7 @@ def build_orphans_dataset(d: str) -> None:
 
 def build_timewarp_dataset(d: str) -> None:
     """Decades-out-timestamp corpus (--timewarp, promoted from
-    tools/probe_timewarp_r10.py after the round-9 second-wave fixes):
+    its standalone probe after the round-9 second-wave fixes):
     events.ts striped with pre-1970 negative epochs (1969-12-31 23:45,
     1950) and far-future stamps (2099); orders.o_orderdate striped with
     1968.  The stripe is deliberately dense (1/3 of events rows, 1/11
@@ -1088,28 +1103,9 @@ def build_tiny_dataset(d: str) -> None:
     shrink("embeddings", em)
 
 
-def run_registry(d: str, only: set[str], app_name: str = "degen-sweep"):
-    """Run every registered op on the corpus at ``d`` through the
-    driver-mirror strict compare on both engines; returns
-    (n_ok, n_rows_only, fails).  The ONE harness loop — the corpus
-    probes (tools/probe_nulls_r09.py) reuse it instead of forking a
-    copy that would drift (round-8 review catch)."""
-    from pyspark.sql import SparkSession
-
-    from tests.strict_diff import canon, strict_compare
+def _select(only: set[str]) -> dict:
+    """The registered ops named in ``only`` (all of them when empty)."""
     from un_datapipeline_spark.registry import all_operators
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName(app_name)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # the one canonical table list + view setup (don't fork a copy here)
-    from tests.oracle_diff import duck_connect
-
-    con = duck_connect(d)
 
     ops = all_operators()
     unknown = only - set(ops)
@@ -1118,136 +1114,206 @@ def run_registry(d: str, only: set[str], app_name: str = "degen-sweep"):
         # a mistyped --flag falling through to the name filter) must be
         # loud, not silently vacuous (round-8 review catch).
         raise SystemExit(f"unknown operator name(s) in filter: {sorted(unknown)}")
+    return {n: op for n, op in ops.items() if not only or n in only}
+
+
+def run_registry(d: str, only: set[str]):
+    """Run every registered op (or the ``only`` subset) on the corpus at
+    ``d`` through the driver-mirror strict compare on both engines,
+    printing one verdict line per op with its row counts and Spark time;
+    returns (n_ok, n_rows_only, fails).  The ONE harness loop: every
+    corpus mode, ``--sf`` and each ``--solo`` child run it, so parity and
+    timing never come from a forked copy that drifts."""
+    from pyspark.sql import SparkSession
+
+    from tests.strict_diff import canon, strict_compare
+    from un_datapipeline_spark.registry import ContractViolation
+
+    ops = _select(only)
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("degen-sweep")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    # the one canonical table list + view setup (don't fork a copy here)
+    from tests.oracle_diff import duck_connect
+
+    con = duck_connect(d)
     fails: list[str] = []
     n_ok = n_ro = 0
     for name, op in ops.items():
-        if only and name not in only:
-            continue
+        t0 = time.perf_counter()
         try:
             spdf = op.fn(spark, d).toPandas()
+        except ContractViolation as ex:
+            # deliberate fail-fast on input the op's contract forbids
+            # (e.g. src_text_lines on embedded newlines) — the
+            # engine-correct answer on a corrupt corpus, counted as a
+            # contracted pass, never a crash
+            print(f"CONTRACT {name}: {str(ex).splitlines()[0][:160]}", flush=True)
+            n_ro += 1
+            continue
         except Exception as ex:
-            from un_datapipeline_spark.registry import ContractViolation
-
-            if isinstance(ex, ContractViolation):
-                # deliberate fail-fast on input the op's contract forbids
-                # (e.g. src_text_lines on embedded newlines) — the
-                # engine-correct answer on a corrupt corpus, counted as
-                # a contracted pass, never a crash
-                print(f"CONTRACT {name}: {str(ex).splitlines()[0][:160]}")
-                n_ro += 1
-                continue
-            print(f"FAIL {name}: SPARK CRASH {str(ex).splitlines()[0][:160]}")
+            print(f"FAIL {name}: SPARK CRASH {str(ex).splitlines()[0][:160]}", flush=True)
             fails.append(name)
             continue
+        stats = f"spark_s={time.perf_counter() - t0:.2f}"
         if op.oracle is None:
             try:
                 canon(spdf)
             except TypeError as ex:
-                print(f"FAIL {name}: canon crash {ex}")
+                print(f"FAIL {name}: canon crash {ex} {stats}", flush=True)
                 fails.append(name)
                 continue
+            print(f"ROWS_ONLY {name}: rows={len(spdf)} {stats}", flush=True)
             n_ro += 1
             continue
         try:
             ocdf = con.execute(op.oracle).df()
         except Exception as ex:
-            print(f"FAIL {name}: DUCKDB CRASH {str(ex).splitlines()[0][:160]}")
+            print(f"FAIL {name}: DUCKDB CRASH {str(ex).splitlines()[0][:160]}", flush=True)
             fails.append(name)
             continue
+        stats = f"rows={len(spdf)}/{len(ocdf)} {stats}"
         problems = strict_compare(spdf, ocdf)
         if problems:
-            print(f"FAIL {name}: {problems[0][:160]}")
+            print(f"FAIL {name}: {problems[0][:160]} {stats}", flush=True)
             fails.append(name)
         else:
+            print(f"OK {name}: {stats}", flush=True)
             n_ok += 1
     print(f"TOTAL ok={n_ok} rows_only={n_ro} fail={len(fails)} {fails}")
     spark.stop()
     return n_ok, n_ro, fails
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    flags = (
-        "--tiny",
-        "--unicode",
-        "--ties",
-        "--nonfinite",
-        "--nulls",
-        "--timewarp",
-        "--magnitude",
-        "--dupkeys",
-        "--empty",
-        "--badjson",
-        "--bigdoc",
-        "--ctrlchars",
-        "--mixdim",
-        "--skew",
-        "--orphans",
-    )
-    bad = [a for a in args if a.startswith("--") and a not in flags]
-    if bad:
+_VERDICTS = ("OK ", "ROWS_ONLY ", "CONTRACT ", "FAIL ")
+
+
+def run_solo(d: str, only: set[str], timeout: int) -> list[str]:
+    """Run each op of ``only`` (every registered op when empty) in its
+    own fresh process — ``sweep_degenerate.py --sf d <op>`` — under a
+    hard wall-clock limit, so one hang or a long-JVM inflation cannot
+    poison the next measurement.  Prints the child's verdict line plus
+    its wall time (JVM start included), or TIMEOUT; returns the ops that
+    failed or timed out."""
+    bad_ops: list[str] = []
+    for name in _select(only):
+        t0 = time.perf_counter()
+        try:
+            r = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--sf", d, name],
+                capture_output=True,
+                text=True,
+                timeout=timeout,
+                cwd=REPO,
+            )
+            lines = [ln for ln in r.stdout.splitlines() if ln.startswith(_VERDICTS)]
+            verdict = lines[-1] if lines else (
+                f"FAIL {name}: child rc={r.returncode} "
+                + (r.stderr.strip().splitlines() or ["?"])[-1][:160]
+            )
+        except subprocess.TimeoutExpired:
+            verdict = f"TIMEOUT {name}: >{timeout}s"
+        print(f"{verdict} wall_s={time.perf_counter() - t0:.1f}", flush=True)
+        if verdict.startswith(("FAIL ", "TIMEOUT ")):
+            bad_ops.append(name)
+    print(f"SOLO TOTAL fail_or_timeout={len(bad_ops)} {bad_ops}")
+    return bad_ops
+
+
+# Corpus modes: one flag per corpus builder; None is the default
+# degenerate corpus.  Exactly one corpus per run.
+MODES = {
+    None: build_dataset,
+    "--tiny": build_tiny_dataset,
+    "--unicode": build_unicode_dataset,
+    "--ties": build_ties_dataset,
+    "--nonfinite": build_nonfinite_dataset,
+    "--nulls": build_nulls_dataset,
+    "--timewarp": build_timewarp_dataset,
+    "--magnitude": build_magnitude_dataset,
+    "--dupkeys": build_dupkeys_dataset,
+    "--empty": build_empty_dataset,
+    "--badjson": build_badjson_dataset,
+    "--bigdoc": build_bigdoc_dataset,
+    "--ctrlchars": build_ctrlchars_dataset,
+    "--mixdim": build_mixdim_dataset,
+    "--skew": build_skew_dataset,
+    "--orphans": build_orphans_dataset,
+}
+
+
+class Args(NamedTuple):
+    build: Callable[[str], None] | None  # corpus builder; None with --sf
+    sf: str | None  # existing corpus directory (--sf)
+    solo: bool
+    timeout: int
+    only: set[str]
+
+
+def parse_args(argv: list[str]) -> Args:
+    """Parse the command line without running anything; every misuse
+    aborts loudly, because a run that silently selects zero ops or the
+    wrong corpus prints a green TOTAL for a gate that never executed."""
+    args = list(argv)
+    values = {}
+    for opt in ("--sf", "--timeout"):
+        if opt in args:
+            i = args.index(opt)
+            if i + 1 == len(args):
+                raise SystemExit(f"{opt} needs a value")
+            values[opt] = args[i + 1]
+            del args[i : i + 2]
+    solo = "--solo" in args
+    args = [a for a in args if a != "--solo"]
+    unknown = [a for a in args if a.startswith("--") and a not in MODES]
+    if unknown:
         # A mistyped flag must not fall through to the op-name filter,
         # where it would select zero ops and exit 0 (round-8 review).
-        raise SystemExit(f"unknown flag(s) {bad}; modes: {flags}")
-    picked = [f for f in flags if f in args]
+        modes = [m for m in MODES if m]
+        raise SystemExit(
+            f"unknown flag(s) {unknown}; modes: {modes}; "
+            "options: --sf DIR, --solo, --timeout S"
+        )
+    picked = [a for a in args if a in MODES]
     if len(picked) > 1:
         # Modes are mutually exclusive (one corpus per run) — a combined
-        # invocation would silently run only the first mode's corpus and
-        # print a green TOTAL for a gate that never executed (round-9
+        # invocation would silently run only one mode's corpus (round-9
         # review: the same zero-op-looks-green class as above).
         raise SystemExit(f"mode flags are mutually exclusive, got {picked}")
-    tiny = "--tiny" in args
-    unicode_mode = "--unicode" in args
-    ties_mode = "--ties" in args
-    nonfinite_mode = "--nonfinite" in args
-    nulls_mode = "--nulls" in args
-    timewarp_mode = "--timewarp" in args
-    magnitude_mode = "--magnitude" in args
-    dupkeys_mode = "--dupkeys" in args
-    empty_mode = "--empty" in args
-    badjson_mode = "--badjson" in args
-    bigdoc_mode = "--bigdoc" in args
-    ctrlchars_mode = "--ctrlchars" in args
-    mixdim_mode = "--mixdim" in args
-    skew_mode = "--skew" in args
-    orphans_mode = "--orphans" in args
-    only = set(a for a in args if a not in flags)
-    d = tempfile.mkdtemp(prefix="degen_")
-    if tiny:
-        build_tiny_dataset(d)
-    elif unicode_mode:
-        build_unicode_dataset(d)
-    elif ties_mode:
-        build_ties_dataset(d)
-    elif nonfinite_mode:
-        build_nonfinite_dataset(d)
-    elif nulls_mode:
-        build_nulls_dataset(d)
-    elif timewarp_mode:
-        build_timewarp_dataset(d)
-    elif magnitude_mode:
-        build_magnitude_dataset(d)
-    elif dupkeys_mode:
-        build_dupkeys_dataset(d)
-    elif empty_mode:
-        build_empty_dataset(d)
-    elif badjson_mode:
-        build_badjson_dataset(d)
-    elif bigdoc_mode:
-        build_bigdoc_dataset(d)
-    elif ctrlchars_mode:
-        build_ctrlchars_dataset(d)
-    elif mixdim_mode:
-        build_mixdim_dataset(d)
-    elif skew_mode:
-        build_skew_dataset(d)
-    elif orphans_mode:
-        build_orphans_dataset(d)
-    else:
-        build_dataset(d)
-    _, _, fails = run_registry(d, only)
-    shutil.rmtree(d, ignore_errors=True)
-    return 1 if fails else 0
+    if "--sf" in values and picked:
+        raise SystemExit(f"--sf runs an existing corpus; it cannot take mode {picked[0]}")
+    if "--timeout" in values and not solo:
+        raise SystemExit("--timeout applies only to --solo runs")
+    try:
+        timeout = int(values.get("--timeout", 120))
+    except ValueError:
+        raise SystemExit(f"--timeout needs whole seconds, got {values['--timeout']!r}")
+    return Args(
+        build=None if "--sf" in values else MODES[picked[0] if picked else None],
+        sf=values.get("--sf"),
+        solo=solo,
+        timeout=timeout,
+        only={a for a in args if a not in MODES},
+    )
+
+
+def main() -> int:
+    a = parse_args(sys.argv[1:])
+    d = a.sf or tempfile.mkdtemp(prefix="degen_")
+    try:
+        if a.build:
+            a.build(d)
+        if a.solo:
+            return 1 if run_solo(d, a.only, a.timeout) else 0
+        _, _, fails = run_registry(d, a.only)
+        return 1 if fails else 0
+    finally:
+        if not a.sf:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -152,7 +152,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bounded-spine contract: the per-type spine spans observed min..max,
     so one decades-out corrupt timestamp materializes a 150-year grid
-    (tools/probe_timewarp_r10 confirmed the hang).  ``valid_ts`` bounds
+    (the ``--timewarp`` sweep confirmed the hang).  ``valid_ts`` bounds
     the observed range on BOTH engines (tables.py documents the
     window); scan-pushable BETWEEN, bitwise-neutral on clean data."""
     e = load_table(spark, sf_dir, "events").where(valid_ts())

@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import ckpt
+from un_datapipeline_spark.session import ckpt, conf_scope
 from un_datapipeline_spark.tables import (
     cents_sum,
     latest_event,
@@ -661,30 +661,22 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     confs, which are plan-time state — the joined aggregate (≤3 rows) is
     frozen via an eager session.ckpt while they are set, then the
     session confs are restored (a lazily-collected plan would otherwise
-    optimize AFTER the finally block, silently dropping the bloom path —
+    optimize AFTER the conf_scope block, silently dropping the bloom path —
     the same leak ``join_sort_merge`` avoids with a plan-local hint).
     tests/test_plan_shapes.py asserts bloom_filter_agg appears in the
     executed plan."""
-    conf = spark.conf
-    saved = {
-        k: conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
-    }
-    try:
-        # Force the shuffle-join regime the filter exists for (at test
-        # scale Catalyst would otherwise just broadcast the build side),
-        # and drop the size gates that assume cluster-sized inputs.
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
+    # Force the shuffle-join regime the filter exists for (at test scale
+    # Catalyst would otherwise just broadcast the build side), and drop
+    # the size gates that assume cluster-sized inputs.
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        },
+    ):
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount"
         )
@@ -705,12 +697,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("l_returnflag")
             .transform(ckpt(eager=True))
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
     return out
 
 

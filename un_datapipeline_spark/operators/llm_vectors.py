@@ -32,7 +32,7 @@ from un_datapipeline_spark.tables import load_table, winner_embedding_sql
 # embedding carrying a NULL element, OR an embedding whose length
 # differs from the table's declared dimension is NOT a vector —
 # similarity, clustering, codebook and LSH semantics exclude it.  The
-# dimension layer (EMBED_DIM, tools/probe_mixdim_r10.py) is the
+# dimension layer (EMBED_DIM, sweep mode --mixdim) is the
 # model-version-mix shape every production embedding table accumulates:
 # a re-embed job lands 32- or 72-wide rows into the 64-wide table and
 # nothing in the parquet schema prevents it (`list<float>` is

@@ -18,7 +18,6 @@ memory-sink name — shared state makes availableNow reruns no-ops
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 import uuid
@@ -27,12 +26,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import ensure_runtime_confs
+from un_datapipeline_spark.session import conf_scope, ensure_runtime_confs
 from un_datapipeline_spark.tables import load_table, valid_ts, valid_ts_sql
 
 
-@contextlib.contextmanager
-def stream_shuffle_partitions(spark: SparkSession):
+def stream_shuffle_partitions(spark: SparkSession) -> conf_scope:
     """Pin a small shuffle-partition count for the duration of one
     bounded streaming query, restoring the caller's setting after.
 
@@ -46,14 +44,8 @@ def stream_shuffle_partitions(spark: SparkSession):
     cluster you would size this to the stream's state volume
     (SPARK_GRAFT_STREAM_PARTITIONS, e.g. executors × cores), not to 4.
     """
-    key = "spark.sql.shuffle.partitions"
     n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-    before = spark.conf.get(key)
-    spark.conf.set(key, n)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
+    return conf_scope(spark, {"spark.sql.shuffle.partitions": n})
 
 # Physical ts dtypes the events generator has shipped so far, and the
 # stream-source schema type each maps to.  Mirrors the batch dispatch in
@@ -284,7 +276,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Watermark-poisoning guard: the watermark is MONOTONIC state — one
     far-future corrupt event advances it past every honest row and the
-    stateful dedup silently DROPS them (tools/probe_timewarp_r10
+    stateful dedup silently DROPS them (the ``--timewarp`` sweep
     measured 47 of 210 rows lost to a single 2099 stripe).  ``valid_ts``
     rejects out-of-window event times before they can poison the
     watermark, mirrored in the oracle (tables.py documents the
@@ -371,7 +363,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Watermark-poisoning guard (same class as stream_dedup): both legs'
     watermarks are monotonic, so one far-future corrupt event evicts
-    every honest row from the join state (tools/probe_timewarp_r10
+    every honest row from the join state (the ``--timewarp`` sweep
     measured 20 of 51 distinct clicks surviving a single 2099 stripe).
     ``valid_ts`` rejects out-of-window event times on both legs,
     mirrored in the oracle (contract: tables.py)."""

@@ -58,8 +58,8 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bounded-spine contract: the spine spans min..max of the OBSERVED
     range, so one decades-out corrupt timestamp would materialize a
-    150-year grid (task OOM at cluster scale — tools/probe_timewarp_r10
-    confirmed a >7-minute hang on a 6k-row corpus).  ``valid_ts`` bounds
+    150-year grid (task OOM at cluster scale — the ``--timewarp`` sweep
+    corpus, 6k rows, confirmed a >7-minute hang).  ``valid_ts`` bounds
     the range to the documented validity window on both engines (see
     tables.py); the filter is a scan-pushable BETWEEN."""
     e = load_table(spark, sf_dir, "events").where(valid_ts())

@@ -131,7 +131,7 @@ FUZZY_EDIT_CAP = 4096
 # HOT (lang, prefix) block — 30% of a corpus being near-duplicates of
 # one template, the spam/mirror shape — makes the full within-block
 # cross quadratic: 150 docs → 11k Levenshtein pairs → the op was the
-# one >120 s straggler in tools/probe_skew_r11.py's catalog.  The
+# one >120 s straggler in the ``--skew --solo`` sweep catalog.  The
 # standard production answer (Hernandez & Stolfo's sorted-neighborhood
 # method) compares each doc only with its W nearest block neighbors in
 # doc_id order, bounding per-block cost at size×W while a duplicate

@@ -46,6 +46,23 @@ STALE_REFRESH = (
     "graph_degree_stats",  # forced: re-edited since last stamp
     "graph_jaccard_neighbors",  # forced: re-edited since last stamp
     "graph_link_predict_aa",  # forced: re-edited since last stamp
+    "etl_compact_files",  # forced: re-edited since last stamp
+    "etl_backfill_partitions",  # forced: re-edited since last stamp
+    "src_stream_file",  # forced: re-edited since last stamp
+    "stream_checkpoint_resume",  # forced: re-edited since last stamp
+    "stream_custom_stateful",  # forced: re-edited since last stamp
+    "stream_dedup",  # forced: re-edited since last stamp
+    "stream_foreach_batch_sink",  # forced: re-edited since last stamp
+    "stream_kafka_source",  # forced: re-edited since last stamp
+    "stream_session_dynamic_gap",  # forced: re-edited since last stamp
+    "stream_session_window",  # forced: re-edited since last stamp
+    "stream_sliding_topk",  # forced: re-edited since last stamp
+    "stream_sliding_window",  # forced: re-edited since last stamp
+    "stream_stateful_running",  # forced: re-edited since last stamp
+    "stream_static_join",  # forced: re-edited since last stamp
+    "stream_stream_join",  # forced: re-edited since last stamp
+    "stream_tumbling_window",  # forced: re-edited since last stamp
+    "stream_watermark_late",  # forced: re-edited since last stamp
 )
 
 # 351 green names, stalest verdict first.

@@ -104,11 +104,18 @@ def graft_checkpoint(df, eager: bool = True, storage_level=None):
     routed through here) switches to ``Dataset.checkpoint`` against it —
     same semantics, executor-loss-safe, one more write+read per
     materialization.  No behavior change while the env is unset
-    (SCALING.md "Checkpoint durability posture")."""
+    (SCALING.md "Checkpoint durability posture").  A checkpoint dir the
+    context already has is replaced unless it lies in the env dir, so
+    the configured dir is never silently ignored."""
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt_dir:
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
+        current = sc.getCheckpointDir()
+        # setCheckpointDir(dir) writes into a fresh dir/<uuid> and reports
+        # it fully qualified, so compare its parent to the qualified env dir
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt_dir)
+        want = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path)
+        if current is None or current.rstrip("/").rsplit("/", 1)[0] != want.toString():
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     if storage_level is not None:
@@ -128,7 +135,33 @@ def ckpt(eager: bool = True, storage_level=None):
     return apply
 
 
-class iteration_scope:
+class conf_scope:
+    """Set session confs for the body of a ``with`` block and restore
+    them on exit — also when the body raises.  A key that was unset
+    before is ``unset()`` again (so its engine default, not a copied
+    value, comes back).  The one helper for every temporary conf in the
+    package; plan-time confs must be consumed (action or eager
+    :func:`ckpt`) inside the block."""
+
+    def __init__(self, spark: SparkSession, confs: dict[str, str]):
+        self._spark, self._confs = spark, confs
+
+    def __enter__(self):
+        conf = self._spark.conf
+        self._saved = {k: conf.get(k, None) for k in self._confs}
+        for k, v in self._confs.items():
+            conf.set(k, v)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for k, v in self._saved.items():
+            if v is None:
+                self._spark.conf.unset(k)
+            else:
+                self._spark.conf.set(k, v)
+
+
+class iteration_scope(conf_scope):
     """The one scope every ITERATIVE operator's fixpoint loop runs in
     (graph pagerank / kcore / BFS / LPA / modularity and
     connected_components).  It does three things:
@@ -153,18 +186,10 @@ class iteration_scope:
     plain ``for``/``while`` in the operator, inside the ``with`` block.
     """
 
-    KEY = "spark.sql.shuffle.partitions"
-
     def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._width = os.environ.get("SPARK_GRAFT_ITER_PARTITIONS", "8")
-        self._before: str | None = None
+        width = os.environ.get("SPARK_GRAFT_ITER_PARTITIONS", "8")
+        super().__init__(spark, {"spark.sql.shuffle.partitions": width})
         self._static: list = []
-
-    def __enter__(self) -> "iteration_scope":
-        self._before = self._spark.conf.get(self.KEY)
-        self._spark.conf.set(self.KEY, self._width)
-        return self
 
     def static(self, df):
         """Persist ``df`` for the scope's lifetime."""
@@ -181,7 +206,7 @@ class iteration_scope:
             for df in self._static:
                 df.unpersist()
         finally:
-            self._spark.conf.set(self.KEY, self._before)
+            super().__exit__(*exc)
 
 
 def get_spark(

@@ -282,7 +282,7 @@ def exact_double_sql(expr: str) -> str:
 
 # Timestamp validity window (per-OPERATOR contract — deliberately NOT an
 # ingest rewrite).  One decades-out timestamp per few hundred rows is
-# exactly what a real 100 TB feed carries (tools/probe_timewarp_r10.py),
+# exactly what a real 100 TB feed carries (sweep mode --timewarp),
 # and it harms two specific operator classes: (a) RANGE-MATERIALIZING ops
 # (grid/spine generators: sequence(min(ts), max(ts)) explodes to a
 # 150-year spine off ONE corrupt row — task OOM at cluster scale), and
