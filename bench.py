@@ -663,13 +663,23 @@ def _sf_of(d: str) -> float:
         return -1.0
 
 
-def _dir_bytes(d: str) -> int:
+def _dir_bytes(d: str) -> float:
+    """Bytes of every file under ``d``, at any depth (a hive-partitioned
+    or sharded input keeps its data in subdirectories).  ``inf`` when any
+    part of the tree cannot be read: an input the probe cannot size
+    fails OPEN to the cluster posture, never into the local twiddles."""
+
+    def fail(err: OSError):
+        raise err
+
     try:
         return sum(
-            e.stat().st_size for e in os.scandir(d) if e.is_file()
+            os.path.getsize(os.path.join(root, name))
+            for root, _dirs, files in os.walk(d, onerror=fail)
+            for name in files
         )
     except OSError:
-        return 0
+        return float("inf")
 
 
 # Below this input size the bench keeps the measured local posture
@@ -804,6 +814,11 @@ def main() -> None:
         "duckdb_queries": duck,
         "ratio_same_run": round(spark_total / duck_total, 3) if duck_total else None,
         "contract_shapes": contract,
+        # the run describes its own scale: the cores this process may
+        # use, the session's default parallelism and the posture chosen
+        "cpus": len(os.sched_getaffinity(0)),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "posture": "local" if local_posture else "cluster",
     }
     print(json.dumps(out))
 

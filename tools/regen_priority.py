@@ -55,6 +55,21 @@ FORCE_REFRESH: tuple[str, ...] = (
     # green.  The iteration-scope / shared-edge-helper edits below,
     # risk-first.  All are code-only (oracles unchanged).
     #
+    # Read-backs of the op's own writes pass the written schema instead
+    # of running a schema-inference job (etl_compact_files also reads
+    # its partition count from the plan; its stream/etl siblings are
+    # listed below):
+    "etl_time_travel",
+    "etl_gdpr_delete",
+    "etl_vacuum_retention",
+    "etl_pipeline_compose",
+    "etl_incremental_watermark",
+    "sink_parquet_write",
+    "sink_clustered_write",
+    "sink_zorder_write",
+    "src_recursive_listing",
+    "src_manifest_read",
+    #
     # Plan changes (work now runs at the pinned iteration width, or a
     # knob is gone):
     "graph_kcore",               # final degree table frozen inside the
@@ -85,9 +100,12 @@ FORCE_REFRESH: tuple[str, ...] = (
     "graph_link_predict_aa",     # shared _cust_supp_edges
     # session.conf_scope replaces hand-rolled conf save/set/restore
     # blocks (same keys and values; join_runtime_bloom above is one):
-    "etl_compact_files",
+    "etl_compact_files",         # also: no AQE probe job, read-backs
+    #                              with the written schema
     "etl_backfill_partitions",
-    # every op that enters streaming.stream_shuffle_partitions:
+    # every op that enters streaming.stream_shuffle_partitions; all but
+    # stream_checkpoint_resume also enter read_events_stream, whose
+    # schema probe is now a driver footer read:
     "src_stream_file",
     "stream_checkpoint_resume",
     "stream_custom_stateful",

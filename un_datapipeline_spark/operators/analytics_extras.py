@@ -299,20 +299,24 @@ FROM z GROUP BY bucket
 """
 
 
+def _zorder_input(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
+    )
+    return li.withColumn(
+        "zcode",
+        F.expr(_morton_spark("(l_partkey % 256)", "(l_suppkey % 256)")),
+    )
+
+
 def zorder_write(spark: SparkSession, sf_dir: str) -> str:
     """Write lineitem parquet files range-clustered on the 16-bit Morton
     code of (l_partkey, l_suppkey) low bytes; returns the output dir so
     tests can audit footer min/max disjointness on zcode."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
-    )
-    z = li.withColumn(
-        "zcode",
-        F.expr(_morton_spark("(l_partkey % 256)", "(l_suppkey % 256)")),
-    )
     out = tempfile.mkdtemp(prefix="udps_zorder_")
     (
-        z.repartitionByRange(8, "zcode")
+        _zorder_input(spark, sf_dir)
+        .repartitionByRange(8, "zcode")
         .sortWithinPartitions("zcode")
         .write.mode("overwrite")
         .parquet(out)
@@ -337,7 +341,7 @@ def sink_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     other.  The Morton expression itself is 16 shift-and-mask terms —
     whole-stage-codegen integer ops, no UDF."""
     out = zorder_write(spark, sf_dir)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(_zorder_input(spark, sf_dir).schema).parquet(out)
     z = back.select(
         (F.col("l_partkey") % 256).alias("px"),
         (F.col("l_suppkey") % 256).alias("sx"),

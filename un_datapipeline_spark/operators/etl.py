@@ -338,7 +338,14 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     small_dir = tempfile.mkdtemp(prefix="udps_small_")
     fragmented = li.repartition(32)
-    partitions_before = fragmented.rdd.getNumPartitions()
+    # The planned exchange's width, read without running anything: under
+    # AQE, ``.rdd.getNumPartitions()`` runs the shuffle map stage as its
+    # own job and the write then recomputes it.  ``sparkPlan`` (not
+    # ``executedPlan``, which reports UnknownPartitioning(0) before AQE
+    # executes) holds the ShuffleExchange that repartition(32) plans.
+    partitions_before = (
+        fragmented._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+    )
     fragmented.write.mode("overwrite").parquet(small_dir)
     files_before = len(glob.glob(f"{small_dir}/part-*.parquet"))
     assert files_before <= partitions_before, (files_before, partitions_before)
@@ -358,7 +365,7 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each file into size/1 empty splits — measured 120 s on sf0.01).
     bin_bytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
     with conf_scope(spark, {"spark.sql.files.openCostInBytes": bin_bytes}):
-        compacted = spark.read.parquet(small_dir).coalesce(4)
+        compacted = spark.read.schema(fragmented.schema).parquet(small_dir).coalesce(4)
         partitions_after = compacted.rdd.getNumPartitions()
         compacted.write.mode("overwrite").parquet(compact_dir)
     files_after = len(glob.glob(f"{compact_dir}/part-*.parquet"))
@@ -374,7 +381,7 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             "compaction layout drifted from the coalesce contract: "
             f"partitions_after={partitions_after}, files_before={files_before}"
         )
-    back = spark.read.parquet(compact_dir)
+    back = spark.read.schema(fragmented.schema).parquet(compact_dir)
     # Contract: coalesce(4) promises AT MOST 4, and below 4 rows the
     # physical count is placement-dependent (the writer skips all-empty
     # tasks, and round-robin placement of k<4 rows across 32 partitions
@@ -654,8 +661,9 @@ def etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).withColumn("version", F.lit(2))
     out = tempfile.mkdtemp(prefix="udps_timetravel_")
-    v1.unionByName(v2).write.mode("overwrite").partitionBy("version").parquet(out)
-    back = spark.read.parquet(out)
+    snapshots = v1.unionByName(v2)
+    snapshots.write.mode("overwrite").partitionBy("version").parquet(out)
+    back = spark.read.schema(snapshots.schema).parquet(out)
     asof1 = back.filter(F.col("version") == 1)
     asof2 = back.filter(F.col("version") == 2)
     m1 = asof1.agg(
@@ -716,7 +724,7 @@ def etl_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrubbed = e.join(forget, "user_id", "left_anti")
     out = tempfile.mkdtemp(prefix="udps_gdpr_")
     scrubbed.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(scrubbed.schema).parquet(out)
     remaining = back.join(forget, "user_id", "left_semi").agg(
         F.count(F.lit(1)).alias("n_remaining_for_forgotten")
     )
@@ -836,26 +844,26 @@ def etl_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = o.withColumn("version", F.lit(2))
     v3 = o.withColumn("version", F.lit(3))
     out = tempfile.mkdtemp(prefix="udps_vacuum_")
-    v1.unionByName(v2).unionByName(v3).write.mode("overwrite").partitionBy(
-        "version"
-    ).parquet(out)
+    snapshots = v1.unionByName(v2).unionByName(v3)
+    snapshots.write.mode("overwrite").partitionBy("version").parquet(out)
+
+    def read_back() -> DataFrame:
+        return spark.read.schema(snapshots.schema).parquet(out)
 
     def versions() -> list[int]:
         return sorted(
             int(r.version)
-            for r in spark.read.parquet(out).select("version").distinct().collect()
+            for r in read_back().select("version").distinct().collect()
         )  # ≤ version count rows — bounded by design
 
     before = versions()
-    oldest_rows = (
-        spark.read.parquet(out).filter(F.col("version") == before[0]).count()
-    )
+    oldest_rows = read_back().filter(F.col("version") == before[0]).count()
     keep = 2
     expired = before[:-keep] if len(before) > keep else []
     for v in expired:
         shutil.rmtree(f"{out}/version={v}")
     after = versions()
-    live = spark.read.parquet(out).filter(F.col("version") == max(after))
+    live = read_back().filter(F.col("version") == max(after))
     return live.agg(
         F.lit(len(before)).cast("long").alias("versions_before"),
         F.lit(len(expired)).cast("long").alias("versions_removed"),
@@ -897,7 +905,7 @@ def etl_pipeline_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     from un_datapipeline_spark.pipeline import Pipeline
 
     out = tempfile.mkdtemp(prefix="udps_pipeline_") + "/revenue"
-    (
+    pipeline = (
         Pipeline(spark, name="revenue_rollup")
         .source_table(sf_dir, "lineitem")
         .transform(lambda df: df.filter(F.col("l_quantity") > 10), "qty>10")
@@ -913,10 +921,10 @@ def etl_pipeline_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
             "revenue_rollup",
         )
         .sink_parquet(out, mode="overwrite")
-        .run()
     )
+    pipeline.run()
     return (
-        spark.read.parquet(out)
+        spark.read.schema(pipeline.to_df().schema).parquet(out)
         .select("l_returnflag", "l_linestatus", "n", "revenue_cents")
         .orderBy("l_returnflag", "l_linestatus")
     )
@@ -976,7 +984,7 @@ def etl_incremental_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     run1.write.mode("overwrite").parquet(f"{state_dir}/state")
     # --- run 2: strictly after the stored watermark ----------------------
-    stored = spark.read.parquet(f"{state_dir}/state")
+    stored = spark.read.schema(run1.schema).parquet(f"{state_dir}/state")
     wm = stored.agg(F.max("max_ts").alias("w")).collect()[0].w  # 1 scalar
     run2 = (
         e.filter(F.col("ts") > F.lit(wm))

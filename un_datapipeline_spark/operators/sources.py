@@ -143,7 +143,7 @@ def sink_parquet_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = tempfile.mkdtemp(prefix="udps_pq_")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(li.schema).parquet(out)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
@@ -419,16 +419,20 @@ FROM lineitem
 """
 
 
+def _clustered_input(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "lineitem").select(
+        "l_shipdate", "l_orderkey", "l_quantity", "l_extendedprice"
+    )
+
+
 def clustered_write(spark: SparkSession, sf_dir: str) -> str:
     """Range-cluster lineitem on l_shipdate into 8 files: global range
     partitioning (each file owns a disjoint date range) + an in-file
     sort.  Returns the output dir so tests can audit footer min/max."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_shipdate", "l_orderkey", "l_quantity", "l_extendedprice"
-    )
     out = tempfile.mkdtemp(prefix="udps_cluster_")
     (
-        li.repartitionByRange(8, "l_shipdate")
+        _clustered_input(spark, sf_dir)
+        .repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
         .write.mode("overwrite")
         .parquet(out)
@@ -448,7 +452,7 @@ def sink_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is audited from the parquet footers in
     tests/test_sketches_sources.py."""
     out = clustered_write(spark, sf_dir)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(_clustered_input(spark, sf_dir).schema).parquet(out)
     return back.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.round(F.col("l_quantity")).cast("long")).alias("sum_qty"),
@@ -940,7 +944,7 @@ def src_recursive_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(done, "w") as f:
             f.write("ok")
     return (
-        spark.read.option("recursiveFileLookup", "true").parquet(out)
+        spark.read.schema(d.schema).option("recursiveFileLookup", "true").parquet(out)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1127,10 +1131,10 @@ def src_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"udp_manifest_{tag}")
     manifest = os.path.join(out, "manifest.json")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
     if not os.path.exists(manifest):
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
         for b in range(4):
             o.filter(F.col("o_orderkey") % 4 == b).write.mode("overwrite").parquet(
                 f"{out}/bucket={b}"
@@ -1140,7 +1144,7 @@ def src_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(manifest) as f:
         paths = json.load(f)["paths"]
     return (
-        spark.read.parquet(*paths)
+        spark.read.schema(o.schema).parquet(*paths)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),

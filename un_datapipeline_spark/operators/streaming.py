@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import conf_scope, ensure_runtime_confs
-from un_datapipeline_spark.tables import load_table, valid_ts, valid_ts_sql
+from un_datapipeline_spark.tables import load_table, read_parquet, valid_ts, valid_ts_sql
 
 
 def stream_shuffle_partitions(spark: SparkSession) -> conf_scope:
@@ -57,12 +57,12 @@ _TS_DTYPES = ("bigint", "timestamp_ntz", "timestamp")
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """File stream sources need an explicit schema; probe the batch
-    footer (one cheap metadata read) so the schema tracks whichever
-    physical ts layout the generator shipped.  Returns
-    ``(schema_ddl, ts_dtype)`` — callers branch on the probed dtype, not
-    on the rendered schema string."""
-    raw = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)
+    """File stream sources need an explicit schema; read the batch
+    footer on the driver (tables.read_parquet: one metadata read, no
+    Spark job) so the schema tracks whichever physical ts layout the
+    generator shipped.  Returns ``(schema_ddl, ts_dtype)`` — callers
+    branch on the probed dtype, not on the rendered schema string."""
+    raw = dict(read_parquet(spark, f"{sf_dir}/events.parquet").dtypes)
     ts_dtype = raw.get("ts")
     if ts_dtype not in _TS_DTYPES:
         raise ValueError(
@@ -494,8 +494,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+    # Read back with the streamed schema (R10 rule: never re-infer what
+    # the engine wrote; a stream with no batch leaves no data file).
     return (
-        spark.read.parquet(out_dir)
+        spark.read.schema(s.schema).parquet(out_dir)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -602,12 +604,12 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(tempfile.gettempdir(), f"udp_ckptres_{tag}")
     inbox, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     done = f"{base}/_FIXTURE_OK"
+    schema = "event_id long, ts timestamp, cents long"
 
     if not os.path.exists(done):
         import shutil
 
         shutil.rmtree(base, ignore_errors=True)
-        schema = "event_id long, ts timestamp, cents long"
 
         def run_installment(pred):
             e.filter(pred).write.mode("append").parquet(inbox)
@@ -629,7 +631,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(done, "w") as f:
             f.write("ok")
 
-    return spark.read.parquet(sink).agg(
+    return spark.read.schema(schema).parquet(sink).agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("event_id").alias("n_distinct"),
         F.sum("cents").alias("cents"),

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from un_datapipeline_spark.session import ensure_runtime_confs
-from un_datapipeline_spark.tables import load_table
+from un_datapipeline_spark.tables import load_table, read_parquet
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -60,7 +60,9 @@ class Pipeline:
         return self
 
     def source_parquet(self, path: str) -> "Pipeline":
-        return self.source_df(self.spark.read.parquet(path), f"parquet:{path}")
+        """Any parquet file or directory; the schema comes from its footer
+        on the driver (tables.read_parquet), so opening launches no job."""
+        return self.source_df(read_parquet(self.spark, path), f"parquet:{path}")
 
     def source_table(self, sf_dir: str, table: str) -> "Pipeline":
         """A testdata table through the canonical loader (ns-ts fix etc.)."""

@@ -26,6 +26,16 @@ NEVER_VERIFIED = (
 # driver stamp — see tools/regen_priority.py FORCE_REFRESH) lead;
 # the rest are the stalest greens, one per name family.
 STALE_REFRESH = (
+    "etl_time_travel",  # forced: re-edited since last stamp
+    "etl_gdpr_delete",  # forced: re-edited since last stamp
+    "etl_vacuum_retention",  # forced: re-edited since last stamp
+    "etl_pipeline_compose",  # forced: re-edited since last stamp
+    "etl_incremental_watermark",  # forced: re-edited since last stamp
+    "sink_parquet_write",  # forced: re-edited since last stamp
+    "sink_clustered_write",  # forced: re-edited since last stamp
+    "sink_zorder_write",  # forced: re-edited since last stamp
+    "src_recursive_listing",  # forced: re-edited since last stamp
+    "src_manifest_read",  # forced: re-edited since last stamp
     "graph_kcore",  # forced: re-edited since last stamp
     "graph_label_propagation",  # forced: re-edited since last stamp
     "graph_modularity",  # forced: re-edited since last stamp

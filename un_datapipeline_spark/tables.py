@@ -19,12 +19,22 @@ produces the same logical schema: ``ts TIMESTAMP`` at µs precision.
 At 100 TB these reads stay scan-friendly: loaders never cache, never
 collect, and return raw DataFrames so Catalyst can push predicates and
 prune columns down into the parquet scan of whatever query composes them.
+
+Opening a table launches no Spark job.  ``read_parquet`` reads the schema
+from one footer on the driver, with Spark's own footer reader and type
+converter, and hands it to the reader; a schema-less
+``spark.read.parquet`` would run a schema-merge job per table even when
+it is not merging.  Spark's inference is kept only where it does more
+than read one footer: partition discovery, ``mergeSchema``, no data file.
 """
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from un_datapipeline_spark.session import ensure_runtime_confs
 
@@ -49,31 +59,136 @@ ALWAYS_BROADCAST_DIMS = ("region", "nation")
 
 # (application id, sf_dir, table) -> DataFrame.  Caches the ANALYZED
 # relation (schema + file listing), not data: repeated operator calls
-# skip re-listing and footer reads (~0.15 s/table at sf0.1).  Testdata
-# files are immutable for a session's lifetime, so reuse is safe.
+# skip re-listing and the footer read.  Testdata files are immutable for
+# a session's lifetime, so reuse is safe.
 # Keyed on applicationId (not id(spark)): a stopped session's id() can be
 # reused by a new SparkSession, which would hand out DataFrames bound to
 # the dead context; applicationId is unique per SparkContext lifetime.
+# PySpark allows one live SparkContext per process, so an insert drops
+# every other application's entries: a restarted session does not keep
+# the dead one's JVM Datasets pinned.
 _LOAD_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame.
+    """Load one testdata table as a DataFrame, without a Spark job.
 
-    ``events`` gets the ns→µs timestamp normalization and the non-finite
-    measurement contract applied; every other table is a plain parquet
-    scan (schemas travel in the footers and match FIXTURES.md).
+    The schema comes from the file footer on the driver
+    (:func:`read_parquet`; schemas travel in the footers and match
+    FIXTURES.md).  ``events`` gets the ns→µs timestamp normalization and
+    the non-finite measurement contract applied; every other table is a
+    plain parquet scan.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
     cached = _LOAD_CACHE.get(key)
     if cached is not None:
         return cached
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_value(_normalize_events_ts(df))
+    for stale in [k for k in _LOAD_CACHE if k[0] != app]:
+        del _LOAD_CACHE[stale]
     _LOAD_CACHE[key] = df
     return df
+
+
+# gateway -> the JVM handles of the footer read.  Each py4j class lookup
+# is a reflective round trip; resolving them once per gateway halves the
+# cost of a table open.
+_FOOTER_JVM: dict = {}
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _footer_jvm(spark: SparkSession) -> dict:
+    gateway = spark.sparkContext._gateway
+    if gateway not in _FOOTER_JVM:
+        jvm = spark._jvm
+        fmt = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$")
+        _FOOTER_JVM.clear()
+        _FOOTER_JVM[gateway] = {
+            "format": fmt.__getattr__("MODULE$"),
+            "path": jvm.org.apache.hadoop.fs.Path,
+            "to_seq": jvm.PythonUtils.toSeq,
+            "wrap": jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray,
+            "by_path": jvm.scala.math.Ordering.comparatorToOrdering(
+                jvm.java.util.Comparator.naturalOrder()  # FileStatus orders by path
+            ),
+            "visible": jvm.org.apache.parquet.hadoop.util.HiddenFileFilter.INSTANCE,
+        }
+    return _FOOTER_JVM[gateway]
+
+
+def _footer_file(jvm: dict, fs, path):
+    """The file whose footer Spark's non-merging inference reads
+    (``ParquetUtils.inferSchema``): ``_common_metadata``, else
+    ``_metadata``, else the first data file by sorted path (names starting
+    with ``_`` or ``.`` are not data).  ``None`` when inference does more
+    than read that footer: a directory with subdirectories (partition
+    discovery, a streaming sink's log) or no data file (Spark's
+    UNABLE_TO_INFER_SCHEMA).  A constant number of JVM calls, whatever
+    the number of files."""
+    status = fs.getFileStatus(path)
+    if not status.isDirectory():
+        return status
+    if fs.getContentSummary(path).getDirectoryCount() > 1:
+        return None
+    for name in _SUMMARY_FILES:
+        summary = jvm["path"](path, name)
+        if fs.exists(summary):
+            return fs.getFileStatus(summary)
+    data = fs.listStatus(path, jvm["visible"])
+    if len(data) == 0:
+        return None
+    return jvm["wrap"](data).min(jvm["by_path"])
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema read on the driver.
+
+    Spark's schema inference always runs a schema-merge job, even when it
+    is not merging; this reads the one footer that inference would read,
+    with Spark's own code (``readParquetFootersInParallel``, a driver
+    thread pool, then ``readSchema``, which applies the session's
+    converter confs — nanosAsLong, int96, NTZ inference — and the Spark
+    row metadata of Spark-written files), and passes the schema to the
+    reader.  Spark's inference still runs where it does more: a directory
+    with subdirectories, ``spark.sql.parquet.mergeSchema=true``, no data
+    file, a path that names no file or directory (a glob), or a corrupt
+    footer skipped under ``ignoreCorruptFiles``.
+    """
+    schema = None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() != "true":
+        schema = _footer_schema(spark, path)
+    if schema is None:
+        # Spark's own inference, and its errors (PATH_NOT_FOUND,
+        # UNABLE_TO_INFER_SCHEMA) for inputs the footer read leaves out.
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    from py4j.protocol import Py4JJavaError
+
+    jvm = _footer_jvm(spark)
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    try:
+        jpath = jvm["path"](path)
+        footer_file = _footer_file(jvm, jpath.getFileSystem(conf), jpath)
+    except Py4JJavaError:  # not a file or directory: left to Spark's error
+        return None
+    if footer_file is None:
+        return None
+    footers = jvm["format"].readParquetFootersInParallel(
+        conf, jvm["to_seq"]([footer_file]), state.conf().ignoreCorruptFiles()
+    )
+    found = jvm["format"].readSchema(footers, spark._jsparkSession)
+    if found.isEmpty():
+        return None
+    return StructType.fromJson(json.loads(found.get().json()))
 
 
 # Ingest contract (engine-wide): NON-FINITE measurements are MISSING.
