@@ -570,6 +570,82 @@ def test_mixdim_corpus_class(spark, mixdim_sf, name):
     _both(spark, mixdim_sf, name)
 
 
+# the rows-only ANN family: no oracle, so the vector-validity contract is
+# pinned against the exact kernel instead
+ANN_OPS = [
+    "llm_simsearch_ivf",
+    "llm_simsearch_hnsw",
+    "llm_simsearch_lsh",
+    "llm_simsearch_multiprobe",
+]
+
+
+@pytest.mark.parametrize("corpus", ["degen_sf", "mixdim_sf"])
+@pytest.mark.parametrize("name", ANN_OPS)
+def test_ann_ops_follow_vector_contract(spark, request, corpus, name):
+    """An approximate search answers a subset of the probes exact
+    cosine_topk answers, never with a NaN sim: zero-norm (degenerate
+    corpus; the zero vector is HNSW's graph entry point) and off-width
+    (--mixdim) vectors are excluded from both.  On the degenerate corpus
+    HNSW must also keep test_hnsw_recall_beats_ivf's 0.8 recall@1
+    floor."""
+    import math
+
+    import pyspark.sql.functions as F
+
+    from un_datapipeline_spark.operators.llm_vectors import cosine_topk
+    from un_datapipeline_spark.registry import all_operators
+    from un_datapipeline_spark.tables import load_table
+
+    sf = request.getfixturevalue(corpus)
+    em = load_table(spark, sf, "embeddings")
+    probes = em.filter(F.col("vec_id") < 100)
+    exact = {
+        r.a_id: r.nn_id
+        for r in cosine_topk(em, probes, k=1, exclude_self=True).collect()
+    }
+    got = all_operators()[name].fn(spark, sf).collect()
+    assert not [r for r in got if math.isnan(r.sim)], f"{name}: NaN sims"
+    extra = {r.a_id for r in got} - set(exact)
+    assert not extra, f"{name}: probes outside the contract {sorted(extra)[:5]}"
+    if (name, corpus) == ("llm_simsearch_hnsw", "degen_sf"):
+        recall = sum(r.nn_id == exact[r.a_id] for r in got) / len(exact)
+        assert recall >= 0.8, f"HNSW recall@1 {recall} on the degenerate corpus"
+
+
+@pytest.fixture(scope="module")
+def ties_permuted_sfs(ties_sf, tmp_path_factory):
+    """Copies of the --ties corpus whose embeddings.parquet rows are
+    permuted (seeds 2 and 3)."""
+    import shutil
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{ties_sf}/embeddings.parquet")
+    dirs = []
+    for seed in (2, 3):
+        d = tmp_path_factory.mktemp(f"tiesperm{seed}")
+        shutil.copytree(ties_sf, d, dirs_exist_ok=True)
+        perm = np.random.RandomState(seed).permutation(t.num_rows)
+        pq.write_table(t.take(perm), f"{d}/embeddings.parquet")
+        dirs.append(str(d))
+    return dirs
+
+
+@pytest.mark.parametrize("name", ["llm_simsearch_ivf", "llm_simsearch_hnsw"])
+def test_ann_ops_row_order_invariant(spark, ties_sf, ties_permuted_sfs, name):
+    """Exact-duplicate vectors tie bitwise; the in-batch pick must break
+    ties by id (probe_search's _topk_idx), not by the file's row order."""
+    from un_datapipeline_spark.registry import all_operators
+
+    fn = all_operators()[name].fn
+    base = sorted(tuple(r) for r in fn(spark, ties_sf).collect())
+    assert base
+    for d in ties_permuted_sfs:
+        assert sorted(tuple(r) for r in fn(spark, d).collect()) == base, d
+
+
 @pytest.fixture(scope="module")
 def bigdoc_sf(tmp_path_factory):
     d = tmp_path_factory.mktemp("bigdocsf")

@@ -51,6 +51,21 @@ REFRESH_COUNT = 5
 # first, pure refactors last.  (Forced entries are never truncated —
 # see main() — so ordering is about review priority, not survival.)
 FORCE_REFRESH: tuple[str, ...] = (
+    # The vector top-k family on one probe_search kernel / one LSH
+    # helper, risk-first: kernel semantics (hash-matched), then the
+    # shared l2_norm Column helper (same expression), then the
+    # rows-only ANN ops that gained the zero-norm / validity guards:
+    "llm_simsearch_cosine_topk",
+    "llm_knn_join",
+    "llm_dedup_embedding",
+    "llm_hard_negatives",
+    "llm_vector_norms",
+    "llm_embed_join_docs",
+    "llm_simsearch_ivf",
+    "llm_simsearch_hnsw",
+    "llm_simsearch_lsh",
+    "llm_simsearch_multiprobe",
+    #
     # -- Pruned: CORRECTNESS_r13 re-stamped all 19 earlier forced names
     # green.  The iteration-scope / shared-edge-helper edits below,
     # risk-first.  All are code-only (oracles unchanged).
@@ -114,6 +129,15 @@ FORCE_REFRESH: tuple[str, ...] = (
     "stream_kafka_source",
     "stream_session_dynamic_gap",
     "stream_session_window",
+)
+
+# Round-10's window overflow mechanism: when stamp-void edits exceed
+# the 50-slot window, the least-risk rows-only / zero-semantic names are
+# deferred here and MUST move to the TOP of the next round's
+# FORCE_REFRESH.  Deferred when the vector family joined above: the last
+# seven stream siblings of the conf_scope / footer-read edits (same conf
+# keys and values, same schema — zero-semantic).
+DEFERRED_REFRESH = (
     "stream_sliding_topk",
     "stream_sliding_window",
     "stream_stateful_running",
@@ -122,13 +146,6 @@ FORCE_REFRESH: tuple[str, ...] = (
     "stream_tumbling_window",
     "stream_watermark_late",
 )
-
-# Round-10's window overflow mechanism (kept for the procedure doc): when
-# stamp-void edits exceed the 50-slot window, the least-risk rows-only /
-# zero-semantic names are deferred here and MUST move to the TOP of the
-# next round's FORCE_REFRESH.  Round 11 consumed the r10 deferrals above;
-# currently empty.
-DEFERRED_REFRESH_R12 = ()
 
 
 def is_green(v: dict) -> bool:

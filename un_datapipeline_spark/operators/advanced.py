@@ -224,57 +224,16 @@ def llm_simsearch_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidate work per probe is (1 + n_planes) bucket joins' worth — still
     bucket-bounded, never corpus-sized.  Rows-only for the same reason as
     llm_simsearch_lsh (float-sign bucket membership is approximate by
-    design); the recall ≥ single-probe invariant is pytest-asserted."""
-    from un_datapipeline_spark.operators.dedup_extras import hyperplane_buckets
+    design); the recall ≥ single-probe invariant is pytest-asserted.
+    Shares llm_simsearch_lsh's bucket_cosine_best, and with it the
+    vector-validity and zero-norm exclusions."""
+    from un_datapipeline_spark.operators.dedup_extras import (
+        LSH_PLANES,
+        bucket_cosine_best,
+    )
 
-    N_PLANES = 8
-    # cosine is undefined for the zero vector: its norm product is 0 and
-    # the sim division DIVIDE_BY_ZEROs under ANSI Spark (degenerate-
-    # corpus sweep, round 6).  Zero vectors are excluded from similarity
-    # semantics engine-wide (same policy as the Arrow-kernel ops).
-    em = load_table(spark, sf_dir, "embeddings").filter(
-        F.exists("embedding", lambda x: x != 0)
-    )
-    b = hyperplane_buckets(em, n_planes=N_PLANES)
-    # probe buckets: own + each single-bit flip
-    probe_buckets = F.array(
-        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(N_PLANES)]
-    )
-    probes = (
-        b.filter(F.col("vec_id") < 100)
-        .select(
-            F.col("vec_id").alias("a_id"),
-            F.col("embedding").alias("a_emb"),
-            F.explode(probe_buckets).alias("bucket"),
-        )
-    )
-    cands = b.select(F.col("vec_id").alias("nn_id"), "embedding", "bucket")
-    dot = F.aggregate(
-        F.zip_with("a_emb", "embedding", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    pairs = (
-        F.broadcast(probes)
-        .join(cands, "bucket")
-        .filter(F.col("a_id") != F.col("nn_id"))
-        .select("a_id", "nn_id", (dot / (nrm("a_emb") * nrm("embedding"))).alias("sim"))
-        .groupBy("a_id", "nn_id")
-        .agg(F.max("sim").alias("sim"))  # same pair may surface via 2 buckets
-    )
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        pairs.withColumn("n_cands", F.count(F.lit(1)).over(Window.partitionBy("a_id")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "n_cands", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    em = load_table(spark, sf_dir, "embeddings")
+    return bucket_cosine_best(em, flip_bits=range(LSH_PLANES))
 
 
 # ---------------------------------------------------------------------------

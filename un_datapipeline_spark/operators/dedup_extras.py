@@ -298,7 +298,10 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def hyperplane_buckets(em: DataFrame, n_planes: int = 8, seed: int = 42) -> DataFrame:
+LSH_PLANES = 8  # bucket id bits (see hyperplane_buckets)
+
+
+def hyperplane_buckets(em: DataFrame, seed: int = 42) -> DataFrame:
     """Sign-random-projection bucket id per vector: fixed pseudo-random
     hyperplanes → n-bit bucket.  Bucketing is a per-row dot product in
     Column math — one scan, no shuffle, no driver action.
@@ -310,7 +313,7 @@ def hyperplane_buckets(em: DataFrame, n_planes: int = 8, seed: int = 42) -> Data
     never touches the driver and the code is embedding-dimension-
     agnostic (the round-1 version collected one row just to learn the
     dim — flagged in VERDICT.md).  SRP only needs *fixed* directions
-    spread over the sphere, not high-quality randomness.  8 planes = 256
+    spread over the sphere, not high-quality randomness.  LSH_PLANES=8 → 256
     buckets, sized so test-corpus buckets hold a handful of candidates;
     at 100 TB raise planes (and add multi-probe) to keep bucket
     occupancy bounded."""
@@ -326,12 +329,58 @@ def hyperplane_buckets(em: DataFrame, n_planes: int = 8, seed: int = 42) -> Data
         return lambda x, i: x.cast("double") * coeff(p, i)
 
     bucket = F.lit(0)
-    for p in range(n_planes):
+    for p in range(LSH_PLANES):
         dot = F.aggregate(
             F.transform("embedding", proj(p)), F.lit(0.0), lambda a, x: a + x
         )
         bucket = bucket + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return em.withColumn("bucket", bucket)
+
+
+def bucket_cosine_best(em: DataFrame, flip_bits=()) -> DataFrame:
+    """Best in-bucket cosine neighbor for each probe (vec_id < 100):
+    (a_id, n_cands, nn_id, sim).  Each probe searches its own
+    sign-random-projection bucket plus the bucket with each bit in
+    ``flip_bits`` flipped (multi-probe); the same pair surfacing via two
+    buckets counts once.
+
+    Vector-validity + zero-norm exclusion (round 10): cosine is
+    undefined for the zero vector, and one zero probe sharing a bucket
+    with any candidate is an ANSI DIVIDE_BY_ZERO — the engine-wide
+    round-6 norm>0 rule applies to the bucketed path exactly as to the
+    brute-force baseline (exposed when the degenerate corpus went
+    EMBED_DIM-wide and the zero vector gained bucket-mates).  Both
+    predicates are native collection expressions, never an interpreted
+    F.exists lambda on the scan side (llm_vectors.valid_vec)."""
+    from un_datapipeline_spark.operators.llm_vectors import (
+        dot,
+        l2_norm,
+        top_per_probe,
+        valid_vec,
+    )
+
+    b = hyperplane_buckets(em.filter(valid_vec()).filter(l2_norm() > 0))
+    buckets = [F.col("bucket")] + [F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in flip_bits]
+    probes = b.filter(F.col("vec_id") < 100).select(
+        F.col("vec_id").alias("a_id"),
+        F.col("embedding").alias("a_emb"),
+        F.explode(F.array(*buckets)).alias("bucket"),
+    )
+    cands = b.select(F.col("vec_id").alias("nn_id"), "embedding", "bucket")
+    sim = dot("a_emb", "embedding") / (l2_norm("a_emb") * l2_norm("embedding"))
+    pairs = (
+        F.broadcast(probes)
+        .join(cands, "bucket")
+        .filter(F.col("a_id") != F.col("nn_id"))
+        .select("a_id", "nn_id", sim.alias("sim"))
+    )
+    if flip_bits:  # the same pair may surface via 2 buckets
+        pairs = pairs.groupBy("a_id", "nn_id").agg(F.max("sim").alias("sim"))
+    return (
+        top_per_probe(pairs, 1, n_cands=True)
+        .select("a_id", "n_cands", "nn_id", F.round("sim", 6).alias("sim"))
+        .orderBy("a_id")
+    )
 
 
 @register("llm_simsearch_lsh", oracle=None, tier="T3")
@@ -341,62 +390,9 @@ def llm_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-quadratic scale path where brute force (llm_simsearch_cosine_
     topk) is the exact baseline.  Rows-only: bucket membership depends
     on float sign evaluations near hyperplanes; approximate-by-design.
-    Output: probe, candidate count in bucket, best in-bucket neighbor.
-
-    Zero-norm + vector-validity exclusion (round 10): cosine is
-    undefined for the zero vector, and one zero probe sharing a bucket
-    with any candidate is an ANSI DIVIDE_BY_ZERO — the engine-wide
-    round-6 norm>0 rule applies to the bucketed path exactly as to the
-    brute-force baseline (exposed when the degenerate corpus went
-    EMBED_DIM-wide and the zero vector gained bucket-mates)."""
-    from un_datapipeline_spark.operators.llm_vectors import valid_vec
-
-    em = load_table(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double") * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    b = hyperplane_buckets(em.filter(valid_vec()).filter(nrm > 0))
-    probes = b.filter(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb"), "bucket"
-    )
-    cands = b.select(F.col("vec_id").alias("nn_id"), "embedding", "bucket")
-    dot = F.aggregate(
-        F.zip_with("a_emb", "embedding", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm_a = F.sqrt(
-        F.aggregate(
-            F.transform("a_emb", lambda x: x.cast("double") * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    nrm_b = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double") * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    pairs = (
-        F.broadcast(probes)
-        .join(cands, "bucket")
-        .filter(F.col("a_id") != F.col("nn_id"))
-        .select("a_id", "nn_id", (dot / (nrm_a * nrm_b)).alias("sim"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        pairs.withColumn("n_cands", F.count(F.lit(1)).over(Window.partitionBy("a_id")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "n_cands", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    Output: probe, candidate count in bucket, best in-bucket neighbor
+    (bucket_cosine_best)."""
+    return bucket_cosine_best(load_table(spark, sf_dir, "embeddings"))
 
 
 # --------------------------------------------------------------------------

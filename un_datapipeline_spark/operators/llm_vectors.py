@@ -1,27 +1,32 @@
 """Vector / similarity-search operators (SURVEY.md §2.K).
 
-Scale design: brute-force cosine top-k is expressed as ONE scan of the
-corpus — the (small) probe set is collected, L2-normalized into a numpy
-matrix, and shipped to executors inside a `mapInPandas` closure.  Each
-Arrow batch computes `batch_matrix @ probes.T` (vectorized float64
-BLAS), keeps only the per-batch top-k rows per probe, and the global
-top-k is a cheap aggregate over `partitions × probes × k` candidate
-rows.  No pairwise shuffle, no per-element lambda interpretation; the
-corpus side streams at full scan speed at any scale.  (An interpreted
-higher-order-function formulation of the same query measured 86 s at
-sf0.1 vs ~1 s for this path.)
+Scale design: every top-k search in this module is ONE kernel,
+`probe_search`.  The (small) probe set is collected, L2-normalized into
+a numpy matrix, and shipped to executors inside a `mapInPandas` closure.
+Each Arrow batch is validated, normalized and handed to a pluggable
+scorer that returns a `(batch, probes)` similarity matrix, with -inf
+where a pair is excluded: the exact matmul (`cosine_topk`), the IVF
+cell-routed matmul, the per-shard NSW graph beam, or the hard-negative
+label mask.  The kernel keeps only the per-batch top-k rows per probe,
+and the global top-k is a cheap window over `partitions × probes × k`
+candidate rows.  No pairwise shuffle, no per-element lambda
+interpretation; the corpus side streams at full scan speed at any
+scale.  (An interpreted higher-order-function formulation of the same
+query measured 86 s at sf0.1 vs ~1 s for this path.)
 
 At 100 TB the same shape holds: probes broadcast, corpus scanned once,
 partial top-k per partition (bounded memory), final reduce over
 candidates only.  For probe sets too large to broadcast, swap the probe
-side to LSH bucketing (see llm_dedup_near_minhash in llm_text.py).
+side to LSH bucketing (dedup_extras.bucket_cosine_best).
 """
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table, winner_embedding_sql
@@ -43,8 +48,9 @@ from un_datapipeline_spark.tables import load_table, winner_embedding_sql
 #   2. the SAME predicate in every paired DuckDB oracle (valid_vec_sql)
 #      — DuckDB's list aggregates silently SKIP NULL elements, so an
 #      unfiltered oracle computes a partial norm instead of crashing;
-#   3. a DEFENSIVE in-kernel guard (_vec_matrix) so a mapInPandas
-#      closure reused on raw data cannot crash on a ragged np.array.
+#   3. a DEFENSIVE in-kernel guard: probe_search runs _vec_matrix on
+#      every Arrow batch, so a mapInPandas closure reused on raw data
+#      cannot crash on a ragged np.array.
 # The element-NULL check is size(array_compact(col)) = size(col) — a
 # native collection expression — NOT an interpreted higher-order
 # F.exists lambda: the predicate runs over EVERY corpus element on the
@@ -59,6 +65,23 @@ def valid_vec(col: str = "embedding", dim: int = EMBED_DIM):
         F.col(col).isNotNull()
         & (F.size(col) == F.lit(dim))
         & (F.size(F.array_compact(col)) == F.size(col))
+    )
+
+
+def l2_norm(col: str = "embedding"):
+    """sqrt(Σ x²) over the array column in float64, JVM-side — the same
+    CAST-to-DOUBLE sum every paired oracle computes."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(col, lambda x: x.cast("double") * x), F.lit(0.0), lambda a, x: a + x
+        )
+    )
+
+
+def dot(a: str, b: str):
+    """Σ a·b over two array columns in float64, JVM-side."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
@@ -125,6 +148,113 @@ def _topk_idx(sims, b_ids, kk):
     return np.lexsort((bb, -sims), axis=0)[:kk]
 
 
+def top_per_probe(pairs: DataFrame, k: int, n_cands: bool = False) -> DataFrame:
+    """The family's global merge: at most k rows per a_id under the
+    total order (sim DESC, nn_id ASC) — the order _topk_idx and every
+    paired oracle use, so ties are deterministic.  With ``n_cands``
+    each kept row also carries its a_id's whole candidate count."""
+    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
+    if n_cands:
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        pairs = pairs.withColumn("n_cands", F.count(F.lit(1)).over(whole))
+    return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+# One side of a probe search after validation: int64 ids, the
+# L2-normalized float64 matrix, and the extra columns' values.
+_Side = namedtuple("_Side", "ids mat cols")
+
+
+def _unit_rows(ids, mat, cols) -> _Side:
+    """Drop zero-norm rows and L2-normalize the rest.  Zero vectors are
+    excluded from similarity semantics engine-wide: cosine is undefined
+    there (norm product 0), and leaving them in yields engine-dependent
+    NaN ranking (degenerate-corpus sweep, round 6).  The paired oracles
+    carry the same norm > 0 predicate."""
+    import numpy as np
+
+    keep = np.linalg.norm(mat, axis=1) > 0
+    if not keep.all():
+        ids, mat = ids[keep], mat[keep]
+        cols = {c: v[keep] for c, v in cols.items()}
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    return _Side(ids, mat, cols)
+
+
+def probe_search(
+    corpus: DataFrame,
+    probes: DataFrame,
+    k: int,
+    score,
+    extra_cols: tuple[str, ...] = (),
+    out_schema: str = "a_id long, nn_id long, sim double",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The one top-k kernel of the vector family: broadcast probes, ONE
+    corpus scan, a tie-safe partial top-k per Arrow batch, and a global
+    (sim DESC, nn_id ASC) merge.
+
+    ``score(b, p)`` gets the batch and probe `_Side`s (valid, non-zero,
+    L2-normalized) and returns the ``(batch, probes)`` similarity matrix
+    with -inf where a pair is excluded; non-finite sims never leave the
+    batch.  ``extra_cols`` ride along on both sides (``b.cols`` /
+    ``p.cols``); a NULL there excludes the row like a NULL vector, and
+    each candidate's values are emitted beside its nn_id.  Returns
+    ``out_schema`` rows, at most k per a_id."""
+    import numpy as np
+
+    cols = [id_col, vec_col, *extra_cols]
+    # NULL-vector contract (valid_vec) on BOTH sides, mirrored in the
+    # paired oracles, before the zero-norm exclusion in _unit_rows.
+    ok = valid_vec(vec_col)
+    for c in extra_cols:
+        ok = ok & F.col(c).isNotNull()
+    rows = probes.filter(ok).select(*cols).collect()
+    p = _unit_rows(
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([r[1] for r in rows], dtype=np.float64) if rows else np.zeros((0, 0)),
+        {c: np.array([r[i] for r in rows]) for i, c in enumerate(extra_cols, 2)},
+    )
+
+    def partial_topk(batches):
+        if p.mat.shape[0] == 0:  # every probe filtered out → no pairs
+            return
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            vkeep, b_mat = _vec_matrix(pdf, vec_col)  # defensive NULL guard
+            if extra_cols:  # a NULL extra arrives as NaN: drop it too
+                xok = pdf[list(extra_cols)].notna().all(axis=1).to_numpy()
+                b_mat, vkeep = b_mat[xok[vkeep]], vkeep & xok
+            b = _unit_rows(
+                pdf[id_col].to_numpy(dtype=np.int64)[vkeep],
+                b_mat,
+                {c: pdf[c].to_numpy()[vkeep] for c in extra_cols},
+            )
+            if b.mat.shape[0] == 0:
+                continue
+            sims = score(b, p)  # (batch, probes)
+            kk = min(k, sims.shape[0])
+            # per-probe top-kk within this batch under the global total
+            # order (sim DESC, nn_id ASC) — see _topk_idx for why
+            # argpartition is not tie-safe here
+            idx = _topk_idx(sims, b.ids, kk)  # (kk, probes)
+            sv = np.take_along_axis(sims, idx, axis=0).ravel()
+            keep = np.isfinite(sv)
+            yield pd.DataFrame(
+                {
+                    "a_id": np.repeat(p.ids[None, :], kk, axis=0).ravel()[keep],
+                    "nn_id": b.ids[idx].ravel()[keep],
+                    **{c: v[idx].ravel()[keep] for c, v in b.cols.items()},
+                    "sim": sv[keep],
+                }
+            )
+
+    candidates = corpus.filter(ok).select(*cols).mapInPandas(partial_topk, out_schema)
+    return top_per_probe(candidates, k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -142,74 +272,15 @@ def cosine_topk(
     """
     import numpy as np
 
-    # NULL-vector contract: NULL / NULL-element embeddings are not
-    # vectors (see valid_vec) — filtered on BOTH sides, mirrored in the
-    # paired oracles, before the existing zero-norm exclusion below.
-    corpus = corpus.filter(valid_vec(vec_col))
-    probes = probes.filter(valid_vec(vec_col))
-    rows = probes.select(id_col, vec_col).collect()
-    p_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    p_mat = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 0))
-    )
-    # Zero vectors are excluded from similarity semantics engine-wide:
-    # cosine is undefined there (norm product 0), and leaving them in
-    # yields engine-dependent NaN ranking (degenerate-corpus sweep,
-    # round 6).  The paired oracles carry the same norm > 0 predicate.
-    p_keep = np.linalg.norm(p_mat, axis=1) > 0
-    p_ids, p_mat = p_ids[p_keep], p_mat[p_keep]
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
+    def exact(b, p):
+        sims = b.mat @ p.mat.T
+        if require_gt:
+            return np.where(b.ids[:, None] <= p.ids[None, :], -np.inf, sims)
+        if exclude_self:
+            return np.where(b.ids[:, None] == p.ids[None, :], -np.inf, sims)
+        return sims
 
-    out_schema = "a_id long, nn_id long, sim double"
-
-    def partial_topk(batches):
-        if p_mat.shape[0] == 0:  # every probe filtered out → no pairs
-            return
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vkeep, b_mat = _vec_matrix(pdf, vec_col)  # defensive NULL guard
-            b_ids = pdf[id_col].to_numpy(dtype=np.int64)[vkeep]
-            if b_mat.shape[0] == 0:
-                continue
-            b_keep = np.linalg.norm(b_mat, axis=1) > 0
-            if not b_keep.all():
-                b_ids, b_mat = b_ids[b_keep], b_mat[b_keep]
-            if b_mat.shape[0] == 0:
-                continue
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
-            sims = b_mat @ p_mat.T  # (batch, probes)
-            if exclude_self or require_gt:
-                mask = (
-                    b_ids[:, None] <= p_ids[None, :]
-                    if require_gt
-                    else b_ids[:, None] == p_ids[None, :]
-                )
-                sims = np.where(mask, -np.inf, sims)
-            kk = min(k, sims.shape[0])
-            # per-probe top-kk within this batch under the global total
-            # order (sim DESC, nn_id ASC) — see _topk_idx for why
-            # argpartition is not tie-safe here
-            idx = _topk_idx(sims, b_ids, kk)  # (kk, probes)
-            a = np.repeat(p_ids[None, :], kk, axis=0).ravel()
-            nn = b_ids[idx].ravel()
-            sv = np.take_along_axis(sims, idx, axis=0).ravel()
-            keep = np.isfinite(sv)
-            yield pd.DataFrame({"a_id": a[keep], "nn_id": nn[keep], "sim": sv[keep]})
-
-    candidates = corpus.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
-    # Global top-k over the small candidate set; (sim DESC, nn_id) makes
-    # ties deterministic.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        candidates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return probe_search(corpus, probes, k, exact, id_col=id_col, vec_col=vec_col)
 
 
 # DuckDB oracle computes the identical float64 math explicitly (not
@@ -340,15 +411,10 @@ def llm_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n / min_dim / max_dim count every row."""
     em = load_table(spark, sf_dir, "embeddings")
     dbl = F.transform("embedding", lambda x: x.cast("double"))
-    sumsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     elsum = F.aggregate(dbl, F.lit(0.0), lambda a, x: a + x)
     return em.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(F.when(valid_vec(), F.sqrt(sumsq))), 6).alias("avg_l2"),
+        F.round(F.avg(F.when(valid_vec(), l2_norm())), 6).alias("avg_l2"),
         # greatest(size, 1): a zero-length vector is DIVIDE_BY_ZERO under
         # ANSI Spark while DuckDB NULLs (the ADVICE r05 short-input
         # class); under the dim contract such a row takes the NULL branch,
@@ -383,8 +449,9 @@ def train_ivf_centroids(
     O(corpus); only ASSIGNMENT scans the corpus."""
     import numpy as np
 
-    # NULL-vector contract: corrupt vectors never train the quantizer
-    corpus = corpus.filter(valid_vec(vec_col))
+    # NULL-vector contract: corrupt and zero vectors never train the
+    # quantizer — it trains on exactly the rows probe_search scores
+    corpus = corpus.filter(valid_vec(vec_col) & (l2_norm(vec_col) > 0))
     # orderBy before limit: a bare limit takes partition-layout-dependent
     # rows — ordering pins the training sample across cluster layouts.
     rows = (
@@ -414,73 +481,29 @@ def llm_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbor: a 16-cell coarse quantizer
     (sample-trained k-means, seeded/deterministic) partitions the corpus;
     each probe (vec_id < 100) searches only its n_probe=4 nearest cells.
-    One corpus scan assigns cells + computes probe sims for in-cell rows
-    (numpy matmul per Arrow batch); a cheap global top-1 reduce follows.
+    The probe_search scorer routes each batch row to its nearest cell and
+    masks every probe's matmul column to its own cells, so the in-batch
+    pick is the kernel's tie-safe top-k, not a batch-order argmax.
     Rows-only (approximate by design); recall vs the exact brute-force
     baseline is asserted in tests/test_llm_invariants.py."""
     import numpy as np
 
-    em = load_table(spark, sf_dir, "embeddings").filter(valid_vec())
-    cent = train_ivf_centroids(em)
-
-    probe_rows = em.filter(F.col("vec_id") < 100).select("vec_id", "embedding").collect()
-    if cent.shape[0] == 0 or not probe_rows:
-        # every probe (or the whole corpus) filtered out by the
-        # NULL-vector contract: the 1-D empty np.array has no axis=1 to
-        # normalize over (review catch, round 9) — the answer is simply
-        # no neighbor pairs
-        return spark.createDataFrame([], "a_id long, nn_id long, sim double")
-    cnorm = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    p_ids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    p_mat = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
-    # n_probe nearest cells per probe (by centroid cosine)
     N_PROBE = 4
-    p_cells = np.argsort(-(p_mat @ cnorm.T), axis=1)[:, :N_PROBE]  # (probes, 4)
-    # cell -> probe indices searching it
-    cell_probes = {
-        c: np.where((p_cells == c).any(axis=1))[0] for c in range(len(cent))
-    }
+    em = load_table(spark, sf_dir, "embeddings")
+    cent = train_ivf_centroids(em)
+    cnorm = cent / np.linalg.norm(cent, axis=1, keepdims=True)
 
-    def search(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)[vkeep]
-            if b_mat.shape[0] == 0:
-                continue
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
-            cells = (b_mat @ cnorm.T).argmax(axis=1)
-            out_a, out_n, out_s = [], [], []
-            for c in np.unique(cells):
-                pidx = cell_probes.get(int(c))
-                if pidx is None or len(pidx) == 0:
-                    continue
-                rows_c = np.where(cells == c)[0]
-                sims = b_mat[rows_c] @ p_mat[pidx].T  # (cell rows, probes)
-                mask = b_ids[rows_c, None] == p_ids[None, pidx]
-                sims = np.where(mask, -np.inf, sims)
-                best = sims.argmax(axis=0)  # per probe: best row in this batch+cell
-                sv = sims[best, np.arange(len(pidx))]
-                keep = np.isfinite(sv)
-                out_a.extend(p_ids[pidx[keep]])
-                out_n.extend(b_ids[rows_c[best[keep]]])
-                out_s.extend(sv[keep])
-            yield pd.DataFrame({"a_id": out_a, "nn_id": out_n, "sim": out_s})
+    def in_probe_cells(b, p):
+        # n_probe nearest cells per probe (by centroid cosine) vs each
+        # corpus row's own cell
+        p_cells = np.argsort(-(p.mat @ cnorm.T), axis=1)[:, :N_PROBE]
+        b_cell = (b.mat @ cnorm.T).argmax(axis=1)
+        routed = (b_cell[:, None, None] == p_cells[None, :, :]).any(axis=2)
+        sims = np.where(routed, b.mat @ p.mat.T, -np.inf)
+        return np.where(b.ids[:, None] == p.ids[None, :], -np.inf, sims)
 
-    cands = em.select("vec_id", "embedding").mapInPandas(
-        search, "a_id long, nn_id long, sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    top = probe_search(em, em.filter(F.col("vec_id") < 100), 1, in_probe_cells)
+    return top.select("a_id", "nn_id", F.round("sim", 6).alias("sim")).orderBy("a_id")
 
 
 # avg_l2 validity-mirror: an invalid embedding's (NULL / NULL-element /
@@ -507,17 +530,12 @@ def llm_embed_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides are huge → plain shuffle hash join on the key; no broadcast."""
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
-    sumsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     return (
         d.join(e, d.doc_id == e.vec_id)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(F.when(valid_vec(), F.sqrt(sumsq))), 6).alias("avg_l2"),
+            F.round(F.avg(F.when(valid_vec(), l2_norm())), 6).alias("avg_l2"),
             F.round(F.avg("n_chars"), 6).alias("avg_chars"),
         )
     )
@@ -591,12 +609,12 @@ def _nsw_search(mat, nbrs, q, ef: int, n_nodes: int):
 @register("llm_simsearch_hnsw", oracle=None, tier="T3")
 def llm_simsearch_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW-style graph ANN, sharded the way production vector stores
-    shard (per-segment index + broadcast probes + global merge): every
-    corpus partition builds its own navigable-small-world graph inside
-    one `mapInPandas` pass (index cost bounded per shard, no global
-    build), beam-searches the broadcast probe matrix (vec_id < 100)
-    against its local graph, and emits per-shard top-1 candidates; a
-    cheap `partitions × probes` window reduce picks the global winner.
+    shard (per-segment index + broadcast probes + global merge): the
+    probe_search scorer builds a navigable-small-world graph over each
+    Arrow batch (index cost bounded per shard, no global build) and
+    beam-searches it for every broadcast probe (vec_id < 100); only the
+    beam's candidates get a finite sim, and the kernel's partial top-k
+    and window merge pick the global winner.
     At 100 TB this is embarrassingly parallel on the corpus axis — graph
     build never leaves the shard, probes are a <100-row broadcast, and
     the reduce is candidate-bounded.  Rows-only (approximate by design);
@@ -604,53 +622,20 @@ def llm_simsearch_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_llm_invariants.py)."""
     import numpy as np
 
-    em = load_table(spark, sf_dir, "embeddings").filter(valid_vec())
-    probe_rows = em.filter(F.col("vec_id") < 100).select("vec_id", "embedding").collect()
-    if not probe_rows:
-        # all probes invalid under the NULL-vector contract — the empty
-        # 1-D np.array has no axis=1 to normalize over (review catch)
-        return spark.createDataFrame([], "a_id long, nn_id long, sim double")
-    p_ids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    p_mat = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
+    def beam_candidates(b, p):
+        # insert order must not depend on arrow batch layout
+        order = np.argsort(b.ids, kind="stable")
+        mat = b.mat[order]
+        graph = _nsw_build(mat, m=8, ef=32)
+        sims = np.full((len(mat), len(p.ids)), -np.inf)
+        for j, q in enumerate(p.mat):
+            cand = order[_nsw_search(mat, graph, q, ef=48, n_nodes=len(mat))]
+            sims[cand, j] = b.mat[cand] @ q
+        return np.where(b.ids[:, None] == p.ids[None, :], -np.inf, sims)
 
-    def shard_search(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)[vkeep]
-            if b_mat.shape[0] == 0:
-                continue
-            # insert order must not depend on arrow batch layout
-            order = np.argsort(b_ids, kind="stable")
-            b_ids = b_ids[order]
-            b_mat = b_mat[order]
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
-            graph = _nsw_build(b_mat, m=8, ef=32)
-            out_a, out_n, out_s = [], [], []
-            for pi in range(len(p_ids)):
-                cand = _nsw_search(b_mat, graph, p_mat[pi], ef=48, n_nodes=len(b_mat))
-                for j in cand:
-                    if b_ids[j] != p_ids[pi]:  # exclude self-match
-                        out_a.append(p_ids[pi])
-                        out_n.append(b_ids[j])
-                        out_s.append(float(b_mat[j] @ p_mat[pi]))
-                        break
-            yield pd.DataFrame({"a_id": out_a, "nn_id": out_n, "sim": out_s})
-
-    cands = em.select("vec_id", "embedding").mapInPandas(
-        shard_search, "a_id long, nn_id long, sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    em = load_table(spark, sf_dir, "embeddings")
+    top = probe_search(em, em.filter(F.col("vec_id") < 100), 1, beam_candidates)
+    return top.select("a_id", "nn_id", F.round("sim", 6).alias("sim")).orderBy("a_id")
 
 
 # NULL-vector contract (round 9): a NULL embedding posexplodes to zero
@@ -836,85 +821,27 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     are what make an embedding model's contrastive loss informative;
     random negatives are trivially separable.
 
-    Same scan shape as cosine_topk with one twist: the probe closure
-    also ships the anchors' labels, and the batch matmul masks
+    The cosine_topk scan with a label-mask scorer: `label` rides along
+    as a probe_search extra column, and the batch matmul masks
     same-label columns to −inf BEFORE the per-batch partial top-k — so
-    the label constraint costs zero extra passes.  One corpus scan,
-    candidates bounded by partitions × probes × k, final window on the
-    tiny candidate set."""
+    the label constraint costs zero extra passes.  An unlabeled vector
+    can be neither anchor nor negative: probe_search drops NULL extras,
+    as the oracle's three-valued `a.label <> b.label` does."""
     import numpy as np
 
-    # label IS NOT NULL: an unlabeled vector can be neither anchor nor
-    # negative — the oracle's `a.label <> b.label` already drops NULL
-    # labels (three-valued <>), and the kernel's int64 coercion would
-    # otherwise turn a NULL label into a silent INT64_MIN.
-    em = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(valid_vec() & F.col("label").isNotNull())
+    def other_label(b, p):
+        same = b.cols["label"][:, None] == p.cols["label"][None, :]
+        return np.where(same, -np.inf, b.mat @ p.mat.T)
+
+    em = load_table(spark, sf_dir, "embeddings")
+    top = probe_search(
+        em,
+        em.filter(F.col("vec_id") < 20),
+        5,
+        other_label,
+        extra_cols=("label",),
+        out_schema="a_id long, nn_id long, label int, sim double",
     )
-    rows = em.filter(F.col("vec_id") < 20).select("vec_id", "embedding", "label").collect()
-    out_schema = "a_id long, nn_id long, neg_label int, sim double"
-    if not rows:
-        # all anchors invalid (NULL vector / NULL label) — the empty 1-D
-        # np.array has no axis=1 to normalize over (review catch)
-        return spark.createDataFrame([], out_schema)
-    p_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    p_mat = np.array([r[1] for r in rows], dtype=np.float64)
-    p_lbl = np.array([r[2] for r in rows], dtype=np.int64)
-    # zero vectors excluded from similarity semantics (see cosine_topk)
-    p_keep = np.linalg.norm(p_mat, axis=1) > 0
-    p_ids, p_mat, p_lbl = p_ids[p_keep], p_mat[p_keep], p_lbl[p_keep]
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
-    k = 5
-
-    def partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive
-            # mask BEFORE the int64 conversion: a NULL label arrives as
-            # NaN and .to_numpy(dtype=int64) on the raw column would
-            # crash (or silently mint INT64_MIN) ahead of the vector
-            # guard (review catch).  Upstream label.isNotNull() already
-            # excludes such rows; this keeps the kernel total on raw
-            # data.  lbl_ok[vkeep] re-indexes the label mask onto
-            # b_mat's rows (b_mat holds only the vkeep rows).
-            lbl_raw = pdf["label"].to_numpy()
-            lbl_ok = ~pd.isna(lbl_raw)
-            b_mat = b_mat[lbl_ok[vkeep]]
-            keep = vkeep & lbl_ok
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)[keep]
-            b_lbl = lbl_raw[keep].astype(np.int64)
-            if b_mat.shape[0] == 0:
-                continue
-            b_keep = np.linalg.norm(b_mat, axis=1) > 0
-            if not b_keep.all():
-                b_ids, b_lbl, b_mat = b_ids[b_keep], b_lbl[b_keep], b_mat[b_keep]
-            if b_mat.shape[0] == 0:
-                continue
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
-            sims = b_mat @ p_mat.T  # (batch, probes)
-            sims = np.where(b_lbl[:, None] == p_lbl[None, :], -np.inf, sims)
-            kk = min(k, sims.shape[0])
-            # tie-safe partial top-k (sim DESC, nn_id ASC) — _topk_idx
-            idx = _topk_idx(sims, b_ids, kk)
-            a = np.repeat(p_ids[None, :], kk, axis=0).ravel()
-            nn = b_ids[idx].ravel()
-            lb = b_lbl[idx].ravel()
-            sv = np.take_along_axis(sims, idx, axis=0).ravel()
-            keep = np.isfinite(sv)
-            yield pd.DataFrame(
-                {"a_id": a[keep], "nn_id": nn[keep], "neg_label": lb[keep], "sim": sv[keep]}
-            )
-
-    cands = em.select("vec_id", "embedding", "label").mapInPandas(
-        partial_topk, "a_id long, nn_id long, neg_label int, sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("a_id", "nn_id", "neg_label", F.round("sim", 6).alias("sim"))
+    return top.select(
+        "a_id", "nn_id", F.col("label").alias("neg_label"), F.round("sim", 6).alias("sim")
     )

@@ -26,6 +26,16 @@ NEVER_VERIFIED = (
 # driver stamp — see tools/regen_priority.py FORCE_REFRESH) lead;
 # the rest are the stalest greens, one per name family.
 STALE_REFRESH = (
+    "llm_simsearch_cosine_topk",  # forced: re-edited since last stamp
+    "llm_knn_join",  # forced: re-edited since last stamp
+    "llm_dedup_embedding",  # forced: re-edited since last stamp
+    "llm_hard_negatives",  # forced: re-edited since last stamp
+    "llm_vector_norms",  # forced: re-edited since last stamp
+    "llm_embed_join_docs",  # forced: re-edited since last stamp
+    "llm_simsearch_ivf",  # forced: re-edited since last stamp
+    "llm_simsearch_hnsw",  # forced: re-edited since last stamp
+    "llm_simsearch_lsh",  # forced: re-edited since last stamp
+    "llm_simsearch_multiprobe",  # forced: re-edited since last stamp
     "etl_time_travel",  # forced: re-edited since last stamp
     "etl_gdpr_delete",  # forced: re-edited since last stamp
     "etl_vacuum_retention",  # forced: re-edited since last stamp
@@ -66,13 +76,6 @@ STALE_REFRESH = (
     "stream_kafka_source",  # forced: re-edited since last stamp
     "stream_session_dynamic_gap",  # forced: re-edited since last stamp
     "stream_session_window",  # forced: re-edited since last stamp
-    "stream_sliding_topk",  # forced: re-edited since last stamp
-    "stream_sliding_window",  # forced: re-edited since last stamp
-    "stream_stateful_running",  # forced: re-edited since last stamp
-    "stream_static_join",  # forced: re-edited since last stamp
-    "stream_stream_join",  # forced: re-edited since last stamp
-    "stream_tumbling_window",  # forced: re-edited since last stamp
-    "stream_watermark_late",  # forced: re-edited since last stamp
 )
 
 # 351 green names, stalest verdict first.
