@@ -755,11 +755,18 @@ def main() -> None:
     # leg once measured the ratio anywhere from 4.9 to 6.4 on an
     # identical HEAD) at a FINER grain than round 6's full-rotation
     # passes, and it is exactly BASELINE.md's own per-query best-of-N
-    # method.  The rotation shape also had a measurement artifact:
-    # cycling 12 plans plus a DuckDB pass between reps of the same query
-    # kept the JIT'd code paths out of the instruction cache — q1 timed
-    # 380-460 ms rotated vs 240-270 ms burst, while DuckDB's minima
-    # barely moved (measured round 7, interleaved in one session).
+    # method.  The rotation shape also had a measurement artifact, whose
+    # cause was Spark's generated-class cache: one rotated pass of the 12
+    # plans generates ~158 classes, more than Spark's default cache of
+    # 100, and an LRU cache never hits on a cyclic working set larger
+    # than itself.  So every rotated rep recompiled its classes with
+    # Janino and ran them without their JIT-compiled code — q1 timed
+    # 380-460 ms rotated vs 240-270 ms burst in round 7.  Re-measured in
+    # one session on 4 cores at sf0.1: with the default cache, rotated
+    # reps compiled ~1,100 classes per 7 passes and q1 took 354-468 ms
+    # (min) rotated vs 320-325 ms burst; with the factory's 1000-entry
+    # cache (session.FACTORY_CONFS) they compile none, and q1 takes
+    # 287-340 ms rotated vs 282-361 ms burst.
     con = duckdb_connection(SF_DIR)
     # Warm pass into a THROWAWAY dict: folding its minima into the
     # judged results would break the per-query drift pairing (a fast

@@ -232,3 +232,48 @@ def test_conf_scope_restores_set_and_unset_keys(spark, raises):
         assert spark.conf.get(_UNSET_KEY, None) is None
     finally:
         spark.conf.unset(_SET_KEY)
+
+
+def test_reliable_checkpoint_writes_whatever_the_storage_level(spark, tmp_path, monkeypatch):
+    """With SPARK_GRAFT_CHECKPOINT_DIR set, a storage level asked for
+    (DISK_ONLY here) does not apply: the reliable checkpoint writes its
+    data under the env dir and returns the same rows."""
+    from pyspark.storagelevel import StorageLevel
+
+    from un_datapipeline_spark.session import graft_checkpoint
+
+    target = tmp_path / "disk_only_ckpt"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(target))
+    df = spark.range(100).selectExpr("id", "id * 2 AS v")
+    out = graft_checkpoint(df, storage_level=StorageLevel.DISK_ONLY)
+    assert sorted(map(tuple, out.collect())) == [(i, 2 * i) for i in range(100)]
+    assert [p for p in target.rglob("*") if p.is_file()], "nothing written to the env dir"
+
+
+_CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def test_factory_sizes_the_codegen_cache(spark):
+    """The codegen cache size is static: only a session built with it
+    carries it, so the factory must set it at build."""
+    assert spark.sparkContext.getConf().get(_CODEGEN_CACHE) == sess_mod.FACTORY_CONFS[_CODEGEN_CACHE]
+
+
+def test_repeated_bench_pass_compiles_no_class(spark, sf_smoke, monkeypatch):
+    """A second pass of bench.py's 12 queries finds every generated class
+    in the cache.  One pass generates ~150 classes here, more than
+    Spark's default cache of 100, and an LRU cache smaller than a cyclic
+    working set never hits: with 100, the second pass recompiled 142."""
+    import bench
+    from un_datapipeline_spark.plans import codegen_compiles
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)  # bench pins it
+
+    def compiles_in_one_pass() -> int:
+        before = codegen_compiles(spark)
+        for fn in bench.QUERIES.values():
+            fn(spark, sf_smoke).collect()
+        return codegen_compiles(spark) - before
+
+    first = compiles_in_one_pass()
+    assert compiles_in_one_pass() == 0, f"first pass compiled {first}"

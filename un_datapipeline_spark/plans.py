@@ -42,6 +42,14 @@ def plan_string(spark, name: str, sf_dir: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far: the count of
+    Spark's ``CodegenMetrics`` compilation-time histogram, which
+    ``CodeGenerator`` updates only on a class-cache miss."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def summarize(plan: str) -> str:
     found = [m for m in _MARKERS if m in plan]
     return ", ".join(found) if found else "(scan/project only)"

@@ -40,13 +40,26 @@ RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
 }
 
-# Preferences applied at session build only (NOT re-asserted by loaders,
-# so a caller may override them at runtime — bench.py turns AQE off at
-# test scale, where stage re-optimization latency exceeds its benefit:
-# measured 0.35s vs 0.58s per small query).
+# Preferences applied at session build only, NOT re-asserted by loaders.
+# A runtime conf among them may be changed later on the session (bench.py
+# turns AQE off at test scale, where stage re-optimization latency exceeds
+# its benefit: measured 0.35s vs 0.58s per small query); a static one is
+# fixed for the life of the session and can only be changed at launch.
 FACTORY_CONFS = {
     # Runtime re-planning: coalesce small shuffle partitions, split skewed ones.
     "spark.sql.adaptive.enabled": "true",
+    # Static: CodeGenerator sizes its JVM-wide class cache from this once,
+    # when the class is first used.  Spark's default of 100 is smaller
+    # than a repeated query suite's working set: one pass of bench.py's 12
+    # queries generates ~158 classes at sf0.1 and 142-153 at sf0.001.  An
+    # LRU cache smaller than a cyclic working set never hits, so every
+    # pass re-ran Janino on every class and started it over in the
+    # interpreter, without its JIT-compiled code.  With 1000 a repeated
+    # pass compiles none (tests/test_session_confs.py).  Cost: the
+    # resident classes, +2.3% live heap after perfbench's warehouse run
+    # (75.9 -> 77.7 MB).  A session the engine does not build keeps 100
+    # unless launched with --conf spark.sql.codegen.cache.maxEntries=...
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -106,7 +119,11 @@ def graft_checkpoint(df, eager: bool = True, storage_level=None):
     materialization.  No behavior change while the env is unset
     (SCALING.md "Checkpoint durability posture").  A checkpoint dir the
     context already has is replaced unless it lies in the env dir, so
-    the configured dir is never silently ignored."""
+    the configured dir is never silently ignored.  ``storage_level``
+    applies to the local path only: a reliable checkpoint always writes
+    its data to the checkpoint dir and reads it back from there, so no
+    storage level applies to it (Spark's ``Dataset.checkpoint`` takes
+    none)."""
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt_dir:
         sc = df.sparkSession.sparkContext
