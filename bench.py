@@ -289,23 +289,28 @@ LIMIT 200
 # the hint degenerates to one narrow exchange ahead of a scan that
 # already parallelizes via row groups.
 def _bench_width() -> int:
-    """The ONE resolution of the bench's shuffle-width knob (ADVICE r12):
-    pin the test-scale default into the env exactly once, then read it —
-    main(), the REPARTITION hint below, and the session factory all see
-    the same value, whoever runs first."""
+    """The ONE resolution of the bench's local-posture shuffle width
+    (ADVICE r12): pin the test-scale default into the env, then read it.
+    Only main() and perfbench call it, before get_spark, so the session
+    factory and the REPARTITION hint below see the same value; a cluster
+    posture never calls it and keeps its own width."""
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
     return int(os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
 
 
 def events_json_extract(spark: SparkSession, d: str) -> DataFrame:
-    # Width resolved at plan-build time (each rep rebuilds the SQL text):
-    # a cluster run inherits its (high) width, where the hint degenerates
-    # to one narrow exchange ahead of a scan that already parallelizes
-    # via row groups.
+    # Width resolved at plan-build time (each rep rebuilds the SQL text),
+    # read without pinning anything: the env knob when main() (local
+    # posture) set it, else the session's own width — so a cluster run
+    # inherits its (high) width, where the hint degenerates to one narrow
+    # exchange ahead of a scan that already parallelizes via row groups.
+    width = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or spark.conf.get(
+        "spark.sql.shuffle.partitions"
+    )
     return _sql(f"""
 SELECT event_type,
        avg(variant_get(parse_json(props), '$.k', 'int')) AS avg_k
-FROM (SELECT /*+ REPARTITION({_bench_width()}) */ event_type, props FROM events)
+FROM (SELECT /*+ REPARTITION({width}) */ event_type, props FROM events)
 GROUP BY event_type
 ORDER BY event_type
 """)(spark, d)

@@ -9,7 +9,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from un_datapipeline_spark.session import get_spark  # noqa: E402
+from un_datapipeline_spark.session import get_spark, release_scratch  # noqa: E402
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_SF_DIR", "/root/testdata/sf0.001")
 SF_T2 = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0.01")
@@ -19,6 +19,7 @@ SF_T2 = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0.01")
 def spark():
     s = get_spark(app_name="un-datapipeline-spark-tests")
     yield s
+    release_scratch(s)
     s.stop()
 
 

@@ -60,6 +60,7 @@ def main() -> int:
         )
     spark = builder.getOrCreate()
     import __spark_entry__ as e
+    from un_datapipeline_spark.session import release_scratch
 
     df = e.entry(spark)
     rows = df.collect()
@@ -138,6 +139,7 @@ def main() -> int:
         except Exception:
             out.write(f"t2 {name}: EXCEPTION\n{traceback.format_exc()}\n")
             n_fail += 1
+        release_scratch(spark)  # the op's result is consumed (toPandas)
         if os.environ.get("VERIFY_UNPERSIST"):
             # Marathon-sweep mode (default OFF so the sf0.01 run stays a
             # faithful driver mirror): a full-registry pass leaves ~300

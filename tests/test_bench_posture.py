@@ -45,3 +45,16 @@ def test_benchmark_corpus_keeps_local_posture(tmp_path, no_forced_posture):
     corpus.generate(bench.SF_DIR, str(tmp_path), seed=1, layout="shipped")
     assert 0 < bench._dir_bytes(str(tmp_path)) < bench._LOCAL_POSTURE_MAX_BYTES
     assert bench._use_local_posture(str(tmp_path))
+
+
+def test_repartition_hint_follows_session_width(spark, sf_smoke, monkeypatch):
+    """With the env knob unset (cluster posture), events_json_extract's
+    REPARTITION hint takes the session's width and leaves the env alone."""
+    from un_datapipeline_spark.session import conf_scope
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "17"}):
+        df = bench.events_json_extract(spark, sf_smoke)
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert "RoundRobinPartitioning(17)" in plan, plan
+    assert "SPARK_GRAFT_SHUFFLE_PARTITIONS" not in os.environ

@@ -176,7 +176,7 @@ def test_dedup_cluster_covers_exact_dups(spark, sf_t2):
     assert n_dup_groups > 0
 
 
-def test_fingerprint_exact_dup_containment(spark, sf_smoke):
+def test_fingerprint_exact_dup_containment(spark, sf_smoke, tmp_path):
     """A cloned doc shares ALL fingerprints with its original, so every
     clone pair must appear in the full-containment output."""
     import __spark_entry__  # noqa: F401  (ensures registry import path works)
@@ -188,9 +188,8 @@ def test_fingerprint_exact_dup_containment(spark, sf_smoke):
     OFFSET = 1_000_000
     base = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     import pyspark.sql.functions as FF
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="fp_inv_")
+    tmp = str(tmp_path)
     clones = base.select((FF.col("doc_id") + OFFSET).alias("doc_id"), "text")
     base.unionByName(clones).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
     out = llm_doc_fingerprint(spark, tmp)
@@ -397,15 +396,13 @@ def test_dsir_weights_separate_target_language(spark, sf_t2):
     )
 
 
-def test_neardup_cluster_end_to_end_clone_recall(spark, sf_smoke):
+def test_neardup_cluster_end_to_end_clone_recall(spark, sf_smoke, tmp_path):
     """The composed minhash→verify→CC flow must place exact clones in the
     same cluster with the original as the canonical member (min id)."""
-    import tempfile
-
     OFFSET = 1_000_000
     base = load_table(spark, sf_smoke, "documents")
     clones = base.withColumn("doc_id", F.col("doc_id") + OFFSET)
-    tmp = tempfile.mkdtemp(prefix="ndc_inv_")
+    tmp = str(tmp_path)
     base.unionByName(clones).write.mode("overwrite").parquet(
         f"{tmp}/documents.parquet"
     )

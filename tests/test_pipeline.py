@@ -3,15 +3,13 @@ transforms), sink round-trips, and operator-as-stage composition."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 
 from un_datapipeline_spark.pipeline import Pipeline
 
 
-def test_pipeline_end_to_end(spark, sf_smoke):
-    out = tempfile.mkdtemp(prefix="pl_out_") + "/res"
+def test_pipeline_end_to_end(spark, sf_smoke, tmp_path):
+    out = f"{tmp_path}/res"
     res = (
         Pipeline(spark)
         .source_table(sf_smoke, "lineitem")

@@ -1,9 +1,8 @@
-"""Scale-machinery proofs: bucketed joins actually skip the shuffle
-(plan-level), salted joins return identical results to plain joins."""
+"""Scale-machinery proofs: bucketed writes emit one file per bucket and
+their joins actually skip the shuffle (plan-level), salted joins return
+identical results to plain joins."""
 
 from __future__ import annotations
-
-import tempfile
 
 import pyspark.sql.functions as F
 
@@ -11,13 +10,15 @@ from un_datapipeline_spark.scale import bucketed_join, salted_join, write_bucket
 from un_datapipeline_spark.tables import load_table
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_smoke):
-    warehouse = tempfile.mkdtemp(prefix="bkt_")
+def test_bucketed_join_has_no_shuffle(spark, sf_smoke, tmp_path):
+    warehouse = str(tmp_path)
     li = load_table(spark, sf_smoke, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     o = load_table(spark, sf_smoke, "orders").select("o_orderkey", "o_orderstatus")
-    write_bucketed(li, "li_b", "l_orderkey", 4, path=f"{warehouse}/li")
+    # a 4-task input still writes one file per bucket, not 4 tasks × 4
+    write_bucketed(li.repartition(4), "li_b", "l_orderkey", 4, path=f"{warehouse}/li")
+    assert len(list((tmp_path / "li").glob("part-*"))) == 4
     write_bucketed(
         o.withColumnRenamed("o_orderkey", "l_orderkey"),
         "o_b",

@@ -14,7 +14,6 @@ Two-phase protocol against one checkpoint:
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 
@@ -65,11 +64,12 @@ def _run(spark, in_dir: str, ckpt: str, sink: str) -> None:
     q.awaitTermination()
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, tmp_path):
     win_a = BASE - (BASE % HOUR)  # hour-aligned window containing BASE
-    in_dir = tempfile.mkdtemp(prefix="wm_in_")
-    ckpt = tempfile.mkdtemp(prefix="wm_ckpt_")
-    sink = tempfile.mkdtemp(prefix="wm_sink_")
+    dirs = [tmp_path / d for d in ("in", "ckpt", "sink")]
+    for d in dirs:
+        d.mkdir()
+    in_dir, ckpt, sink = map(str, dirs)
 
     # Run 1: 3 rows in window A, then one 2h later -> watermark passes A.
     _write_batch(spark, in_dir, "b1", [win_a + 10, win_a + 20, win_a + 30])

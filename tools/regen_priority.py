@@ -51,6 +51,21 @@ REFRESH_COUNT = 5
 # first, pure refactors last.  (Forced entries are never truncated —
 # see main() — so ordering is about review priority, not survival.)
 FORCE_REFRESH: tuple[str, ...] = (
+    # Scratch storage moved to session.scratch_dir (same writes and
+    # reads under a new path; fixtures memoized per application),
+    # risk-first: the bucketed write now hash-repartitions to one file
+    # per bucket; the memoized fixture writers now write through the
+    # Hadoop FileSystem; three stable dirs became fresh ones.  The other
+    # scratch ops touched here are listed further down or, being
+    # path-only moves, in DEFERRED_REFRESH (the window holds 50).
+    "sink_bucketed_write",
+    "src_binary_files",
+    "src_text_wholetext",
+    "src_json_malformed",
+    "src_xml_files",
+    "llm_jsonl_export",
+    "llm_training_shard_write",
+    #
     # The vector top-k family on one probe_search kernel / one LSH
     # helper, risk-first: kernel semantics (hash-matched), then the
     # shared l2_norm Column helper (same expression), then the
@@ -118,26 +133,19 @@ FORCE_REFRESH: tuple[str, ...] = (
     "etl_compact_files",         # also: no AQE probe job, read-backs
     #                              with the written schema
     "etl_backfill_partitions",
-    # every op that enters streaming.stream_shuffle_partitions; all but
-    # stream_checkpoint_resume also enter read_events_stream, whose
-    # schema probe is now a driver footer read:
-    "src_stream_file",
+    # streaming.stream_shuffle_partitions; its memoized fixture now
+    # lives in a per-application scratch dir (its stream siblings are
+    # deferred, see DEFERRED_REFRESH):
     "stream_checkpoint_resume",
-    "stream_custom_stateful",
-    "stream_dedup",
-    "stream_foreach_batch_sink",
-    "stream_kafka_source",
-    "stream_session_dynamic_gap",
-    "stream_session_window",
 )
 
 # Round-10's window overflow mechanism: when stamp-void edits exceed
 # the 50-slot window, the least-risk rows-only / zero-semantic names are
 # deferred here and MUST move to the TOP of the next round's
-# FORCE_REFRESH.  Deferred when the vector family joined above: the last
-# seven stream siblings of the conf_scope / footer-read edits (same conf
-# keys and values, same schema — zero-semantic).
-DEFERRED_REFRESH = (
+# FORCE_REFRESH.
+DEFERRED_REFRESH: tuple[str, ...] = (
+    # path-only scratch moves (session.scratch_dir): a fresh streaming
+    # checkpoint / round-trip dir under a new root, nothing else changed
     "stream_sliding_topk",
     "stream_sliding_window",
     "stream_stateful_running",
@@ -145,6 +153,23 @@ DEFERRED_REFRESH = (
     "stream_stream_join",
     "stream_tumbling_window",
     "stream_watermark_late",
+    "src_stream_file",
+    "stream_custom_stateful",
+    "stream_dedup",
+    "stream_foreach_batch_sink",
+    "stream_kafka_source",
+    "stream_session_dynamic_gap",
+    "stream_session_window",
+    "join_dpp_partitioned",
+    "src_csv_malformed",
+    "src_csv_multiline",
+    "src_csv_roundtrip",
+    "src_json_nested",
+    "src_json_roundtrip",
+    "src_orc_roundtrip",
+    "src_partitioned_pruning",
+    "src_schema_evolution",
+    "src_text_lines",
 )
 
 

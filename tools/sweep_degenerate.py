@@ -1128,6 +1128,7 @@ def run_registry(d: str, only: set[str]):
 
     from tests.strict_diff import canon, strict_compare
     from un_datapipeline_spark.registry import ContractViolation
+    from un_datapipeline_spark.session import release_scratch
 
     ops = _select(only)
     spark = (
@@ -1185,6 +1186,7 @@ def run_registry(d: str, only: set[str]):
             print(f"OK {name}: {stats}", flush=True)
             n_ok += 1
     print(f"TOTAL ok={n_ok} rows_only={n_ro} fail={len(fails)} {fails}")
+    release_scratch(spark)
     spark.stop()
     return n_ok, n_ro, fails
 

@@ -13,12 +13,11 @@ engines — no accumulation-order exposure.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import scratch_dir
 from un_datapipeline_spark.tables import (
     json_usable_sql,
     load_table,
@@ -313,7 +312,7 @@ def zorder_write(spark: SparkSession, sf_dir: str) -> str:
     """Write lineitem parquet files range-clustered on the 16-bit Morton
     code of (l_partkey, l_suppkey) low bytes; returns the output dir so
     tests can audit footer min/max disjointness on zcode."""
-    out = tempfile.mkdtemp(prefix="udps_zorder_")
+    out = scratch_dir(spark, "udps_zorder_")
     (
         _zorder_input(spark, sf_dir)
         .repartitionByRange(8, "zcode")

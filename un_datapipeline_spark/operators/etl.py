@@ -11,13 +11,11 @@ fold into one scan per table with conditional counts.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import conf_scope
+from un_datapipeline_spark.session import _hadoop_path, conf_scope, scratch_dir
 from un_datapipeline_spark.tables import (
     cents_sum,
     json_long_strict_sql,
@@ -332,11 +330,13 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     a repartition would pay a full shuffle to fix a layout problem.  At
     100 TB the same op runs per hive-partition with n sized to the
     128 MB-file target."""
-    import glob
-    import tempfile
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    small_dir = tempfile.mkdtemp(prefix="udps_small_")
+
+    def n_parts(d: str) -> int:
+        fs, parts = _hadoop_path(spark, f"{d}/part-*.parquet")
+        return len(fs.globStatus(parts))
+
+    small_dir = scratch_dir(spark, "udps_small_")
     fragmented = li.repartition(32)
     # The planned exchange's width, read without running anything: under
     # AQE, ``.rdd.getNumPartitions()`` runs the shuffle map stage as its
@@ -347,9 +347,9 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         fragmented._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
     )
     fragmented.write.mode("overwrite").parquet(small_dir)
-    files_before = len(glob.glob(f"{small_dir}/part-*.parquet"))
+    files_before = n_parts(small_dir)
     assert files_before <= partitions_before, (files_before, partitions_before)
-    compact_dir = tempfile.mkdtemp(prefix="udps_compact_")
+    compact_dir = scratch_dir(spark, "udps_compact_")
     # The layout CONTRACT is the logical partition count (what coalesce
     # promises), not the physical file count: the writer skips a file
     # for an all-empty task, and the scan PACKS tiny files into fewer
@@ -368,7 +368,7 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         compacted = spark.read.schema(fragmented.schema).parquet(small_dir).coalesce(4)
         partitions_after = compacted.rdd.getNumPartitions()
         compacted.write.mode("overwrite").parquet(compact_dir)
-    files_after = len(glob.glob(f"{compact_dir}/part-*.parquet"))
+    files_after = n_parts(compact_dir)
     assert files_after <= partitions_after, (files_after, partitions_after)
     # Loud internal check, not a reported value (ADVICE r06): with
     # openCostInBytes pinned the compaction scan takes one partition per
@@ -595,19 +595,15 @@ def etl_backfill_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    out = tempfile.mkdtemp(prefix="udps_backfill_")
+    out = scratch_dir(spark, "udps_backfill_")
     ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
     patch = ev.filter(F.col("event_date") == F.lit("2024-01-05").cast("date")).withColumn(
         "value", F.col("value") * 2
     )
     with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    # Explicit schema on read-back (round 10, R10_EMPTY_PLAN class 1):
-    # an empty source writes NO data files and schema inference dies
-    # with UNABLE_TO_INFER_SCHEMA — the writer KNOWS the schema, so pass
-    # it; an empty write must still yield a queryable 0-row table.  The
-    # correct cluster posture anyway: inference lists footers, the
-    # explicit schema skips that entirely at 100 TB.
+    # Explicit schema (R10_EMPTY_PLAN class 1): an empty write leaves no
+    # file to infer from and must still read back as a 0-row table.
     back = spark.read.schema(ev.schema).parquet(out)
     return (
         back.groupBy(F.date_format("event_date", "yyyy-MM-dd").alias("event_date"))
@@ -660,7 +656,7 @@ def etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus")
         ),
     ).withColumn("version", F.lit(2))
-    out = tempfile.mkdtemp(prefix="udps_timetravel_")
+    out = scratch_dir(spark, "udps_timetravel_")
     snapshots = v1.unionByName(v2)
     snapshots.write.mode("overwrite").partitionBy("version").parquet(out)
     back = spark.read.schema(snapshots.schema).parquet(out)
@@ -722,7 +718,7 @@ def etl_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     forget = e.filter(F.col("user_id") % 97 == 0).select("user_id").distinct()
     scrubbed = e.join(forget, "user_id", "left_anti")
-    out = tempfile.mkdtemp(prefix="udps_gdpr_")
+    out = scratch_dir(spark, "udps_gdpr_")
     scrubbed.write.mode("overwrite").parquet(out)
     back = spark.read.schema(scrubbed.schema).parquet(out)
     remaining = back.join(forget, "user_id", "left_semi").agg(
@@ -833,8 +829,6 @@ def etl_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes time travel safe to run on a 100 TB table: expiry prunes
     whole version= partition directories — O(versions removed) metadata
     work, no data scan of the survivors."""
-    import shutil
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -843,7 +837,7 @@ def etl_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = o.filter(F.col("o_orderkey") % 10 != 0).withColumn("version", F.lit(1))
     v2 = o.withColumn("version", F.lit(2))
     v3 = o.withColumn("version", F.lit(3))
-    out = tempfile.mkdtemp(prefix="udps_vacuum_")
+    out = scratch_dir(spark, "udps_vacuum_")
     snapshots = v1.unionByName(v2).unionByName(v3)
     snapshots.write.mode("overwrite").partitionBy("version").parquet(out)
 
@@ -861,7 +855,8 @@ def etl_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = 2
     expired = before[:-keep] if len(before) > keep else []
     for v in expired:
-        shutil.rmtree(f"{out}/version={v}")
+        fs, version_dir = _hadoop_path(spark, f"{out}/version={v}")
+        fs.delete(version_dir, True)
     after = versions()
     live = read_back().filter(F.col("version") == max(after))
     return live.agg(
@@ -904,7 +899,7 @@ def etl_pipeline_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     `transform` stage."""
     from un_datapipeline_spark.pipeline import Pipeline
 
-    out = tempfile.mkdtemp(prefix="udps_pipeline_") + "/revenue"
+    out = scratch_dir(spark, "udps_pipeline_") + "/revenue"
     pipeline = (
         Pipeline(spark, name="revenue_rollup")
         .source_table(sf_dir, "lineitem")
@@ -964,7 +959,7 @@ def etl_incremental_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 100).cast("long").alias("c"),
     )
-    state_dir = tempfile.mkdtemp(prefix="udps_incr_")
+    state_dir = scratch_dir(spark, "udps_incr_")
     # --- run 1: everything up to the median-ish cutoff -------------------
     cutoff = e.agg(
         F.timestamp_micros(

@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import ckpt, conf_scope
+from un_datapipeline_spark.session import ckpt, conf_scope, scratch_dir
 from un_datapipeline_spark.tables import (
     cents_sum,
     latest_event,
@@ -498,17 +498,12 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanism: a WHERE on the dim table prunes fact I/O by ~5/7 here,
     by arbitrary dim selectivity in production.  The oracle replays the
     semantics (week-day filter) directly on the source table."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="udps_dpp_")
+    out = scratch_dir(spark, "udps_dpp_")
     part = ev.withColumn("event_date", F.to_date("ts"))
     part.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    # Explicit schema (round 10, R10_EMPTY_PLAN class 1): an empty
-    # source writes no data files and inference dies; the writer knows
-    # the schema.  Partition discovery (and the DPP PartitionFilters
-    # injection this op exists to prove) is unaffected — only footer
-    # inference is skipped.
+    # Explicit schema (R10_EMPTY_PLAN class 1): an empty write leaves no
+    # file to infer from; partition discovery and DPP are unaffected.
     fact = spark.read.schema(part.schema).parquet(out)
     iso_dow = (F.dayofweek("d") + 5) % 7 + 1
     dim = (

@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from un_datapipeline_spark.session import ckpt
+from un_datapipeline_spark.session import ckpt, scratch_dir
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table
 
@@ -660,10 +660,6 @@ def llm_jsonl_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pure column expressions around a distributed text sink/scan;
     JSONL stays line-splittable, so unlike multiline CSV
     (src_csv_multiline) parallelism survives."""
-    import hashlib
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     payload = d.select(
         F.to_json(
@@ -683,8 +679,7 @@ def llm_jsonl_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("value")
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_jsonl_{tag}")
+    out = scratch_dir(spark, "udp_jsonl_")
     payload.write.mode("overwrite").text(out)
     schema = (
         "meta struct<id: long, lang: string>, "

@@ -3,14 +3,13 @@
 Connector posture for scale: everything stays in Spark's DataSource V2
 file sources (parquet/csv/json) so scans get vectorized reads, predicate
 pushdown, partition pruning, and (on a cluster) locality-aware splits for
-free.  Round-trip operators write to a per-call temp dir — at 100 TB the
-same code writes to object storage; nothing here assumes a local FS
-beyond the test harness.
+free.  Round-trip operators write to a per-call scratch dir
+(session.scratch_dir) — at 100 TB the same code writes to object
+storage; nothing here assumes a local FS.
 """
 
 from __future__ import annotations
 
-import tempfile
 from functools import reduce
 
 import pyspark.sql.functions as F
@@ -18,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.scale import write_bucketed
+from un_datapipeline_spark.session import _hadoop_path, _scratch_fixture, scratch_dir
 from un_datapipeline_spark.tables import (
     cents_sum,
     load_table,
@@ -89,7 +90,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reads the original parquet: equality proves the CSV
     writer/reader is lossless for this schema."""
     nation = load_table(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="udps_csv_")
+    out = scratch_dir(spark, "udps_csv_")
     nation.write.mode("overwrite").option("header", "true").csv(out)
     back = spark.read.schema(_NATION_SCHEMA).option("header", "true").csv(out)
     return back.agg(
@@ -118,7 +119,7 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """region → JSON lines → read back with explicit schema; full contents
     must survive the trip (oracle = original parquet)."""
     region = load_table(spark, sf_dir, "region")
-    out = tempfile.mkdtemp(prefix="udps_json_")
+    out = scratch_dir(spark, "udps_json_")
     region.write.mode("overwrite").json(out)
     return spark.read.schema(_REGION_SCHEMA).json(out).select("r_regionkey", "r_name")
 
@@ -141,7 +142,7 @@ def sink_parquet_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
     )
-    out = tempfile.mkdtemp(prefix="udps_pq_")
+    out = scratch_dir(spark, "udps_pq_")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.schema(li.schema).parquet(out)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -166,7 +167,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet).  ORC is the second columnar format with vectorized reads +
     pushdown; same V2 source surface, zero operator changes."""
     supplier = load_table(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="udps_orc_")
+    out = scratch_dir(spark, "udps_orc_")
     supplier.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.agg(
@@ -205,7 +206,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the columns it has.  This is how a year of evolving daily drops
     reads as one table at 100 TB."""
     s = load_table(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="udps_evo_")
+    out = scratch_dir(spark, "udps_evo_")
     s.filter(F.col("s_suppkey") % 2 == 0).select(
         "s_suppkey", "s_name", "s_acctbal"
     ).write.mode("overwrite").parquet(f"{out}/gen=old")
@@ -258,10 +259,11 @@ def bucketed_table_names() -> tuple[str, str]:
 @register("sink_bucketed_write", oracle=_BUCKETED_ORACLE, tier="T1")
 def sink_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-table layout: customer and orders both written
-    bucketBy(8, custkey) + sortBy via saveAsTable, then joined — with
-    co-bucketed layouts Catalyst plans the join WITHOUT a shuffle on
-    either side (asserted in tests/test_scale.py for the scale.py twin;
-    here the oracle checks the join result equals the plain join).
+    bucketBy(8, custkey) + sortBy, one file per bucket
+    (scale.write_bucketed), then joined — with co-bucketed layouts
+    Catalyst plans the join WITHOUT a shuffle on either side (asserted
+    in tests/test_scale.py; here the oracle checks the join result
+    equals the plain join).
 
     Scale shape: bucketing pre-pays the shuffle ONCE at write time; every
     subsequent join/aggregation on the bucket key is exchange-free.  At
@@ -276,25 +278,13 @@ def sink_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous process, so DROP alone leaves their warehouse dirs behind —
     # saveAsTable then fails with LOCATION_ALREADY_EXISTS.  Clear them.
     # (pid reuse across reboots can still alias a stale dir to a new
-    # process, so the own-name rmtree stays.)
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    # process, so the own-name delete stays.)
+    wh = spark.conf.get("spark.sql.warehouse.dir")
     for t in (bk_customer, bk_orders):
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    (
-        c.write.mode("overwrite")
-        .bucketBy(8, "c_custkey")
-        .sortBy("c_custkey")
-        .saveAsTable(bk_customer)
-    )
-    (
-        o.write.mode("overwrite")
-        .bucketBy(8, "o_custkey")
-        .sortBy("o_custkey")
-        .saveAsTable(bk_orders)
-    )
+        fs, table_dir = _hadoop_path(spark, f"{wh}/{t}")
+        fs.delete(table_dir, True)
+    write_bucketed(c, bk_customer, "c_custkey", 8)
+    write_bucketed(o, bk_orders, "o_custkey", 8)
     cb = spark.table(bk_customer)
     ob = spark.table(bk_orders)
     price_c = F.round(F.col("o_totalprice") * 100).cast("long")
@@ -330,13 +320,11 @@ def src_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same week directly against the source table, proving the
     partitioned roundtrip loses nothing."""
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="udps_part_")
+    out = scratch_dir(spark, "udps_part_")
     part = ev.withColumn("event_date", F.to_date("ts"))
     part.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    # Explicit schema (round 10, R10_EMPTY_PLAN class 1): an empty write
-    # emits no data files and inference dies with UNABLE_TO_INFER_SCHEMA;
-    # the writer knows the schema.  PartitionFilters pruning (the point
-    # of this op) is listing-time and unaffected.
+    # Explicit schema (R10_EMPTY_PLAN class 1): an empty write leaves no
+    # file to infer from; partition pruning is listing-time, unaffected.
     back = spark.read.schema(part.schema).parquet(out)
     return (
         back.filter(
@@ -391,7 +379,7 @@ def src_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             "documents.text contains embedded newlines — line-per-doc text "
             "roundtrip would corrupt the corpus"
         )
-    out = tempfile.mkdtemp(prefix="udps_text_")
+    out = scratch_dir(spark, "udps_text_")
     docs.select("text").write.mode("overwrite").text(out)
     back = spark.read.text(out)
     return back.agg(
@@ -429,7 +417,7 @@ def clustered_write(spark: SparkSession, sf_dir: str) -> str:
     """Range-cluster lineitem on l_shipdate into 8 files: global range
     partitioning (each file owns a disjoint date range) + an in-file
     sort.  Returns the output dir so tests can audit footer min/max."""
-    out = tempfile.mkdtemp(prefix="udps_cluster_")
+    out = scratch_dir(spark, "udps_cluster_")
     (
         _clustered_input(spark, sf_dir)
         .repartitionByRange(8, "l_shipdate")
@@ -497,7 +485,7 @@ def src_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-audit query that projects away the dirty columns silently
     under-counts bad lines."""
     nation = load_table(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="udps_dirty_")
+    out = scratch_dir(spark, "udps_dirty_")
     lines = nation.select(
         F.concat_ws(
             ",",
@@ -570,7 +558,7 @@ def src_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.to_json(F.struct("l_orderkey", "lines")).alias("value"))
     )
-    out = tempfile.mkdtemp(prefix="udps_nested_")
+    out = scratch_dir(spark, "udps_nested_")
     packed.write.mode("overwrite").text(out)
     schema = T.StructType(
         [
@@ -725,23 +713,26 @@ ORDER BY doc_id
 """
 
 
+def _put(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write one small fixture file through the Hadoop FileSystem."""
+    fs, p = _hadoop_path(spark, path)
+    stream = fs.create(p, True)
+    try:
+        stream.write(data)
+    finally:
+        stream.close()
+
+
 def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the first 20 documents as standalone .bin files (one
-    UTF-8 payload per file) under a per-sf tmp dir, once per process.
+    UTF-8 payload per file) in a per-sf scratch dir, once per application.
 
     This is the FIXTURE WRITER, not the operator: the testdata ships no
     loose binary files, so the ingest path under test fabricates its own
     corpus deterministically from the documents table (20 rows collected
     — bounded by the literal, not by data volume)."""
-    import hashlib
-    import os
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_binfiles_{tag}")
-    done = os.path.join(out, "_FIXTURE_OK")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
         # Duplicate-key contract (round 10, R10_DUPKEYS_PLAN class 1):
         # a file name is key-grained — two payloads under one re-crawled
         # doc_id would silently OVERWRITE each other (last writer wins by
@@ -756,11 +747,9 @@ def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         )
         for r in rows:
-            with open(os.path.join(out, f"doc_{r.doc_id:05d}.bin"), "wb") as f:
-                f.write(r.text.encode("utf-8"))
-        with open(done, "w") as f:
-            f.write(str(len(rows)))
-    return out
+            _put(spark, f"{out}/doc_{r.doc_id:05d}.bin", r.text.encode("utf-8"))
+
+    return _scratch_fixture(spark, "udp_binfiles_", sf_dir, write)
 
 
 @register("src_binary_files", oracle=_BINARY_FILES_ORACLE, tier="T2")
@@ -852,7 +841,7 @@ def src_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("wrapped"),
         )
     )
-    out = tempfile.mkdtemp(prefix="udps_mlcsv_")
+    out = scratch_dir(spark, "udps_mlcsv_")
     # Faithful-field round trip (degenerate-corpus sweep, round 6): the
     # CSV writer TRIMS whitespace-only fields by default (write-side
     # ignore*WhiteSpace defaults to true) and an unquoted empty field
@@ -915,19 +904,13 @@ def src_recursive_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql.sources.parallelPartitionDiscovery.threshold); prefer
     maxFilesPerTrigger-style batching or a manifest when the tree holds
     millions of objects."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_rectree_{tag}")
-    done = os.path.join(out, "_FIXTURE_OK")
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
         .select("doc_id", "lang", "n_chars")
     )
-    if not os.path.exists(done):
+
+    def write(out: str) -> None:
         # uneven depths: en at depth 2 (two shards), others at depth 1
         d.filter((F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)).write.mode(
             "overwrite"
@@ -941,8 +924,8 @@ def src_recursive_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(~F.col("lang").eqNullSafe("en")).write.mode("overwrite").parquet(
             f"{out}/rest"
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    out = _scratch_fixture(spark, "udp_rectree_", sf_dir, write)
     return (
         spark.read.schema(d.schema).option("recursiveFileLookup", "true").parquet(out)
         .groupBy("lang")
@@ -978,15 +961,8 @@ def src_text_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs, not tarballs), and for millions of small files prefer
     binaryFile or a manifest-driven compaction first; listing, not
     reading, becomes the bottleneck."""
-    import hashlib
-    import os
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_wholetext_{tag}")
-    done = os.path.join(out, "_FIXTURE_OK")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
         # Duplicate-key contract (round 10, class 1): file names are
         # key-grained — deterministic per-key winner, oracle-mirrored
         # (see src_binary_files).
@@ -1004,13 +980,11 @@ def src_text_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()  # 20 rows — bounded by the literal
         )
         for r in rows:
-            with open(os.path.join(out, f"doc_{r.doc_id:05d}.txt"), "w", encoding="utf-8") as f:
-                f.write(r.text)
-        with open(done, "w") as f:
-            f.write(str(len(rows)))
-    import glob as _glob
+            _put(spark, f"{out}/doc_{r.doc_id:05d}.txt", r.text.encode("utf-8"))
 
-    if not _glob.glob(f"{out}/*.txt"):
+    out = _scratch_fixture(spark, "udp_wholetext_", sf_dir, write)
+    fs, files = _hadoop_path(spark, f"{out}/*.txt")
+    if not fs.globStatus(files):
         # a corpus without doc_ids 20-39 writes zero fixture files and
         # Spark's reader throws PATH_NOT_FOUND on an unmatched glob —
         # the empty ingest equals the oracle's empty filter (round-6
@@ -1059,29 +1033,23 @@ def src_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, so the audit touches it explicitly.  JSONL corruption is
     per-line — one bad record never poisons neighbors, unlike multiline
     formats."""
-    import hashlib
-    import os
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_badjsonl_{tag}")
-    done = os.path.join(out, "_FIXTURE_OK")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
         rows = (
             load_table(spark, sf_dir, "customer")
             .filter(F.col("c_custkey") < 500)
             .select("c_custkey", "c_mktsegment")
             .collect()
         )
-        with open(os.path.join(out, "feed.jsonl"), "w") as f:
-            for r in rows:
-                line = f'{{"c_custkey": {r.c_custkey}, "c_mktsegment": "{r.c_mktsegment}"}}'
-                if r.c_custkey % 7 == 0:
-                    line = line[: len(line) // 2]  # truncate mid-object
-                f.write(line + "\n")
-        with open(done, "w") as f:
-            f.write(str(len(rows)))
+        lines = []
+        for r in rows:
+            line = f'{{"c_custkey": {r.c_custkey}, "c_mktsegment": "{r.c_mktsegment}"}}'
+            if r.c_custkey % 7 == 0:
+                line = line[: len(line) // 2]  # truncate mid-object
+            lines.append(line + "\n")
+        _put(spark, f"{out}/feed.jsonl", "".join(lines).encode("utf-8"))
+
+    out = _scratch_fixture(spark, "udp_badjsonl_", sf_dir, write)
     back = (
         spark.read.schema(
             "c_custkey long, c_mktsegment string, _bad string"
@@ -1123,26 +1091,27 @@ def src_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores: planning cost is O(manifest), not O(objects in bucket).
     The rollup over the two listed buckets hash-matching the source-
     side modulo filter proves the path routing is exact."""
-    import hashlib
     import json
-    import os
-    import tempfile
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_manifest_{tag}")
-    manifest = os.path.join(out, "manifest.json")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if not os.path.exists(manifest):
+
+    def write(out: str) -> None:
         for b in range(4):
             o.filter(F.col("o_orderkey") % 4 == b).write.mode("overwrite").parquet(
                 f"{out}/bucket={b}"
             )
-        with open(manifest, "w") as f:
-            json.dump({"snapshot": 1, "paths": [f"{out}/bucket={b}" for b in (0, 1)]}, f)
-    with open(manifest) as f:
-        paths = json.load(f)["paths"]
+        manifest = {"snapshot": 1, "paths": [f"{out}/bucket={b}" for b in (0, 1)]}
+        _put(spark, f"{out}/manifest.json", json.dumps(manifest).encode("utf-8"))
+
+    out = _scratch_fixture(spark, "udp_manifest_", sf_dir, write)
+    fs, manifest = _hadoop_path(spark, f"{out}/manifest.json")
+    stream = fs.open(manifest)
+    try:
+        paths = json.loads(bytes(stream.readAllBytes()))["paths"]
+    finally:
+        stream.close()
     return (
         spark.read.schema(o.schema).parquet(*paths)
         .groupBy("o_orderstatus")
@@ -1175,12 +1144,7 @@ def src_xml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     (json ×3, XML), raw (text/wholetext/binary).  Scale: XML, like
     multiline CSV, is only file-splittable at row boundaries the
     reader can find — many medium files beat one giant document."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_xml_{tag}")
+    out = scratch_dir(spark, "udp_xml_")
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -11,7 +11,7 @@ would be withheld and could never match a batch oracle.  Watermark
 tests/test_streaming_semantics.py with manufactured late micro-batches;
 the declared `stream_watermark_late` operator is rows-only.
 
-State hygiene: every run gets a fresh tmp checkpoint dir and a unique
+State hygiene: every run gets a fresh scratch checkpoint dir and a unique
 memory-sink name — shared state makes availableNow reruns no-ops
 (SURVEY.md §7 hard-part 6).
 """
@@ -19,14 +19,15 @@ memory-sink name — shared state makes availableNow reruns no-ops
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import conf_scope, ensure_runtime_confs
+from un_datapipeline_spark.session import (
+    _scratch_fixture, conf_scope, ensure_runtime_confs, scratch_dir,
+)
 from un_datapipeline_spark.tables import load_table, read_parquet, valid_ts, valid_ts_sql
 
 
@@ -110,7 +111,7 @@ def run_to_memory(df: DataFrame, mode: str = "complete") -> DataFrame:
             df.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+            .option("checkpointLocation", scratch_dir(df.sparkSession, "ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -480,7 +481,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch custom sink: append each micro-batch to a parquet
     dir, then read the sink back and count per type — proves exactly the
     rows streamed through land in the sink."""
-    out_dir = tempfile.mkdtemp(prefix="fbsink_")
+    out_dir = scratch_dir(spark, "fbsink_")
     s = read_events_stream(spark, sf_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -489,7 +490,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with stream_shuffle_partitions(spark):
         q = (
             s.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+            .option("checkpointLocation", scratch_dir(spark, "ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -593,23 +594,13 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily-resume contract a production ingest job leans on; at 100 TB
     the checkpoint log is what turns "reprocess the bucket" into
     "process today's files"."""
-    import hashlib
-    import os
-    import tempfile
-
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"udp_ckptres_{tag}")
-    inbox, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    done = f"{base}/_FIXTURE_OK"
     schema = "event_id long, ts timestamp, cents long"
 
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+    def write(base: str) -> None:
+        inbox, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
 
         def run_installment(pred):
             e.filter(pred).write.mode("append").parquet(inbox)
@@ -628,10 +619,9 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         with stream_shuffle_partitions(spark):
             run_installment(F.col("event_id") % 2 == 0)
             run_installment(F.col("event_id") % 2 == 1)
-        with open(done, "w") as f:
-            f.write("ok")
 
-    return spark.read.schema(schema).parquet(sink).agg(
+    base = _scratch_fixture(spark, "udp_ckptres_", sf_dir, write)
+    return spark.read.schema(schema).parquet(f"{base}/out").agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("event_id").alias("n_distinct"),
         F.sum("cents").alias("cents"),

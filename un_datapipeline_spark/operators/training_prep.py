@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import scratch_dir
 from un_datapipeline_spark.tables import (
     capped_text_sql,
     load_table,
@@ -1017,10 +1018,6 @@ def llm_training_shard_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the training job's data loader consumes; a shard is the unit
     of shuffling, checkpoint resume, and epoch bookkeeping, and the
     manifest this emits is the loader's index file."""
-    import hashlib
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     toked = d.select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
@@ -1046,13 +1043,10 @@ def llm_training_shard_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("shard_id"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"udp_shards_{tag}")
+    out = scratch_dir(spark, "udp_shards_")
     sharded.write.mode("overwrite").partitionBy("shard_id").parquet(out)
-    # Explicit schema (round 10, R10_EMPTY_PLAN class 1): an empty
-    # corpus writes no shard files and inference dies; the writer knows
-    # the schema (and skipping footer inference is the right cluster
-    # posture regardless).
+    # Explicit schema (R10_EMPTY_PLAN class 1): an empty corpus writes
+    # no shard file to infer from; the writer knows the schema.
     return (
         spark.read.schema(sharded.schema).parquet(out)
         .groupBy("shard_id")

@@ -57,9 +57,11 @@ def write_bucketed(
     path: str | None = None,
 ) -> None:
     """Persist `df` as a bucketed+sorted managed table (saveAsTable is
-    required — plain .parquet() writes drop bucket metadata)."""
+    required — plain .parquet() writes drop bucket metadata), one file
+    per bucket: the hash partition id IS the bucket id (tasks × n without)."""
     w = (
-        df.write.mode("overwrite")
+        df.repartition(n_buckets, bucket_col)
+        .write.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")

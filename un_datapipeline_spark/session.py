@@ -21,12 +21,17 @@ the default 200+ and let AQE coalesce.  Iterative operators run their
 loops inside :class:`iteration_scope`, which pins its own width
 (``SPARK_GRAFT_ITER_PARTITIONS``), and every materialization in the
 package goes through :func:`graft_checkpoint` / :func:`ckpt`, the one
-durability gate (``SPARK_GRAFT_CHECKPOINT_DIR``).
+durability gate (``SPARK_GRAFT_CHECKPOINT_DIR``), whose ``scratch/``
+subdir also holds operator scratch (:func:`scratch_dir`).
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -130,8 +135,8 @@ def graft_checkpoint(df, eager: bool = True, storage_level=None):
         current = sc.getCheckpointDir()
         # setCheckpointDir(dir) writes into a fresh dir/<uuid> and reports
         # it fully qualified, so compare its parent to the qualified env dir
-        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt_dir)
-        want = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path)
+        fs, path = _hadoop_path(df.sparkSession, ckpt_dir)
+        want = fs.makeQualified(path)
         if current is None or current.rstrip("/").rsplit("/", 1)[0] != want.toString():
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
@@ -150,6 +155,66 @@ def ckpt(eager: bool = True, storage_level=None):
         return graft_checkpoint(df, eager=eager, storage_level=storage_level)
 
     return apply
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``: every Python-side file op on
+    scratch goes through Hadoop, so a non-local root works too."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+_SCRATCH: dict[str, set[str]] = {}  # applicationId -> its scratch dirs
+
+
+def scratch_dir(spark: SparkSession, prefix: str, key: str | None = None) -> str:
+    """The one place operator scratch data goes: under
+    ``$SPARK_GRAFT_CHECKPOINT_DIR/scratch`` when set (a filesystem the
+    driver and every executor see), else the local temp dir, in one
+    subdir per application.  Without ``key``: a fresh dir per call; with
+    ``key`` (a corpus dir): a stable, uncreated path per application for
+    :func:`_scratch_fixture`.  Nothing is cached about what exists."""
+    base = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    base = f"{base.rstrip('/')}/scratch" if base else tempfile.gettempdir()
+    app_id = spark.sparkContext.applicationId
+    if app_id not in _SCRATCH:
+        atexit.register(release_scratch, spark)
+    app = f"{base}/spark-graft-{app_id}"
+    _SCRATCH.setdefault(app_id, set()).add(app)
+    if key is not None:
+        return f"{app}/{prefix}{hashlib.md5(key.encode()).hexdigest()[:10]}"
+    out = f"{app}/{prefix}{uuid.uuid4().hex[:12]}"
+    fs, path = _hadoop_path(spark, out)
+    fs.mkdirs(path)
+    return out
+
+
+def _scratch_fixture(spark: SparkSession, prefix: str, key: str, write) -> str:
+    """``scratch_dir(spark, prefix, key)``, filled by ``write(dir)`` when
+    missing; a write that raises leaves no partial fixture behind."""
+    out = scratch_dir(spark, prefix, key)
+    fs, path = _hadoop_path(spark, out)
+    if not fs.exists(path):
+        fs.mkdirs(path)
+        try:
+            write(out)
+        except BaseException:
+            fs.delete(path, True)
+            raise
+    return out
+
+
+def release_scratch(spark: SparkSession) -> None:
+    """Remove this application's scratch dirs once the results reading
+    them are consumed.  Idempotent; a no-op once the context is stopped
+    (so the atexit hook never touches a dead JVM)."""
+    sc = spark.sparkContext
+    if sc._jsc is None:
+        return
+    for app in _SCRATCH.get(sc.applicationId, ()):
+        fs, path = _hadoop_path(spark, app)
+        fs.delete(path, True)
 
 
 class conf_scope:
