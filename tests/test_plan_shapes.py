@@ -179,8 +179,8 @@ def test_asof_bucketed_plan_is_equi_join(spark, sf_smoke):
 
 
 def test_binary_files_fixture_idempotent(spark, sf_smoke):
-    """The fixture writer must reuse files across calls (same digests),
-    and the binaryFile scan must re-read them bit-exactly."""
+    """Two calls, each writing its own fixture files, return the same
+    digests, and the binaryFile scan re-reads them bit-exactly."""
     a = {r.doc_id: r.digest for r in OPS["src_binary_files"].fn(spark, sf_smoke).collect()}
     b = {r.doc_id: r.digest for r in OPS["src_binary_files"].fn(spark, sf_smoke).collect()}
     assert a == b and len(a) == 20

@@ -4,6 +4,8 @@ identical results to plain joins."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 from un_datapipeline_spark.scale import bucketed_join, salted_join, write_bucketed
@@ -16,9 +18,11 @@ def test_bucketed_join_has_no_shuffle(spark, sf_smoke, tmp_path):
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     o = load_table(spark, sf_smoke, "orders").select("o_orderkey", "o_orderstatus")
-    # a 4-task input still writes one file per bucket, not 4 tasks × 4
+    # a 4-task input writes one file per bucket per write task (k = 1 on
+    # 4 cores), not 4 input tasks × 4
     write_bucketed(li.repartition(4), "li_b", "l_orderkey", 4, path=f"{warehouse}/li")
-    assert len(list((tmp_path / "li").glob("part-*"))) == 4
+    k = -(-spark.sparkContext.defaultParallelism // 4)
+    assert len(list((tmp_path / "li").glob("part-*"))) == k * 4
     write_bucketed(
         o.withColumnRenamed("o_orderkey", "l_orderkey"),
         "o_b",
@@ -40,6 +44,25 @@ def test_bucketed_join_has_no_shuffle(spark, sf_smoke, tmp_path):
         assert j.count() == expect
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_bucketed_write_keeps_parallelism(spark, sf_smoke, tmp_path):
+    """Fewer buckets than cores: the write still runs k = ceil(cores / n)
+    tasks per bucket, and every file holds the rows of one bucket only —
+    the one its name carries."""
+    n = max(1, spark.sparkContext.defaultParallelism // 2)
+    k = -(-spark.sparkContext.defaultParallelism // n)
+    assert k > 1
+    li = load_table(spark, sf_smoke, "lineitem").select("l_orderkey", "l_quantity")
+    write_bucketed(li.repartition(4), "li_k", "l_orderkey", n, path=str(tmp_path))
+    files = sorted(tmp_path.glob("part-*"))
+    assert len(files) == k * n
+    for f in files:
+        named = int(re.search(r"_(\d+)\.c\d+", f.name).group(1))
+        ids = spark.read.parquet(str(f)).select(
+            F.expr(f"pmod(hash(l_orderkey), {n})").alias("b")
+        ).distinct().collect()
+        assert [r.b for r in ids] == [named], f.name
 
 
 def test_salted_join_matches_plain_join(spark, sf_smoke):

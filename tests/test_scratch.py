@@ -17,8 +17,8 @@ from un_datapipeline_spark.registry import all_operators
 from un_datapipeline_spark.session import release_scratch
 
 OPERATORS = Path(__file__).parent.parent / "un_datapipeline_spark" / "operators"
-# the fixture writers memoized per application (scratch_dir with a key)
-MEMOIZED = (
+# the ops that fabricate their own input corpus as files first
+FIXTURE_WRITERS = (
     "src_binary_files",
     "src_recursive_listing",
     "src_text_wholetext",
@@ -45,7 +45,7 @@ def scratch_ops() -> list[str]:
             for d in fn.decorator_list:
                 if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register":
                     registered[fn.name] = d.args[0].value
-    reach = {"scratch_dir", "_scratch_fixture"}
+    reach = {"scratch_dir"}
     while more := {fn for fn, cs in calls.items() if cs & reach} - reach:
         reach |= more
     return sorted(op for fn, op in registered.items() if fn in reach)
@@ -69,7 +69,7 @@ def _files(d: Path) -> list[Path]:
 def test_every_scratch_op_writes_under_the_checkpoint_root(spark, sf_smoke, roots):
     ckpt, local = roots
     names = scratch_ops()
-    assert set(MEMOIZED) | {"etl_compact_files", "sink_clustered_write"} <= set(names)
+    assert set(FIXTURE_WRITERS) | {"etl_compact_files", "sink_clustered_write"} <= set(names)
     ops = all_operators()
     for name in names:
         ops[name].fn(spark, sf_smoke).toPandas()
@@ -87,11 +87,10 @@ def test_every_scratch_op_writes_under_the_checkpoint_root(spark, sf_smoke, root
 
 def test_scratch_root_deleted_between_calls(spark, sf_smoke, roots):
     """perfbench removes every new temp-dir entry after each pass: the next
-    call must recreate the root, and a memoized fixture must be rewritten
-    rather than assumed present."""
+    call must recreate the root and rewrite its fixture files."""
     ckpt, _ = roots
     ops = all_operators()
-    for name in (*MEMOIZED, "etl_compact_files"):
+    for name in (*FIXTURE_WRITERS, "etl_compact_files"):
         first = ops[name].fn(spark, sf_smoke).collect()
         shutil.rmtree(ckpt / "scratch")
         assert ops[name].fn(spark, sf_smoke).collect() == first, name

@@ -51,21 +51,6 @@ REFRESH_COUNT = 5
 # first, pure refactors last.  (Forced entries are never truncated —
 # see main() — so ordering is about review priority, not survival.)
 FORCE_REFRESH: tuple[str, ...] = (
-    # Scratch storage moved to session.scratch_dir (same writes and
-    # reads under a new path; fixtures memoized per application),
-    # risk-first: the bucketed write now hash-repartitions to one file
-    # per bucket; the memoized fixture writers now write through the
-    # Hadoop FileSystem; three stable dirs became fresh ones.  The other
-    # scratch ops touched here are listed further down or, being
-    # path-only moves, in DEFERRED_REFRESH (the window holds 50).
-    "sink_bucketed_write",
-    "src_binary_files",
-    "src_text_wholetext",
-    "src_json_malformed",
-    "src_xml_files",
-    "llm_jsonl_export",
-    "llm_training_shard_write",
-    #
     # The vector top-k family on one probe_search kernel / one LSH
     # helper, risk-first: kernel semantics (hash-matched), then the
     # shared l2_norm Column helper (same expression), then the
@@ -133,19 +118,32 @@ FORCE_REFRESH: tuple[str, ...] = (
     "etl_compact_files",         # also: no AQE probe job, read-backs
     #                              with the written schema
     "etl_backfill_partitions",
-    # streaming.stream_shuffle_partitions; its memoized fixture now
-    # lives in a per-application scratch dir (its stream siblings are
-    # deferred, see DEFERRED_REFRESH):
+    # every op that enters streaming.stream_shuffle_partitions; all but
+    # stream_checkpoint_resume also enter read_events_stream, whose
+    # schema probe is now a driver footer read:
+    "src_stream_file",
     "stream_checkpoint_resume",
+    "stream_custom_stateful",
+    "stream_dedup",
+    "stream_foreach_batch_sink",
+    "stream_kafka_source",
+    "stream_session_dynamic_gap",
+    "stream_session_window",
 )
 
 # Round-10's window overflow mechanism: when stamp-void edits exceed
 # the 50-slot window, the least-risk rows-only / zero-semantic names are
 # deferred here and MUST move to the TOP of the next round's
-# FORCE_REFRESH.
-DEFERRED_REFRESH: tuple[str, ...] = (
-    # path-only scratch moves (session.scratch_dir): a fresh streaming
-    # checkpoint / round-trip dir under a new root, nothing else changed
+# FORCE_REFRESH.  Deferred when the vector family joined above: the last
+# seven stream siblings of the conf_scope / footer-read edits (same conf
+# keys and values, same schema — zero-semantic).  Also deferred, as the
+# window was already full: the scratch-storage move to
+# session.scratch_dir, risk-first — the bucketed write now hash-
+# repartitions by its key; fixture writers write a fresh dir per call
+# through the Hadoop FileSystem; then path-only moves.  The touched ops
+# already forced above (etl_*, sink_*, src_manifest_read,
+# src_recursive_listing, stream_*) need no entry here.
+DEFERRED_REFRESH = (
     "stream_sliding_topk",
     "stream_sliding_window",
     "stream_stateful_running",
@@ -153,13 +151,13 @@ DEFERRED_REFRESH: tuple[str, ...] = (
     "stream_stream_join",
     "stream_tumbling_window",
     "stream_watermark_late",
-    "src_stream_file",
-    "stream_custom_stateful",
-    "stream_dedup",
-    "stream_foreach_batch_sink",
-    "stream_kafka_source",
-    "stream_session_dynamic_gap",
-    "stream_session_window",
+    "sink_bucketed_write",
+    "src_binary_files",
+    "src_text_wholetext",
+    "src_json_malformed",
+    "src_xml_files",
+    "llm_jsonl_export",
+    "llm_training_shard_write",
     "join_dpp_partitioned",
     "src_csv_malformed",
     "src_csv_multiline",

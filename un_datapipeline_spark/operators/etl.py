@@ -602,8 +602,12 @@ def etl_backfill_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    # Explicit schema (R10_EMPTY_PLAN class 1): an empty write leaves no
-    # file to infer from and must still read back as a 0-row table.
+    # Explicit schema on read-back (round 10, R10_EMPTY_PLAN class 1):
+    # an empty source writes NO data files and schema inference dies
+    # with UNABLE_TO_INFER_SCHEMA — the writer KNOWS the schema, so pass
+    # it; an empty write must still yield a queryable 0-row table.  The
+    # correct cluster posture anyway: inference lists footers, the
+    # explicit schema skips that entirely at 100 TB.
     back = spark.read.schema(ev.schema).parquet(out)
     return (
         back.groupBy(F.date_format("event_date", "yyyy-MM-dd").alias("event_date"))

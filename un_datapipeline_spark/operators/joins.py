@@ -502,8 +502,11 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir(spark, "udps_dpp_")
     part = ev.withColumn("event_date", F.to_date("ts"))
     part.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    # Explicit schema (R10_EMPTY_PLAN class 1): an empty write leaves no
-    # file to infer from; partition discovery and DPP are unaffected.
+    # Explicit schema (round 10, R10_EMPTY_PLAN class 1): an empty
+    # source writes no data files and inference dies; the writer knows
+    # the schema.  Partition discovery (and the DPP PartitionFilters
+    # injection this op exists to prove) is unaffected — only footer
+    # inference is skipped.
     fact = spark.read.schema(part.schema).parquet(out)
     iso_dow = (F.dayofweek("d") + 5) % 7 + 1
     dim = (

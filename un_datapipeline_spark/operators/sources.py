@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.scale import write_bucketed
-from un_datapipeline_spark.session import _hadoop_path, _scratch_fixture, scratch_dir
+from un_datapipeline_spark.session import _hadoop_path, scratch_dir
 from un_datapipeline_spark.tables import (
     cents_sum,
     load_table,
@@ -323,8 +323,10 @@ def src_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir(spark, "udps_part_")
     part = ev.withColumn("event_date", F.to_date("ts"))
     part.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    # Explicit schema (R10_EMPTY_PLAN class 1): an empty write leaves no
-    # file to infer from; partition pruning is listing-time, unaffected.
+    # Explicit schema (round 10, R10_EMPTY_PLAN class 1): an empty write
+    # emits no data files and inference dies with UNABLE_TO_INFER_SCHEMA;
+    # the writer knows the schema.  PartitionFilters pruning (the point
+    # of this op) is listing-time and unaffected.
     back = spark.read.schema(part.schema).parquet(out)
     return (
         back.filter(
@@ -725,31 +727,29 @@ def _put(spark: SparkSession, path: str, data: bytes) -> None:
 
 def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the first 20 documents as standalone .bin files (one
-    UTF-8 payload per file) in a per-sf scratch dir, once per application.
+    UTF-8 payload per file) in a fresh scratch dir.
 
     This is the FIXTURE WRITER, not the operator: the testdata ships no
     loose binary files, so the ingest path under test fabricates its own
     corpus deterministically from the documents table (20 rows collected
     — bounded by the literal, not by data volume)."""
-
-    def write(out: str) -> None:
-        # Duplicate-key contract (round 10, R10_DUPKEYS_PLAN class 1):
-        # a file name is key-grained — two payloads under one re-crawled
-        # doc_id would silently OVERWRITE each other (last writer wins by
-        # filesystem accident).  The deterministic per-key winner picks
-        # the one serialized form, oracle-mirrored.
-        rows = (
-            winner_document(load_table(spark, sf_dir, "documents"))
-            .select("doc_id", "text")
-            # NULL-text contract: a NULL document has no byte payload —
-            # no file is written for it (the oracle filter mirrors this)
-            .filter((F.col("doc_id") < 20) & F.col("text").isNotNull())
-            .collect()
-        )
-        for r in rows:
-            _put(spark, f"{out}/doc_{r.doc_id:05d}.bin", r.text.encode("utf-8"))
-
-    return _scratch_fixture(spark, "udp_binfiles_", sf_dir, write)
+    out = scratch_dir(spark, "udp_binfiles_")
+    # Duplicate-key contract (round 10, R10_DUPKEYS_PLAN class 1):
+    # a file name is key-grained — two payloads under one re-crawled
+    # doc_id would silently OVERWRITE each other (last writer wins by
+    # filesystem accident).  The deterministic per-key winner picks
+    # the one serialized form, oracle-mirrored.
+    rows = (
+        winner_document(load_table(spark, sf_dir, "documents"))
+        .select("doc_id", "text")
+        # NULL-text contract: a NULL document has no byte payload —
+        # no file is written for it (the oracle filter mirrors this)
+        .filter((F.col("doc_id") < 20) & F.col("text").isNotNull())
+        .collect()
+    )
+    for r in rows:
+        _put(spark, f"{out}/doc_{r.doc_id:05d}.bin", r.text.encode("utf-8"))
+    return out
 
 
 @register("src_binary_files", oracle=_BINARY_FILES_ORACLE, tier="T2")
@@ -909,23 +909,20 @@ def src_recursive_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 200)
         .select("doc_id", "lang", "n_chars")
     )
-
-    def write(out: str) -> None:
-        # uneven depths: en at depth 2 (two shards), others at depth 1
-        d.filter((F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/lang_en/shard_0")
-        d.filter((F.col("lang") == "en") & (F.col("doc_id") % 2 == 1)).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/lang_en/shard_1")
-        # eqNullSafe: a NULL-lang doc is real data that must land in the
-        # tree — plain `lang != 'en'` is three-valued NULL for it and the
-        # row would silently vanish from the ingest (round 9, class 2)
-        d.filter(~F.col("lang").eqNullSafe("en")).write.mode("overwrite").parquet(
-            f"{out}/rest"
-        )
-
-    out = _scratch_fixture(spark, "udp_rectree_", sf_dir, write)
+    out = scratch_dir(spark, "udp_rectree_")
+    # uneven depths: en at depth 2 (two shards), others at depth 1
+    d.filter((F.col("lang") == "en") & (F.col("doc_id") % 2 == 0)).write.mode(
+        "overwrite"
+    ).parquet(f"{out}/lang_en/shard_0")
+    d.filter((F.col("lang") == "en") & (F.col("doc_id") % 2 == 1)).write.mode(
+        "overwrite"
+    ).parquet(f"{out}/lang_en/shard_1")
+    # eqNullSafe: a NULL-lang doc is real data that must land in the
+    # tree — plain `lang != 'en'` is three-valued NULL for it and the
+    # row would silently vanish from the ingest (round 9, class 2)
+    d.filter(~F.col("lang").eqNullSafe("en")).write.mode("overwrite").parquet(
+        f"{out}/rest"
+    )
     return (
         spark.read.schema(d.schema).option("recursiveFileLookup", "true").parquet(out)
         .groupBy("lang")
@@ -961,28 +958,25 @@ def src_text_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs, not tarballs), and for millions of small files prefer
     binaryFile or a manifest-driven compaction first; listing, not
     reading, becomes the bottleneck."""
-
-    def write(out: str) -> None:
-        # Duplicate-key contract (round 10, class 1): file names are
-        # key-grained — deterministic per-key winner, oracle-mirrored
-        # (see src_binary_files).
-        rows = (
-            winner_document(load_table(spark, sf_dir, "documents"))
-            # NULL-text contract: a NULL document has no file (the
-            # fixture writer would crash on f.write(None); the oracle
-            # filter mirrors the skip)
-            .filter(
-                (F.col("doc_id") >= 20)
-                & (F.col("doc_id") < 40)
-                & F.col("text").isNotNull()
-            )
-            .select("doc_id", "text")
-            .collect()  # 20 rows — bounded by the literal
+    out = scratch_dir(spark, "udp_wholetext_")
+    # Duplicate-key contract (round 10, class 1): file names are
+    # key-grained — deterministic per-key winner, oracle-mirrored
+    # (see src_binary_files).
+    rows = (
+        winner_document(load_table(spark, sf_dir, "documents"))
+        # NULL-text contract: a NULL document has no file (the
+        # fixture writer would crash on f.write(None); the oracle
+        # filter mirrors the skip)
+        .filter(
+            (F.col("doc_id") >= 20)
+            & (F.col("doc_id") < 40)
+            & F.col("text").isNotNull()
         )
-        for r in rows:
-            _put(spark, f"{out}/doc_{r.doc_id:05d}.txt", r.text.encode("utf-8"))
-
-    out = _scratch_fixture(spark, "udp_wholetext_", sf_dir, write)
+        .select("doc_id", "text")
+        .collect()  # 20 rows — bounded by the literal
+    )
+    for r in rows:
+        _put(spark, f"{out}/doc_{r.doc_id:05d}.txt", r.text.encode("utf-8"))
     fs, files = _hadoop_path(spark, f"{out}/*.txt")
     if not fs.globStatus(files):
         # a corpus without doc_ids 20-39 writes zero fixture files and
@@ -1033,23 +1027,20 @@ def src_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, so the audit touches it explicitly.  JSONL corruption is
     per-line — one bad record never poisons neighbors, unlike multiline
     formats."""
-
-    def write(out: str) -> None:
-        rows = (
-            load_table(spark, sf_dir, "customer")
-            .filter(F.col("c_custkey") < 500)
-            .select("c_custkey", "c_mktsegment")
-            .collect()
-        )
-        lines = []
-        for r in rows:
-            line = f'{{"c_custkey": {r.c_custkey}, "c_mktsegment": "{r.c_mktsegment}"}}'
-            if r.c_custkey % 7 == 0:
-                line = line[: len(line) // 2]  # truncate mid-object
-            lines.append(line + "\n")
-        _put(spark, f"{out}/feed.jsonl", "".join(lines).encode("utf-8"))
-
-    out = _scratch_fixture(spark, "udp_badjsonl_", sf_dir, write)
+    out = scratch_dir(spark, "udp_badjsonl_")
+    rows = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") < 500)
+        .select("c_custkey", "c_mktsegment")
+        .collect()
+    )
+    lines = []
+    for r in rows:
+        line = f'{{"c_custkey": {r.c_custkey}, "c_mktsegment": "{r.c_mktsegment}"}}'
+        if r.c_custkey % 7 == 0:
+            line = line[: len(line) // 2]  # truncate mid-object
+        lines.append(line + "\n")
+    _put(spark, f"{out}/feed.jsonl", "".join(lines).encode("utf-8"))
     back = (
         spark.read.schema(
             "c_custkey long, c_mktsegment string, _bad string"
@@ -1096,18 +1087,15 @@ def src_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-
-    def write(out: str) -> None:
-        for b in range(4):
-            o.filter(F.col("o_orderkey") % 4 == b).write.mode("overwrite").parquet(
-                f"{out}/bucket={b}"
-            )
-        manifest = {"snapshot": 1, "paths": [f"{out}/bucket={b}" for b in (0, 1)]}
-        _put(spark, f"{out}/manifest.json", json.dumps(manifest).encode("utf-8"))
-
-    out = _scratch_fixture(spark, "udp_manifest_", sf_dir, write)
-    fs, manifest = _hadoop_path(spark, f"{out}/manifest.json")
-    stream = fs.open(manifest)
+    out = scratch_dir(spark, "udp_manifest_")
+    for b in range(4):
+        o.filter(F.col("o_orderkey") % 4 == b).write.mode("overwrite").parquet(
+            f"{out}/bucket={b}"
+        )
+    manifest = {"snapshot": 1, "paths": [f"{out}/bucket={b}" for b in (0, 1)]}
+    _put(spark, f"{out}/manifest.json", json.dumps(manifest).encode("utf-8"))
+    fs, listed = _hadoop_path(spark, f"{out}/manifest.json")
+    stream = fs.open(listed)
     try:
         paths = json.loads(bytes(stream.readAllBytes()))["paths"]
     finally:

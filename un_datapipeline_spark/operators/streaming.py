@@ -25,9 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import (
-    _scratch_fixture, conf_scope, ensure_runtime_confs, scratch_dir,
-)
+from un_datapipeline_spark.session import conf_scope, ensure_runtime_confs, scratch_dir
 from un_datapipeline_spark.tables import load_table, read_parquet, valid_ts, valid_ts_sql
 
 
@@ -598,30 +596,27 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
     schema = "event_id long, ts timestamp, cents long"
+    base = scratch_dir(spark, "udp_ckptres_")
+    inbox, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
 
-    def write(base: str) -> None:
-        inbox, sink, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    def run_installment(pred):
+        e.filter(pred).write.mode("append").parquet(inbox)
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(inbox)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
-        def run_installment(pred):
-            e.filter(pred).write.mode("append").parquet(inbox)
-            q = (
-                spark.readStream.schema(schema)
-                .parquet(inbox)
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        with stream_shuffle_partitions(spark):
-            run_installment(F.col("event_id") % 2 == 0)
-            run_installment(F.col("event_id") % 2 == 1)
-
-    base = _scratch_fixture(spark, "udp_ckptres_", sf_dir, write)
-    return spark.read.schema(schema).parquet(f"{base}/out").agg(
+    with stream_shuffle_partitions(spark):
+        run_installment(F.col("event_id") % 2 == 0)
+        run_installment(F.col("event_id") % 2 == 1)
+    return spark.read.schema(schema).parquet(sink).agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("event_id").alias("n_distinct"),
         F.sum("cents").alias("cents"),

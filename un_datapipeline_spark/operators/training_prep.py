@@ -1045,8 +1045,10 @@ def llm_training_shard_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = scratch_dir(spark, "udp_shards_")
     sharded.write.mode("overwrite").partitionBy("shard_id").parquet(out)
-    # Explicit schema (R10_EMPTY_PLAN class 1): an empty corpus writes
-    # no shard file to infer from; the writer knows the schema.
+    # Explicit schema (round 10, R10_EMPTY_PLAN class 1): an empty
+    # corpus writes no shard files and inference dies; the writer knows
+    # the schema (and skipping footer inference is the right cluster
+    # posture regardless).
     return (
         spark.read.schema(sharded.schema).parquet(out)
         .groupBy("shard_id")

@@ -26,13 +26,6 @@ NEVER_VERIFIED = (
 # driver stamp — see tools/regen_priority.py FORCE_REFRESH) lead;
 # the rest are the stalest greens, one per name family.
 STALE_REFRESH = (
-    "sink_bucketed_write",  # forced: re-edited since last stamp
-    "src_binary_files",  # forced: re-edited since last stamp
-    "src_text_wholetext",  # forced: re-edited since last stamp
-    "src_json_malformed",  # forced: re-edited since last stamp
-    "src_xml_files",  # forced: re-edited since last stamp
-    "llm_jsonl_export",  # forced: re-edited since last stamp
-    "llm_training_shard_write",  # forced: re-edited since last stamp
     "llm_simsearch_cosine_topk",  # forced: re-edited since last stamp
     "llm_knn_join",  # forced: re-edited since last stamp
     "llm_dedup_embedding",  # forced: re-edited since last stamp
@@ -75,7 +68,14 @@ STALE_REFRESH = (
     "graph_link_predict_aa",  # forced: re-edited since last stamp
     "etl_compact_files",  # forced: re-edited since last stamp
     "etl_backfill_partitions",  # forced: re-edited since last stamp
+    "src_stream_file",  # forced: re-edited since last stamp
     "stream_checkpoint_resume",  # forced: re-edited since last stamp
+    "stream_custom_stateful",  # forced: re-edited since last stamp
+    "stream_dedup",  # forced: re-edited since last stamp
+    "stream_foreach_batch_sink",  # forced: re-edited since last stamp
+    "stream_kafka_source",  # forced: re-edited since last stamp
+    "stream_session_dynamic_gap",  # forced: re-edited since last stamp
+    "stream_session_window",  # forced: re-edited since last stamp
 )
 
 # 351 green names, stalest verdict first.

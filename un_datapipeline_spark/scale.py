@@ -57,10 +57,13 @@ def write_bucketed(
     path: str | None = None,
 ) -> None:
     """Persist `df` as a bucketed+sorted managed table (saveAsTable is
-    required — plain .parquet() writes drop bucket metadata), one file
-    per bucket: the hash partition id IS the bucket id (tasks × n without)."""
+    required — plain .parquet() writes drop bucket metadata).  Hash-
+    partitioned to k·n_buckets first, k keeping every core busy: a task's
+    rows all land in bucket ``pmod(h, k·n) mod n = pmod(h, n)``, so it
+    writes one file (k per bucket, not input tasks × n)."""
+    k = -(-df.sparkSession.sparkContext.defaultParallelism // n_buckets)
     w = (
-        df.repartition(n_buckets, bucket_col)
+        df.repartition(k * n_buckets, bucket_col)
         .write.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)

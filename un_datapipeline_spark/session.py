@@ -28,7 +28,6 @@ subdir also holds operator scratch (:func:`scratch_dir`).
 from __future__ import annotations
 
 import atexit
-import hashlib
 import os
 import tempfile
 import uuid
@@ -168,13 +167,14 @@ def _hadoop_path(spark: SparkSession, path: str):
 _SCRATCH: dict[str, set[str]] = {}  # applicationId -> its scratch dirs
 
 
-def scratch_dir(spark: SparkSession, prefix: str, key: str | None = None) -> str:
-    """The one place operator scratch data goes: under
-    ``$SPARK_GRAFT_CHECKPOINT_DIR/scratch`` when set (a filesystem the
-    driver and every executor see), else the local temp dir, in one
-    subdir per application.  Without ``key``: a fresh dir per call; with
-    ``key`` (a corpus dir): a stable, uncreated path per application for
-    :func:`_scratch_fixture`.  Nothing is cached about what exists."""
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh dir for operator scratch data, the one place it goes:
+    under ``$SPARK_GRAFT_CHECKPOINT_DIR/scratch`` when set (a filesystem
+    the driver and every executor see), else under
+    ``tempfile.gettempdir()`` on the default filesystem (``fs.defaultFS``:
+    the local disk in local mode, HDFS on an HDFS-default cluster), in
+    one subdir per application.  Created on every call, never assumed to
+    exist."""
     base = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     base = f"{base.rstrip('/')}/scratch" if base else tempfile.gettempdir()
     app_id = spark.sparkContext.applicationId
@@ -182,26 +182,9 @@ def scratch_dir(spark: SparkSession, prefix: str, key: str | None = None) -> str
         atexit.register(release_scratch, spark)
     app = f"{base}/spark-graft-{app_id}"
     _SCRATCH.setdefault(app_id, set()).add(app)
-    if key is not None:
-        return f"{app}/{prefix}{hashlib.md5(key.encode()).hexdigest()[:10]}"
     out = f"{app}/{prefix}{uuid.uuid4().hex[:12]}"
     fs, path = _hadoop_path(spark, out)
     fs.mkdirs(path)
-    return out
-
-
-def _scratch_fixture(spark: SparkSession, prefix: str, key: str, write) -> str:
-    """``scratch_dir(spark, prefix, key)``, filled by ``write(dir)`` when
-    missing; a write that raises leaves no partial fixture behind."""
-    out = scratch_dir(spark, prefix, key)
-    fs, path = _hadoop_path(spark, out)
-    if not fs.exists(path):
-        fs.mkdirs(path)
-        try:
-            write(out)
-        except BaseException:
-            fs.delete(path, True)
-            raise
     return out
 
 
