@@ -277,3 +277,41 @@ def test_repeated_bench_pass_compiles_no_class(spark, sf_smoke, monkeypatch):
 
     first = compiles_in_one_pass()
     assert compiles_in_one_pass() == 0, f"first pass compiled {first}"
+
+
+def test_udf_task_setup_rereads_no_archive(spark):
+    """Every UDF task's setup calls ``importlib.invalidate_caches()``;
+    under the factory's worker daemon that re-reads no zip archive whose
+    (mtime, size) is unchanged.  Spark's own daemon re-reads pyspark.zip
+    once per importer and the spark-core jar on every task (before
+    CPython 3.12)."""
+    import pandas as pd
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        reads = []
+        read = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        zips = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"zips": [zips], "reads": [len(reads)]})
+
+    r = spark.range(1, numPartitions=1).mapInPandas(probe, "zips long, reads long").first()
+    if r.zips == 0:
+        pytest.skip("no zip archive on the Python worker path")
+    assert r.reads == 0, f"{r.reads} archive re-reads across {r.zips} zip importers"

@@ -19,9 +19,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import ckpt, iteration_scope
-from un_datapipeline_spark.operators.dedup_extras import trigram_array
+from un_datapipeline_spark.operators.dedup_extras import (
+    ALL_PAIRS,
+    JACCARD,
+    doc_trigrams,
+    doc_trigrams_sql,
+    gram_overlap,
+    gram_overlap_sql,
+)
 from un_datapipeline_spark.tables import (
-    capped_text_sql,
     cents_sum,
     exact_double_sql,
     load_table,
@@ -390,27 +396,12 @@ def ts_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-duplicate clustering (connected components over dup edges)
 # ---------------------------------------------------------------------------
 
-_CLUSTER_ORACLE = """
-WITH RECURSIVE grams AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             generate_series(1, greatest(len(toks) - 2, 1)),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
-    FROM (SELECT doc_id, string_split(CAPPED_TEXT_SQL, ' ') AS toks
-          FROM documents)
-  ) WHERE len(string_split(gram, ' ')) = 3
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM grams GROUP BY doc_id
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS shared
-  FROM grams x JOIN grams y ON x.gram = y.gram AND x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-), jedges AS (
-  SELECT a, b FROM inter
-  JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.5
-), hashes AS (SELECT doc_id, md5(text) AS h FROM documents),
+# The dup-edge graph and its min-label components (_dup_edges +
+# connected_components), shared by the cluster and canonical oracles.
+_DUP_LABELS_SQL = f"""grams AS ({doc_trigrams_sql()}
+), overlap AS ({gram_overlap_sql("grams", ALL_PAIRS)}
+), jedges AS (SELECT a, b FROM overlap WHERE {JACCARD} >= 0.5),
+hashes AS (SELECT doc_id, md5(text) AS h FROM documents),
 medges AS (
   SELECT x.doc_id AS a, y.doc_id AS b
   FROM hashes x JOIN hashes y ON x.h = y.h AND x.doc_id < y.doc_id
@@ -422,7 +413,10 @@ reach(node, label) AS (
   SELECT e.b AS node, r.label FROM reach r JOIN bidir e ON e.a = r.node
 ), labeled AS (
   SELECT node, min(label) AS rep FROM reach GROUP BY node
-)
+)"""
+
+_CLUSTER_ORACLE = f"""
+WITH RECURSIVE {_DUP_LABELS_SQL}
 SELECT rep, CAST(count(*) AS BIGINT) AS n_docs
 FROM labeled GROUP BY rep
 """
@@ -437,32 +431,15 @@ def _dup_edges(d: DataFrame) -> DataFrame:
     prefix-capped (bounded-prefix contract, tables.capped_text) — the
     exact-md5 edge lane stays whole-document."""
     from un_datapipeline_spark.scale import parallelize_scan
-    from un_datapipeline_spark.tables import capped_text
 
-    toks = F.split(capped_text(), " ")
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
     # Round-13 (guide §2.5): the gram build+explode is the expensive
     # per-row stage and sits directly above a structurally ONE-task scan
     # (single-row-group test file) — and it is re-evaluated by three
     # consumers (sizes + both self-join sides).  parallelize_scan
     # spreads every evaluation; no-op when the scan parallelizes.
-    d_grams = parallelize_scan(d.select("doc_id", "text"))
-    grams = d_grams.select(
-        "doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram")
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        grams.alias("x")
-        .join(grams.alias("y"), F.expr("x.gram = y.gram AND x.doc_id < y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
+    grams = doc_trigrams(parallelize_scan(d.select("doc_id", "text")))
     jedges = (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .select("a", "b")
+        gram_overlap(grams, ALL_PAIRS).filter(F.expr(JACCARD) >= 0.5).select("a", "b")
     )
     hashes = d.select("doc_id", F.md5("text").alias("h"))
     medges = (
@@ -560,9 +537,6 @@ def connected_components(edges: DataFrame) -> DataFrame:
                 break
             prev_sum = cur_sum
         return labels
-
-
-_CLUSTER_ORACLE = _CLUSTER_ORACLE.replace("CAPPED_TEXT_SQL", capped_text_sql())
 
 
 @register("llm_dedup_cluster", oracle=_CLUSTER_ORACLE, tier="T3")
@@ -1063,39 +1037,8 @@ def llm_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Canonical-document selection over dup clusters
 # ---------------------------------------------------------------------------
 
-_CANONICAL_ORACLE = """
-WITH RECURSIVE grams AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             generate_series(1, greatest(len(toks) - 2, 1)),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
-    FROM (SELECT doc_id, string_split(CAPPED_TEXT_SQL, ' ') AS toks
-          FROM documents)
-  ) WHERE len(string_split(gram, ' ')) = 3
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM grams GROUP BY doc_id
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS shared
-  FROM grams x JOIN grams y ON x.gram = y.gram AND x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-), jedges AS (
-  SELECT a, b FROM inter
-  JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.5
-), hashes AS (SELECT doc_id, md5(text) AS h FROM documents),
-medges AS (
-  SELECT x.doc_id AS a, y.doc_id AS b
-  FROM hashes x JOIN hashes y ON x.h = y.h AND x.doc_id < y.doc_id
-), edges AS (SELECT a, b FROM jedges UNION SELECT a, b FROM medges),
-bidir AS (SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges),
-reach(node, label) AS (
-  SELECT a AS node, a AS label FROM (SELECT DISTINCT a FROM bidir)
-  UNION
-  SELECT e.b AS node, r.label FROM reach r JOIN bidir e ON e.a = r.node
-), labeled AS (
-  SELECT node, min(label) AS rep FROM reach GROUP BY node
-), ranked AS (
+_CANONICAL_ORACLE = f"""
+WITH RECURSIVE {_DUP_LABELS_SQL}, ranked AS (
   SELECT l.rep, d.doc_id, d.n_chars,
          row_number() OVER (PARTITION BY l.rep
                             ORDER BY d.n_chars DESC, d.doc_id) AS rn,
@@ -1107,9 +1050,6 @@ SELECT rep, doc_id AS canonical_doc, CAST(n_chars AS BIGINT) AS canonical_chars,
        CAST(n_docs - 1 AS BIGINT) AS n_dropped
 FROM ranked WHERE rn = 1
 """
-
-
-_CANONICAL_ORACLE = _CANONICAL_ORACLE.replace("CAPPED_TEXT_SQL", capped_text_sql())
 
 
 @register("llm_canonical_select", oracle=_CANONICAL_ORACLE, tier="T3")

@@ -19,7 +19,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.operators.dedup_extras import ngram_array, trigram_array
+from un_datapipeline_spark.operators.dedup_extras import (
+    WINNER_DOCUMENTS_SQL,
+    doc_trigrams,
+    doc_trigrams_sql,
+    ngram_array,
+)
 from un_datapipeline_spark.tables import (
     capped_text,
     capped_text_sql,
@@ -771,15 +776,7 @@ def llm_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _NOVELTY_ORACLE = f"""
-WITH grams AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             generate_series(1, greatest(len(toks) - 2, 1)),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
-    FROM (SELECT doc_id, string_split({capped_text_sql()}, ' ') AS toks
-          FROM {winner_document_sql()} documents)
-  ) WHERE gram IS NOT NULL AND len(string_split(gram, ' ')) = 3
+WITH grams AS ({doc_trigrams_sql(WINNER_DOCUMENTS_SQL)}
 ), first_seen AS (
   SELECT gram, min(doc_id) AS first_doc FROM grams GROUP BY gram
 )
@@ -813,10 +810,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-crawled doc_id would union two texts' gram sets (probed: n_grams
     45 vs 24) — the deterministic per-key winner (tables.
     winner_document, oracle-mirrored) restores one-set-per-id."""
-    d = winner_document(load_table(spark, sf_dir, "documents"))
-    toks = F.split(capped_text(), " ")  # bounded-prefix signature contract
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
+    grams = doc_trigrams(winner_document(load_table(spark, sf_dir, "documents")))
     first_seen = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     return (
         grams.join(first_seen, "gram")

@@ -26,7 +26,7 @@ from un_datapipeline_spark.tables import (
 )
 
 # --------------------------------------------------------------------------
-# Word 3-gram Jaccard similarity (probe-bounded exact computation)
+# Linear k-gram builds
 # --------------------------------------------------------------------------
 
 def ngram_array(toks, k: int, sep: str = " "):
@@ -57,6 +57,14 @@ def trigram_array(toks):
     return ngram_array(toks, 3)
 
 
+# --------------------------------------------------------------------------
+# The gram-overlap kernel: one definition per mechanism of the word-
+# trigram dedup family, each with its DuckDB text beside it (the
+# llm_vectors.valid_vec / valid_vec_sql pairing).  An op picks its source
+# relation, whether to cap document frequency, and its pair predicate;
+# only its score and threshold are its own.
+# --------------------------------------------------------------------------
+
 # Grams appearing in more than this many documents are boilerplate and
 # are dropped before the gram-equality join: a gram with document
 # frequency df produces up to df² candidate pairs in its shuffle bucket,
@@ -66,33 +74,118 @@ def trigram_array(toks):
 # near-dup signal anyway (C4/Gopher drop them for quality reasons too).
 MAX_GRAM_DF = 100
 
-_JACCARD_ORACLE = f"""
-WITH grams AS (
+# Pair predicates for gram_overlap / gram_overlap_sql, over the x (a)
+# and y (b) sides: probe docs vs every later doc, a new batch vs the
+# existing base, and every unordered pair.
+PROBE_PAIRS = "x.doc_id < 100 AND x.doc_id < y.doc_id"
+BATCH_PAIRS = "x.doc_id >= 400 AND y.doc_id < 400"
+ALL_PAIRS = "x.doc_id < y.doc_id"
+
+# Jaccard over gram_overlap's (shared, na, nb), one text for both engines.
+JACCARD = "CAST(shared AS DOUBLE) / (na + nb - shared)"
+
+# The per-key winner as a gram source (duplicate-key contract).
+WINNER_DOCUMENTS_SQL = f"{winner_document_sql()} documents"
+
+
+def doc_trigrams(d: DataFrame) -> DataFrame:
+    """(doc_id, gram): each document's distinct word trigrams over its
+    capped text prefix (bounded-prefix signature contract).  ``d`` is
+    the source the op chose: raw documents, the per-key winner, or a
+    spread scan (parallelize_scan)."""
+    grams_arr = trigram_array(F.split(capped_text(), " "))
+    return d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
+
+
+def doc_trigrams_sql(source: str = "documents") -> str:
+    """DuckDB mirror of :func:`doc_trigrams` over relation ``source``.
+    Documents shorter than three tokens index past the list end and
+    yield one NULL gram, the only row the filter drops: tokens come from
+    a split on ' ', so a non-NULL gram always has exactly three parts
+    (tests/test_degenerate_robustness.py pins both engines' sets)."""
+    return f"""
   SELECT DISTINCT doc_id, gram FROM (
     SELECT doc_id,
            unnest(list_transform(
              generate_series(1, greatest(len(toks) - 2, 1)),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
     FROM (SELECT doc_id, string_split({capped_text_sql()}, ' ') AS toks
-          FROM {winner_document_sql()} documents)
-  ) WHERE gram IS NOT NULL
-), hot AS (
-  SELECT gram FROM grams GROUP BY gram HAVING count(*) > {MAX_GRAM_DF}
-), gf AS (
-  SELECT g.* FROM grams g WHERE g.gram NOT IN (SELECT gram FROM hot)
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM gf GROUP BY doc_id
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS shared
-  FROM gf x JOIN gf y ON x.gram = y.gram AND x.doc_id < y.doc_id
-  WHERE x.doc_id < 100
-  GROUP BY x.doc_id, y.doc_id
+          FROM {source})
+  ) WHERE gram IS NOT NULL"""
+
+
+def drop_hot_grams(grams: DataFrame) -> DataFrame:
+    """``grams`` without the grams of document frequency > MAX_GRAM_DF.
+
+    The hot-gram set is tiny by construction (a vocabulary-bounded
+    groupBy with map-side combine finds it; only grams clearing the cap
+    survive), so it broadcasts and the filter is a broadcast anti-join —
+    the fact-side gram stream never shuffles on a hot key.  The capped
+    stream feeds several branches (sizes and both join sides), so it is
+    materialized once; DISK_ONLY because it is data-sized (SCALING.md
+    storage discipline)."""
+    hot = (
+        grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > MAX_GRAM_DF)
+        .select("gram")
+    )
+    return grams.join(F.broadcast(hot), "gram", "left_anti").transform(
+        ckpt(storage_level=StorageLevel.DISK_ONLY)
+    )
+
+
+def drop_hot_grams_sql(grams: str = "grams") -> str:
+    """DuckDB mirror of :func:`drop_hot_grams` over relation ``grams``."""
+    return f"""
+  SELECT g.* FROM {grams} g WHERE g.gram NOT IN (
+    SELECT gram FROM {grams} GROUP BY gram HAVING count(*) > {MAX_GRAM_DF})"""
+
+
+def gram_overlap(grams: DataFrame, pairs: str) -> DataFrame:
+    """(a, b, shared, na, nb): document pairs meeting ``pairs`` that
+    share at least one gram, their shared-gram count and both gram-set
+    sizes.  The gram-equality join only meets rows sharing a gram, so it
+    shuffles by gram and never forms unrelated pairs."""
+    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    inter = (
+        grams.alias("x")
+        .join(grams.alias("y"), F.expr(f"x.gram = y.gram AND {pairs}"))
+        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return (
+        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
+        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
+        .select("a", "b", "shared", F.col("sa.n").alias("na"), F.col("sb.n").alias("nb"))
+    )
+
+
+def gram_overlap_sql(grams: str, pairs: str) -> str:
+    """DuckDB mirror of :func:`gram_overlap` over relation ``grams``."""
+    return f"""
+  WITH sizes AS (
+    SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM {grams} GROUP BY doc_id
+  ), inter AS (
+    SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS shared
+    FROM {grams} x JOIN {grams} y ON x.gram = y.gram AND {pairs}
+    GROUP BY x.doc_id, y.doc_id
+  )
+  SELECT a, b, shared, sa.n AS na, sb.n AS nb FROM inter
+  JOIN sizes sa ON sa.doc_id = a
+  JOIN sizes sb ON sb.doc_id = b"""
+
+
+# --------------------------------------------------------------------------
+# Word 3-gram Jaccard similarity (probe-bounded exact computation)
+# --------------------------------------------------------------------------
+
+_JACCARD_ORACLE = f"""
+WITH grams AS ({doc_trigrams_sql(WINNER_DOCUMENTS_SQL)}
+), gf AS ({drop_hot_grams_sql()}
+), overlap AS ({gram_overlap_sql("gf", PROBE_PAIRS)}
 )
-SELECT a, b, ROUND(CAST(shared AS DOUBLE) / (sa.n + sb.n - shared), 6) AS jac
-FROM inter
-JOIN sizes sa ON sa.doc_id = a
-JOIN sizes sb ON sb.doc_id = b
-WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.5
+SELECT a, b, ROUND({JACCARD}, 6) AS jac FROM overlap WHERE {JACCARD} >= 0.5
 """
 
 
@@ -106,12 +199,9 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Skew guard (round-3 verdict item 5): grams with document frequency
     > MAX_GRAM_DF are dropped on BOTH sides (Spark and oracle) before
     the join, so no shuffle bucket can exceed MAX_GRAM_DF² candidate
-    pairs at any corpus size.  The hot-gram set is tiny by construction
-    (vocabulary-bounded groupBy with map-side combine finds it; only
-    grams clearing the cap survive), so it broadcasts and the filter is
-    a broadcast anti-join — the fact-side gram stream never shuffles on
-    a hot key.  Jaccard sizes are computed over the same capped gram
-    sets, keeping the metric internally consistent.
+    pairs at any corpus size (drop_hot_grams).  Jaccard sizes are
+    computed over the same capped gram sets, keeping the metric
+    internally consistent.
 
     Duplicate-key contract (round 10, R10_DUPKEYS_PLAN class 2): the
     per-doc gram SET is keyed by doc_id — two different texts under one
@@ -120,39 +210,9 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key winner (tables.winner_document, mirrored in the oracle)
     restores set semantics; 0 <= jac <= 1 is pytest-pinned."""
     d = winner_document(load_table(spark, sf_dir, "documents"))
-    toks = F.split(capped_text(), " ")  # bounded-prefix signature contract
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = (
-        d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
-    )
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    # The capped gram stream feeds multiple downstream branches (sizes
-    # and both join sides); materialize it once so the explode -> hot-gram
-    # -> anti-join pipeline executes once, not per branch.
-    # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-    sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        gf.alias("x")
-        .filter(F.col("doc_id") < 100)
-        .join(gf.alias("y"), F.expr("x.gram = y.gram AND x.doc_id < y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
-    return (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .select("a", "b", F.round(jac, 6).alias("jac"))
-    )
+    overlap = gram_overlap(drop_hot_grams(doc_trigrams(d)), PROBE_PAIRS)
+    jac = F.expr(JACCARD)
+    return overlap.filter(jac >= 0.5).select("a", "b", F.round(jac, 6).alias("jac"))
 
 
 # --------------------------------------------------------------------------
@@ -483,34 +543,15 @@ def llm_dedup_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Containment (asymmetric Jaccard) — sub-document duplication
 # --------------------------------------------------------------------------
 
+_CONTAINMENT = "CAST(shared AS DOUBLE) / least(na, nb)"
+
 _CONTAIN_ORACLE = f"""
-WITH grams AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             generate_series(1, greatest(len(toks) - 2, 1)),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
-    FROM (SELECT doc_id, string_split({capped_text_sql()}, ' ') AS toks
-          FROM {winner_document_sql()} documents)
-  ) WHERE gram IS NOT NULL
-), hot AS (
-  SELECT gram FROM grams GROUP BY gram HAVING count(*) > {MAX_GRAM_DF}
-), gf AS (
-  SELECT g.* FROM grams g WHERE g.gram NOT IN (SELECT gram FROM hot)
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM gf GROUP BY doc_id
-), inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS shared
-  FROM gf x JOIN gf y ON x.gram = y.gram AND x.doc_id < y.doc_id
-  WHERE x.doc_id < 100
-  GROUP BY x.doc_id, y.doc_id
+WITH grams AS ({doc_trigrams_sql(WINNER_DOCUMENTS_SQL)}
+), gf AS ({drop_hot_grams_sql()}
+), overlap AS ({gram_overlap_sql("gf", PROBE_PAIRS)}
 )
-SELECT a, b,
-       ROUND(CAST(shared AS DOUBLE) / least(sa.n, sb.n), 6) AS containment
-FROM inter
-JOIN sizes sa ON sa.doc_id = a
-JOIN sizes sb ON sb.doc_id = b
-WHERE CAST(shared AS DOUBLE) / least(sa.n, sb.n) >= 0.6
+SELECT a, b, ROUND({_CONTAINMENT}, 6) AS containment
+FROM overlap WHERE {_CONTAINMENT} >= 0.6
 """
 
 
@@ -531,36 +572,10 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     texts' gram sets and containment leaves [0,1] (probed: 2.0 — a
     silent wrong answer)."""
     d = winner_document(load_table(spark, sf_dir, "documents"))
-    toks = F.split(capped_text(), " ")  # bounded-prefix signature contract
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    # The capped gram stream feeds multiple downstream branches (sizes
-    # and both join sides); materialize it once so the explode -> hot-gram
-    # -> anti-join pipeline executes once, not per branch.
-    # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-    sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        gf.alias("x")
-        .filter(F.col("doc_id") < 100)
-        .join(gf.alias("y"), F.expr("x.gram = y.gram AND x.doc_id < y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    contain = F.col("shared").cast("double") / F.least(F.col("sa.n"), F.col("sb.n"))
-    return (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
-        .filter(contain >= 0.6)
-        .select("a", "b", F.round(contain, 6).alias("containment"))
+    overlap = gram_overlap(drop_hot_grams(doc_trigrams(d)), PROBE_PAIRS)
+    contain = F.expr(_CONTAINMENT)
+    return overlap.filter(contain >= 0.6).select(
+        "a", "b", F.round(contain, 6).alias("containment")
     )
 
 
@@ -577,33 +592,13 @@ WITH base AS (
   SELECT b.doc_id, min(ba.doc_id) AS match_id
   FROM batch b JOIN base ba ON b.h = ba.h
   GROUP BY b.doc_id
-), grams AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             generate_series(1, greatest(len(toks) - 2, 1)),
-             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
-    FROM (SELECT doc_id, string_split({capped_text_sql()}, ' ') AS toks
-          FROM documents)
-  ) WHERE gram IS NOT NULL
-), hot AS (
-  SELECT gram FROM grams GROUP BY gram HAVING count(*) > {MAX_GRAM_DF}
-), gf AS (
-  SELECT g.* FROM grams g WHERE g.gram NOT IN (SELECT gram FROM hot)
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM gf GROUP BY doc_id
-), inter AS (
-  SELECT x.doc_id AS b_id, y.doc_id AS base_id, CAST(count(*) AS BIGINT) AS shared
-  FROM gf x JOIN gf y ON x.gram = y.gram
-  WHERE x.doc_id >= 400 AND y.doc_id < 400
-  GROUP BY x.doc_id, y.doc_id
+), grams AS ({doc_trigrams_sql()}
+), gf AS ({drop_hot_grams_sql()}
+), overlap AS ({gram_overlap_sql("gf", BATCH_PAIRS)}
 ), near AS (
-  SELECT b_id AS doc_id, min(base_id) AS match_id
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = b_id
-  JOIN sizes sb ON sb.doc_id = base_id
-  WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= 0.5
-  GROUP BY b_id
+  SELECT a AS doc_id, min(b) AS match_id
+  FROM overlap WHERE {JACCARD} >= 0.5
+  GROUP BY a
 )
 SELECT b.doc_id,
        CASE WHEN e.doc_id IS NOT NULL THEN 'exact'
@@ -644,40 +639,11 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # gram SIGNATURE lane is prefix-capped (bounded-prefix contract);
     # the exact lane above stays whole-document md5 by design
-    toks = F.split(capped_text(), " ")
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    # The capped gram stream feeds multiple downstream branches (sizes
-    # and both join sides); materialize it once so the explode -> hot-gram
-    # -> anti-join pipeline executes once, not per branch.
-    # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-    sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        gf.alias("x")
-        .filter(F.col("doc_id") >= 400)
-        .join(
-            gf.alias("y").filter(F.col("doc_id") < 400),
-            F.expr("x.gram = y.gram"),
-        )
-        .groupBy(F.col("x.doc_id").alias("b_id"), F.col("y.doc_id").alias("base_id"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
     near = (
-        inter.join(sizes.alias("sa"), F.col("b_id") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("base_id") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .groupBy(F.col("b_id").alias("doc_id"))
-        .agg(F.min("base_id").alias("near_match"))
+        gram_overlap(drop_hot_grams(doc_trigrams(d)), BATCH_PAIRS)
+        .filter(F.expr(JACCARD) >= 0.5)
+        .groupBy(F.col("a").alias("doc_id"))
+        .agg(F.min("b").alias("near_match"))
     )
     return (
         batch.select("doc_id")

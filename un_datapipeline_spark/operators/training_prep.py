@@ -402,32 +402,30 @@ def agg_corr_pearson(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("llm_kmeans_cluster", oracle=None, tier="T3")
-def llm_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topic-style clustering of the embedding corpus: k=8 Lloyd's
-    iterations ×3, deterministic init (the 8 smallest vec_ids — a real
-    deployment seeds with k-means|| instead; determinism is the point
-    here).  Rows-only: the iterative refinement has no single-query SQL
-    equivalent; pytest asserts sizes, determinism, and monotone inertia.
+def lloyd_kmeans(spark: SparkSession, sf_dir: str, k: int):
+    """(assigned, centroids): three distributed Lloyd iterations over
+    the valid embedding vectors, seeded with the k smallest vec_ids (a
+    real deployment seeds with k-means|| instead; determinism is the
+    point here).  ``assigned`` is the last round's assignment (vec_id,
+    embedding, cluster_id, sqdist); ``centroids`` the k×dim float64
+    means that round's update produced.
 
-    Scale shape per iteration: centroids are k×64 floats broadcast in
-    the UDF closure; assignment is ONE corpus scan (Arrow-batched numpy
-    matmul — same kernel as cosine_topk); the centroid update is a
-    partial-aggregated groupBy on 8 keys over posexploded dims.  Nothing
-    driver-side ever exceeds k×dim."""
+    NULL-vector contract (round 9): corrupt vectors neither seed, train,
+    nor join clusters — same rule as cosine_topk.  Per round, the
+    centroids are k×dim floats broadcast in the UDF closure; assignment
+    is ONE corpus scan (Arrow-batched numpy matmul — same kernel as
+    cosine_topk); the update is a partial-aggregated groupBy on k keys
+    over posexploded dims.  Nothing driver-side ever exceeds k×dim."""
     import numpy as np
     import pandas as pd
 
     from un_datapipeline_spark.operators.llm_vectors import _vec_matrix, valid_vec
 
-    # NULL-vector contract (round 9): corrupt vectors neither seed, train,
-    # nor join clusters — same rule as cosine_topk.
     em = (
         load_table(spark, sf_dir, "embeddings")
         .filter(valid_vec())
         .select("vec_id", "embedding")
     )
-    k = 8
     init = em.orderBy("vec_id").limit(k).collect()  # k rows — bounded by design
     centroids = np.array([r.embedding for r in init], dtype=np.float64)
 
@@ -472,6 +470,17 @@ def llm_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in upd:
             new_c[r.cluster_id][r.dim] = r.m
         centroids = new_c
+    return assigned, centroids
+
+
+@register("llm_kmeans_cluster", oracle=None, tier="T3")
+def llm_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Topic-style clustering of the embedding corpus: k=8, three Lloyd
+    rounds (lloyd_kmeans — deterministic init and scale shape there),
+    reported as each cluster's size and inertia.  Rows-only: the
+    iterative refinement has no single-query SQL equivalent; pytest
+    asserts sizes, determinism, and monotone inertia."""
+    assigned, _ = lloyd_kmeans(spark, sf_dir, k=8)
     return (
         assigned.groupBy("cluster_id")
         .agg(
@@ -747,7 +756,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe that makes O(n²) cosine dedup tractable at web scale by
     paying the quadratic cost only inside bounded clusters.
 
-    Pipeline: deterministic k-means (same init/iteration scheme as
+    Pipeline: deterministic k-means (lloyd_kmeans, shared with
     llm_kmeans_cluster — k smallest vec_ids, 3 Lloyd rounds, broadcast
     centroids, one Arrow-batched scan per round), then per-cluster
     greedy prune via applyInPandas: scanning members by ASCENDING
@@ -766,57 +775,8 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from un_datapipeline_spark.operators.llm_vectors import _vec_matrix, valid_vec
-
-    # NULL-vector contract (round 9): corrupt vectors are excluded from
-    # semantic dedup entirely — same rule as llm_kmeans_cluster.
-    em = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(valid_vec())
-        .select("vec_id", "embedding")
-    )
-    k = SEMDEDUP_K
-    init = em.orderBy("vec_id").limit(k).collect()  # k rows — bounded
-    centroids = np.array([r.embedding for r in init], dtype=np.float64)
-
-    def make_assign(cents):
-        def assign(batches):
-            for pdf in batches:
-                vkeep, mat = _vec_matrix(pdf, "embedding")  # defensive
-                if mat.shape[0] == 0:
-                    continue
-                pdf = pdf[vkeep]
-                d2 = (
-                    (mat * mat).sum(axis=1, keepdims=True)
-                    - 2.0 * mat @ cents.T
-                    + (cents * cents).sum(axis=1)
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "embedding": pdf["embedding"],
-                        "cluster_id": d2.argmin(axis=1).astype("int32"),
-                    }
-                )
-
-        return assign
-
-    schema = "vec_id long, embedding array<float>, cluster_id int"
-    assigned = None
-    for _ in range(3):
-        assigned = em.mapInPandas(make_assign(centroids), schema)
-        upd = (
-            assigned.select("cluster_id", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cluster_id", "dim")
-            .agg(F.avg("v").alias("m"))
-            .collect()  # k×dim rows — constant-size driver traffic
-        )
-        new_c = centroids.copy()
-        for r in upd:
-            new_c[r.cluster_id][r.dim] = r.m
-        centroids = new_c
-
-    final_cents = centroids
+    # corrupt vectors are excluded from semantic dedup entirely
+    assigned, final_cents = lloyd_kmeans(spark, sf_dir, k=SEMDEDUP_K)
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(pdf["cluster_id"].iloc[0])

@@ -64,6 +64,14 @@ FACTORY_CONFS = {
     # (75.9 -> 77.7 MB).  A session the engine does not build keeps 100
     # unless launched with --conf spark.sql.codegen.cache.maxEntries=...
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # Static: the Python worker daemon, one forked worker per UDF task.
+    # Spark's own re-reads every zip archive on the worker path in each
+    # task's setup (0.16-0.23 s per Arrow/pandas UDF task); this one
+    # re-reads an archive only when it changed (worker_daemon.py,
+    # tests/test_session_confs.py).  The workers must be able to import
+    # the package, as for every UDF it ships.  A session the engine does
+    # not build keeps pyspark.daemon.
+    "spark.python.daemon.module": "un_datapipeline_spark.worker_daemon",
 }
 
 
