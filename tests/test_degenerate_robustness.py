@@ -817,19 +817,8 @@ def test_jaccard_containment_stay_in_unit_range(spark, dupkeys_sf):
     ).all(), con
 
 
-# A raw source with repeated doc_ids (dupkeys) gives one Spark gram row
-# per document ROW but one oracle row per doc_id, so the df counts, and
-# with them the capped sets, differ once a cap bites (CHANGES.md FOUND).
-_RAW_REPEATS = pytest.mark.xfail(
-    strict=True, reason="raw source, repeated doc_ids: df counts rows vs docs"
-)
 _MIRROR_CASES = [
-    pytest.param(
-        corpus,
-        winner,
-        id=f"{'winner' if winner else 'raw'}-{corpus}",
-        marks=_RAW_REPEATS if (corpus, winner) == ("dupkeys_sf", False) else (),
-    )
+    pytest.param(corpus, winner, id=f"{'winner' if winner else 'raw'}-{corpus}")
     for winner in (True, False)
     for corpus in ("sf_smoke", "dupkeys_sf", "bigdoc_sf", "empty_sf")
 ]
@@ -839,27 +828,27 @@ _MIRROR_CASES = [
 def test_trigram_kernel_mirror(spark, request, monkeypatch, corpus, winner):
     """The gram-overlap family's trigram kernel (dedup_extras.
     doc_trigrams and drop_hot_grams) and its DuckDB text give the same
-    (doc_id, gram) set on either source relation, before and after the
-    document-frequency cap — at the shipped cap, which no corpus here
-    reaches (max df 72), and then at a cap of 2, which every one but the
-    empty corpus exceeds.  Every oracle gram has three parts, so its
-    ``gram IS NOT NULL`` filter drops nothing but the short-document
-    NULL."""
+    (doc_id, gram) set, before and after the document-frequency cap — at
+    the shipped cap, which no corpus here reaches (max df 72), and then
+    at a cap of 2, which every one but the empty corpus exceeds.  The
+    kernel applies the per-key winner itself, so raw documents (what
+    the ops pass) and an already-deduplicated source give the same set:
+    on repeated doc_ids a gram counts once per doc_id on both engines.
+    Every oracle gram has three parts, so its ``gram IS NOT NULL``
+    filter drops nothing but the short-document NULL."""
     from tests.oracle_diff import duck_connect
     from un_datapipeline_spark.operators import dedup_extras as dx
     from un_datapipeline_spark.tables import load_table, winner_document
 
     sf = request.getfixturevalue(corpus)
-    d, source = load_table(spark, sf, "documents"), "documents"
-    if winner:
-        d, source = winner_document(d), dx.WINNER_DOCUMENTS_SQL
-    grams = dx.doc_trigrams(d)
+    d = load_table(spark, sf, "documents")
+    grams = dx.doc_trigrams(winner_document(d) if winner else d)
     con = duck_connect(sf)
     try:
         for cap in (dx.MAX_GRAM_DF, 2):
             monkeypatch.setattr(dx, "MAX_GRAM_DF", cap)
             ctes = (
-                f"WITH grams AS ({dx.doc_trigrams_sql(source)}), "
+                f"WITH grams AS ({dx.doc_trigrams_sql()}), "
                 f"gf AS ({dx.drop_hot_grams_sql()}) "
             )
             for sp, rel in ((grams, "grams"), (dx.drop_hot_grams(grams), "gf")):

@@ -155,12 +155,12 @@ def test_dedup_cluster_covers_exact_dups(spark, sf_t2):
     # clone every 5th doc TWICE (ids +1M and +2M) so each group has 3
     # members whose cluster co-membership requires transitivity.
     OFFSET = 1_000_000
-    base = load_table(spark, sf_t2, "documents").select("doc_id", "text")
+    base = load_table(spark, sf_t2, "documents")
     cloned = base.filter(F.col("doc_id") % 5 == 0)
     d = base.unionByName(
-        cloned.select((F.col("doc_id") + OFFSET).alias("doc_id"), "text")
+        cloned.withColumn("doc_id", F.col("doc_id") + OFFSET)
     ).unionByName(
-        cloned.select((F.col("doc_id") + 2 * OFFSET).alias("doc_id"), "text")
+        cloned.withColumn("doc_id", F.col("doc_id") + 2 * OFFSET)
     )
     labels = {
         r.node: r.label for r in connected_components(_dup_edges(d)).collect()

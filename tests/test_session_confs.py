@@ -13,6 +13,11 @@ object that raises controlled exceptions.
 from __future__ import annotations
 
 import contextlib
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -315,3 +320,67 @@ def test_udf_task_setup_rereads_no_archive(spark):
     if r.zips == 0:
         pytest.skip("no zip archive on the Python worker path")
     assert r.reads == 0, f"{r.reads} archive re-reads across {r.zips} zip importers"
+
+
+_ROOT = Path(__file__).resolve().parents[1]
+
+_SESSION_CHILD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from un_datapipeline_spark.session import get_spark
+
+spark = get_spark()
+print(json.dumps([spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions")]))
+spark.stop()
+"""
+
+
+def _run_child(code: str, *args: str, cwd=None, **env_set) -> str:
+    """Run ``code`` with the repo root as its argument in a fresh Python
+    with no PYTHONPATH, launcher args or SPARK_GRAFT_CPUS beyond
+    ``env_set``; return its last stdout line."""
+    env = {k: v for k, v in os.environ.items() if k not in ("SPARK_GRAFT_CPUS", "PYTHONPATH")}
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    env.update(SPARK_GRAFT_DRIVER_MEM="512m", **env_set)
+    done = subprocess.run(
+        [sys.executable, "-c", code, str(_ROOT), *args],
+        env=env, cwd=cwd, capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    return done.stdout.strip().splitlines()[-1]
+
+
+def test_launcher_master_and_width_win():
+    """The launcher's master and shuffle width reach the session; the
+    factory pins ``local[N]`` only from SPARK_GRAFT_CPUS and sets the
+    test-scale width only where the launcher set none."""
+    launched = _run_child(
+        _SESSION_CHILD,
+        PYSPARK_SUBMIT_ARGS="--master local[2] --conf spark.sql.shuffle.partitions=200 pyspark-shell",
+    )
+    assert json.loads(launched) == ["local[2]", "200"]
+    assert json.loads(_run_child(_SESSION_CHILD, SPARK_GRAFT_CPUS="3")) == ["local[3]", "32"]
+
+
+_UDF_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+from un_datapipeline_spark.session import get_spark
+
+def double(batches):
+    for pdf in batches:
+        yield pdf * 2
+
+spark = get_spark()
+print(spark.range(3, numPartitions=1).mapInPandas(double, "id long").collect())
+spark.stop()
+"""
+
+
+def test_udf_workers_import_package_from_any_cwd(tmp_path):
+    """A driver that has the package on its own sys.path only, started
+    outside the repo, still runs Python UDF tasks: the workers' daemon
+    module is the package's, so they must find it too."""
+    out = _run_child(_UDF_CHILD, cwd=tmp_path, SPARK_GRAFT_CPUS="1")
+    assert out == "[Row(id=0), Row(id=2), Row(id=4)]"

@@ -51,6 +51,16 @@ REFRESH_COUNT = 5
 # first, pure refactors last.  (Forced entries are never truncated —
 # see main() — so ordering is about review priority, not survival.)
 FORCE_REFRESH: tuple[str, ...] = (
+    # Oracle text changed (hash-matched): the trigram kernel applies the
+    # per-key winner itself, so the raw-source gram lanes now read the
+    # winner on both engines.  All three were already forced for
+    # code-only edits: the cluster and canonical ops for
+    # connected_components on the iteration scope (two env knobs
+    # retired), the incremental op for the session.ckpt switch.
+    "llm_dedup_incremental",
+    "llm_dedup_cluster",
+    "llm_canonical_select",
+    #
     # The vector top-k family on one probe_search kernel / one LSH
     # helper, risk-first: kernel semantics (hash-matched), then the
     # shared l2_norm Column helper (same expression), then the
@@ -92,15 +102,11 @@ FORCE_REFRESH: tuple[str, ...] = (
     "graph_label_propagation",   # result frozen inside the scope; the
     #                              edge build is the shared helper
     "graph_modularity",          # same shared _lpa_state + scope
-    "llm_dedup_cluster",         # connected_components on the scope;
-    #                              its two env knobs retired
-    "llm_canonical_select",      # same connected_components
     "llm_neardup_cluster",       # same connected_components
     # checkpoint-durability gate: the last plain localCheckpoint sites
     # switched to session.ckpt — identical local behavior, new syntax:
     "llm_dedup_ngram_jaccard",
     "llm_dedup_containment",
-    "llm_dedup_incremental",
     "llm_dedup_simhash",
     "mm_phash_dedup",
     "join_runtime_bloom",

@@ -430,14 +430,7 @@ def _dup_edges(d: DataFrame) -> DataFrame:
     clustering needs the full edge set.  The gram SIGNATURES are
     prefix-capped (bounded-prefix contract, tables.capped_text) — the
     exact-md5 edge lane stays whole-document."""
-    from un_datapipeline_spark.scale import parallelize_scan
-
-    # Round-13 (guide §2.5): the gram build+explode is the expensive
-    # per-row stage and sits directly above a structurally ONE-task scan
-    # (single-row-group test file) — and it is re-evaluated by three
-    # consumers (sizes + both self-join sides).  parallelize_scan
-    # spreads every evaluation; no-op when the scan parallelizes.
-    grams = doc_trigrams(parallelize_scan(d.select("doc_id", "text")))
+    grams = doc_trigrams(d)
     jedges = (
         gram_overlap(grams, ALL_PAIRS).filter(F.expr(JACCARD) >= 0.5).select("a", "b")
     )

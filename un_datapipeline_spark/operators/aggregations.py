@@ -14,7 +14,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import cents2_sum_sql, cents_sum_sql, load_table
+from un_datapipeline_spark.tables import (
+    cents2_sum,
+    cents2_sum_sql,
+    cents_col,
+    cents_sum_sql,
+    load_table,
+)
 
 # Exact-arithmetic formulation (SURVEY.md §5.3.1 extended): prices,
 # discounts, and taxes are exact 2-decimal values (verified), so every
@@ -699,19 +705,15 @@ def agg_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-group aggregate, a 1-row pivot; at 100 TB the moments come from
     map-side partial sums and the t-math is constant-time."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    # cents**2 overflows int64 once any surviving |value| passes ~3e7, so
-    # the second moment rides DECIMAL(38,0) (oracle: HUGEINT) — exact to
-    # ~1e38, magnitude-v2 contract.  The first moment keeps the long lane
-    # (10x headroom at the 9e15 ingest bound).
-    cents_d = cents.cast("decimal(38,0)")
+    # The second moment rides DECIMAL(38,0) (cents2_sum); the first keeps
+    # the long lane (10x headroom at the 9e15 ingest bound).
     m = (
         ev.filter(F.col("event_type").isin("purchase", "click"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(cents).alias("s"),
-            F.sum(cents_d * cents_d).alias("ss"),
+            F.sum(cents_col()).alias("s"),
+            cents2_sum().alias("ss"),
         )
     )
     w = (
@@ -1097,13 +1099,13 @@ ORDER BY n DESC, w LIMIT {_MG_TOPN}
 """
 
 
-def mg_survivors(words: "DataFrame", slots: int = _MG_SLOTS) -> "DataFrame":
+def mg_survivors(words: "DataFrame") -> "DataFrame":
     """Per-partition Misra-Gries: stream each partition's words through a
-    `slots`-entry counter table (decrement-all when full), emitting the
-    surviving candidates.  Any word with global frequency > N/slots is
+    `_MG_SLOTS`-entry counter table (decrement-all when full), emitting the
+    surviving candidates.  Any word with global frequency > N/_MG_SLOTS is
     GUARANTEED to survive in at least one partition (pigeonhole over the
     per-partition guarantee), so the union of survivors is a superset of
-    every true heavy hitter — with at most slots × n_partitions rows."""
+    every true heavy hitter — with at most _MG_SLOTS × n_partitions rows."""
     import pandas as pd
 
     def kernel(batches):
@@ -1112,7 +1114,7 @@ def mg_survivors(words: "DataFrame", slots: int = _MG_SLOTS) -> "DataFrame":
             for w in pdf["w"]:
                 if w in counts:
                     counts[w] += 1
-                elif len(counts) < slots:
+                elif len(counts) < _MG_SLOTS:
                     counts[w] = 1
                 else:
                     dead = [k for k in counts if counts[k] == 1]

@@ -267,17 +267,17 @@ def agg_entropy_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _morton_spark(x: str, y: str, bits: int = 8) -> str:
+def _morton_spark(x: str, y: str) -> str:
     terms = []
-    for i in range(bits):
+    for i in range(8):
         terms.append(f"shiftleft((shiftright({x}, {i}) & 1), {2 * i})")
         terms.append(f"shiftleft((shiftright({y}, {i}) & 1), {2 * i + 1})")
     return " + ".join(terms)
 
 
-def _morton_duck(x: str, y: str, bits: int = 8) -> str:
+def _morton_duck(x: str, y: str) -> str:
     terms = []
-    for i in range(bits):
+    for i in range(8):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.operators.dedup_extras import (
-    WINNER_DOCUMENTS_SQL,
     doc_trigrams,
     doc_trigrams_sql,
     ngram_array,
@@ -776,7 +775,7 @@ def llm_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _NOVELTY_ORACLE = f"""
-WITH grams AS ({doc_trigrams_sql(WINNER_DOCUMENTS_SQL)}
+WITH grams AS ({doc_trigrams_sql()}
 ), first_seen AS (
   SELECT gram, min(doc_id) AS first_doc FROM grams GROUP BY gram
 )
@@ -810,7 +809,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-crawled doc_id would union two texts' gram sets (probed: n_grams
     45 vs 24) — the deterministic per-key winner (tables.
     winner_document, oracle-mirrored) restores one-set-per-id."""
-    grams = doc_trigrams(winner_document(load_table(spark, sf_dir, "documents")))
+    grams = doc_trigrams(load_table(spark, sf_dir, "documents"))
     first_seen = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     return (
         grams.join(first_seen, "gram")

@@ -60,9 +60,9 @@ def trigram_array(toks):
 # --------------------------------------------------------------------------
 # The gram-overlap kernel: one definition per mechanism of the word-
 # trigram dedup family, each with its DuckDB text beside it (the
-# llm_vectors.valid_vec / valid_vec_sql pairing).  An op picks its source
-# relation, whether to cap document frequency, and its pair predicate;
-# only its score and threshold are its own.
+# llm_vectors.valid_vec / valid_vec_sql pairing).  An op picks whether to
+# cap document frequency and its pair predicate; only its score and
+# threshold are its own.
 # --------------------------------------------------------------------------
 
 # Grams appearing in more than this many documents are boilerplate and
@@ -84,21 +84,23 @@ ALL_PAIRS = "x.doc_id < y.doc_id"
 # Jaccard over gram_overlap's (shared, na, nb), one text for both engines.
 JACCARD = "CAST(shared AS DOUBLE) / (na + nb - shared)"
 
-# The per-key winner as a gram source (duplicate-key contract).
-WINNER_DOCUMENTS_SQL = f"{winner_document_sql()} documents"
-
 
 def doc_trigrams(d: DataFrame) -> DataFrame:
     """(doc_id, gram): each document's distinct word trigrams over its
-    capped text prefix (bounded-prefix signature contract).  ``d`` is
-    the source the op chose: raw documents, the per-key winner, or a
-    spread scan (parallelize_scan)."""
+    capped text prefix (bounded-prefix signature contract).  A gram set
+    is keyed by doc_id, so ``d`` goes through the per-key winner
+    (duplicate-key contract): two texts under one re-crawled id never
+    union their grams, and a gram counts once per doc_id on both
+    engines.  The winner's exchange on doc_id also spreads a one-task
+    scan before the per-row gram build."""
     grams_arr = trigram_array(F.split(capped_text(), " "))
-    return d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
+    return winner_document(d).select(
+        "doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram")
+    )
 
 
-def doc_trigrams_sql(source: str = "documents") -> str:
-    """DuckDB mirror of :func:`doc_trigrams` over relation ``source``.
+def doc_trigrams_sql() -> str:
+    """DuckDB mirror of :func:`doc_trigrams` over the per-key winner.
     Documents shorter than three tokens index past the list end and
     yield one NULL gram, the only row the filter drops: tokens come from
     a split on ' ', so a non-NULL gram always has exactly three parts
@@ -110,7 +112,7 @@ def doc_trigrams_sql(source: str = "documents") -> str:
              generate_series(1, greatest(len(toks) - 2, 1)),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS gram
     FROM (SELECT doc_id, string_split({capped_text_sql()}, ' ') AS toks
-          FROM {source})
+          FROM {winner_document_sql()} documents)
   ) WHERE gram IS NOT NULL"""
 
 
@@ -135,11 +137,11 @@ def drop_hot_grams(grams: DataFrame) -> DataFrame:
     )
 
 
-def drop_hot_grams_sql(grams: str = "grams") -> str:
+def drop_hot_grams_sql() -> str:
     """DuckDB mirror of :func:`drop_hot_grams` over relation ``grams``."""
     return f"""
-  SELECT g.* FROM {grams} g WHERE g.gram NOT IN (
-    SELECT gram FROM {grams} GROUP BY gram HAVING count(*) > {MAX_GRAM_DF})"""
+  SELECT g.* FROM grams g WHERE g.gram NOT IN (
+    SELECT gram FROM grams GROUP BY gram HAVING count(*) > {MAX_GRAM_DF})"""
 
 
 def gram_overlap(grams: DataFrame, pairs: str) -> DataFrame:
@@ -181,7 +183,7 @@ def gram_overlap_sql(grams: str, pairs: str) -> str:
 # --------------------------------------------------------------------------
 
 _JACCARD_ORACLE = f"""
-WITH grams AS ({doc_trigrams_sql(WINNER_DOCUMENTS_SQL)}
+WITH grams AS ({doc_trigrams_sql()}
 ), gf AS ({drop_hot_grams_sql()}
 ), overlap AS ({gram_overlap_sql("gf", PROBE_PAIRS)}
 )
@@ -209,7 +211,7 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (probed: 1.878, a silent wrong answer).  The deterministic
     per-key winner (tables.winner_document, mirrored in the oracle)
     restores set semantics; 0 <= jac <= 1 is pytest-pinned."""
-    d = winner_document(load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     overlap = gram_overlap(drop_hot_grams(doc_trigrams(d)), PROBE_PAIRS)
     jac = F.expr(JACCARD)
     return overlap.filter(jac >= 0.5).select("a", "b", F.round(jac, 6).alias("jac"))
@@ -254,8 +256,8 @@ def simhash_bands(d: DataFrame) -> DataFrame:
     return sig.select("doc_id", *band_cols)
 
 
-def simhash_near_pairs(bands: DataFrame, max_hamming: int = MAX_HAMMING) -> DataFrame:
-    """(a, b, hamming) pairs within max_hamming bits, found by joining on
+def simhash_near_pairs(bands: DataFrame) -> DataFrame:
+    """(a, b, hamming) pairs within MAX_HAMMING bits, found by joining on
     any equal band (bucket-local, sub-quadratic) then verifying the exact
     Hamming distance over all 4 bands with bit_count(xor)."""
     matches = None
@@ -276,7 +278,7 @@ def simhash_near_pairs(bands: DataFrame, max_hamming: int = MAX_HAMMING) -> Data
     return (
         matches.dropDuplicates(["a", "b"])
         .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .select("a", "b", "hamming")
     )
 
@@ -361,13 +363,13 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 LSH_PLANES = 8  # bucket id bits (see hyperplane_buckets)
 
 
-def hyperplane_buckets(em: DataFrame, seed: int = 42) -> DataFrame:
+def hyperplane_buckets(em: DataFrame) -> DataFrame:
     """Sign-random-projection bucket id per vector: fixed pseudo-random
     hyperplanes → n-bit bucket.  Bucketing is a per-row dot product in
     Column math — one scan, no shuffle, no driver action.
 
     Hyperplane coefficients come from a deterministic sin-hash
-    (fract(sin(i·12.9898 + p·78.233 + seed)·43758.5453)·2−1 — the
+    (fract(sin(i·12.9898 + p·78.233 + 42)·43758.5453)·2−1 — the
     classic shader-noise construction): coefficient (plane, index) is a
     pure function evaluated inside the JVM lambda, so the plane matrix
     never touches the driver and the code is embedding-dimension-
@@ -379,7 +381,7 @@ def hyperplane_buckets(em: DataFrame, seed: int = 42) -> DataFrame:
     occupancy bounded."""
 
     def coeff(p: int, i):
-        t = F.sin(i.cast("double") * 12.9898 + F.lit(float(p)) * 78.233 + F.lit(float(seed)))
+        t = F.sin(i.cast("double") * 12.9898 + F.lit(float(p)) * 78.233 + F.lit(42.0))
         t = t * 43758.5453
         return (t - F.floor(t)) * 2.0 - 1.0
 
@@ -546,7 +548,7 @@ def llm_dedup_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAINMENT = "CAST(shared AS DOUBLE) / least(na, nb)"
 
 _CONTAIN_ORACLE = f"""
-WITH grams AS ({doc_trigrams_sql(WINNER_DOCUMENTS_SQL)}
+WITH grams AS ({doc_trigrams_sql()}
 ), gf AS ({drop_hot_grams_sql()}
 ), overlap AS ({gram_overlap_sql("gf", PROBE_PAIRS)}
 )
@@ -571,7 +573,7 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic per-key winner, a re-crawled doc_id merges two
     texts' gram sets and containment leaves [0,1] (probed: 2.0 — a
     silent wrong answer)."""
-    d = winner_document(load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     overlap = gram_overlap(drop_hot_grams(doc_trigrams(d)), PROBE_PAIRS)
     contain = F.expr(_CONTAINMENT)
     return overlap.filter(contain >= 0.6).select(

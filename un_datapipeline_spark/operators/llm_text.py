@@ -257,7 +257,7 @@ def shingle_sets(d: DataFrame) -> DataFrame:
     )
 
 
-def _signatures_from_sets(sets: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
+def _signatures_from_sets(sets: DataFrame) -> DataFrame:
     """Minhash signatures derived from materialized shingle sets: explode
     the cached sets back to (doc_id, shingle) rows and run the identical
     min-over-xxhash64 aggregate — same elements, same hashes, same mins
@@ -286,22 +286,22 @@ def _signatures_from_sets(sets: DataFrame, n_hashes: int = N_HASHES) -> DataFram
         .agg(
             *[
                 F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-                for i in range(n_hashes)
+                for i in range(N_HASHES)
             ]
         )
     )
 
 
-def minhash_signatures(d: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
+def minhash_signatures(d: DataFrame) -> DataFrame:
     """One row per doc: minhash_i = min over shingles of xxhash64(i ∥ s).
 
-    A single groupBy computes all n hash mins in one shuffle; signature
+    A single groupBy computes all N_HASHES mins in one shuffle; signature
     size is constant per doc regardless of text length.
     """
     return _shingled(d).groupBy("doc_id").agg(
         *[
             F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(n_hashes)
+            for i in range(N_HASHES)
         ]
     )
 
@@ -343,7 +343,6 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 def verify_candidates_jaccard(
     d: DataFrame,
     candidates: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact char-shingle Jaccard verification of LSH candidate pairs.
@@ -377,7 +376,7 @@ def verify_candidates_jaccard(
                 4,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a", "b", "jaccard")
     )
 

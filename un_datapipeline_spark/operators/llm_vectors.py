@@ -58,13 +58,13 @@ from un_datapipeline_spark.tables import load_table, winner_embedding_sql
 EMBED_DIM = 64  # FIXTURES.md corpus contract: embeddings.embedding width
 
 
-def valid_vec(col: str = "embedding", dim: int = EMBED_DIM):
-    """Predicate: the column holds a usable vector (not NULL, declared
+def valid_vec():
+    """Predicate: ``embedding`` holds a usable vector (not NULL, declared
     width, no NULL elements)."""
     return (
-        F.col(col).isNotNull()
-        & (F.size(col) == F.lit(dim))
-        & (F.size(F.array_compact(col)) == F.size(col))
+        F.col("embedding").isNotNull()
+        & (F.size("embedding") == F.lit(EMBED_DIM))
+        & (F.size(F.array_compact("embedding")) == F.size("embedding"))
     )
 
 
@@ -85,10 +85,10 @@ def dot(a: str, b: str):
     )
 
 
-def valid_vec_sql(col: str = "embedding", dim: int = EMBED_DIM) -> str:
+def valid_vec_sql(col: str = "embedding") -> str:
     """The DuckDB mirror of valid_vec for paired oracle texts."""
     return (
-        f"({col} IS NOT NULL AND len({col}) = {dim} "
+        f"({col} IS NOT NULL AND len({col}) = {EMBED_DIM} "
         f"AND len(list_filter({col}, x -> x IS NULL)) = 0)"
     )
 
@@ -188,8 +188,6 @@ def probe_search(
     score,
     extra_cols: tuple[str, ...] = (),
     out_schema: str = "a_id long, nn_id long, sim double",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The one top-k kernel of the vector family: broadcast probes, ONE
     corpus scan, a tie-safe partial top-k per Arrow batch, and a global
@@ -204,10 +202,10 @@ def probe_search(
     ``out_schema`` rows, at most k per a_id."""
     import numpy as np
 
-    cols = [id_col, vec_col, *extra_cols]
+    cols = ["vec_id", "embedding", *extra_cols]
     # NULL-vector contract (valid_vec) on BOTH sides, mirrored in the
     # paired oracles, before the zero-norm exclusion in _unit_rows.
-    ok = valid_vec(vec_col)
+    ok = valid_vec()
     for c in extra_cols:
         ok = ok & F.col(c).isNotNull()
     rows = probes.filter(ok).select(*cols).collect()
@@ -223,12 +221,12 @@ def probe_search(
         for pdf in batches:
             if pdf.empty:
                 continue
-            vkeep, b_mat = _vec_matrix(pdf, vec_col)  # defensive NULL guard
+            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive NULL guard
             if extra_cols:  # a NULL extra arrives as NaN: drop it too
                 xok = pdf[list(extra_cols)].notna().all(axis=1).to_numpy()
                 b_mat, vkeep = b_mat[xok[vkeep]], vkeep & xok
             b = _unit_rows(
-                pdf[id_col].to_numpy(dtype=np.int64)[vkeep],
+                pdf["vec_id"].to_numpy(dtype=np.int64)[vkeep],
                 b_mat,
                 {c: pdf[c].to_numpy()[vkeep] for c in extra_cols},
             )
@@ -259,8 +257,6 @@ def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_self: bool = True,
     require_gt: bool = False,
 ) -> DataFrame:
@@ -280,7 +276,7 @@ def cosine_topk(
             return np.where(b.ids[:, None] == p.ids[None, :], -np.inf, sims)
         return sims
 
-    return probe_search(corpus, probes, k, exact, id_col=id_col, vec_col=vec_col)
+    return probe_search(corpus, probes, k, exact)
 
 
 # DuckDB oracle computes the identical float64 math explicitly (not
@@ -434,39 +430,31 @@ def llm_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    n_iters: int = 5,
-    sample: int = 2048,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Deterministic mini k-means on a driver-side sample → (n_cells, dim)
-    float64 centroid matrix.  Sample-trained coarse quantizers are the
+def train_ivf_centroids(corpus: DataFrame):
+    """Deterministic mini k-means on a driver-side sample of 2048 → (16,
+    dim) float64 centroid matrix.  Sample-trained coarse quantizers are the
     standard IVF pattern at scale: training cost is O(sample), never
     O(corpus); only ASSIGNMENT scans the corpus."""
     import numpy as np
 
     # NULL-vector contract: corrupt and zero vectors never train the
     # quantizer — it trains on exactly the rows probe_search scores
-    corpus = corpus.filter(valid_vec(vec_col) & (l2_norm(vec_col) > 0))
+    corpus = corpus.filter(valid_vec() & (l2_norm() > 0))
     # orderBy before limit: a bare limit takes partition-layout-dependent
     # rows — ordering pins the training sample across cluster layouts.
     rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample)
-        .select(vec_col)
+        corpus.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(2048)
+        .select("embedding")
         .collect()
     )
     if not rows:  # corpus has no valid vectors → no quantizer to train
         return np.zeros((0, 0))
     x = np.array([r[0] for r in rows], dtype=np.float64)
-    rng = np.random.RandomState(seed)
-    cent = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(n_iters):
+    rng = np.random.RandomState(42)
+    cent = x[rng.choice(len(x), size=min(16, len(x)), replace=False)]
+    for _ in range(5):
         d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
         for c in range(len(cent)):
@@ -704,9 +692,9 @@ PQ_SUBSPACES = 8  # 64-dim vectors → 8 subvectors of 8 dims
 PQ_CODEBOOK = 16  # 16 centroids per subspace → 4 bits/code, 8 bytes/vector
 
 
-def train_pq_codebooks(corpus, sample: int = 512, n_iters: int = 5, seed: int = 7):
+def train_pq_codebooks(corpus):
     """Deterministic per-subspace k-means codebooks from a driver-side
-    sample (orderBy-pinned, like the IVF trainer): training cost is
+    sample of 512 (orderBy-pinned, like the IVF trainer): training cost is
     O(sample), never O(corpus).  Returns (PQ_SUBSPACES, PQ_CODEBOOK,
     sub_dim) float64."""
     import numpy as np
@@ -715,7 +703,7 @@ def train_pq_codebooks(corpus, sample: int = 512, n_iters: int = 5, seed: int = 
         corpus.filter(valid_vec())  # NULL-vector contract
         .select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(sample)
+        .limit(512)
         .collect()
     )
     if not rows:  # corpus has no valid vectors → no codebooks to train
@@ -723,7 +711,7 @@ def train_pq_codebooks(corpus, sample: int = 512, n_iters: int = 5, seed: int = 
     x = np.array([r[1] for r in rows], dtype=np.float64)
     sub_dim = x.shape[1] // PQ_SUBSPACES
     books = np.zeros((PQ_SUBSPACES, PQ_CODEBOOK, sub_dim))
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(7)
     for s in range(PQ_SUBSPACES):
         xs = x[:, s * sub_dim : (s + 1) * sub_dim]
         # a corpus smaller than the codebook trains one centroid per
@@ -732,7 +720,7 @@ def train_pq_codebooks(corpus, sample: int = 512, n_iters: int = 5, seed: int = 
         cent = xs[rng.choice(len(xs), size=min(PQ_CODEBOOK, len(xs)), replace=False)]
         if len(cent) < PQ_CODEBOOK:
             cent = np.vstack([cent] * (-(-PQ_CODEBOOK // len(cent))))[:PQ_CODEBOOK]
-        for _ in range(n_iters):
+        for _ in range(5):
             d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for c in range(PQ_CODEBOOK):

@@ -35,7 +35,7 @@ from un_datapipeline_spark.tables import load_table
 _SEED = 42
 
 
-def minhash_ml_pairs(docs: DataFrame, max_jaccard_dist: float = 0.5) -> DataFrame:
+def minhash_ml_pairs(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs via MLlib MinHashLSH over binary 5-gram
     shingle features.
 
@@ -117,7 +117,7 @@ def minhash_ml_pairs(docs: DataFrame, max_jaccard_dist: float = 0.5) -> DataFram
     )
     model = lsh.fit(feat)
     pairs = model.approxSimilarityJoin(
-        feat, feat, max_jaccard_dist, distCol="jaccard_dist"
+        feat, feat, 0.5, distCol="jaccard_dist"
     )
     return (
         pairs.select(
@@ -142,21 +142,16 @@ def llm_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_ml_pairs(d).orderBy("doc_a", "doc_b")
 
 
-def brp_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    max_dist: float = 1.45,
-) -> DataFrame:
-    """Top-k Euclidean neighbors per probe via BucketedRandomProjectionLSH.
+def brp_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """Top-5 Euclidean neighbors per probe via BucketedRandomProjectionLSH.
 
     One batched approxSimilarityJoin (probes × corpus through the hash
     buckets) followed by a per-probe window — never the driver-looped
-    `approxNearestNeighbors`, which plans one job per probe.  `max_dist`
-    bounds the candidate radius: unit-normalized random 64-d vectors sit
-    at pairwise distance ≈1.19–1.62 (measured), so 1.45 keeps roughly the
-    nearer half of the corpus as candidates while guaranteeing headroom
-    over every true top-5 distance.
+    `approxNearestNeighbors`, which plans one job per probe.  The 1.45
+    distance cap bounds the candidate radius: unit-normalized random 64-d
+    vectors sit at pairwise distance ≈1.19–1.62 (measured), so 1.45 keeps
+    roughly the nearer half of the corpus as candidates while
+    guaranteeing headroom over every true top-5 distance.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
@@ -207,7 +202,7 @@ def brp_topk(
         seed=_SEED,
     )
     model = lsh.fit(c)
-    cand = model.approxSimilarityJoin(p, c, max_dist, distCol="dist").select(
+    cand = model.approxSimilarityJoin(p, c, 1.45, distCol="dist").select(
         F.col("datasetA.vec_id").alias("probe_id"),
         F.col("datasetB.vec_id").alias("neighbor_id"),
         F.col("dist"),
@@ -216,7 +211,7 @@ def brp_topk(
     w = Window.partitionBy("probe_id").orderBy("dist", "neighbor_id")
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("probe_id", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
     )
 

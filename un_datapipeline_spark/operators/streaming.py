@@ -46,45 +46,43 @@ def stream_shuffle_partitions(spark: SparkSession) -> conf_scope:
     n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
     return conf_scope(spark, {"spark.sql.shuffle.partitions": n})
 
-# Physical ts dtypes the events generator has shipped so far, and the
-# stream-source schema type each maps to.  Mirrors the batch dispatch in
-# tables._normalize_events_ts: bigint = epoch-ns under nanosAsLong
-# (rounds 1-2), timestamp_ntz = parquet timestamp[us] (round 3+),
-# timestamp = a tz-adjusted timestamp[us] file (not seen yet, but the
-# batch path handles it, so the stream path must too).
+# Physical ts dtypes the events generator has shipped so far, the ones
+# tables._normalize_events_ts dispatches on: bigint = epoch-ns under
+# nanosAsLong (rounds 1-2), timestamp_ntz = parquet timestamp[us] (round
+# 3+), timestamp = a tz-adjusted timestamp[us] file (not seen yet, but
+# the batch path handles it, so the stream path must too).
 _TS_DTYPES = ("bigint", "timestamp_ntz", "timestamp")
 
 
-def _events_stream_schema(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _events_stream_schema(spark: SparkSession, sf_dir: str) -> str:
     """File stream sources need an explicit schema; read the batch
     footer on the driver (tables.read_parquet: one metadata read, no
     Spark job) so the schema tracks whichever physical ts layout the
-    generator shipped.  Returns ``(schema_ddl, ts_dtype)`` — callers
-    branch on the probed dtype, not on the rendered schema string."""
+    generator shipped."""
     raw = dict(read_parquet(spark, f"{sf_dir}/events.parquet").dtypes)
     ts_dtype = raw.get("ts")
     if ts_dtype not in _TS_DTYPES:
         raise ValueError(
             f"events.ts has unsupported parquet dtype {ts_dtype!r}; "
             f"expected one of {_TS_DTYPES} — the generator changed layout "
-            "again, extend _TS_DTYPES and _normalize dispatch together"
+            "again, extend _TS_DTYPES and tables._normalize_events_ts together"
         )
     phys = "long" if ts_dtype == "bigint" else ts_dtype
-    schema = (
+    return (
         f"event_id long, ts {phys}, user_id long, event_type string, "
         "value double, props string"
     )
-    return schema, ts_dtype
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` as a Structured Streaming file source, ts normalized to
     µs timestamps and the non-finite measurement contract applied,
-    exactly like the batch loader (tables.load_table)."""
-    from un_datapipeline_spark.tables import normalize_events_value
+    exactly like the batch loader (tables.load_table): the stream has
+    the probed ts dtype, so the batch dispatch applies unchanged."""
+    from un_datapipeline_spark.tables import _normalize_events_ts, normalize_events_value
 
     ensure_runtime_confs(spark)
-    schema, ts_dtype = _events_stream_schema(spark, sf_dir)
+    schema = _events_stream_schema(spark, sf_dir)
     # File stream sources need a directory; pathGlobFilter narrows the
     # listing to the events table inside the shared sf_dir.
     raw = (
@@ -92,12 +90,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    raw = normalize_events_value(raw)
-    if ts_dtype == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_dtype == "timestamp_ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw  # already TIMESTAMP
+    return _normalize_events_ts(normalize_events_value(raw))
 
 
 def run_to_memory(df: DataFrame, mode: str = "complete") -> DataFrame:

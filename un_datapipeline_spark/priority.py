@@ -26,6 +26,9 @@ NEVER_VERIFIED = (
 # driver stamp — see tools/regen_priority.py FORCE_REFRESH) lead;
 # the rest are the stalest greens, one per name family.
 STALE_REFRESH = (
+    "llm_dedup_incremental",  # forced: re-edited since last stamp
+    "llm_dedup_cluster",  # forced: re-edited since last stamp
+    "llm_canonical_select",  # forced: re-edited since last stamp
     "llm_simsearch_cosine_topk",  # forced: re-edited since last stamp
     "llm_knn_join",  # forced: re-edited since last stamp
     "llm_dedup_embedding",  # forced: re-edited since last stamp
@@ -49,12 +52,9 @@ STALE_REFRESH = (
     "graph_kcore",  # forced: re-edited since last stamp
     "graph_label_propagation",  # forced: re-edited since last stamp
     "graph_modularity",  # forced: re-edited since last stamp
-    "llm_dedup_cluster",  # forced: re-edited since last stamp
-    "llm_canonical_select",  # forced: re-edited since last stamp
     "llm_neardup_cluster",  # forced: re-edited since last stamp
     "llm_dedup_ngram_jaccard",  # forced: re-edited since last stamp
     "llm_dedup_containment",  # forced: re-edited since last stamp
-    "llm_dedup_incremental",  # forced: re-edited since last stamp
     "llm_dedup_simhash",  # forced: re-edited since last stamp
     "mm_phash_dedup",  # forced: re-edited since last stamp
     "join_runtime_bloom",  # forced: re-edited since last stamp

@@ -15,10 +15,11 @@ Hard requirements (SURVEY.md §1.2, verified empirically):
    (naive-timestamp) DuckDB oracle regardless of machine timezone.
 
 Scale posture: AQE on (coalesce + skew-join split at runtime), shuffle
-partitions sized for the local test data but overridable via
-``SPARK_GRAFT_SHUFFLE_PARTITIONS`` — on a real cluster you would leave
-the default 200+ and let AQE coalesce.  Iterative operators run their
-loops inside :class:`iteration_scope`, which pins its own width
+partitions sized for the local test data
+(``SPARK_GRAFT_SHUFFLE_PARTITIONS``) on a ``local`` master only — a
+cluster launch keeps its launcher's width (Spark's 200 unless set) and
+lets AQE coalesce.  Iterative operators run their loops inside
+:class:`iteration_scope`, which pins its own width
 (``SPARK_GRAFT_ITER_PARTITIONS``), and every materialization in the
 package goes through :func:`graft_checkpoint` / :func:`ckpt`, the one
 durability gate (``SPARK_GRAFT_CHECKPOINT_DIR``), whose ``scratch/``
@@ -33,6 +34,9 @@ import tempfile
 import uuid
 
 from pyspark.sql import SparkSession
+
+# The directory holding the package: Python workers import it from here.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNTIME_CONFS = {
     # events.ts is timestamp[ns]; read as long, convert with `ts div 1000`.
@@ -282,31 +286,37 @@ class iteration_scope(conf_scope):
             super().__exit__(*exc)
 
 
-def get_spark(
-    app_name: str = "un-datapipeline-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "un-datapipeline-spark") -> SparkSession:
     """Build (or reuse) the canonical session for tests/bench/CLI runs.
 
-    local[N] in tests; on a cluster, `master` comes from spark-submit and
-    this factory only contributes confs.
+    The launcher (spark-submit, ``PYSPARK_SUBMIT_ARGS``) owns the master
+    and the shuffle width; this factory contributes confs.  It pins
+    ``local[N]`` only when ``SPARK_GRAFT_CPUS`` names N (spark-submit
+    defaults to ``local[*]``), and applies the test-scale width
+    (``SPARK_GRAFT_SHUFFLE_PARTITIONS``, else 32) only on a ``local``
+    master whose launcher set none.  Python workers get the package root
+    on their ``PYTHONPATH``, so the worker daemon and every UDF import
+    the package whatever directory the driver runs from.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        builder = builder.master(f"local[{os.environ['SPARK_GRAFT_CPUS']}]")
     for k, v in {**RUNTIME_CONFS, **FACTORY_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    local = sc.master == "local" or sc.master.startswith("local[")
+    # sc._conf is the context's live conf; getConf() copies it entry by
+    # entry over py4j (13 ms, most of a warm get_spark call).
+    if local and not sc._conf.contains("spark.sql.shuffle.partitions"):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
+        )
     return ensure_runtime_confs(spark)

@@ -270,14 +270,14 @@ def normalize_events_value(df: DataFrame) -> DataFrame:
 # DECIMAL(38)/HUGEINT ceiling.  At 100 TB this is also the posture that
 # makes re-partitioning a no-op for results: integer partial sums merge
 # associatively, so AQE / speculative re-execution cannot change answers.
-def cents_col(col: str = "value"):
-    """``round(col*100)`` as BIGINT — exact integer cents.  Safe for the
+def cents_col():
+    """``round(value*100)`` as BIGINT — exact integer cents.  Safe for the
     whole surviving magnitude domain (|value| <= 9e15 → |cents| <= 9e17,
     10x inside int64)."""
-    return F.round(F.col(col) * 100).cast("long")
+    return F.round(F.col("value") * 100).cast("long")
 
 
-def cents_sum(col: str = "value"):
+def cents_sum():
     """Order-independent exact Σcents as DECIMAL(38,0).
 
     Output edge: on the DuckDB side a possibly-NEGATIVE sum that can
@@ -286,13 +286,13 @@ def cents_sum(col: str = "value"):
     conversion mis-rounds negatives (round-12 magneg catalog; the r11
     "division is safe" note was validated on positives only).  Bounded
     or sign-safe sums may divide directly."""
-    return F.sum(cents_col(col).cast("decimal(38,0)"))
+    return F.sum(cents_col().cast("decimal(38,0)"))
 
 
-def cents2_sum(col: str = "value"):
+def cents2_sum():
     """Exact Σcents² as DECIMAL(38,0) — the second-moment lane that
     overflows int64 per-element at surviving |value| > ~3e7."""
-    c = cents_col(col).cast("decimal(38,0)")
+    c = cents_col().cast("decimal(38,0)")
     return F.sum(c * c)
 
 
@@ -325,24 +325,24 @@ def cents_np(values):
     return pd.Series(np.copysign(r, v100)).astype("int64").astype(object)
 
 
-def cents_sql(col: str = "value") -> str:
+def cents_sql() -> str:
     """DuckDB mirror of :func:`cents_col`."""
-    return f"CAST(round({col} * 100) AS BIGINT)"
+    return "CAST(round(value * 100) AS BIGINT)"
 
 
-def cents_sum_sql(col: str = "value") -> str:
+def cents_sum_sql() -> str:
     """DuckDB mirror of :func:`cents_sum` — sum(BIGINT) is HUGEINT."""
-    return f"sum({cents_sql(col)})"
+    return f"sum({cents_sql()})"
 
 
-def cents2_sum_sql(col: str = "value") -> str:
+def cents2_sum_sql() -> str:
     """DuckDB mirror of :func:`cents2_sum` — the HUGEINT cast must happen
     BEFORE the multiply (BIGINT*BIGINT raises on overflow in DuckDB)."""
-    c = cents_sql(col)
+    c = cents_sql()
     return f"sum(CAST({c} AS HUGEINT) * CAST({c} AS HUGEINT))"
 
 
-def ngram_zip_sql(arr: str, n: str, k: int = 8, var: str = "t") -> str:
+def ngram_zip_sql(arr: str, n: str, k: int = 8) -> str:
     """Linear k-gram build for DuckDB oracles: zip of k shifted slices.
 
     The LATERAL ``array_to_string(arr[i:i+k-1])`` form copies an O(len)
@@ -363,8 +363,8 @@ def ngram_zip_sql(arr: str, n: str, k: int = 8, var: str = "t") -> str:
     (VERDICT r10 item 3 — cosmetic drift had already crept in)."""
     slices = ", ".join(f"{arr}[{i}:{n} - {k - i}]" for i in range(1, k))
     slices += f", {arr}[{k}:{n}]"
-    body = " || ' ' || ".join(f"{var}[{i}]" for i in range(1, k + 1))
-    return f"list_transform(\n      list_zip({slices}),\n      {var} -> {body})"
+    body = " || ' ' || ".join(f"t[{i}]" for i in range(1, k + 1))
+    return f"list_transform(\n      list_zip({slices}),\n      t -> {body})"
 
 
 def exact_double_sql(expr: str) -> str:
@@ -423,20 +423,20 @@ VALID_TS_LO = "1970-01-01 00:00:00"
 VALID_TS_HI = "2035-12-31 23:59:59.999999"
 
 
-def valid_ts(col: str = "ts"):
-    """Column predicate: ``col`` is inside the validity window.  NULL ts
+def valid_ts():
+    """Column predicate: ``ts`` is inside the validity window.  NULL ts
     yields NULL → row filtered, matching the SQL mirror."""
-    return F.col(col).between(
+    return F.col("ts").between(
         F.lit(VALID_TS_LO).cast("timestamp"), F.lit(VALID_TS_HI).cast("timestamp")
     )
 
 
-def valid_ts_sql(col: str = "ts") -> str:
+def valid_ts_sql() -> str:
     """The DuckDB-side mirror of :func:`valid_ts` — embed in the paired
     oracle wherever the Spark side filters, so parity holds on ANY
     corpus, warped or not."""
     return (
-        f"CAST({col} AS TIMESTAMP) BETWEEN TIMESTAMP '{VALID_TS_LO}' "
+        f"CAST(ts AS TIMESTAMP) BETWEEN TIMESTAMP '{VALID_TS_LO}' "
         f"AND TIMESTAMP '{VALID_TS_HI}'"
     )
 
@@ -508,11 +508,11 @@ def latest_event(df: DataFrame) -> DataFrame:
     return winner_per_key(df, "event_id", _EVENT_ORDER)
 
 
-def latest_event_sql(table: str = "events") -> str:
+def latest_event_sql() -> str:
     """DuckDB mirror of :func:`latest_event` — a FROM-able subquery."""
     order = ", ".join(f"{c} DESC NULLS LAST" for c in _EVENT_ORDER)
     return (
-        f"(SELECT * FROM {table} QUALIFY row_number() OVER "
+        f"(SELECT * FROM events QUALIFY row_number() OVER "
         f"(PARTITION BY event_id ORDER BY {order}) = 1)"
     )
 
@@ -526,11 +526,11 @@ def winner_document(df: DataFrame) -> DataFrame:
     ).drop("_digest")
 
 
-def winner_document_sql(table: str = "documents") -> str:
+def winner_document_sql() -> str:
     """DuckDB mirror of :func:`winner_document`."""
     order = ", ".join(f"{c} DESC NULLS LAST" for c in _DOC_ORDER)
     return (
-        f"(SELECT * FROM {table} QUALIFY row_number() OVER "
+        f"(SELECT * FROM documents QUALIFY row_number() OVER "
         f"(PARTITION BY doc_id ORDER BY {order}) = 1)"
     )
 
@@ -580,7 +580,7 @@ def winner_embedding(df: DataFrame) -> DataFrame:
     ).drop("_elsum", "_emb_nf", "_nullmask")
 
 
-def winner_embedding_sql(table: str = "embeddings") -> str:
+def winner_embedding_sql() -> str:
     """DuckDB mirror of :func:`winner_embedding` (see its docstring for
     the corrupt-vector NULL pinning and the NULL-element-free tiebreak
     rendering)."""
@@ -599,7 +599,7 @@ def winner_embedding_sql(table: str = "embeddings") -> str:
         "x -> CAST(CAST(x IS NULL AS INT) AS VARCHAR)), ',')"
     )
     return (
-        f"(SELECT * FROM {table} QUALIFY row_number() OVER "
+        "(SELECT * FROM embeddings QUALIFY row_number() OVER "
         f"(PARTITION BY vec_id ORDER BY {elsum} DESC NULLS LAST, "
         f"{emb_nf} DESC NULLS LAST, {null_mask} DESC NULLS LAST, "
         f"label DESC NULLS LAST) = 1)"
@@ -673,17 +673,17 @@ def json_usable_sql(col: str = "props") -> str:
 SIG_PREFIX_CHARS = 65536
 
 
-def capped_text(col: str = "text"):
-    """The signature prefix of ``col`` (Spark side)."""
-    return F.substring(F.col(col), 1, SIG_PREFIX_CHARS)
+def capped_text():
+    """The signature prefix of ``text`` (Spark side)."""
+    return F.substring(F.col("text"), 1, SIG_PREFIX_CHARS)
 
 
-def capped_text_sql(col: str = "text") -> str:
+def capped_text_sql() -> str:
     """DuckDB mirror of :func:`capped_text`."""
-    return f"substr({col}, 1, {SIG_PREFIX_CHARS})"
+    return f"substr(text, 1, {SIG_PREFIX_CHARS})"
 
 
-def json_long_strict_sql(col: str = "props", path: str = "$.k") -> str:
+def json_long_strict_sql() -> str:
     """Mirror of Spark ``from_json('k long')`` VALUE semantics (probed):
     only an INTEGER JSON number parses — fractional (1.5), string
     ("7"), boolean, and beyond-int64 numbers all yield NULL.  DuckDB's
@@ -691,25 +691,23 @@ def json_long_strict_sql(col: str = "props", path: str = "$.k") -> str:
     (1.5→2 by rounding, "7"→7, true→1), silently counting rows the
     engine rejects.  Callers must wrap in a json_valid/json_usable
     guard — ``json_type`` itself throws on malformed input."""
-    jt = f"json_type({col}, '{path}')"
     return (
-        f"(CASE WHEN {jt} IN ('BIGINT', 'UBIGINT') "
-        f"THEN TRY_CAST(json_extract({col}, '{path}') AS BIGINT) END)"
+        "(CASE WHEN json_type(props, '$.k') IN ('BIGINT', 'UBIGINT') "
+        "THEN TRY_CAST(json_extract(props, '$.k') AS BIGINT) END)"
     )
 
 
-def json_str_int_sql(col: str = "props", path: str = "$.k",
-                     typ: str = "INT") -> str:
+def json_str_int_sql() -> str:
     """Mirror of Spark ``try_cast(get_json_object(...) AS INT)``
     (probed): the extracted STRING parses only when it spells an
     integer — '1.5' is NULL on Spark but ROUNDS to 2 under DuckDB's
     varchar TRY_CAST, so an explicit digits regex pins the strict
     semantics.  Includes its own json_valid guard (extraction throws on
     malformed input)."""
-    ex = f"{col}->>'{path}'"
+    ex = "props->>'$.k'"
     return (
-        f"(CASE WHEN coalesce(json_valid({col}), false) THEN "
+        "(CASE WHEN coalesce(json_valid(props), false) THEN "
         f"CASE WHEN regexp_matches(coalesce({ex}, ''), "
-        f"'^\\s*[+-]?[0-9]+\\s*$') "
-        f"THEN TRY_CAST({ex} AS {typ}) END END)"
+        "'^\\s*[+-]?[0-9]+\\s*$') "
+        f"THEN TRY_CAST({ex} AS INT) END END)"
     )
