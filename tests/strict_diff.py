@@ -22,24 +22,17 @@ canonicalization (sorted columns, ``sort_values`` over all columns — so
 ndarray cells raise exactly like the driver), and then compares dtype
 kinds and exact values.  Local red ⇔ driver red is the design goal.
 
-Usage:
-    python tests/strict_diff.py            # all operators at sf0.01
-    python tests/strict_diff.py fn_math    # just one (or several) ops
+This module holds the compare only.  To run it over the registry on a
+corpus, use the sweep (one verdict line per op) or the driver mirror:
+
+    python tools/sweep_degenerate.py --sf /root/testdata/sf0.01 fn_math
+    python tests/driver_sim.py             # all operators at sf0.01
 """
 
 from __future__ import annotations
 
-import os
-import sys
-import time
-import traceback
-
 import numpy as np
 import pandas as pd
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tests.oracle_diff import TABLE_NAMES, duck_connect  # noqa: E402
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -156,68 +149,3 @@ def strict_compare(sp: pd.DataFrame, oc: pd.DataFrame) -> list[str]:
             problems.append(f"col {col}: {msg}")
     return problems
 
-
-def main() -> int:
-    from pyspark.sql import SparkSession
-
-    from un_datapipeline_spark.registry import all_operators
-
-    only = set(sys.argv[1:])
-    sf = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0.01")
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("strict-diff")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    con = duck_connect(sf)
-    ops = all_operators()
-    n_ok = n_rows_only = n_fail = 0
-    t_slow: list[tuple[float, str]] = []
-    for name, op in ops.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            spdf = op.fn(spark, sf).toPandas()
-        except Exception:
-            print(f"[FAIL] {name}: spark EXCEPTION\n{traceback.format_exc()}")
-            n_fail += 1
-            continue
-        if op.oracle is None:
-            # rows-only: reproduce the driver's canon to catch harness crashes
-            try:
-                canon(spdf)
-                print(f"[rows-only] {name}: rows={len(spdf)}")
-                n_rows_only += 1
-            except TypeError as exc:
-                print(f"[FAIL] {name}: rows-only HARNESS-CRASH: {exc}")
-                n_fail += 1
-            t_slow.append((time.time() - t0, name))
-            continue
-        try:
-            ocdf = con.execute(op.oracle).df()
-        except Exception:
-            print(f"[FAIL] {name}: oracle EXCEPTION\n{traceback.format_exc()}")
-            n_fail += 1
-            continue
-        problems = strict_compare(spdf, ocdf)
-        t_slow.append((time.time() - t0, name))
-        if problems:
-            print(f"[FAIL] {name}: rows={len(spdf)}/{len(ocdf)}")
-            for p in problems[:8]:
-                print(f"    {p}")
-            n_fail += 1
-        else:
-            print(f"[OK] {name}: rows={len(spdf)}")
-            n_ok += 1
-    print(f"TOTAL ok={n_ok} rows_only={n_rows_only} fail={n_fail}")
-    for dt, name in sorted(t_slow, reverse=True)[:10]:
-        print(f"  slow: {name} {dt:.1f}s")
-    spark.stop()
-    return 0 if n_fail == 0 else 1
-
-
-if __name__ == "__main__":
-    sys.exit(main())

@@ -28,6 +28,8 @@ from un_datapipeline_spark.operators.dedup_extras import (
     gram_overlap_sql,
 )
 from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
     cents_sum,
     exact_double_sql,
     load_table,
@@ -246,9 +248,9 @@ def llm_simsearch_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kafka-wire-format streaming source
 # ---------------------------------------------------------------------------
 
-_KAFKA_ORACLE = """
+_KAFKA_ORACLE = f"""
 SELECT event_type, count(*) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total
 FROM events
 GROUP BY event_type
 """
@@ -320,7 +322,7 @@ def stream_kafka_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ROLLUP_ORACLE = f"""
 WITH base AS (
   SELECT CAST(ts AS TIMESTAMP) AS ts, event_type,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {cents_sql("value")} AS cents
   FROM events
 )
 SELECT '15min' AS grain,
@@ -355,7 +357,7 @@ def ts_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             F.col("ts"),
             "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents_col("value").alias("cents"),
         )
         .groupBy(
             (
@@ -1082,13 +1084,13 @@ def llm_canonical_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Calendar-dimension rollup
 # ---------------------------------------------------------------------------
 
-_CALENDAR_ORACLE = """
+_CALENDAR_ORACLE = f"""
 SELECT quarter(ts)                              AS qtr,
        weekofyear(ts)                           AS iso_week,
        isodow(ts)                               AS iso_dow,
        CAST(CASE WHEN isodow(ts) >= 6 THEN 1 ELSE 0 END AS INT) AS is_weekend,
        CAST(count(*) AS BIGINT)                 AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total_value
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total_value
 FROM events
 GROUP BY 1, 2, 3, 4
 ORDER BY 1, 2, 3
@@ -1247,10 +1249,10 @@ def ts_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Seasonal decomposition (trend + day-of-week seasonal + residual)
 # ---------------------------------------------------------------------------
 
-_SEASONAL_ORACLE = """
+_SEASONAL_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS total_c
   FROM events
   GROUP BY event_type, CAST(ts AS DATE)
 ), trended AS (
@@ -1304,7 +1306,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the heavy lifting is the first groupBy's map-side
     combine over raw events."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = cents_col("value")
     daily = (
         ev.groupBy("event_type", F.to_date("ts").alias("d"))
         .agg(F.sum(cents).alias("total_c"))
@@ -1365,10 +1367,10 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rolling correlation from integer window moments
 # ---------------------------------------------------------------------------
 
-_ROLLCORR_ORACLE = """
+_ROLLCORR_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS x,
          CAST(count(*) AS BIGINT)                                 AS y
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ), mo AS (
@@ -1412,7 +1414,7 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     is row-bounded (7) and partitions are calendar×type-bounded; at
     100 TB the daily rollup's map-side combine does all heavy lifting."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = cents_col("value")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.sum(cents).alias("x"), F.count(F.lit(1)).alias("y")
     )
@@ -1462,10 +1464,10 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Day-over-day deltas and share-of-total windows
 # ---------------------------------------------------------------------------
 
-_DOD_ORACLE = """
+_DOD_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 )
 SELECT event_type, strftime(d, '%Y-%m-%d') AS day,
@@ -1494,7 +1496,7 @@ def ts_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded rollup + one lag window sharing the event_type
     partitioning."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = cents_col("value")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.sum(cents).alias("c")
     )
@@ -1514,10 +1516,10 @@ def ts_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "day")
 
 
-_SHARE_ORACLE = """
+_SHARE_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 )
 SELECT event_type, strftime(d, '%Y-%m-%d') AS day,
@@ -1547,7 +1549,7 @@ def win_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; the raw-event heavy lifting happens once in the map-side
     combined groupBy."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = cents_col("value")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.sum(cents).alias("c")
     )

@@ -18,6 +18,7 @@ from un_datapipeline_spark.tables import (
     cents2_sum,
     cents2_sum_sql,
     cents_col,
+    cents_sql,
     cents_sum_sql,
     load_table,
 )
@@ -29,18 +30,18 @@ from un_datapipeline_spark.tables import (
 # sum of `price*(1-d)*(1+t)` has a 6-decimal true value whose rounding
 # at 4dp sits on a .5 boundary ~1% of the time per group, where
 # summation-order ulps flip the digit (observed in ts_resample_ffill).
-_PRICING_SUMMARY_ORACLE = """
+_PRICING_SUMMARY_ORACLE = f"""
 SELECT l_returnflag, l_linestatus,
        ROUND(sum(CAST(round(l_quantity) AS BIGINT)) / 1.0, 4)        AS sum_qty,
-       ROUND(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0, 4) AS sum_base_price,
-       ROUND(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-               * (100 - CAST(round(l_discount * 100) AS BIGINT))) / 10000.0, 4) AS sum_disc_price,
-       ROUND(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-               * (100 - CAST(round(l_discount * 100) AS BIGINT))
-               * (100 + CAST(round(l_tax * 100) AS BIGINT))) / 1000000.0, 4) AS sum_charge,
+       ROUND(sum({cents_sql("l_extendedprice")}) / 100.0, 4) AS sum_base_price,
+       ROUND(sum({cents_sql("l_extendedprice")}
+               * (100 - {cents_sql("l_discount")})) / 10000.0, 4) AS sum_disc_price,
+       ROUND(sum({cents_sql("l_extendedprice")}
+               * (100 - {cents_sql("l_discount")})
+               * (100 + {cents_sql("l_tax")})) / 1000000.0, 4) AS sum_charge,
        ROUND(sum(CAST(round(l_quantity) AS BIGINT)) / (1.0 * count(*)), 6) AS avg_qty,
-       ROUND(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / (100.0 * count(*)), 6) AS avg_price,
-       ROUND(sum(CAST(round(l_discount * 100) AS BIGINT)) / (100.0 * count(*)), 6) AS avg_disc,
+       ROUND(sum({cents_sql("l_extendedprice")}) / (100.0 * count(*)), 6) AS avg_price,
+       ROUND(sum({cents_sql("l_discount")}) / (100.0 * count(*)), 6) AS avg_disc,
        count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2000-12-01'
@@ -62,9 +63,9 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer scaled-cents lanes (exact at any summation order; a long
     # sum overflows only past ~$9e14 of charge — use DecimalType there)
     qty_i = F.round("l_quantity").cast("long")
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
-    tax_c = F.round(F.col("l_tax") * 100).cast("long")
+    price_c = cents_col("l_extendedprice")
+    disc_c = cents_col("l_discount")
+    tax_c = cents_col("l_tax")
     n = F.count(F.lit(1))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
@@ -204,17 +205,17 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SAME closed-form expressions over identical operands — stddev/var/
 # corr/covar become bit-identical instead of depending on each engine's
 # streaming-moments accumulation order.
-_STATS_MOMENTS = """
+_STATS_MOMENTS = f"""
   SELECT l_returnflag,
          count(*)                                                   AS n,
          sum(CAST(round(l_quantity) AS BIGINT))                     AS sq,
          sum(CAST(round(l_quantity) AS BIGINT)
            * CAST(round(l_quantity) AS BIGINT))                     AS sqq,
-         sum(CAST(round(l_extendedprice * 100) AS BIGINT))          AS sp,
+         sum({cents_sql("l_extendedprice")})          AS sp,
          sum(CAST(round(l_extendedprice * 100) AS DOUBLE)
            * CAST(round(l_extendedprice * 100) AS DOUBLE))          AS spp,
          sum(CAST(round(l_quantity) AS BIGINT)
-           * CAST(round(l_extendedprice * 100) AS BIGINT))          AS sqp,
+           * {cents_sql("l_extendedprice")})          AS sqp,
          arg_min(l_orderkey, l_extendedprice)                       AS cheapest_order,
          arg_max(l_orderkey, l_extendedprice)                       AS priciest_order
   FROM lineitem
@@ -249,7 +250,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01/0.1)."""
     li = load_table(spark, sf_dir, "lineitem")
     q = F.round("l_quantity").cast("long")
-    p = F.round(F.col("l_extendedprice") * 100).cast("long")
+    p = cents_col("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(q).alias("sq"),
@@ -530,10 +531,10 @@ def agg_freq_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WEIGHTED_ORACLE = """
+_WEIGHTED_ORACLE = f"""
 SELECT l_returnflag,
        CAST(sum(l_quantity) AS BIGINT) AS total_qty,
-       ROUND(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * CAST(l_quantity AS BIGINT))
+       ROUND(sum({cents_sql("l_extendedprice")} * CAST(l_quantity AS BIGINT))
              / (100.0 * sum(CAST(l_quantity AS BIGINT))), 6) AS wavg_price,
        ROUND(sum(CAST(round(l_discount * 10000) AS BIGINT) * CAST(l_quantity AS BIGINT))
              / (10000.0 * sum(CAST(l_quantity AS BIGINT))), 6) AS wavg_disc
@@ -556,7 +557,7 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per (flag, partial) — nothing here grows with scale."""
     li = load_table(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("long")
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
+    price_c = cents_col("l_extendedprice")
     disc_bp = F.round(F.col("l_discount") * 10000).cast("long")
     return (
         li.groupBy("l_returnflag")
@@ -712,7 +713,7 @@ def agg_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(cents_col()).alias("s"),
+            F.sum(cents_col("value")).alias("s"),
             cents2_sum().alias("ss"),
         )
     )
@@ -830,12 +831,12 @@ def agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FILTER_CLAUSE_ORACLE = """
+_FILTER_CLAUSE_ORACLE = f"""
 SELECT o_orderstatus,
        count(*)                                                  AS n_all,
        count(*) FILTER (WHERE o_orderpriority = '1-URGENT')      AS n_urgent,
        count(*) FILTER (WHERE o_orderpriority = '5-LOW')         AS n_low,
-       CAST(COALESCE(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+       CAST(COALESCE(sum({cents_sql("o_totalprice")})
               FILTER (WHERE o_orderpriority = '1-URGENT'), 0) AS BIGINT)
                                                                  AS urgent_cents,
        count(DISTINCT o_custkey) FILTER (WHERE o_totalprice > 200000)
@@ -859,7 +860,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups with no urgent orders (SQL FILTER yields NULL on an empty
     set, in both engines)."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = cents_col("o_totalprice")
     urgent = F.col("o_orderpriority") == "1-URGENT"
     return (
         o.groupBy("o_orderstatus")
@@ -1172,10 +1173,10 @@ def agg_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Weighted median / weighted percentiles (exact, running-weight formulation)
 # ---------------------------------------------------------------------------
 
-_WMEDIAN_ORACLE = """
+_WMEDIAN_ORACLE = f"""
 WITH w AS (
   SELECT l_returnflag,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
+         {cents_sql("l_extendedprice")} AS price_c,
          CAST(l_quantity AS BIGINT) AS wt
   FROM lineitem
 ), cum AS (
@@ -1221,7 +1222,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     w = li.select(
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_c"),
+        cents_col("l_extendedprice").alias("price_c"),
         F.col("l_quantity").cast("long").alias("wt"),
     )
     win = (

@@ -19,15 +19,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import scratch_dir
 from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
     json_usable_sql,
     load_table,
     valid_ts,
     valid_ts_sql,
 )
-
-def _cents() -> F.Column:
-    # classic-mode F.col needs an active SparkContext, so build lazily
-    return F.round(F.col("value") * 100).cast("long")
 
 _COHORT_ORACLE = """
 WITH first AS (
@@ -94,7 +92,7 @@ def agg_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INTERP_ORACLE = f"""
 WITH hourly AS (
   SELECT date_trunc('hour', ts) AS hour, event_type,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events WHERE {valid_ts_sql()} GROUP BY 1, 2
 ), bounds AS (
   SELECT event_type, min(hour) AS lo, max(hour) AS hi FROM hourly GROUP BY event_type
@@ -157,7 +155,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").where(valid_ts())
     hourly = e.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(F.sum(_cents()).alias("c"))
+    ).agg(F.sum(cents_col("value")).alias("c"))
     bounds = hourly.groupBy("event_type").agg(
         F.min("hour").alias("lo"), F.max("hour").alias("hi")
     )
@@ -357,10 +355,10 @@ def sink_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OHLC_ORACLE = """
+_OHLC_ORACLE = f"""
 WITH base AS (
   SELECT event_type, date_trunc('hour', ts) AS hour, ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
+         {cents_sql("value")} AS cents,
          row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
                             ORDER BY ts, event_id) AS ra,
          row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
@@ -399,7 +397,7 @@ def ts_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("hour"),
         "ts",
         "event_id",
-        _cents().alias("cents"),
+        cents_col("value").alias("cents"),
     )
     wa = Window.partitionBy("event_type", "hour").orderBy("ts", "event_id")
     wd = Window.partitionBy("event_type", "hour").orderBy(
@@ -603,10 +601,10 @@ def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUSUM_ORACLE = """
+_CUSUM_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ), cum AS (
   SELECT event_type, day, c,
@@ -653,7 +651,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.sum(_cents()).alias("c"))
+    ).agg(F.sum(cents_col("value")).alias("c"))
     w = Window.partitionBy("event_type").orderBy("day")
     cum = daily.select(
         "event_type",
@@ -742,10 +740,10 @@ def fn_collation_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLREG_ORACLE = """
+_ROLLREG_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ), idx AS (
   SELECT event_type, day, y,
@@ -782,7 +780,7 @@ def win_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-day frames; one sort serves all five moments."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum(_cents()).alias("y")
+        F.sum(cents_col("value")).alias("y")
     )
     wo = Window.partitionBy("event_type").orderBy("day")
     idx = daily.select(
@@ -818,9 +816,9 @@ def win_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECILE_ORACLE = """
+_DECILE_ORACLE = f"""
 WITH cents AS (
-  SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS c
+  SELECT o_orderkey, {cents_sql("o_totalprice")} AS c
   FROM orders
 ), banded AS (
   -- NULLS LAST pinned (round 9, class 3): Spark defaults NULLS FIRST
@@ -853,7 +851,7 @@ def agg_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     cents = o.select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+        cents_col("o_totalprice").alias("c"),
     )
     banded = cents.select(
         "c",

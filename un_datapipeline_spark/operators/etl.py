@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import _hadoop_path, conf_scope, scratch_dir
 from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
     cents_sum,
     json_long_strict_sql,
     json_usable_sql,
@@ -475,7 +477,7 @@ def etl_quarantine_bad_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDC snapshot diff
 # ---------------------------------------------------------------------------
 
-_CDC_ORACLE = """
+_CDC_ORACLE = f"""
 WITH old AS (
   SELECT o_orderkey, o_totalprice FROM orders
   WHERE o_orderdate < TIMESTAMP '1997-07-01'
@@ -490,8 +492,8 @@ WITH old AS (
               WHEN n.o_orderkey IS NULL THEN 'delete'
               WHEN o.o_totalprice <> n.o_totalprice THEN 'update'
               ELSE 'unchanged' END AS change_type,
-         COALESCE(CAST(round(n.o_totalprice * 100) AS BIGINT), 0)
-           - COALESCE(CAST(round(o.o_totalprice * 100) AS BIGINT), 0) AS delta_c
+         COALESCE({cents_sql("n.o_totalprice")}, 0)
+           - COALESCE({cents_sql("o.o_totalprice")}, 0) AS delta_c
   FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
 )
 SELECT change_type,
@@ -537,7 +539,6 @@ def etl_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = old.alias("o").join(
         new.alias("n"), F.col("o.o_orderkey") == F.col("n.o_orderkey"), "full_outer"
     )
-    cents = lambda c: F.round(c * 100).cast("long")  # noqa: E731
     diff = j.select(
         F.coalesce(F.col("o.o_orderkey"), F.col("n.o_orderkey")).alias("k"),
         F.when(F.col("o.o_orderkey").isNull(), "insert")
@@ -546,8 +547,8 @@ def etl_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("unchanged")
         .alias("change_type"),
         (
-            F.coalesce(cents(F.col("n.o_totalprice")), F.lit(0))
-            - F.coalesce(cents(F.col("o.o_totalprice")), F.lit(0))
+            F.coalesce(cents_col("n.o_totalprice"), F.lit(0))
+            - F.coalesce(cents_col("o.o_totalprice"), F.lit(0))
         ).alias("delta_c"),
     )
     return (
@@ -567,11 +568,12 @@ def etl_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Partition backfill (dynamic partition overwrite)
 # ---------------------------------------------------------------------------
 
-_BACKFILL_ORACLE = """
+_BACKFILLED_VALUE = """(CASE WHEN CAST(ts AS DATE) = DATE '2024-01-05'
+                      THEN value * 2 ELSE value END)"""
+_BACKFILL_ORACLE = f"""
 SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS event_date,
        CAST(count(*) AS BIGINT)               AS n,
-       CAST(sum(CAST(round((CASE WHEN CAST(ts AS DATE) = DATE '2024-01-05'
-                      THEN value * 2 ELSE value END) * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql(_BACKFILLED_VALUE)}) AS BIGINT)
          / 100.0 AS total_value
 FROM events
 GROUP BY 1
@@ -619,7 +621,7 @@ def etl_backfill_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TIME_TRAVEL_ORACLE = """
+_TIME_TRAVEL_ORACLE = f"""
 SELECT
   CAST(count(*) FILTER (o_orderkey % 10 <> 0) AS BIGINT) AS v1_rows,
   CAST(count(*) AS BIGINT) AS v2_rows,
@@ -627,9 +629,9 @@ SELECT
   CAST(count(*) FILTER (o_orderkey % 7 = 0 AND o_orderkey % 10 <> 0) AS BIGINT)
     AS rows_changed,
   CAST(sum(CASE WHEN o_orderkey % 10 <> 0
-                THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT)
+                THEN {cents_sql("o_totalprice")} END) AS BIGINT)
     AS v1_cents,
-  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS v2_cents
+  CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS v2_cents
 FROM orders
 """
 
@@ -651,7 +653,7 @@ def etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents_col("o_totalprice").alias("cents"),
     )
     v1 = o.filter(F.col("o_orderkey") % 10 != 0).withColumn("version", F.lit(1))
     v2 = o.withColumn(
@@ -741,7 +743,7 @@ def etl_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DATE_SPINE_ORACLE = """
+_DATE_SPINE_ORACLE = f"""
 WITH bounds AS (
   SELECT CAST(min(o_orderdate) AS DATE) AS lo, CAST(max(o_orderdate) AS DATE) AS hi
   FROM orders
@@ -749,7 +751,7 @@ WITH bounds AS (
   SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS d FROM bounds
 ), daily AS (
   SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS n_orders,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS cents
   FROM orders GROUP BY 1
 )
 SELECT s.d,
@@ -787,7 +789,7 @@ def etl_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))).alias("d")
     )
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = cents_col("o_totalprice")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("n_orders"), F.sum(cents).alias("cents")
     )
@@ -808,14 +810,14 @@ def etl_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VACUUM_ORACLE = """
+_VACUUM_ORACLE = f"""
 SELECT
   CAST(3 AS BIGINT)                                   AS versions_before,
   CAST(1 AS BIGINT)                                   AS versions_removed,
   CAST(2 AS BIGINT)                                   AS versions_after,
   CAST(count(*) FILTER (o_orderkey % 10 <> 0) AS BIGINT) AS oldest_removed_rows,
   CAST(count(*) AS BIGINT)                            AS live_rows,
-  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS live_cents
+  CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS live_cents
 FROM orders
 """
 
@@ -836,7 +838,7 @@ def etl_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents_col("o_totalprice").alias("cents"),
     )
     v1 = o.filter(F.col("o_orderkey") % 10 != 0).withColumn("version", F.lit(1))
     v2 = o.withColumn("version", F.lit(2))
@@ -873,10 +875,10 @@ def etl_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PIPELINE_COMPOSE_ORACLE = """
+_PIPELINE_COMPOSE_ORACLE = f"""
 WITH staged AS (
   SELECT l_returnflag, l_linestatus,
-         CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS cents
+         {cents_sql("l_extendedprice * (1 - l_discount)")} AS cents
   FROM lineitem
   WHERE l_quantity > 10
 )
@@ -912,9 +914,7 @@ def etl_pipeline_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda df: df.groupBy("l_returnflag", "l_linestatus").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
-                    F.round(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                    ).cast("long")
+                    cents_col(F.col("l_extendedprice") * (1 - F.col("l_discount")))
                 ).alias("revenue_cents"),
             ),
             "revenue_rollup",
@@ -929,10 +929,10 @@ def etl_pipeline_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INCR_WATERMARK_ORACLE = """
+_INCR_WATERMARK_ORACLE = f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
+       CAST(sum({cents_sql("value")}) AS BIGINT) AS cents,
        max(CAST(ts AS TIMESTAMP)) AS max_ts
 FROM events
 GROUP BY event_type
@@ -961,7 +961,7 @@ def etl_incremental_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("c"),
+        cents_col("value").alias("c"),
     )
     state_dir = scratch_dir(spark, "udps_incr_")
     # --- run 1: everything up to the median-ish cutoff -------------------

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import (
+    cents_sql,
     json_long_strict_sql,
     json_str_int_sql,
     json_usable_sql,
@@ -792,9 +793,9 @@ def fn_uuid_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # can never fall under any threshold, so with >10% NULL prices the 90%
 # target is unreachable and the doubling loop overflows BIGINT.  Both
 # sides use the non-NULL count as the denominator.
-_SQL_SCRIPT_ORACLE = """
+_SQL_SCRIPT_ORACLE = f"""
 WITH cents AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
+  SELECT {cents_sql("o_totalprice")} AS c FROM orders
   WHERE o_totalprice IS NOT NULL
 ), tot AS (
   SELECT count(*) AS n FROM cents
@@ -832,7 +833,7 @@ def fn_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     just its syntax."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("script_orders")
     return spark.sql(
-        """
+        f"""
         BEGIN
           DECLARE thr BIGINT DEFAULT 1048576;
           DECLARE n_total BIGINT;
@@ -844,7 +845,7 @@ def fn_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             SET thr = thr * 2;
             SET n_below = (
               SELECT count(*) FROM script_orders
-              WHERE CAST(round(o_totalprice * 100) AS BIGINT) <= thr
+              WHERE {cents_sql("o_totalprice")} <= thr
             );
           END WHILE;
           SELECT thr AS threshold_cents,
@@ -856,10 +857,10 @@ def fn_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_VARS_ORACLE = """
+_SQL_VARS_ORACLE = f"""
 SELECT '1-URGENT' AS prio,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS cents
 FROM orders WHERE o_orderpriority = '1-URGENT'
 """
 
@@ -877,10 +878,10 @@ def fn_sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("DECLARE OR REPLACE VARIABLE target_prio STRING")
     spark.sql("SET VAR target_prio = '1-URGENT'")
     return spark.sql(
-        """
+        f"""
         EXECUTE IMMEDIATE
           'SELECT ? AS prio, count(*) AS n,
-                  sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+                  sum({cents_sql("o_totalprice")}) AS cents
            FROM var_orders WHERE o_orderpriority = ?'
           USING target_prio, target_prio
         """
@@ -1043,14 +1044,14 @@ def fn_json_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parent(k) = floor(k / 2), so depth grows as log2(n) and the recursive
 # join is a plain EQUI-join on the derived parent key — a hash join per
 # iteration, never a nested loop.
-_RECURSIVE_CTE_SQL = """
+_RECURSIVE_CTE_SQL = f"""
 WITH RECURSIVE chain AS (
   SELECT s_suppkey AS k, 0 AS depth,
-         CAST(round(s_acctbal * 100) AS BIGINT) AS cents
+         {cents_sql("s_acctbal")} AS cents
   FROM rc_supplier WHERE s_suppkey = 1
   UNION ALL
   SELECT s.s_suppkey AS k, c.depth + 1 AS depth,
-         CAST(round(s.s_acctbal * 100) AS BIGINT) AS cents
+         {cents_sql("s.s_acctbal")} AS cents
   FROM rc_supplier s JOIN chain c
     ON CAST(FLOOR(s.s_suppkey / 2) AS BIGINT) = c.k
 )
@@ -1090,10 +1091,10 @@ def fn_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_RECURSIVE_CTE_SQL)
 
 
-_PARAMS_ORACLE = """
+_PARAMS_ORACLE = f"""
 SELECT o_orderpriority,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
          AS cents
 FROM orders
 WHERE o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1996-01-01'
@@ -1115,10 +1116,10 @@ def fn_params_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("param_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                count(*) AS n,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+               sum({cents_sql("o_totalprice")}) AS cents
         FROM IDENTIFIER(:tbl)
         WHERE o_orderdate >= :lo AND o_orderdate < :hi
         GROUP BY o_orderpriority ORDER BY o_orderpriority
@@ -1195,11 +1196,11 @@ def fn_month_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One SQL text, executed verbatim by BOTH engines (the fn_recursive_cte
 # contract): GROUP BY ALL infers the grouping set from the non-aggregate
 # select items, ORDER BY ALL sorts by every output column left-to-right.
-_GBALL_SQL = """
+_GBALL_SQL = f"""
 SELECT l_returnflag, l_linestatus,
        CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT)
          AS price_cents
 FROM gba_lineitem
 GROUP BY ALL ORDER BY ALL

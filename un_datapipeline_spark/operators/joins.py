@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import ckpt, conf_scope, scratch_dir
 from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
     cents_sum,
     latest_event,
     latest_event_sql,
@@ -343,11 +345,11 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Semi-join reduction (bloom-filter-style fact prefilter)
 # ---------------------------------------------------------------------------
 
-_PREFILTER_ORACLE = """
+_PREFILTER_ORACLE = f"""
 SELECT n.n_name,
        count(*) AS n_items,
-       ROUND(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-               * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) / 10000.0, 4)
+       ROUND(sum({cents_sql("l.l_extendedprice")}
+               * (100 - {cents_sql("l.l_discount")})) / 10000.0, 4)
          AS revenue
 FROM lineitem l
 JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -404,8 +406,8 @@ def join_prefilter_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
 
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
+    price_c = cents_col("l_extendedprice")
+    disc_c = cents_col("l_discount")
     return (
         li_filt.join(o_filt, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(asia_cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -421,7 +423,7 @@ def join_prefilter_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Null-safe equality join
 # ---------------------------------------------------------------------------
 
-_NULLSAFE_ORACLE = """
+_NULLSAFE_ORACLE = f"""
 WITH a AS (
   SELECT o_orderkey,
          CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_orderpriority END AS pri,
@@ -434,7 +436,7 @@ WITH a AS (
 )
 SELECT coalesce(a.pri, '<null>') AS pri,
        count(*) AS n,
-       ROUND(sum(CAST(round(a.o_totalprice * 100) AS BIGINT)) / 100.0, 4) AS total
+       ROUND(sum({cents_sql("a.o_totalprice")}) / 100.0, 4) AS total
 FROM a JOIN b ON a.pri IS NOT DISTINCT FROM b.pri
 GROUP BY coalesce(a.pri, '<null>')
 """
@@ -463,7 +465,7 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(pri.alias("pri_b"))
         .distinct()
     )
-    price_c = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_c = cents_col("o_totalprice")
     return (
         a.join(F.broadcast(b), a.pri_a.eqNullSafe(b.pri_b))
         .groupBy(F.coalesce("pri_a", F.lit("<null>")).alias("pri"))
@@ -474,10 +476,10 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_ORACLE = """
+_DPP_ORACLE = f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total_value
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total_value
 FROM events
 WHERE isodow(ts) <= 2
 GROUP BY event_type
@@ -771,7 +773,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Point-in-time join against an SCD2 dimension
 # ---------------------------------------------------------------------------
 
-_SCD2_PIT_ORACLE = """
+_SCD2_PIT_ORACLE = f"""
 WITH dim AS (
   SELECT c_custkey AS key, c_mktsegment AS segment,
          TIMESTAMP '2024-01-01 00:00:00' AS valid_from,
@@ -785,7 +787,7 @@ WITH dim AS (
 )
 SELECT d.segment,
        CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT) AS cents,
+       CAST(sum({cents_sql("e.value")}) AS BIGINT) AS cents,
        CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
 FROM events e JOIN dim d
   ON e.user_id = d.key
@@ -842,7 +844,7 @@ def join_scd2_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("segment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(cents_col("value"))
             .cast("long")
             .alias("cents"),
             F.countDistinct("user_id").cast("long").alias("n_users"),
@@ -892,11 +894,7 @@ def join_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                ).cast("long")
-            )
+            F.sum(cents_col(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
             .cast("long")
             .alias("revenue_cents"),
         )

@@ -259,9 +259,9 @@ def shingle_sets(d: DataFrame) -> DataFrame:
 
 def _signatures_from_sets(sets: DataFrame) -> DataFrame:
     """Minhash signatures derived from materialized shingle sets: explode
-    the cached sets back to (doc_id, shingle) rows and run the identical
-    min-over-xxhash64 aggregate — same elements, same hashes, same mins
-    as :func:`minhash_signatures` (pinned bitwise by
+    the cached sets back to (doc_id, shingle) rows and feed them to
+    :func:`_signature_agg`, the aggregate :func:`minhash_signatures` also
+    runs — same elements, same hashes, same mins (pinned bitwise by
     test_signatures_from_sets_match_aggregate_path), but fed from the
     checkpoint instead of a second corpus shingling.
 
@@ -280,25 +280,21 @@ def _signatures_from_sets(sets: DataFrame) -> DataFrame:
     and silently shadows the hash index — every h_i collapses to one
     column (caught by the bitwise pin
     test_signatures_from_sets_match_aggregate_path)."""
-    return (
-        sets.select("doc_id", F.explode("sh").alias("shingle"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-                for i in range(N_HASHES)
-            ]
-        )
-    )
+    return _signature_agg(sets.select("doc_id", F.explode("sh").alias("shingle")))
 
 
 def minhash_signatures(d: DataFrame) -> DataFrame:
-    """One row per doc: minhash_i = min over shingles of xxhash64(i ∥ s).
+    """One row per doc of ``d``, its signature over a fresh shingling."""
+    return _signature_agg(_shingled(d))
+
+
+def _signature_agg(rows: DataFrame) -> DataFrame:
+    """The MinHash signature of (doc_id, shingle) rows: one row per doc,
+    h_i = min over its shingles of xxhash64(i ∥ shingle).
 
     A single groupBy computes all N_HASHES mins in one shuffle; signature
-    size is constant per doc regardless of text length.
-    """
-    return _shingled(d).groupBy("doc_id").agg(
+    size is constant per doc regardless of text length."""
+    return rows.groupBy("doc_id").agg(
         *[
             F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
             for i in range(N_HASHES)

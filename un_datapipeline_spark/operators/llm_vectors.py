@@ -93,13 +93,13 @@ def valid_vec_sql(col: str = "embedding") -> str:
     )
 
 
-def _vec_matrix(pdf, vec_col: str):
-    """(keep_mask, float64 matrix) for one Arrow batch: rows whose cell
-    is None, dimension-ragged, or carries a NaN-coerced NULL element are
-    dropped from the matrix.  numpy coerces a None element to NaN under
-    dtype=float64, so a single corrupt cell would otherwise poison every
-    dot product in the batch (or crash np.array outright on a whole-NULL
-    cell: 'inhomogeneous shape').
+def _vec_matrix(pdf):
+    """(keep_mask, float64 matrix) of one Arrow batch's ``embedding``
+    column: rows whose cell is None, dimension-ragged, or carries a
+    NaN-coerced NULL element are dropped from the matrix.  numpy coerces
+    a None element to NaN under dtype=float64, so a single corrupt cell
+    would otherwise poison every dot product in the batch (or crash
+    np.array outright on a whole-NULL cell: 'inhomogeneous shape').
 
     Vectorized (round 10, VERDICT r09 item 4): the None/length mask is
     cheap python-per-cell, but the float conversion and NaN scan are ONE
@@ -108,7 +108,7 @@ def _vec_matrix(pdf, vec_col: str):
     scale on the hot side of the similarity scan."""
     import numpy as np
 
-    cells = list(pdf[vec_col])
+    cells = list(pdf["embedding"])
     dim = next((len(c) for c in cells if c is not None), 0)
     keep = np.fromiter(
         (c is not None and len(c) == dim for c in cells), bool, len(cells)
@@ -221,7 +221,7 @@ def probe_search(
         for pdf in batches:
             if pdf.empty:
                 continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive NULL guard
+            vkeep, b_mat = _vec_matrix(pdf)  # defensive NULL guard
             if extra_cols:  # a NULL extra arrives as NaN: drop it too
                 xok = pdf[list(extra_cols)].notna().all(axis=1).to_numpy()
                 b_mat, vkeep = b_mat[xok[vkeep]], vkeep & xok
@@ -758,7 +758,7 @@ def llm_vector_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            vkeep, x = _vec_matrix(pdf, "embedding")  # defensive
+            vkeep, x = _vec_matrix(pdf)  # defensive
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)[vkeep]
             if x.shape[0] == 0:
                 continue

@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import load_table
+from un_datapipeline_spark.tables import cents_col, cents_sql, load_table
 
 _PIVOT_ORACLE = """
 SELECT l_returnflag,
@@ -94,11 +94,11 @@ def fn_explode_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "pos", F.round(F.col("raw").cast("double"), 6).alias("el"))
 
 
-_TRANSPOSE_ORACLE = """
+_TRANSPOSE_ORACLE = f"""
 WITH s AS (
   SELECT l_returnflag AS f,
          ROUND(sum(l_quantity), 4) AS sum_qty,
-         ROUND(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0, 4)
+         ROUND(sum({cents_sql("l_extendedprice")}) / 100.0, 4)
            AS sum_price,
          CAST(count(*) AS DOUBLE) AS n_rows
   FROM lineitem GROUP BY l_returnflag
@@ -140,7 +140,7 @@ def reshape_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = li.groupBy(F.col("l_returnflag").alias("f")).agg(
         F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
         F.round(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / 100.0,
+            F.sum(cents_col("l_extendedprice")) / 100.0,
             4,
         ).alias("sum_price"),
         F.count(F.lit(1)).cast("double").alias("n_rows"),

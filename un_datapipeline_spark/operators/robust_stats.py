@@ -16,16 +16,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import load_table
+from un_datapipeline_spark.tables import cents_col, cents_sql, load_table
 
 
-def _cents() -> F.Column:
-    return F.round(F.col("value") * 100).cast("long")
-
-
-_MAD_ORACLE = """
+_MAD_ORACLE = f"""
 WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events
+  SELECT event_type, {cents_sql("value")} AS cents FROM events
 ), med AS (
   SELECT event_type, quantile_cont(cents, 0.5) AS med FROM base GROUP BY event_type
 ), dev AS (
@@ -58,7 +54,7 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-style, so the plan is two shuffles by event_type at any
     scale."""
     e = load_table(spark, sf_dir, "events")
-    base = e.select("event_type", _cents().alias("cents"))
+    base = e.select("event_type", cents_col("value").alias("cents"))
     med = base.groupBy("event_type").agg(
         F.percentile("cents", F.lit(0.5)).alias("med")
     )
@@ -85,10 +81,10 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_THEILSEN_ORACLE = """
+_THEILSEN_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ), idx AS (
   SELECT event_type, c,
@@ -120,7 +116,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so both engines median identical doubles."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum(_cents()).alias("c")
+        F.sum(cents_col("value")).alias("c")
     )
     w = Window.partitionBy("event_type").orderBy("day")
     idx = daily.select(
@@ -147,10 +143,10 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ACF_ORACLE = """
+_ACF_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ), tot AS (
   SELECT event_type, CAST(sum(c) AS BIGINT) // CAST(count(*) AS BIGINT) AS m
@@ -193,7 +189,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum(_cents()).alias("c")
+        F.sum(cents_col("value")).alias("c")
     )
     tot = daily.groupBy("event_type").agg(
         F.expr("sum(c) DIV count(*)").alias("m")
@@ -287,10 +283,10 @@ def agg_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PARETO_ORACLE = """
+_PARETO_ORACLE = f"""
 WITH rev AS (
   SELECT l_partkey,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT) AS cents
   FROM lineitem GROUP BY l_partkey
 ), ranked AS (
   SELECT l_partkey, cents,
@@ -323,7 +319,7 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents DESC, partkey) order makes every prefix deterministic."""
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("cents")
+        F.sum(cents_col("l_extendedprice")).alias("cents")
     )
     w = Window.orderBy(F.desc("cents"), "l_partkey").rowsBetween(
         Window.unboundedPreceding, 0
@@ -345,9 +341,9 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MWU_ORACLE = """
+_MWU_ORACLE = f"""
 WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
+  SELECT event_type, {cents_sql("value")} AS v,
          CAST(user_id % 2 = 0 AS INT) AS is_a
   FROM events
   WHERE value IS NOT NULL
@@ -401,7 +397,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     base = e.filter(F.col("value").isNotNull()).select(
         "event_type",
-        _cents().alias("v"),
+        cents_col("value").alias("v"),
         (F.col("user_id") % 2 == 0).cast("int").alias("is_a"),
     )
     vals = base.groupBy("event_type", "v").agg(
@@ -453,9 +449,9 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KS_ORACLE = """
+_KS_ORACLE = f"""
 WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
+  SELECT event_type, {cents_sql("value")} AS v,
          CAST(user_id % 2 = 0 AS INT) AS is_a
   FROM events
   WHERE value IS NOT NULL
@@ -505,7 +501,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     base = e.filter(F.col("value").isNotNull()).select(
         "event_type",
-        _cents().alias("v"),
+        cents_col("value").alias("v"),
         (F.col("user_id") % 2 == 0).cast("int").alias("is_a"),
     )
     vals = base.groupBy("event_type", "v").agg(
@@ -640,10 +636,10 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LORENZ_ORACLE = """
+_LORENZ_ORACLE = f"""
 WITH rev AS (
   SELECT c.c_custkey, n.n_name,
-         CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)), 0)
+         CAST(coalesce(sum({cents_sql("o.o_totalprice")}), 0)
               AS BIGINT) AS cents
   FROM customer c
   JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -684,7 +680,7 @@ def agg_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "n_name")
         .agg(
             F.coalesce(
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")),
+                F.sum(cents_col("o_totalprice")),
                 F.lit(0),
             ).alias("cents")
         )
@@ -706,10 +702,10 @@ def agg_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HHI_ORACLE = """
+_HHI_ORACLE = f"""
 WITH rev AS (
   SELECT n.n_name, c.c_custkey,
-         CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({cents_sql("o.o_totalprice")}) AS BIGINT) AS cents
   FROM orders o
   JOIN customer c ON o.o_custkey = c.c_custkey
   JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -744,7 +740,7 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", "c_custkey")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+            F.sum(cents_col("o_totalprice")).alias("cents")
         )
     )
     # Σcents² overflows BIGINT at scale (probed: ANSI long-overflow at
@@ -871,10 +867,10 @@ def agg_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OLS_ORACLE = """
+_OLS_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS y
   FROM events GROUP BY 1, 2
 ), idx AS (
   SELECT event_type, y,
@@ -920,7 +916,7 @@ def agg_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregable everywhere."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum(_cents()).alias("y")
+        F.sum(cents_col("value")).alias("y")
     )
     w = Window.partitionBy("event_type").orderBy("day")
     idx = daily.select(
@@ -978,10 +974,10 @@ def agg_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hampel filter (rolling median ± k·MAD outlier detection)
 # ---------------------------------------------------------------------------
 
-_HAMPEL_ORACLE = """
+_HAMPEL_ORACLE = f"""
 WITH c AS (
   SELECT event_type, ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {cents_sql("value")} AS cents
   FROM events
   WHERE value IS NOT NULL
 ), fr1 AS (
@@ -1056,7 +1052,7 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents_col("value").alias("cents"),
     )
     w = (
         Window.partitionBy("event_type")
@@ -1099,10 +1095,10 @@ def ts_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Trimmed / winsorized means
 # ---------------------------------------------------------------------------
 
-_TRIMMED_ORACLE = """
+_TRIMMED_ORACLE = f"""
 WITH c AS (
   SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {cents_sql("value")} AS cents
   FROM events
   WHERE value IS NOT NULL
 ), ranked AS (
@@ -1158,7 +1154,7 @@ def agg_trimmed_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("value").isNotNull()).select(
         "event_type",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents_col("value").alias("cents"),
     )
     wr = Window.partitionBy("event_type").orderBy("cents", "event_id")
     wn = Window.partitionBy("event_type")

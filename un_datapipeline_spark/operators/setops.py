@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import load_table
+from un_datapipeline_spark.tables import cents_col, cents_sql, load_table
 
 _DISTINCT_ORACLE = """
 SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
@@ -136,7 +136,7 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.exceptAll(b)
 
 
-_UNION_BY_NAME_ORACLE = """
+_UNION_BY_NAME_ORACLE = f"""
 WITH legacy AS (
   SELECT o_orderkey, o_custkey, o_totalprice
   FROM orders WHERE o_orderkey % 2 = 0
@@ -150,7 +150,7 @@ WITH legacy AS (
 )
 SELECT COALESCE(o_orderpriority, '<missing>') AS prio,
        count(*) AS n,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS cents
 FROM unioned
 GROUP BY 1
 ORDER BY 1
@@ -183,7 +183,7 @@ def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
+            F.sum(cents_col("o_totalprice")).alias("cents"),
         )
         .orderBy("prio")
     )

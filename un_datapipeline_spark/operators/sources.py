@@ -20,6 +20,8 @@ from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.scale import write_bucketed
 from un_datapipeline_spark.session import _hadoop_path, scratch_dir
 from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
     cents_sum,
     load_table,
     winner_document,
@@ -229,10 +231,10 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bucketed table write + shuffle-free join
 # ---------------------------------------------------------------------------
 
-_BUCKETED_ORACLE = """
+_BUCKETED_ORACLE = f"""
 SELECT c.c_mktsegment,
        count(*) AS n_orders,
-       ROUND(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) / 100.0, 4)
+       ROUND(sum({cents_sql("o.o_totalprice")}) / 100.0, 4)
          AS total_price
 FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
 GROUP BY c.c_mktsegment
@@ -287,7 +289,7 @@ def sink_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_bucketed(o, bk_orders, "o_custkey", 8)
     cb = spark.table(bk_customer)
     ob = spark.table(bk_orders)
-    price_c = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_c = cents_col("o_totalprice")
     return (
         cb.join(ob, cb.c_custkey == ob.o_custkey)
         .groupBy("c_mktsegment")
@@ -298,10 +300,10 @@ def sink_bucketed_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PRUNE_ORACLE = """
+_PRUNE_ORACLE = f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total_value
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total_value
 FROM events
 WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-08' AND DATE '2024-01-14'
 GROUP BY event_type
@@ -398,10 +400,10 @@ def src_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # error at a 3e10 magnitude — enough to flip ROUND(x, 4) across engines
 # (and across Spark runs, since partial-agg order follows partitioning).
 # Σ exact cents as BIGINT, divide once: deterministic at any order.
-_CLUSTER_ORACLE = """
+_CLUSTER_ORACLE = f"""
 SELECT CAST(count(*) AS BIGINT)        AS n,
        CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+       CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT) / 100.0
          AS sum_price,
        CAST(min(l_shipdate) AS TIMESTAMP) AS min_ship,
        CAST(max(l_shipdate) AS TIMESTAMP) AS max_ship
@@ -447,7 +449,7 @@ def sink_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.round(F.col("l_quantity")).cast("long")).alias("sum_qty"),
         (
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(cents_col("l_extendedprice"))
             / F.lit(100.0)
         ).alias("sum_price"),
         F.min("l_shipdate").alias("min_ship"),
@@ -595,13 +597,13 @@ def src_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OBSERVE_ORACLE = """
+_OBSERVE_ORACLE = f"""
 SELECT CAST(count(*) AS BIGINT) AS rows_scanned,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT)
          AS cents_scanned,
        CAST(count(*) FILTER (year(l_shipdate) >= 1999) AS BIGINT) AS rows_kept,
        CAST(sum(CASE WHEN year(l_shipdate) >= 1999
-                     THEN CAST(round(l_extendedprice * 100) AS BIGINT) END)
+                     THEN {cents_sql("l_extendedprice")} END)
             AS BIGINT) AS cents_kept
 FROM lineitem
 """
@@ -622,7 +624,7 @@ def src_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_shipdate",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        cents_col("l_extendedprice").alias("cents"),
     )
     obs = Observation("scan_audit")
     observed = li.observe(
@@ -1057,10 +1059,10 @@ def src_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MANIFEST_READ_ORACLE = """
+_MANIFEST_READ_ORACLE = f"""
 SELECT o_orderstatus,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS cents
 FROM orders
 WHERE o_orderkey % 4 IN (0, 1)
 GROUP BY o_orderstatus
@@ -1105,7 +1107,7 @@ def src_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
+            F.sum(cents_col("o_totalprice")).alias("cents"),
         )
         .orderBy("o_orderstatus")
     )

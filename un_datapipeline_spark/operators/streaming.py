@@ -26,7 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import conf_scope, ensure_runtime_confs, scratch_dir
-from un_datapipeline_spark.tables import load_table, read_parquet, valid_ts, valid_ts_sql
+from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
+    load_table,
+    read_parquet,
+    valid_ts,
+    valid_ts_sql,
+)
 
 
 def stream_shuffle_partitions(spark: SparkSession) -> conf_scope:
@@ -134,11 +141,11 @@ def src_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg)
 
 
-_TUMBLING_ORACLE = """
+_TUMBLING_ORACLE = f"""
 SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS win_start,
        event_type,
        count(*) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total
 FROM events
 GROUP BY win_start, event_type
 """
@@ -281,9 +288,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg)
 
 
-_RUNNING_ORACLE = """
+_RUNNING_ORACLE = f"""
 SELECT event_type, count(*) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total
 FROM events
 GROUP BY event_type
 """
@@ -303,9 +310,9 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg)
 
 
-_STREAM_STATIC_ORACLE = """
+_STREAM_STATIC_ORACLE = f"""
 SELECT c.c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total
+       CAST(sum({cents_sql("e.value")}) AS BIGINT) / 100.0 AS total
 FROM events e JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY c.c_mktsegment
 """
@@ -387,10 +394,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUSTOM_STATE_ORACLE = """
+_CUSTOM_STATE_ORACLE = f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total,
+       CAST(sum({cents_sql("value")}) AS BIGINT) / 100.0 AS total,
        ROUND(max(value), 4) AS peak
 FROM events
 GROUP BY event_type
@@ -562,10 +569,10 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg)
 
 
-_CKPT_RESUME_ORACLE = """
+_CKPT_RESUME_ORACLE = f"""
 SELECT CAST(count(*) AS BIGINT) AS n,
        CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(sum({cents_sql("value")}) AS BIGINT) AS cents
 FROM events
 """
 
@@ -586,7 +593,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint log is what turns "reprocess the bucket" into
     "process today's files"."""
     e = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_id", "ts", cents_col("value").alias("cents")
     )
     schema = "event_id long, ts timestamp, cents long"
     base = scratch_dir(spark, "udp_ckptres_")

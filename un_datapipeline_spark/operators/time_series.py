@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
+    cents_sum_sql,
     exact_double_sql,
     load_table,
     valid_ts,
@@ -35,7 +38,7 @@ hourly AS (
   -- HUGEINT and its naked →DOUBLE conversion mis-rounds negatives
   -- past 2^53; no output ROUND — ill-defined once |avg| ulp > 1e-6
   SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
-         {exact_double_sql("sum(CAST(round(value * 100) AS BIGINT))")}
+         {exact_double_sql(cents_sum_sql())}
            / (100.0 * count(*)) AS avg_val
   FROM ev GROUP BY hour, event_type
 )
@@ -69,7 +72,7 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundaries where summation-order ulps flip the rounded digit.
     hourly = e.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg((F.sum(F.round(F.col("value") * 100).cast("long")) / (100.0 * F.count(F.lit(1)))).alias("avg_val"))
+    ).agg((F.sum(cents_col("value")) / (100.0 * F.count(F.lit(1)))).alias("avg_val"))
     bounds = e.agg(
         F.date_trunc("hour", F.min("ts")).alias("lo"),
         F.date_trunc("hour", F.max("ts")).alias("hi"),
@@ -106,7 +109,7 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CORR_ORACLE = f"""
 WITH hourly AS (
   SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
-         {exact_double_sql("sum(CAST(round(value * 100) AS BIGINT))")}
+         {exact_double_sql(cents_sum_sql())}
            / (100.0 * count(*)) AS v
   FROM events GROUP BY hour, event_type
 )
@@ -128,7 +131,7 @@ def ts_similarity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg((F.sum(F.round(F.col("value") * 100).cast("long")) / (100.0 * F.count(F.lit(1)))).alias("v"))
+    ).agg((F.sum(cents_col("value")) / (100.0 * F.count(F.lit(1)))).alias("v"))
     a = hourly.select(
         F.col("hour").alias("h"), F.col("event_type").alias("type_a"), F.col("v").alias("va")
     )
@@ -245,7 +248,7 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("y")
+        (F.sum(cents_col("value")) / 100.0).alias("y")
     )
 
     def holt(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -272,10 +275,10 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRAWDOWN_ORACLE = """
+_DRAWDOWN_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ), cum AS (
   SELECT event_type, day,
@@ -312,7 +315,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("c")
+        F.sum(cents_col("value")).alias("c")
     )
     w = (
         Window.partitionBy("event_type")
@@ -352,10 +355,10 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PEAKS_ORACLE = """
+_PEAKS_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ), nb AS (
   SELECT event_type, day, c,
@@ -385,7 +388,7 @@ def ts_peak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides (ANSI Spark would crash, DuckDB quietly NULLs)."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("c")
+        F.sum(cents_col("value")).alias("c")
     )
     w = Window.partitionBy("event_type").orderBy("day")
     nb = daily.select(
@@ -473,10 +476,10 @@ def ts_burst_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BACKTEST_ORACLE = """
+_BACKTEST_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS cents
   FROM events GROUP BY 1, 2
 ), lagged AS (
   SELECT event_type, d, cents,
@@ -519,7 +522,7 @@ def ts_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded per-type series."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+        F.sum(cents_col("value")).alias("cents")
     )
     w = Window.partitionBy("event_type").orderBy("d")
     lagged = daily.select(
@@ -631,7 +634,7 @@ WITH pts AS (
   SELECT event_type,
          CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT)
            AS x,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS y
   FROM events WHERE value IS NOT NULL
   GROUP BY event_type, CAST(ts AS DATE)
 ), seq AS (
@@ -745,7 +748,7 @@ def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("x"),
         )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("y"))
+        .agg(F.sum(cents_col("value")).cast("long").alias("y"))
     )
 
     K = _LTTB_K
@@ -813,10 +816,10 @@ def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lagged cross-correlation (lead/lag discovery between two series)
 # ---------------------------------------------------------------------------
 
-_XCORR_ORACLE = """
+_XCORR_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS cents
   FROM events WHERE event_type IN ('view', 'purchase')
   GROUP BY event_type, CAST(ts AS DATE)
 ), a AS (SELECT d, cents FROM daily WHERE event_type = 'view'),
@@ -864,7 +867,7 @@ def ts_cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.filter(F.col("event_type").isin("view", "purchase"))
         .groupBy("event_type", F.to_date("ts").alias("d"))
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("cents"))
+        .agg(F.sum(cents_col("value")).cast("long").alias("cents"))
     )
     a = daily.filter(F.col("event_type") == "view").select(
         F.col("d").alias("ad"), F.col("cents").alias("av")
@@ -912,10 +915,10 @@ def ts_cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M4 visualization downsampling
 # ---------------------------------------------------------------------------
 
-_M4_ORACLE = """
+_M4_ORACLE = f"""
 WITH c AS (
   SELECT event_type, ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
+         {cents_sql("value")} AS cents,
          CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket
   FROM events
 ), ranked AS (
@@ -960,7 +963,7 @@ def ts_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents_col("value").alias("cents"),
         F.date_trunc("hour", "ts").alias("bucket"),
     )
     wa = Window.partitionBy("event_type", "bucket").orderBy("ts", "event_id")

@@ -19,6 +19,7 @@ from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import scratch_dir
 from un_datapipeline_spark.tables import (
     capped_text_sql,
+    cents_col,
     load_table,
     winner_document,
     winner_document_sql,
@@ -289,7 +290,7 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "value",
-        F.round(F.col("value") * 100, 0).cast("long").alias("c"),
+        cents_col("value").alias("c"),
     )
     c_d = F.col("c").cast("decimal(38,0)")
     mo = cents.groupBy("event_type").agg(
@@ -373,7 +374,7 @@ def agg_corr_pearson(spark: SparkSession, sf_dir: str) -> DataFrame:
     lanes = li.select(
         "l_returnflag",
         F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("y"),
+        cents_col("l_extendedprice").alias("y"),
     )
     mo = lanes.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -432,7 +433,7 @@ def lloyd_kmeans(spark: SparkSession, sf_dir: str, k: int):
     def make_assign(cents):
         def assign(batches):
             for pdf in batches:
-                vkeep, mat = _vec_matrix(pdf, "embedding")  # defensive
+                vkeep, mat = _vec_matrix(pdf)  # defensive
                 if mat.shape[0] == 0:
                     continue
                 pdf = pdf[vkeep]

@@ -19,7 +19,12 @@ from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import StringType
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import cents2_sum_sql, cents_sum_sql, load_table
+from un_datapipeline_spark.tables import (
+    cents2_sum_sql,
+    cents_sql,
+    cents_sum_sql,
+    load_table,
+)
 
 # The explicit IS NULL branch (round 9, class 4): without it a NULL
 # price would fall through every WHEN into ELSE 'XL' — an unpriced order
@@ -338,10 +343,10 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ARROW_GROUPED_ORACLE = """
+_ARROW_GROUPED_ORACLE = f"""
 SELECT l_returnflag,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+       CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT) AS cents,
        CAST(max(CAST(l_quantity AS BIGINT)) AS BIGINT) AS max_qty
 FROM lineitem
 GROUP BY l_returnflag
@@ -394,10 +399,10 @@ def udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mapInArrow: zero-pandas whole-partition Arrow transform
 # ---------------------------------------------------------------------------
 
-_MAP_ARROW_ORACLE = """
+_MAP_ARROW_ORACLE = f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
+       CAST(sum({cents_sql("value")}) AS BIGINT) AS cents,
        CAST(sum(len(props)) AS BIGINT) AS props_chars
 FROM events
 GROUP BY event_type ORDER BY event_type

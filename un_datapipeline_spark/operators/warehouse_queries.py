@@ -29,30 +29,19 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import load_table
+from un_datapipeline_spark.tables import cents_col, load_table
 
 
 def _ts(s: str) -> F.Column:
     return F.lit(s).cast("timestamp")
 
 
-def _cents(col: str) -> F.Column:
-    """2-decimal money column -> exact integer cents (BIGINT)."""
-    return F.round(F.col(col) * 100).cast("long")
-
-
-def _bp(col: str) -> F.Column:
-    """2-decimal fraction (discount/tax) -> integer basis points /100."""
-    return F.round(F.col(col) * 100).cast("long")
-
-
 def _rev_units() -> F.Column:
     """l_extendedprice·(1−l_discount) as exact 4-decimal fixed point."""
-    return _cents("l_extendedprice") * (F.lit(100) - _bp("l_discount"))
+    return cents_col("l_extendedprice") * (F.lit(100) - cents_col("l_discount"))
 
 
 # DuckDB fragments of the same lanes.
-_D_CENTS = "CAST(round({c}*100) AS BIGINT)"
 _D_REV = (
     "CAST(round(l_extendedprice*100) AS BIGINT)"
     " * (100 - CAST(round(l_discount*100) AS BIGINT))"
@@ -223,7 +212,7 @@ def tpch_q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.round(
-                F.sum(_cents("l_extendedprice") * _bp("l_discount")) / 10000.0, 4
+                F.sum(cents_col("l_extendedprice") * cents_col("l_discount")) / 10000.0, 4
             ).alias("revenue_delta"),
             F.count(F.lit(1)).alias("n_lines"),
         )
@@ -610,7 +599,7 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(pa, li.l_partkey == pa.pk)
         .filter(F.lit(5) * F.col("n") * qty < F.col("qsum"))
         .agg(
-            F.round(F.sum(_cents("l_extendedprice")) / 700.0, 4).alias("avg_yearly"),
+            F.round(F.sum(cents_col("l_extendedprice")) / 700.0, 4).alias("avg_yearly"),
             F.count(F.lit(1)).alias("n_small"),
         )
     )
@@ -651,7 +640,7 @@ def tpch_q18_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .orderBy(_cents("o_totalprice").desc(), "o_orderkey")
+        .orderBy(cents_col("o_totalprice").desc(), "o_orderkey")
         .limit(100)
         .select("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice", "total_qty")
     )
@@ -733,11 +722,11 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = load_table(spark, sf_dir, "nation")
     pos = c.agg(
-        F.sum(_cents("c_acctbal")).alias("sc"), F.count(F.lit(1)).alias("n")
+        F.sum(cents_col("c_acctbal")).alias("sc"), F.count(F.lit(1)).alias("n")
     )
     dormant = (
         c.crossJoin(F.broadcast(pos))
-        .filter(_cents("c_acctbal") * F.col("n") > F.col("sc"))
+        .filter(cents_col("c_acctbal") * F.col("n") > F.col("sc"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
     )
     return (
@@ -745,6 +734,6 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("dormant_cnt"),
-            F.round(F.sum(_cents("c_acctbal")) / 100.0, 2).alias("total_bal"),
+            F.round(F.sum(cents_col("c_acctbal")) / 100.0, 2).alias("total_bal"),
         )
     )

@@ -13,7 +13,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.tables import exact_double_sql, load_table
+from un_datapipeline_spark.tables import (
+    cents_col,
+    cents_sql,
+    cents_sum_sql,
+    exact_double_sql,
+    load_table,
+)
 
 _RANK_ORACLE = """
 SELECT o_custkey, o_orderkey, o_totalprice,
@@ -153,7 +159,7 @@ def win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identically-converted sum is bit-identical on both engines.
 _SLIDING_ORACLE = f"""
 SELECT event_id, user_id,
-       {exact_double_sql("sum(CAST(round(value * 100) AS BIGINT)) OVER w")}
+       {exact_double_sql(cents_sum_sql() + " OVER w")}
              / (100.0 * count(*) OVER w) AS mov_avg
 FROM events
 WINDOW w AS (PARTITION BY user_id
@@ -179,7 +185,7 @@ def win_sliding_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("ts").cast("long"))
         .rangeBetween(-3600, 0)
     )
-    cents = F.round(F.col("value") * 100).cast("long")
+    cents = cents_col("value")
     return e.select(
         "event_id",
         "user_id",
@@ -473,10 +479,10 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RANGE_INTERVAL_ORACLE = """
+_RANGE_INTERVAL_ORACLE = f"""
 SELECT o_custkey, o_orderkey, o_orderdate,
        CAST(count(*) OVER w AS BIGINT) AS n_7d,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS BIGINT)
+       CAST(sum({cents_sql("o_totalprice")}) OVER w AS BIGINT)
          AS cents_7d
 FROM orders
 WHERE o_custkey < 500
@@ -502,10 +508,10 @@ def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 500)
     o.createOrReplaceTempView("win_ri_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_custkey, o_orderkey, o_orderdate,
                count(*) OVER w AS n_7d,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS cents_7d
+               sum({cents_sql("o_totalprice")}) OVER w AS cents_7d
         FROM win_ri_orders
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
                      RANGE BETWEEN INTERVAL '7' DAY PRECEDING AND CURRENT ROW)
@@ -518,7 +524,7 @@ def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Native batch session_window
 # ---------------------------------------------------------------------------
 
-_SESSION_NATIVE_ORACLE = """
+_SESSION_NATIVE_ORACLE = f"""
 WITH marked AS (
   SELECT user_id, ts, value,
          CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -536,7 +542,7 @@ SELECT user_id,
        min(ts)                          AS session_start,
        max(ts) + INTERVAL 30 MINUTE     AS session_end,
        CAST(count(*) AS BIGINT)         AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(sum({cents_sql("value")}) AS BIGINT) AS cents
 FROM islands
 GROUP BY user_id, sess_id
 ORDER BY user_id, session_start
@@ -564,7 +570,7 @@ def win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(cents_col("value"))
             .cast("long")
             .alias("cents"),
         )
@@ -779,10 +785,10 @@ def win_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bollinger bands (rolling mean ± 2σ with an exact-integer breakout set)
 # ---------------------------------------------------------------------------
 
-_BOLLINGER_ORACLE = """
+_BOLLINGER_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({cents_sql("value")}) AS BIGINT) AS cents
   FROM events GROUP BY 1, 2
 ), mom AS (
   SELECT *,
@@ -843,7 +849,7 @@ def win_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
+    ).agg(F.sum(cents_col("value")).alias("cents"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")

@@ -33,7 +33,7 @@ from __future__ import annotations
 import json
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from un_datapipeline_spark.session import ensure_runtime_confs
@@ -270,11 +270,19 @@ def normalize_events_value(df: DataFrame) -> DataFrame:
 # DECIMAL(38)/HUGEINT ceiling.  At 100 TB this is also the posture that
 # makes re-partitioning a no-op for results: integer partial sums merge
 # associatively, so AQE / speculative re-execution cannot change answers.
-def cents_col():
-    """``round(value*100)`` as BIGINT — exact integer cents.  Safe for the
-    whole surviving magnitude domain (|value| <= 9e15 → |cents| <= 9e17,
-    10x inside int64)."""
-    return F.round(F.col("value") * 100).cast("long")
+#
+# The format has exactly three owners: cents_col (Spark), cents_sql
+# (DuckDB) and cents_np (pandas kernels).  Every operator and oracle takes
+# its cents from them, and tests/test_scale_lint.py fails on any other
+# spelling of round(x * 100) as BIGINT in the package, bar the hash-pinned
+# oracle texts it lists.
+def cents_col(col: str | Column) -> Column:
+    """``round(col*100)`` as BIGINT — exact integer cents of a 2-decimal
+    ``col``: a column name (plain or table-qualified) or an expression.
+    Safe for the whole surviving magnitude domain (|value| <= 9e15 →
+    |cents| <= 9e17, 10x inside int64)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c * 100).cast("long")
 
 
 def cents_sum():
@@ -286,13 +294,13 @@ def cents_sum():
     conversion mis-rounds negatives (round-12 magneg catalog; the r11
     "division is safe" note was validated on positives only).  Bounded
     or sign-safe sums may divide directly."""
-    return F.sum(cents_col().cast("decimal(38,0)"))
+    return F.sum(cents_col("value").cast("decimal(38,0)"))
 
 
 def cents2_sum():
     """Exact Σcents² as DECIMAL(38,0) — the second-moment lane that
     overflows int64 per-element at surviving |value| > ~3e7."""
-    c = cents_col().cast("decimal(38,0)")
+    c = cents_col("value").cast("decimal(38,0)")
     return F.sum(c * c)
 
 
@@ -325,20 +333,22 @@ def cents_np(values):
     return pd.Series(np.copysign(r, v100)).astype("int64").astype(object)
 
 
-def cents_sql() -> str:
-    """DuckDB mirror of :func:`cents_col`."""
-    return "CAST(round(value * 100) AS BIGINT)"
+def cents_sql(col: str) -> str:
+    """DuckDB mirror of :func:`cents_col`; ``col`` (a column name or an
+    expression) is rendered verbatim, so an expression that binds looser
+    than ``*`` must come parenthesized."""
+    return f"CAST(round({col} * 100) AS BIGINT)"
 
 
 def cents_sum_sql() -> str:
     """DuckDB mirror of :func:`cents_sum` — sum(BIGINT) is HUGEINT."""
-    return f"sum({cents_sql()})"
+    return f"sum({cents_sql('value')})"
 
 
 def cents2_sum_sql() -> str:
     """DuckDB mirror of :func:`cents2_sum` — the HUGEINT cast must happen
     BEFORE the multiply (BIGINT*BIGINT raises on overflow in DuckDB)."""
-    c = cents_sql()
+    c = cents_sql("value")
     return f"sum(CAST({c} AS HUGEINT) * CAST({c} AS HUGEINT))"
 
 
