@@ -1,35 +1,19 @@
-"""Local mirror of the driver's DuckDB differential check (SURVEY.md §5.2).
+"""The DuckDB side of the driver mirror (SURVEY.md §5.2).
 
-For an operator: run the Spark query and the oracle SQL over the same
-parquet, then compare row-count + column names + order-insensitive
-canonicalized values.  Passing here (exact equality after
-canonicalization) is strictly stronger than any value-hash the driver
-could use, so local green ⇒ driver green.
+``duck_connect`` opens the oracle views over a corpus dir, applying the
+engine's ingest contract; ``canon_cell`` canonicalizes one cell for the
+value compares of perfbench's bench-query check.  The operator compare
+itself is ``tests/strict_diff.py``.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import math
-from dataclasses import dataclass, field
 
 import duckdb
 
-from un_datapipeline_spark.registry import Operator
-from un_datapipeline_spark.tables import VALUE_MAGNITUDE_SQL
-
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from un_datapipeline_spark.tables import TABLE_NAMES, VALUE_MAGNITUDE_SQL
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -98,69 +82,3 @@ def canon_cell(v):
     if isinstance(v, decimal.Decimal):
         return canon_cell(float(v))
     return str(v)
-
-
-def canon_rows(cols, rows):
-    return sorted(
-        (tuple(canon_cell(v) for v in row) for row in rows),
-        key=lambda t: tuple(str(x) for x in t),
-    )
-
-
-@dataclass
-class DiffResult:
-    name: str
-    ok: bool
-    spark_rows: int
-    oracle_rows: int | None
-    problems: list[str] = field(default_factory=list)
-
-    def __str__(self) -> str:
-        status = "OK" if self.ok else "FAIL"
-        msg = f"[{status}] {self.name}: spark={self.spark_rows} oracle={self.oracle_rows}"
-        for p in self.problems:
-            msg += f"\n    {p}"
-        return msg
-
-
-def run_diff(spark, op: Operator, sf_dir: str, con=None) -> DiffResult:
-    sdf = op.fn(spark, sf_dir)
-    scols = list(sdf.columns)
-    srows = [tuple(r) for r in sdf.collect()]
-
-    if op.oracle is None:
-        # rows-only contract: assert the query runs and yields rows.
-        return DiffResult(op.name, ok=len(srows) >= 0, spark_rows=len(srows), oracle_rows=None)
-
-    owned = con is None
-    if owned:
-        con = duck_connect(sf_dir)
-    try:
-        cur = con.execute(op.oracle)
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
-    finally:
-        if owned:
-            con.close()
-
-    problems: list[str] = []
-    # Case-SENSITIVE: the driver's value-hash canonicalization sorts
-    # column names case-sensitively, so a case-mismatched alias hash-fails
-    # at the driver even when this positional compare would align
-    # (reshape_transpose, CORRECTNESS_r05).
-    if list(scols) != list(ocols):
-        problems.append(f"columns differ (case-sensitive): spark={scols} oracle={ocols}")
-    if len(srows) != len(orows):
-        problems.append(f"row counts differ: spark={len(srows)} oracle={len(orows)}")
-    if not problems:
-        cs, co = canon_rows(scols, srows), canon_rows(ocols, orows)
-        for i, (a, b) in enumerate(zip(cs, co)):
-            if a != b:
-                problems.append(f"first value diff at sorted-row {i}:")
-                for col, x, y in zip(scols, a, b):
-                    if x != y:
-                        problems.append(f"  col {col}: spark={x!r} oracle={y!r}")
-                break
-    return DiffResult(
-        op.name, ok=not problems, spark_rows=len(srows), oracle_rows=len(orows), problems=problems
-    )

@@ -1,16 +1,15 @@
-"""Strict driver-mirror differential check (round-2 replacement for the
-value-equality mirror in oracle_diff.py).
+"""Strict driver-mirror differential check: one compare, one per-op check.
 
-Round-1 lesson (CORRECTNESS_r01.json vs tests/driver_sim.py): the grading
-driver canonicalizes PANDAS frames — it sorts columns by name, sorts rows
-by all columns, then hashes the values.  Two consequences the old mirror
-missed:
+The grading driver canonicalizes PANDAS frames — it sorts columns by
+name, sorts rows by all columns, then hashes the values.  Two
+consequences a plain value-equality compare misses (round 1 shipped
+one, and it passed ops the driver failed):
 
 1. dtype KIND matters.  ``5`` (int64) and ``5.0`` (float64) are ``==`` in
    Python but hash differently in pandas — e.g. Spark ``F.ceil`` returns
    LONG while DuckDB ``ceil(DOUBLE)`` returns DOUBLE, which is exactly the
-   fn_math ``hash_match: false`` the driver reported while driver_sim
-   said "match".
+   fn_math ``hash_match: false`` the driver reported while the old
+   mirror said "match".
 2. array-typed cells CRASH the driver's canonicalizer
    (``TypeError: unhashable type: 'numpy.ndarray'`` inside
    ``sort_values``) — so any operator emitting a raw list column can
@@ -22,14 +21,19 @@ canonicalization (sorted columns, ``sort_values`` over all columns — so
 ndarray cells raise exactly like the driver), and then compares dtype
 kinds and exact values.  Local red ⇔ driver red is the design goal.
 
-This module holds the compare only.  To run it over the registry on a
-corpus, use the sweep (one verdict line per op) or the driver mirror:
+:func:`check_op` runs one registered operator through it and returns
+its verdict.  Two runners call it: Tier-1's ``tests/test_oracle_parity.py``
+(pytest session, sf0.01) and ``tools/sweep_degenerate.py``'s registry
+loop (a plain session, any corpus), which is also the driver mirror:
 
-    python tools/sweep_degenerate.py --sf /root/testdata/sf0.01 fn_math
-    python tests/driver_sim.py             # all operators at sf0.01
+    python tools/sweep_degenerate.py --sf /root/testdata/sf0.01          # all ops
+    python tools/sweep_degenerate.py --sf /root/testdata/sf0.01 fn_math  # named ops
 """
 
 from __future__ import annotations
+
+import time
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -149,3 +153,52 @@ def strict_compare(sp: pd.DataFrame, oc: pd.DataFrame) -> list[str]:
             problems.append(f"col {col}: {msg}")
     return problems
 
+
+class Check(NamedTuple):
+    """One operator's verdict: ``OK`` (hash-matched its oracle),
+    ``ROWS_ONLY`` (no oracle; the driver's canon accepts the frame),
+    ``CONTRACT`` (a deliberate :class:`ContractViolation` fail-fast) or
+    ``FAIL``, with a one-line detail.  The column lists are set when both
+    engines ran."""
+
+    verdict: str
+    detail: str
+    spark_cols: tuple[str, ...] = ()
+    oracle_cols: tuple[str, ...] = ()
+
+
+def check_op(spark, con, op, d: str) -> Check:
+    """Run ``op`` on the corpus at ``d`` in ``spark`` and its oracle on the
+    DuckDB connection ``con`` (``oracle_diff.duck_connect(d)``), and
+    strict-compare the two frames."""
+    from un_datapipeline_spark.registry import ContractViolation
+
+    t0 = time.perf_counter()
+    try:
+        spdf = op.fn(spark, d).toPandas()
+    except ContractViolation as ex:
+        # deliberate fail-fast on input the op's contract forbids
+        # (e.g. src_text_lines on embedded newlines) — the engine-correct
+        # answer on a corrupt corpus, never a crash
+        return Check("CONTRACT", str(ex).splitlines()[0][:160])
+    except Exception as ex:
+        return Check("FAIL", f"SPARK CRASH {str(ex).splitlines()[0][:160]}")
+    stats = f"spark_s={time.perf_counter() - t0:.2f}"
+    if op.oracle is None:
+        # rows-only still goes through the driver's canon, so an
+        # unhashable array cell fails here, not under the driver
+        try:
+            canon(spdf)
+        except TypeError as ex:
+            return Check("FAIL", f"canon crash {ex} {stats}")
+        return Check("ROWS_ONLY", f"rows={len(spdf)} {stats}")
+    try:
+        ocdf = con.execute(op.oracle).df()
+    except Exception as ex:
+        return Check("FAIL", f"DUCKDB CRASH {str(ex).splitlines()[0][:160]}")
+    stats = f"rows={len(spdf)}/{len(ocdf)} {stats}"
+    cols = tuple(spdf.columns), tuple(ocdf.columns)
+    problems = strict_compare(spdf, ocdf)
+    if problems:
+        return Check("FAIL", f"{problems[0][:160]} {stats}", *cols)
+    return Check("OK", stats, *cols)

@@ -1,7 +1,7 @@
 """Invariant tests for the corpus-quality operator batch (repetition
 flags, boilerplate grams, stratified sampling, domain mixture,
 attribution, curriculum buckets).  Oracle parity runs in
-test_oracle_parity/driver_sim; these assert the semantic invariants no
+test_oracle_parity / the sweep's --sf mirror; these assert the semantic invariants no
 hash can express."""
 
 from __future__ import annotations

@@ -1010,3 +1010,66 @@ def test_orphans_corpus_class(spark, orphans_sf, name):
     the dim side, percent-of-dim denominators, digest lanes fed by
     LEFT-join NULLs)."""
     _both(spark, orphans_sf, name)
+
+
+@pytest.fixture(scope="module")
+def half_cents_sf(tmp_path_factory, sf_smoke):
+    """sf0.001 with every price and discount an exact half cent.  x.125 and
+    x.625 are 12.5 and 62.5 cents, where half-to-even and half-away-from-
+    zero round apart; x.375 and x.875 round alike and ride along.  Every
+    7th price and discount is NULL, return flag 'X' is priced only by
+    NULLs, and so is the first customer's every order."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from un_datapipeline_spark.tables import TABLE_NAMES
+
+    d = tmp_path_factory.mktemp("halfcentsf")
+    for t in TABLE_NAMES:
+        shutil.copy(f"{sf_smoke}/{t}.parquet", d / f"{t}.parquet")
+
+    def halves(n: int, nulls: list[bool]) -> pa.Array:
+        return pa.array(
+            [None if z else (i % 997) + (0.125, 0.375, 0.625, 0.875)[i % 4]
+             for i, z in enumerate(nulls)],
+            type=pa.float64(),
+        )
+
+    li = pq.read_table(d / "lineitem.parquet")
+    n = li.num_rows
+    flag_x = [i % 50 == 3 for i in range(n)]
+    price_null = [i % 7 == 0 or x for i, x in enumerate(flag_x)]
+    discounts = pa.array(
+        [None if i % 7 == 1 else (0.125, 0.625, 0.375)[i % 3] for i in range(n)],
+        type=pa.float64(),
+    )
+    flags = [("X" if x else f) for x, f in zip(flag_x, li["l_returnflag"].to_pylist())]
+    for col, arr in (
+        ("l_extendedprice", halves(n, price_null)),
+        ("l_discount", discounts),
+        ("l_returnflag", pa.array(flags, type=pa.string())),
+    ):
+        li = li.set_column(li.schema.get_field_index(col), col, arr)
+    pq.write_table(li, d / "lineitem.parquet")
+
+    o = pq.read_table(d / "orders.parquet")
+    cust = o["o_custkey"].to_pylist()
+    nulls = [i % 7 == 0 or c == cust[0] for i, c in enumerate(cust)]
+    o = o.set_column(
+        o.schema.get_field_index("o_totalprice"), "o_totalprice", halves(o.num_rows, nulls)
+    )
+    pq.write_table(o, d / "orders.parquet")
+    return str(d)
+
+
+# The three Python cents lanes: each once rounded half to even (pyarrow's
+# default pc.round, pandas .round(), builtin round) against the format's
+# half away from zero (tables.cents_np / cents_col, DuckDB round).
+HALF_CENT_OPS = ["udf_grouped_arrow", "udf_pandas_iter", "udtf_table_arg"]
+
+
+@pytest.mark.parametrize("name", HALF_CENT_OPS)
+def test_half_cent_prices_round_half_away(spark, half_cents_sf, name):
+    _both(spark, half_cents_sf, name)

@@ -1,6 +1,6 @@
 """Semantic invariants for the retrieval / classifier evaluation harness
 (operators/retrieval_eval.py).  Hash parity vs DuckDB is covered by
-test_oracle_parity / driver_sim; these tests pin the METRIC ALGEBRA with
+test_oracle_parity / the sweep's --sf mirror; these tests pin the METRIC ALGEBRA with
 independent rederivations and bound checks."""
 
 from __future__ import annotations

@@ -2,24 +2,36 @@
 
 A pure-Python AST scan of ``un_datapipeline_spark/``; it starts no Spark
 and runs in well under a second.  Each rule has a seeded-snippet test, so
-a rule that stops seeing its spelling fails too.
+a rule that stops seeing its spelling fails too.  Rules are numbered as
+in ROADMAP item 7 (rule 5, bounded driver collects, is open).
 
-(i) **One owner for the exact-cents encoding.**  A 2-decimal money value
-    becomes exact integer cents, ``round(x * 100)`` cast to BIGINT, on both
-    engines; that format is what keeps every money lane hash-identical to
-    its DuckDB oracle and magnitude-safe (tables.py).  Only ``tables.py``
-    spells it: ``cents_col`` on Spark, ``cents_sql`` on DuckDB and
-    ``cents_np`` for pandas kernels.  Anywhere else a Spark
-    ``F.round(<x> * 100).cast("long")`` or a SQL ``CAST(round(<x> * 100) AS
-    BIGINT)`` / ``round(<x> * 100)::BIGINT`` is a finding, keyed
-    ``module:name``: the registered operator whose oracle text holds it
-    (through the module-level names that text interpolates), else the
-    top-level function or constant that holds it.  ``TIGHT_CENTS_ORACLES``
-    lists the oracles that may keep their own spelling, each with its
-    reason.
-(ii) **No ``tempfile`` in operator modules.**  Operator scratch storage
-    goes through ``session.scratch_dir``, which is visible to the whole
-    cluster and removed on release; a local temp dir is neither.
+1. **One owner for materialization.**  ``.localCheckpoint(`` appears only
+   in ``session.py``, whose ``ckpt``/``graft_checkpoint`` choose between
+   the local and the reliable checkpoint.
+2. **No hand-picked widths.**  ``.repartition(`` / ``.coalesce(`` with a
+   literal or ``defaultParallelism`` width appears only in ``scale.py``
+   (``parallelize_scan`` and the bucketed writer size from the session)
+   or under an ``ALLOWED_WIDTHS`` entry, keyed ``module:function`` with
+   its reason.  A width given as a column is a key, not a width.
+3. **The package reads the environment, never writes it.**  No
+   ``os.environ.setdefault`` and no ``os.environ[...] =``: a write leaks
+   into every later session and worker of the process.
+4. **No ``tempfile`` in operator modules.**  Operator scratch storage
+   goes through ``session.scratch_dir``, which is visible to the whole
+   cluster and removed on release; a local temp dir is neither.
+6. **One owner for the exact-cents encoding.**  A 2-decimal money value
+   becomes exact integer cents, ``round(x * 100)`` cast to BIGINT, on both
+   engines; that format is what keeps every money lane hash-identical to
+   its DuckDB oracle and magnitude-safe (tables.py).  Only ``tables.py``
+   spells it: ``cents_col`` on Spark, ``cents_sql`` on DuckDB and
+   ``cents_np`` for pandas kernels.  Anywhere else a Spark
+   ``F.round(<x> * 100).cast("long")`` or a SQL ``CAST(round(<x> * 100) AS
+   BIGINT)`` / ``round(<x> * 100)::BIGINT`` is a finding, keyed
+   ``module:name``: the registered operator whose oracle text holds it
+   (through the module-level names that text interpolates), else the
+   top-level function or constant that holds it.  ``TIGHT_CENTS_ORACLES``
+   lists the oracles that may keep their own spelling, each with its
+   reason.
 """
 
 from __future__ import annotations
@@ -74,7 +86,7 @@ TIGHT_CENTS_ORACLES = {
 
 
 # --------------------------------------------------------------------------
-# Rule (i): the exact-cents spelling
+# Rule 6: the exact-cents spelling
 # --------------------------------------------------------------------------
 
 _SQL_ROUND = re.compile(r"\bround\s*\(", re.IGNORECASE)
@@ -186,7 +198,7 @@ def _registrations(stmt: ast.stmt):
 
 
 def cents_findings(src: str, module: str) -> dict[str, int]:
-    """``{"module:name": spellings}`` for one module's source (see rule (i))."""
+    """``{"module:name": spellings}`` for one module's source (see rule 6)."""
     tree = ast.parse(src)
     docstrings = _docstrings(tree)
     values: dict[str, ast.AST] = {}
@@ -290,7 +302,7 @@ def test_cents_rule_keys_oracle_by_operator():
 
 
 # --------------------------------------------------------------------------
-# Rule (ii): no tempfile in operator modules
+# Rule 4: no tempfile in operator modules
 # --------------------------------------------------------------------------
 
 
@@ -328,3 +340,174 @@ def test_operators_use_no_tempfile():
 )
 def test_tempfile_rule_catches_seeded_use(snippet):
     assert tempfile_uses(snippet)
+
+
+# --------------------------------------------------------------------------
+# Rules 1-3: materialization, widths, environment writes
+# --------------------------------------------------------------------------
+
+ALLOWED_WIDTHS = {
+    "dedup_extras:llm_line_dedup_reconstruct": (
+        "repartition(defaultParallelism) shrinks wide input; ROADMAP 2(a), open"
+    ),
+    "etl:etl_compact_files": (
+        "the op's layout contract: its oracle pins exactly 32 files written "
+        "by repartition(32) and 4 after coalesce(4)"
+    ),
+}
+
+
+def local_checkpoints(src: str) -> list[int]:
+    """Lines that call ``<x>.localCheckpoint(...)``."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+
+
+def _is_width(node: ast.AST) -> bool:
+    if isinstance(node, ast.Constant) and isinstance(node.value, int):
+        return True
+    return any(
+        getattr(n, "attr", getattr(n, "id", None)) == "defaultParallelism"
+        for n in ast.walk(node)
+    )
+
+
+def fixed_widths(src: str, module: str) -> dict[str, list[int]]:
+    """``{"module:function": [lines]}`` of ``.repartition(`` /
+    ``.coalesce(`` calls whose width is a literal or reads
+    ``defaultParallelism`` (``F.coalesce`` is the SQL function, not a
+    width)."""
+    found: dict[str, list[int]] = {}
+    for stmt in ast.parse(src).body:
+        name = getattr(stmt, "name", None) or f"line{stmt.lineno}"
+        for node in ast.walk(stmt):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("repartition", "coalesce")
+                and getattr(node.func.value, "id", None) != "F"
+            ):
+                continue
+            width = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "numPartitions"), None
+            )
+            if width is not None and _is_width(width):
+                found.setdefault(f"{module}:{name}", []).append(node.lineno)
+    return found
+
+
+def _is_environ(node: ast.AST) -> bool:
+    return getattr(node, "attr", getattr(node, "id", None)) == "environ"
+
+
+def environ_writes(src: str) -> list[int]:
+    """Lines with ``os.environ.setdefault(...)`` or ``os.environ[k] = ...``
+    (plain, annotated or augmented assignment)."""
+    lines = []
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "setdefault"
+            and _is_environ(node.func.value)
+        ):
+            lines.append(node.lineno)
+        targets = getattr(node, "targets", None) or [getattr(node, "target", None)]
+        if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)) and any(
+            isinstance(t, ast.Subscript) and _is_environ(t.value) for t in targets
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def _scan(rule, skip: str = "") -> dict[str, list[int]]:
+    return {
+        str(p.relative_to(PKG)): lines
+        for p in sorted(PKG.rglob("*.py"))
+        if p.name != skip and (lines := rule(p.read_text()))
+    }
+
+
+def test_local_checkpoint_only_in_session():
+    found = _scan(local_checkpoints, skip="session.py")
+    assert not found, f"materialize through session.ckpt / graft_checkpoint: {found}"
+
+
+def test_fixed_widths_only_in_scale_or_allowlisted():
+    found: dict[str, list[int]] = {}
+    for p in sorted(PKG.rglob("*.py")):
+        if p.name != "scale.py":
+            found |= fixed_widths(p.read_text(), p.stem)
+    stray = {k: v for k, v in found.items() if k not in ALLOWED_WIDTHS}
+    assert not stray, f"size partitions through scale.py (parallelize_scan): {stray}"
+    stale = sorted(ALLOWED_WIDTHS.keys() - found.keys())
+    assert not stale, f"allowlisted functions no longer fix a width: {stale}"
+
+
+def test_package_never_writes_environ():
+    found = _scan(environ_writes)
+    assert not found, f"read the environment, pass values explicitly: {found}"
+
+
+@pytest.mark.parametrize(
+    "snippet",
+    [
+        "def f(df):\n    return df.localCheckpoint()\n",
+        "x = spark.range(3).localCheckpoint(eager=False)\n",
+    ],
+)
+def test_local_checkpoint_rule_catches_seeded_use(snippet):
+    assert local_checkpoints(snippet)
+
+
+@pytest.mark.parametrize(
+    "snippet",
+    [
+        "def f(df):\n    return df.repartition(32)\n",
+        "def f(df):\n    return df.coalesce(1)\n",
+        "def f(df):\n    return df.repartition(numPartitions=8)\n",
+        "def f(spark, df):\n"
+        "    return df.repartition(spark.sparkContext.defaultParallelism)\n",
+        'def f(sc, df):\n    return df.repartition(max(8, sc.defaultParallelism), "k")\n',
+    ],
+)
+def test_width_rule_catches_seeded_width(snippet):
+    assert fixed_widths(snippet, "seeded") == {"seeded:f": [2]}
+
+
+def test_width_rule_spares_keys_and_sql_coalesce():
+    src = (
+        "def f(df, n):\n"
+        '    a = df.repartition("src")\n'
+        "    b = df.repartition(n)\n"
+        '    c = df.select(F.coalesce(F.col("x"), F.lit(0)))\n'
+        '    return df.repartition(F.col("k"))\n'
+    )
+    assert fixed_widths(src, "seeded") == {}
+
+
+@pytest.mark.parametrize(
+    "snippet",
+    [
+        'os.environ.setdefault("SPARK_GRAFT_X", "1")\n',
+        'def f():\n    os.environ["SPARK_GRAFT_X"] = "1"\n',
+        'from os import environ\nenviron["X"] = "1"\n',
+        'os.environ["PATH"] += ":/x"\n',
+    ],
+)
+def test_environ_rule_catches_seeded_write(snippet):
+    assert environ_writes(snippet)
+
+
+def test_environ_rule_spares_reads():
+    src = (
+        'a = os.environ.get("X", "1")\n'
+        'b = os.environ["Y"]\n'
+        'c = {**os.environ, "Z": "1"}\n'
+    )
+    assert environ_writes(src) == []

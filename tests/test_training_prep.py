@@ -1,6 +1,6 @@
 """Invariant tests for the training-prep operator batch (contamination,
 fuzzy dedup, z-score anomalies, moment-based correlation, k-means,
-sequence packing).  Oracle parity runs in driver_sim; these assert the
+sequence packing).  Oracle parity runs in test_oracle_parity; these assert the
 semantic invariants no hash can express."""
 
 from __future__ import annotations

@@ -153,7 +153,10 @@ FORCE_REFRESH: tuple[str, ...] = (
 # trigram kernel and its DuckDB mirror (its five other ops are forced
 # above) and the two k-means ops onto one Lloyd loop, risk-first —
 # novelty's oracle text changed (hash-matched), the k-means ops are
-# rows-only with the same arithmetic.
+# rows-only with the same arithmetic.  Deferred last, with the window
+# still full: the three Python cents lanes moved onto the shared
+# half-away kernel tables.cents_np (oracles unchanged; the lanes rounded
+# half to even before, which no shipped price reaches).
 DEFERRED_REFRESH = (
     "llm_ngram_novelty",
     "llm_kmeans_cluster",
@@ -182,6 +185,9 @@ DEFERRED_REFRESH = (
     "src_partitioned_pruning",
     "src_schema_evolution",
     "src_text_lines",
+    "udf_grouped_arrow",
+    "udf_pandas_iter",
+    "udtf_table_arg",
 )
 
 

@@ -11,15 +11,15 @@ of a count-only interval join is quadratic in SF; pre-aggregating the
 probe side flattened it to linear (2.3 s).
 
 Usage:
-    VERIFY_OUT=/tmp/v001.txt python tests/driver_sim.py
-    SPARK_GRAFT_T2_SF_DIR=/root/testdata/sf0.1 VERIFY_OUT=/tmp/v01.txt \
-        VERIFY_UNPERSIST=1 python tests/driver_sim.py
-    # (VERIFY_UNPERSIST drops each op's checkpoint blocks between ops —
-    # a full-registry sf0.1 marathon in one 1 GB JVM otherwise
-    # accumulates storage and can flake a late heavy stage)
-    python tools/scale_audit.py /tmp/v001.txt /tmp/v01.txt [--data-ratio 10]
+    python tools/sweep_degenerate.py --sf /root/testdata/sf0.01 > v001.txt
+    PYSPARK_SUBMIT_ARGS="--driver-memory 4g pyspark-shell" \
+        python tools/sweep_degenerate.py --sf /root/testdata/sf0.1 > v01.txt
+    # (a full-registry sf0.1 pass in one JVM needs the 4 GB driver heap;
+    # the sweep releases each op's blocks after its result is consumed)
+    python tools/scale_audit.py v001.txt v01.txt [--data-ratio=10]
 
-Reads the `t2 <op>: ... spark_s=<sec>` lines each sweep writes.
+Reads the `OK|ROWS_ONLY|FAIL <op>: ... spark_s=<sec>` verdict lines the
+sweep prints (`--solo` lines, which add `wall_s=`, parse the same way).
 Interpretation guide:
   ratio < data-ratio      -> sublinear (fixed overhead amortizing): fine
   ratio ~ data-ratio      -> linear: fine
@@ -34,16 +34,16 @@ from __future__ import annotations
 import re
 import sys
 
-_LINE = re.compile(r"t2 ([a-z0-9_]+): rows=(\d+)\S* match=\S+ spark_s=([0-9.]+)")
+_LINE = re.compile(r"(?:OK|ROWS_ONLY|FAIL) ([a-z0-9_]+): .*\bspark_s=([0-9.]+)")
 
 
-def parse(path: str) -> dict[str, float]:
+def parse_lines(lines) -> dict[str, float]:
+    """``{op: spark_s}`` from sweep verdict lines; other lines are skipped."""
     out: dict[str, float] = {}
-    with open(path) as f:
-        for line in f:
-            m = _LINE.match(line.strip())
-            if m:
-                out[m.group(1)] = float(m.group(3))
+    for line in lines:
+        m = _LINE.match(line.strip())
+        if m:
+            out[m.group(1)] = float(m.group(2))
     return out
 
 
@@ -56,7 +56,7 @@ def main(argv: list[str]) -> int:
     if len(args) != 2:
         print(__doc__)
         return 2
-    small, big = parse(args[0]), parse(args[1])
+    small, big = (parse_lines(open(a)) for a in args)
     rows = []
     for n, t_small in small.items():
         # sub-100ms small-SF times are scheduler floor, not work: ratios

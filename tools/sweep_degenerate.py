@@ -11,7 +11,8 @@ known patterns finds instances; this sweep finds the CLASS: it swaps
 text, whitespace-only, single char, single word, zero-width unicode,
 exact duplicates) and `embeddings` for a set containing the zero
 vector, keeps every other sf0.001 table, and then runs the full
-registry through the same strict_compare the driver mirror uses.
+registry through the driver mirror's per-op check
+(tests/strict_diff.check_op).
 
 Verdict semantics:
   CRASH on either engine        -> fail (latent-partial expression)
@@ -145,17 +146,21 @@ Usage:
     python tools/sweep_degenerate.py --ctrlchars [ops...] # control chars
     python tools/sweep_degenerate.py --mixdim [ops...]   # 32/72-dim vectors
 
-    # strict mirror on an existing corpus directory instead of a built one
+    # strict mirror on an existing corpus directory instead of a built one;
+    # on the shipped sf0.01 corpus this is the grading driver's mirror
     python tools/sweep_degenerate.py --sf SF_DIR [ops...]
+    python tools/sweep_degenerate.py --sf /root/testdata/sf0.01 > out
 
     # one fresh process per op, timed, hard limit (default 120 s); takes
     # any one mode or --sf
     python tools/sweep_degenerate.py --bigdoc --solo [--timeout S] [ops...]
     python tools/sweep_degenerate.py --sf SF_DIR --solo [ops...]
 
-Each op prints one verdict line (OK / ROWS_ONLY / CONTRACT / FAIL) with
-``rows=`` and ``spark_s=``; ``--solo`` appends the child's ``wall_s=``
-or prints TIMEOUT.  Exit status is 1 on any FAIL or TIMEOUT.
+A run first prints its session's partitioning (``SESSION …``) and the
+driver's t1 smoke line (``SMOKE rows=…``, from ``__spark_entry__.entry``).  Each op then prints one verdict line (OK /
+ROWS_ONLY / CONTRACT / FAIL) with ``rows=`` and ``spark_s=``; ``--solo``
+appends the child's ``wall_s=`` or prints TIMEOUT.  Exit status is 1 on
+any FAIL, TIMEOUT or empty smoke.
 """
 
 from __future__ import annotations
@@ -1119,15 +1124,19 @@ def _select(only: set[str]) -> dict:
 
 def run_registry(d: str, only: set[str]):
     """Run every registered op (or the ``only`` subset) on the corpus at
-    ``d`` through the driver-mirror strict compare on both engines,
-    printing one verdict line per op with its row counts and Spark time;
-    returns (n_ok, n_rows_only, fails).  The ONE harness loop: every
-    corpus mode, ``--sf`` and each ``--solo`` child run it, so parity and
-    timing never come from a forked copy that drifts."""
+    ``d`` through ``strict_diff.check_op`` in a plain ``local[8]``
+    session — the grading driver's — printing the driver's t1 smoke line
+    and then one verdict line per op with its row counts and Spark time;
+    returns (n_ok, n_rows_only, fails).  The one harness loop: every
+    corpus mode, ``--sf`` (the driver mirror) and each ``--solo`` child
+    run it, so parity and timing never come from a forked copy that
+    drifts.  Launcher confs (``PYSPARK_SUBMIT_ARGS``) reach the session,
+    which is how the partition-order stress run varies its layout."""
     from pyspark.sql import SparkSession
 
-    from tests.strict_diff import canon, strict_compare
-    from un_datapipeline_spark.registry import ContractViolation
+    import __spark_entry__
+    from tests.oracle_diff import duck_connect
+    from tests.strict_diff import check_op
     from un_datapipeline_spark.session import release_scratch
 
     ops = _select(only)
@@ -1137,56 +1146,40 @@ def run_registry(d: str, only: set[str]):
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    # the one canonical table list + view setup (don't fork a copy here)
-    from tests.oracle_diff import duck_connect
-
+    sc, conf = spark.sparkContext, spark.conf
+    sc.setLogLevel("ERROR")
+    print(
+        f"SESSION master={sc.master} default_parallelism={sc.defaultParallelism} "
+        f"shuffle_partitions={conf.get('spark.sql.shuffle.partitions')} "
+        f"max_partition_bytes={conf.get('spark.sql.files.maxPartitionBytes')}",
+        flush=True,
+    )
+    smoke = __spark_entry__.entry(spark)
+    rows = smoke.collect()
+    print(f"SMOKE rows={len(rows)} schema={smoke.columns}", flush=True)
+    fails: list[str] = [] if rows else ["<smoke>"]
     con = duck_connect(d)
-    fails: list[str] = []
     n_ok = n_ro = 0
-    for name, op in ops.items():
-        t0 = time.perf_counter()
-        try:
-            spdf = op.fn(spark, d).toPandas()
-        except ContractViolation as ex:
-            # deliberate fail-fast on input the op's contract forbids
-            # (e.g. src_text_lines on embedded newlines) — the
-            # engine-correct answer on a corrupt corpus, counted as a
-            # contracted pass, never a crash
-            print(f"CONTRACT {name}: {str(ex).splitlines()[0][:160]}", flush=True)
-            n_ro += 1
-            continue
-        except Exception as ex:
-            print(f"FAIL {name}: SPARK CRASH {str(ex).splitlines()[0][:160]}", flush=True)
+    for i, (name, op) in enumerate(ops.items(), 1):
+        verdict, detail, *_ = check_op(spark, con, op, d)
+        print(f"{verdict} {name}: {detail}", flush=True)
+        n_ok += verdict == "OK"
+        n_ro += verdict in ("ROWS_ONLY", "CONTRACT")
+        if verdict == "FAIL":
             fails.append(name)
-            continue
-        stats = f"spark_s={time.perf_counter() - t0:.2f}"
-        if op.oracle is None:
-            try:
-                canon(spdf)
-            except TypeError as ex:
-                print(f"FAIL {name}: canon crash {ex} {stats}", flush=True)
-                fails.append(name)
-                continue
-            print(f"ROWS_ONLY {name}: rows={len(spdf)} {stats}", flush=True)
-            n_ro += 1
-            continue
-        try:
-            ocdf = con.execute(op.oracle).df()
-        except Exception as ex:
-            print(f"FAIL {name}: DUCKDB CRASH {str(ex).splitlines()[0][:160]}", flush=True)
-            fails.append(name)
-            continue
-        stats = f"rows={len(spdf)}/{len(ocdf)} {stats}"
-        problems = strict_compare(spdf, ocdf)
-        if problems:
-            print(f"FAIL {name}: {problems[0][:160]} {stats}", flush=True)
-            fails.append(name)
-        else:
-            print(f"OK {name}: {stats}", flush=True)
-            n_ok += 1
+        # The op's result is consumed (toPandas), so its scratch and its
+        # persisted blocks can go: a registry pass in one JVM otherwise
+        # piles up every op's checkpoint blocks, which starved a late op
+        # of execution memory at sf0.1 (UNABLE_TO_ACQUIRE_MEMORY).  Dead
+        # BROADCAST blocks are freed only once ContextCleaner sees their
+        # weak refs die after a JVM GC, and Spark's periodic GC fires
+        # every 30 min, so force one every 10 ops.
+        release_scratch(spark)
+        for jrdd in sc._jsc.getPersistentRDDs().values():
+            jrdd.unpersist(False)
+        if i % 10 == 0:
+            sc._jvm.System.gc()
     print(f"TOTAL ok={n_ok} rows_only={n_ro} fail={len(fails)} {fails}")
-    release_scratch(spark)
     spark.stop()
     return n_ok, n_ro, fails
 

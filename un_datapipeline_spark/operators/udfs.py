@@ -21,6 +21,7 @@ from pyspark.sql.types import StringType
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import (
     cents2_sum_sql,
+    cents_np,
     cents_sql,
     cents_sum_sql,
     load_table,
@@ -364,8 +365,9 @@ def udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays must be explicitly typed — ``pa.array(..., type=...)`` —
     because an untyped Python-list array infers a schema that fails the
     declared-schema check in the worker, probed).  The kernel computes
-    exact integer aggregates (cent sums via round-then-cast BIGINT), so
-    the DuckDB oracle hash-matches bit-for-bit.  Same scale contract as
+    exact integer aggregates (cent sums through the shared half-away
+    kernel ``tables.cents_np``, its one pandas step), so the DuckDB
+    oracle hash-matches bit-for-bit.  Same scale contract as
     every grouped map: one shuffle on the group key, per-group memory
     bounded by the largest group — for unbounded groups, pre-aggregate
     or use mapInArrow over partitions instead."""
@@ -377,13 +379,14 @@ def udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def kernel(t: pa.Table) -> pa.Table:
-        cents = pc.cast(pc.round(pc.multiply(t.column("l_extendedprice"), 100)), pa.int64())
+        # NULL price: no SUM contribution; an all-NULL group sums to NULL
+        cents = cents_np(t.column("l_extendedprice").drop_null().to_pandas())
         qty = pc.cast(t.column("l_quantity"), pa.int64())
         return pa.table(
             {
                 "l_returnflag": pa.array([t.column("l_returnflag")[0].as_py()], type=pa.string()),
                 "n": pa.array([t.num_rows], type=pa.int64()),
-                "cents": pa.array([pc.sum(cents).as_py()], type=pa.int64()),
+                "cents": pa.array([int(cents.sum()) if len(cents) else None], type=pa.int64()),
                 "max_qty": pa.array([pc.max(qty).as_py()], type=pa.int64()),
             }
         )
@@ -505,14 +508,16 @@ def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         scale = 100  # stand-in for an expensive-to-load resource
         for p, d in it:
             # nullable Int64 (round 9, class 4): SQL NULL arrives as NaN,
-            # and numpy .astype("int64") on NaN is a worker crash (or,
-            # via to_numpy, a silent INT64_MIN).  The pandas extension
-            # dtype carries <NA> through the arithmetic and back to SQL
-            # NULL at the Arrow boundary — the row drops out of SUM on
-            # both engines.
-            cents = (p * scale).round().astype("Int64")
-            bp = (d * scale).round().astype("Int64")
-            yield cents * (100 - bp)
+            # so the shared half-away cents kernel (tables.cents_np;
+            # pandas .round() is half-even) sees only the rows priced on
+            # both sides, and the others stay <NA> — SQL NULL at the
+            # Arrow boundary, so the row drops out of SUM on both engines.
+            ok = (p.notna() & d.notna()).to_numpy()
+            units = pd.Series(pd.NA, index=p.index, dtype="Int64")
+            if ok.any():
+                cents, bp = cents_np(p[ok]), cents_np(d[ok])
+                units[ok] = (cents * (scale - bp)).to_numpy(dtype="int64")
+            yield units
 
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -555,7 +560,9 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-stream plumbing delivers every row exactly once.
 
     Scale shape: PARTITION BY shuffles once on the key; UDTF state is
-    one accumulator per key, never the partition's rows."""
+    one key's counters and prices (one double per order), which
+    terminate() turns into exact cents through the shared half-away
+    kernel ``tables.cents_np``."""
 
     @udtf(returnType=(
         "custkey long, n_orders long, first_order timestamp, "
@@ -567,10 +574,7 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.n = 0
             self.first = None
             self.last = None
-            # None until the first priced order (round 9, class 4): the
-            # SQL SUM of an all-NULL group is NULL, not 0 — seeding 0
-            # would diverge for a customer whose every order is unpriced.
-            self.cents = None
+            self.prices = []
 
         def eval(self, row):
             self.key = row["o_custkey"]
@@ -582,11 +586,18 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.last = d
             tp = row["o_totalprice"]
             if tp is not None:  # NULL price: no SUM contribution
-                self.cents = (self.cents or 0) + int(round(tp * 100))
+                self.prices.append(tp)
 
         def terminate(self):
             if self.key is not None:
-                yield self.key, self.n, self.first, self.last, self.cents
+                # The SQL SUM of an all-NULL group is NULL, not 0
+                # (round 9, class 4).
+                cents = (
+                    int(cents_np(pd.Series(self.prices, dtype="float64")).sum())
+                    if self.prices
+                    else None
+                )
+                yield self.key, self.n, self.first, self.last, cents
 
     name = "order_stats_udtf"
     spark.udtf.register(name, OrderStats)
