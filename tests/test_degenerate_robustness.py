@@ -41,22 +41,29 @@ def degen_sf(tmp_path_factory):
     return str(d)
 
 
-def _both(spark, sf, name):
-    """Run op + oracle on the same dir through the driver-mirror diff."""
+@pytest.fixture(scope="module")
+def both(spark):
+    """``both(sf, name)``: run op ``name`` and its oracle on the corpus at
+    ``sf`` through the strict per-op check (tests/strict_diff.check_op),
+    passing on OK or ROWS_ONLY only — a CONTRACT fail-fast or a crash
+    fails the test.  One DuckDB connection per corpus dir, closed at
+    module teardown."""
     from tests.oracle_diff import duck_connect
-    from tests.strict_diff import canon, strict_compare
+    from tests.strict_diff import check_op
     from un_datapipeline_spark.registry import all_operators
 
-    op = all_operators()[name]
-    spdf = op.fn(spark, sf).toPandas()
-    if op.oracle is None:
-        canon(spdf)  # must at least survive the driver's canonicalizer
-        return None
-    con = duck_connect(sf)
-    problems = strict_compare(spdf, con.execute(op.oracle).df())
-    con.close()
-    assert not problems, f"{name}: {problems[:3]}"
-    return spdf
+    ops = all_operators()
+    cons = {}
+
+    def run(sf, name):
+        if sf not in cons:
+            cons[sf] = duck_connect(sf)
+        res = check_op(spark, cons[sf], ops[name], sf)
+        assert res.verdict in ("OK", "ROWS_ONLY"), f"{name}: {res.verdict} {res.detail}"
+
+    yield run
+    for con in cons.values():
+        con.close()
 
 
 # one representative per fixed class (the full sweeps cover the rest)
@@ -77,13 +84,13 @@ DEGEN_OPS = [
 
 
 @pytest.mark.parametrize("name", TINY_OPS)
-def test_tiny_tables_class(spark, tiny_sf, name):
-    _both(spark, tiny_sf, name)
+def test_tiny_tables_class(both, tiny_sf, name):
+    both(tiny_sf, name)
 
 
 @pytest.mark.parametrize("name", DEGEN_OPS)
-def test_degenerate_corpus_class(spark, degen_sf, name):
-    _both(spark, degen_sf, name)
+def test_degenerate_corpus_class(both, degen_sf, name):
+    both(degen_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -118,7 +125,7 @@ TIES_OPS = [
 
 
 @pytest.mark.parametrize("name", TIES_OPS)
-def test_ties_corpus_class(spark, ties_sf, name):
+def test_ties_corpus_class(both, ties_sf, name):
     """Round-7 hazard class: tied values at ranking boundaries.  Exact-
     duplicate vectors give bitwise-equal similarities, so a partial
     top-k that selects ties arbitrarily (argpartition) can drop the
@@ -126,7 +133,7 @@ def test_ties_corpus_class(spark, ties_sf, name):
     aligned timestamps land events exactly on session ends, where
     Spark's session_window is INCLUSIVE; a ties-collapsed series has
     zero variance, where Pearson r must be NULL on both engines."""
-    _both(spark, ties_sf, name)
+    both(ties_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -148,7 +155,7 @@ NONFINITE_OPS = [
 
 
 @pytest.mark.parametrize("name", NONFINITE_OPS)
-def test_nonfinite_corpus_class(spark, nonfinite_sf, name):
+def test_nonfinite_corpus_class(both, nonfinite_sf, name):
     """Round-8 hazard class: non-finite measurements.  The ingest
     contract (tables.normalize_events_value) maps NaN/±Inf → NULL at
     the scan boundary — without it 38 ops diverged (ANSI CAST_OVERFLOW
@@ -156,7 +163,7 @@ def test_nonfinite_corpus_class(spark, nonfinite_sf, name):
     rank/CDF/trim/rolling/series statistics additionally DROP missing
     measurements on both engines, because NULL ordering and NULL-list
     semantics differ between them."""
-    _both(spark, nonfinite_sf, name)
+    both(nonfinite_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -188,7 +195,7 @@ NULLS_OPS = [
 
 
 @pytest.mark.parametrize("name", NULLS_OPS)
-def test_nulls_corpus_class(spark, nulls_sf, name):
+def test_nulls_corpus_class(both, nulls_sf, name):
     """Round-9 hazard class: bulk NULLs in every nullable non-key column
     — the shape a real 100 TB feed always carries.  45/351 ops crashed
     or diverged on it before the class fixes (R09_NULLS_PLAN.md): numpy
@@ -196,7 +203,7 @@ def test_nulls_corpus_class(spark, nulls_sf, name):
     on None payloads, DuckDB concat/list aggregates skip NULLs where
     Spark propagates them, and window rank keys order NULLS FIRST in
     Spark vs NULLS LAST in DuckDB."""
-    _both(spark, nulls_sf, name)
+    both(nulls_sf, name)
 
 
 def test_fingerprint_sentinel_disambiguates_null_position(spark, tmp_path):
@@ -324,14 +331,14 @@ def test_session_window_boundary_is_inclusive(spark):
 
 
 @pytest.mark.parametrize("name", UNICODE_OPS)
-def test_unicode_corpus_class(spark, unicode_sf, name):
+def test_unicode_corpus_class(both, unicode_sf, name):
     """Round-7 hazard class: Spark masks/measures by UNICODE character
     semantics (Character.isLowerCase, codepoint length) while an
     ASCII-class oracle silently diverges on any non-ASCII letter —
     fn_mask_redact masked 'é' as 'x' where the old '[a-z]' oracle left
     it bare.  Oracles now use RE2 unicode categories; this pins the
     class on the multi-byte corpus."""
-    _both(spark, unicode_sf, name)
+    both(unicode_sf, name)
 
 
 def test_mask_redact_unicode_semantics(spark, tmp_path):
@@ -374,11 +381,11 @@ def test_mask_redact_unicode_semantics(spark, tmp_path):
     assert (row.masked_head, row.n_digits) == (orc[1], orc[2])
 
 
-def test_minhash_ml_survives_short_docs(spark, degen_sf):
+def test_minhash_ml_survives_short_docs(both, degen_sf):
     """The optimizer-re-evaluation class: approxSimilarityJoin re-plans
     its input subtree, so the shingle expression must be TOTAL and the
     filtered table frozen — a plain upstream filter regressed here."""
-    _both(spark, degen_sf, "llm_dedup_minhash_ml")
+    both(degen_sf, "llm_dedup_minhash_ml")
 
 
 def test_vector_norms_empty_and_null_embeddings(spark, tmp_path):
@@ -466,7 +473,7 @@ TIMEWARP_OPS = [
 
 
 @pytest.mark.parametrize("name", TIMEWARP_OPS)
-def test_timewarp_corpus_class(spark, timewarp_sf, name):
+def test_timewarp_corpus_class(both, timewarp_sf, name):
     """Round-9 second-wave hazard class: decades-out corrupt timestamps
     (pre-1970 negative epochs + far-future 2099).  The corpus stripes
     them densely (1/3 of events rows) to trigger decisively; a real
@@ -475,7 +482,7 @@ def test_timewarp_corpus_class(spark, timewarp_sf, name):
     explode off one outlier) and WATERMARK ops (monotonic event-time
     state silently drops every honest row).  The valid_ts contract
     (tables.py) bounds both, mirrored verbatim in each paired oracle."""
-    _both(spark, timewarp_sf, name)
+    both(timewarp_sf, name)
 
 
 def test_valid_ts_window_not_decayed():
@@ -533,7 +540,7 @@ MAGNITUDE_OPS = [
 
 
 @pytest.mark.parametrize("name", MAGNITUDE_OPS)
-def test_magnitude_corpus_class(spark, magnitude_sf, name):
+def test_magnitude_corpus_class(both, magnitude_sf, name):
     """Round-10 hazard class: FINITE but absurd-magnitude measurements
     (unit bug / mis-parsed id column — ±1e15, 1e18).  Before the ingest
     contract extension (abs(value) > 1e12 → NULL) 44 ops crashed: the
@@ -541,7 +548,7 @@ def test_magnitude_corpus_class(spark, magnitude_sf, name):
     1e15 absorbs every honest contribution below the double ulp even
     where both engines agree.  The corpus also stripes 1e-300, which the
     contract deliberately KEEPS (tiny rounds to 0 cents like 0.001)."""
-    _both(spark, magnitude_sf, name)
+    both(magnitude_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -561,13 +568,13 @@ MIXDIM_OPS = [
 
 
 @pytest.mark.parametrize("name", MIXDIM_OPS)
-def test_mixdim_corpus_class(spark, mixdim_sf, name):
+def test_mixdim_corpus_class(both, mixdim_sf, name):
     """Round-10 hazard class: mixed embedding dimensions (model-version
     mix — a re-embed job lands 32- or 72-wide rows into the 64-wide
     table).  The dimension layer of the vector-validity contract
     (llm_vectors.EMBED_DIM) excludes off-width vectors on both
     engines."""
-    _both(spark, mixdim_sf, name)
+    both(mixdim_sf, name)
 
 
 # the rows-only ANN family: no oracle, so the vector-validity contract is
@@ -663,7 +670,7 @@ BIGDOC_OPS = [
 
 
 @pytest.mark.parametrize("name", BIGDOC_OPS)
-def test_bigdoc_corpus_class(spark, bigdoc_sf, name):
+def test_bigdoc_corpus_class(both, bigdoc_sf, name):
     """Round-10 hazard class: one oversized document (520 KB OCR dump /
     minified JS class).  The bounded-prefix signature contract
     (tables.SIG_PREFIX_CHARS, mirrored in each paired oracle) bounds
@@ -671,7 +678,7 @@ def test_bigdoc_corpus_class(spark, bigdoc_sf, name):
     (dedup_extras.ngram_array) — the index-lambda formulation
     re-evaluated the split per element, O(len²) per doc, which was the
     real straggler mechanism."""
-    _both(spark, bigdoc_sf, name)
+    both(bigdoc_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -691,12 +698,12 @@ CTRLCHARS_OPS = [
 
 
 @pytest.mark.parametrize("name", CTRLCHARS_OPS)
-def test_ctrlchars_corpus_class(spark, ctrlchars_sf, name):
+def test_ctrlchars_corpus_class(both, ctrlchars_sf, name):
     """Round-10 hazard class: control characters inside documents.text
     (embedded newlines, CRLF, quotes+commas, tabs, NUL).  Exposed a
     LATENT PySpark trap: reader options set via .option() before
     .text() are overwritten by the method's own kwarg defaults."""
-    _both(spark, ctrlchars_sf, name)
+    both(ctrlchars_sf, name)
 
 
 def test_text_lines_contract_violation_is_typed(spark, ctrlchars_sf):
@@ -728,14 +735,14 @@ BADJSON_OPS = [
 
 
 @pytest.mark.parametrize("name", BADJSON_OPS)
-def test_badjson_corpus_class(spark, badjson_sf, name):
+def test_badjson_corpus_class(both, badjson_sf, name):
     """Round-10 hazard class: malformed JSON payloads (truncated
     objects, bare text, wrong types, duplicate keys).  Spark's JSON
     surfaces NULL malformed input; the oracles mirror with
     json_valid/json_usable guards, and ambiguous duplicate-key objects
     (Spark keeps the LAST dup, DuckDB the FIRST) are rejected on both
     sides."""
-    _both(spark, badjson_sf, name)
+    both(badjson_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -760,13 +767,13 @@ EMPTY_OPS = [
 
 
 @pytest.mark.parametrize("name", EMPTY_OPS)
-def test_empty_corpus_class(spark, empty_sf, name):
+def test_empty_corpus_class(both, empty_sf, name):
     """Round-10 hazard class: zero-row tables — the day-one shape of a
     scheduled pipeline (new partition/tenant, no data yet).  An empty
     write must still yield a queryable 0-row table; a count of matches
     is 0 over nothing; empty is a legitimate answer to an empty
     input."""
-    _both(spark, empty_sf, name)
+    both(empty_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -790,14 +797,14 @@ DUPKEYS_OPS = [
 
 
 @pytest.mark.parametrize("name", DUPKEYS_OPS)
-def test_dupkeys_corpus_class(spark, dupkeys_sf, name):
+def test_dupkeys_corpus_class(both, dupkeys_sf, name):
     """Round-10 hazard class: duplicate surrogate keys with differing
     payloads (at-least-once delivery / re-crawl / re-embed).  The
     deterministic per-key winner contract (tables.winner_document /
     winner_embedding / latest_event, mirrored in each paired oracle)
     restores one-logical-row-per-key semantics; before it, per-key set
     math emitted values a Jaccard can never take."""
-    _both(spark, dupkeys_sf, name)
+    both(dupkeys_sf, name)
 
 
 def test_jaccard_containment_stay_in_unit_range(spark, dupkeys_sf):
@@ -827,7 +834,8 @@ _MIRROR_CASES = [
 @pytest.mark.parametrize("corpus, winner", _MIRROR_CASES)
 def test_trigram_kernel_mirror(spark, request, monkeypatch, corpus, winner):
     """The gram-overlap family's trigram kernel (dedup_extras.
-    doc_trigrams and drop_hot_grams) and its DuckDB text give the same
+    doc_trigrams, then scale.drop_hot on the gram) and its DuckDB text
+    (doc_trigrams_sql, drop_hot_grams_sql) give the same
     (doc_id, gram) set, before and after the document-frequency cap — at
     the shipped cap, which no corpus here reaches (max df 72), and then
     at a cap of 2, which every one but the empty corpus exceeds.  The
@@ -837,6 +845,7 @@ def test_trigram_kernel_mirror(spark, request, monkeypatch, corpus, winner):
     Every oracle gram has three parts, so its ``gram IS NOT NULL``
     filter drops nothing but the short-document NULL."""
     from tests.oracle_diff import duck_connect
+    from un_datapipeline_spark import scale
     from un_datapipeline_spark.operators import dedup_extras as dx
     from un_datapipeline_spark.tables import load_table, winner_document
 
@@ -845,13 +854,13 @@ def test_trigram_kernel_mirror(spark, request, monkeypatch, corpus, winner):
     grams = dx.doc_trigrams(winner_document(d) if winner else d)
     con = duck_connect(sf)
     try:
-        for cap in (dx.MAX_GRAM_DF, 2):
-            monkeypatch.setattr(dx, "MAX_GRAM_DF", cap)
+        for cap in (scale.MAX_GRAM_DF, 2):
+            monkeypatch.setattr(scale, "MAX_GRAM_DF", cap)
             ctes = (
                 f"WITH grams AS ({dx.doc_trigrams_sql()}), "
                 f"gf AS ({dx.drop_hot_grams_sql()}) "
             )
-            for sp, rel in ((grams, "grams"), (dx.drop_hot_grams(grams), "gf")):
+            for sp, rel in ((grams, "grams"), (scale.drop_hot(grams, ["gram"]), "gf")):
                 got = {tuple(r) for r in sp.select("doc_id", "gram").collect()}
                 want = set(con.execute(f"{ctes} SELECT doc_id, gram FROM {rel}").fetchall())
                 assert got == want, (cap, rel, sorted(got ^ want)[:5])
@@ -1000,7 +1009,7 @@ ORPHAN_OPS = [
 
 
 @pytest.mark.parametrize("name", ORPHAN_OPS)
-def test_orphans_corpus_class(spark, orphans_sf, name):
+def test_orphans_corpus_class(both, orphans_sf, name):
     """Round-12 hazard class: dangling foreign keys (30% of
     events.user_id, 1/7 of lineitem.l_orderkey, 1/9 of orders.o_custkey
     point at rows that do not exist) — deleted accounts, GDPR erasure,
@@ -1009,7 +1018,7 @@ def test_orphans_corpus_class(spark, orphans_sf, name):
     operator ASSUMES referential integrity (broadcast spines built from
     the dim side, percent-of-dim denominators, digest lanes fed by
     LEFT-join NULLs)."""
-    _both(spark, orphans_sf, name)
+    both(orphans_sf, name)
 
 
 @pytest.fixture(scope="module")
@@ -1071,5 +1080,5 @@ HALF_CENT_OPS = ["udf_grouped_arrow", "udf_pandas_iter", "udtf_table_arg"]
 
 
 @pytest.mark.parametrize("name", HALF_CENT_OPS)
-def test_half_cent_prices_round_half_away(spark, half_cents_sf, name):
-    _both(spark, half_cents_sf, name)
+def test_half_cent_prices_round_half_away(both, half_cents_sf, name):
+    both(half_cents_sf, name)

@@ -8,6 +8,8 @@ blocks pushdown fails here, not at 1000 executors.
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 from un_datapipeline_spark.registry import all_operators
@@ -201,6 +203,14 @@ def test_jaccard_neighbors_no_cartesian(spark, sf_smoke):
     plan = plan_of(spark, "graph_jaccard_neighbors", sf_smoke)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_link_predict_expands_pairs_once(spark, sf_smoke):
+    """graph_link_predict_aa: the supplier-pair self-join (cust-keyed,
+    ``supp < supp``) runs once, inside the top-20 count; the survivors'
+    terms come from their own edge lists, not a second pair expansion."""
+    plan = plan_of(spark, "graph_link_predict_aa", sf_smoke)
+    assert len(re.findall(r"\(supp#\d+L? < supp#\d+L?\)", plan)) == 1, plan
 
 
 def test_semdedup_prune_is_grouped_per_cluster(spark, sf_smoke):

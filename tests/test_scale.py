@@ -1,13 +1,17 @@
 """Scale-machinery proofs: bucketed writes emit one file per bucket and
 their joins actually skip the shuffle (plan-level), salted joins return
-identical results to plain joins."""
+identical results to plain joins, and the co-occurrence kernel and its
+hub cap agree with a pure-Python count."""
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pyspark.sql.functions as F
+import pytest
 
+from un_datapipeline_spark import scale
 from un_datapipeline_spark.scale import bucketed_join, salted_join, write_bucketed
 from un_datapipeline_spark.tables import load_table
 
@@ -165,3 +169,79 @@ def test_parallelize_scan_spreads_deficient_scans_only(spark):
     # already at/above target = identity (no exchange added)
     wide = li.repartition(target)
     assert parallelize_scan(wide) is wide
+
+
+# (rows, schema, elem_cols, SQL pair predicate, the same in Python) —
+# set column ``s`` throughout
+_CO_CASES = {
+    "empty": ([], "s long, e string", ["e"], "x.s < y.s", lambda a, b: a < b),
+    # p and r are each held by one set only and form no pair
+    "single-holder": (
+        [(1, "p"), (1, "q"), (2, "q"), (2, "t"), (3, "t"), (3, "q"), (3, "r")],
+        "s long, e string", ["e"], "x.s < y.s", lambda a, b: a < b,
+    ),
+    # an LSH (band, bucket) element: equal buckets in different bands
+    # are different elements
+    "two-column": (
+        [(1, 0, 7), (2, 0, 7), (3, 1, 7), (1, 1, 7), (2, 1, 9), (3, 0, 9)],
+        "s long, band int, bucket long", ["band", "bucket"], "x.s < y.s",
+        lambda a, b: a < b,
+    ),
+    # the ROUGE adjacency: each even set against its successor only
+    "adjacency": (
+        [(s, w) for s in range(6) for w in ("a", "b", "c")[: s % 3 + 1]],
+        "s long, w string", ["w"], "x.s % 2 = 0 AND y.s = x.s + 1",
+        lambda a, b: a % 2 == 0 and b == a + 1,
+    ),
+}
+
+
+def _py_co_occurrence(rows, n_elem, pred) -> Counter:
+    return Counter(
+        (x[0], y[0])
+        for x in rows
+        for y in rows
+        if x[1 : 1 + n_elem] == y[1 : 1 + n_elem] and pred(x[0], y[0])
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_CO_CASES))
+def test_co_occurrence_matches_python_count(spark, case):
+    rows, schema, elem_cols, pairs, pred = _CO_CASES[case]
+    rel = spark.createDataFrame(rows, schema)
+    got = {
+        (r.a, r.b): r.shared
+        for r in scale.co_occurrence(rel, "s", elem_cols, pairs).collect()
+    }
+    assert got == _py_co_occurrence(rows, len(elem_cols), pred)
+
+
+# element columns -> (schema, a hot, an edge and a cold element)
+_HUB_CASES = {
+    "one-column": (["e"], "s long, e string", [("hot",), ("edge",), ("cold",)]),
+    "two-column": (
+        ["band", "bucket"], "s long, band int, bucket long", [(0, 1), (0, 2), (1, 1)]
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_HUB_CASES))
+def test_drop_hot_drops_elements_above_the_cap(spark, case):
+    """An element held by MAX_GRAM_DF + 1 sets is dropped from every set
+    that holds it; one held by exactly MAX_GRAM_DF sets stays, and so
+    does every pair it makes."""
+    elem_cols, schema, (hot, edge, cold) = _HUB_CASES[case]
+    cap = scale.MAX_GRAM_DF
+    rows = (
+        [(s, *hot) for s in range(cap + 1)]
+        + [(s, *edge) for s in range(cap)]
+        + [(s, *cold) for s in (0, 1)]
+    )
+    kept = scale.drop_hot(spark.createDataFrame(rows, schema), elem_cols)
+    want = sorted(r for r in rows if r[1:] != hot)
+    assert sorted(tuple(r[c] for c in ["s", *elem_cols]) for r in kept.collect()) == want
+    got = {
+        (r.a, r.b): r.shared
+        for r in scale.co_occurrence(kept, "s", elem_cols, "x.s < y.s").collect()
+    }
+    assert got == _py_co_occurrence(want, len(elem_cols), lambda a, b: a < b)

@@ -3,7 +3,8 @@
 A pure-Python AST scan of ``un_datapipeline_spark/``; it starts no Spark
 and runs in well under a second.  Each rule has a seeded-snippet test, so
 a rule that stops seeing its spelling fails too.  Rules are numbered as
-in ROADMAP item 7 (rule 5, bounded driver collects, is open).
+in the old ROADMAP item 7, the scale lint (rule 5, bounded driver
+collects, is open under ROADMAP item 2).
 
 1. **One owner for materialization.**  ``.localCheckpoint(`` appears only
    in ``session.py``, whose ``ckpt``/``graft_checkpoint`` choose between
@@ -32,6 +33,13 @@ in ROADMAP item 7 (rule 5, bounded driver collects, is open).
    top-level function or constant that holds it.  ``TIGHT_CENTS_ORACLES``
    lists the oracles that may keep their own spelling, each with its
    reason.
+7. **One owner for the hub cap.**  Elements held by more than
+   ``MAX_GRAM_DF`` sets are dropped before a co-occurrence self-join by
+   ``scale.drop_hot``; its DuckDB mirror for the gram family is
+   ``dedup_extras.drop_hot_grams_sql``.  A comparison against
+   ``MAX_GRAM_DF`` anywhere else — Python (``F.col("df") > MAX_GRAM_DF``)
+   or SQL text interpolating it (``HAVING count(*) > {MAX_GRAM_DF}``) —
+   is a second copy of the cap, keyed ``module:function``.
 """
 
 from __future__ import annotations
@@ -511,3 +519,77 @@ def test_environ_rule_spares_reads():
         'c = {**os.environ, "Z": "1"}\n'
     )
     assert environ_writes(src) == []
+
+
+# --------------------------------------------------------------------------
+# Rule 7: one owner for the hub cap
+# --------------------------------------------------------------------------
+
+HUB_CAP_OWNERS = {"scale:drop_hot", "dedup_extras:drop_hot_grams_sql"}
+
+_SQL_COMPARE_END = re.compile(r"[<>]=?\s*$")
+
+
+def _is_cap(node: ast.AST) -> bool:
+    return getattr(node, "id", getattr(node, "attr", None)) == "MAX_GRAM_DF"
+
+
+def hub_cap_findings(src: str, module: str) -> dict[str, list[int]]:
+    """``{"module:function": [lines]}`` of comparisons against
+    ``MAX_GRAM_DF`` (a name or an attribute): a Python ``<``/``<=``/``>``/
+    ``>=`` with it on either side, or an f-string that interpolates it
+    right after a SQL comparison operator."""
+    found: dict[str, list[int]] = {}
+    for stmt in ast.parse(src).body:
+        name = getattr(stmt, "name", None) or f"line{stmt.lineno}"
+        for node in ast.walk(stmt):
+            hit = isinstance(node, ast.Compare) and any(
+                isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE)) for op in node.ops
+            ) and any(_is_cap(side) for side in (node.left, *node.comparators))
+            if isinstance(node, ast.JoinedStr):
+                hit = any(
+                    isinstance(v, ast.FormattedValue)
+                    and _is_cap(v.value)
+                    and isinstance(prev, ast.Constant)
+                    and _SQL_COMPARE_END.search(prev.value)
+                    for prev, v in zip(node.values, node.values[1:])
+                )
+            if hit:
+                found.setdefault(f"{module}:{name}", []).append(node.lineno)
+    return found
+
+
+def test_hub_cap_has_one_owner():
+    found: dict[str, list[int]] = {}
+    for p in sorted(PKG.rglob("*.py")):
+        found |= hub_cap_findings(p.read_text(), p.stem)
+    stray = {k: v for k, v in found.items() if k not in HUB_CAP_OWNERS}
+    assert not stray, f"cap hub elements through scale.drop_hot: {stray}"
+    assert HUB_CAP_OWNERS <= found.keys(), f"owners not seen: {HUB_CAP_OWNERS - found.keys()}"
+
+
+@pytest.mark.parametrize(
+    "snippet",
+    [
+        # llm_doc_fingerprint's private copy, before scale.drop_hot
+        "def f(raw):\n    hot = (\n        raw.groupBy(\"h\")\n"
+        "        .agg(F.count(F.lit(1)).alias(\"df\"))\n"
+        "        .filter(F.col(\"df\") > MAX_GRAM_DF)\n    )\n",
+        "def f(g):\n    return g.filter(dx.MAX_GRAM_DF <= F.col(\"df\"))\n",
+        'Q = f"SELECT gram FROM grams GROUP BY gram HAVING count(*) > {MAX_GRAM_DF}"\n',
+        'def q():\n    return f"""HAVING count(*)>={scale.MAX_GRAM_DF})"""\n',
+    ],
+)
+def test_hub_cap_rule_catches_seeded_copy(snippet):
+    assert hub_cap_findings(snippet, "seeded")
+
+
+def test_hub_cap_rule_spares_other_uses():
+    src = (
+        '"""Docstring: grams with df > MAX_GRAM_DF are dropped."""\n'
+        "MAX_GRAM_DF = 100\n"
+        'A = f"the cap is {MAX_GRAM_DF}"\n'
+        "B = F.lit(MAX_GRAM_DF)\n"
+        "C = MAX_GRAM_DF == 100\n"
+    )
+    assert hub_cap_findings(src, "seeded") == {}

@@ -156,7 +156,12 @@ FORCE_REFRESH: tuple[str, ...] = (
 # rows-only with the same arithmetic.  Deferred last, with the window
 # still full: the three Python cents lanes moved onto the shared
 # half-away kernel tables.cents_np (oracles unchanged; the lanes rounded
-# half to even before, which no shipped price reaches).
+# half to even before, which no shipped price reaches).  Deferred last,
+# with the window still full: the three ops outside both lists that moved
+# onto the one co-occurrence kernel (scale.co_occurrence / drop_hot; its
+# 14 other ops are forced above), risk-first — llm_rouge_overlap is
+# hash-matched (count over distinct tokens replaces countDistinct), the
+# fingerprint and MinHash ops are rows-only with the same pair sets.
 DEFERRED_REFRESH = (
     "llm_ngram_novelty",
     "llm_kmeans_cluster",
@@ -188,6 +193,9 @@ DEFERRED_REFRESH = (
     "udf_grouped_arrow",
     "udf_pandas_iter",
     "udtf_table_arg",
+    "llm_rouge_overlap",
+    "llm_doc_fingerprint",
+    "llm_dedup_near_minhash",
 )
 
 

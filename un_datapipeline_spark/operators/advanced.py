@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from un_datapipeline_spark import scale
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.session import ckpt, iteration_scope
 from un_datapipeline_spark.operators.dedup_extras import (
@@ -437,11 +438,7 @@ def _dup_edges(d: DataFrame) -> DataFrame:
         gram_overlap(grams, ALL_PAIRS).filter(F.expr(JACCARD) >= 0.5).select("a", "b")
     )
     hashes = d.select("doc_id", F.md5("text").alias("h"))
-    medges = (
-        hashes.alias("x")
-        .join(hashes.alias("y"), F.expr("x.h = y.h AND x.doc_id < y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-    )
+    medges = scale.co_occurrence(hashes, "doc_id", ["h"], ALL_PAIRS).select("a", "b")
     return jedges.union(medges).distinct()
 
 

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from un_datapipeline_spark import scale
 from un_datapipeline_spark.session import ckpt
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import (
@@ -58,21 +59,12 @@ def trigram_array(toks):
 
 
 # --------------------------------------------------------------------------
-# The gram-overlap kernel: one definition per mechanism of the word-
-# trigram dedup family, each with its DuckDB text beside it (the
-# llm_vectors.valid_vec / valid_vec_sql pairing).  An op picks whether to
-# cap document frequency and its pair predicate; only its score and
-# threshold are its own.
+# The gram-overlap family: the word-trigram build and the DuckDB twins of
+# the scale.drop_hot / scale.co_occurrence kernel, each beside its Spark
+# side (the llm_vectors.valid_vec / valid_vec_sql pairing).  An op picks
+# whether to cap document frequency and its pair predicate; only its
+# score and threshold are its own.
 # --------------------------------------------------------------------------
-
-# Grams appearing in more than this many documents are boilerplate and
-# are dropped before the gram-equality join: a gram with document
-# frequency df produces up to df² candidate pairs in its shuffle bucket,
-# so the cap bounds every bucket at MAX_GRAM_DF² pairs regardless of
-# corpus size (an absolute cap, NOT a corpus fraction — 1% of 1B docs
-# would still be a 10^14-pair bucket).  Boilerplate grams carry no
-# near-dup signal anyway (C4/Gopher drop them for quality reasons too).
-MAX_GRAM_DF = 100
 
 # Pair predicates for gram_overlap / gram_overlap_sql, over the x (a)
 # and y (b) sides: probe docs vs every later doc, a new batch vs the
@@ -116,55 +108,32 @@ def doc_trigrams_sql() -> str:
   ) WHERE gram IS NOT NULL"""
 
 
-def drop_hot_grams(grams: DataFrame) -> DataFrame:
-    """``grams`` without the grams of document frequency > MAX_GRAM_DF.
-
-    The hot-gram set is tiny by construction (a vocabulary-bounded
-    groupBy with map-side combine finds it; only grams clearing the cap
-    survive), so it broadcasts and the filter is a broadcast anti-join —
-    the fact-side gram stream never shuffles on a hot key.  The capped
-    stream feeds several branches (sizes and both join sides), so it is
-    materialized once; DISK_ONLY because it is data-sized (SCALING.md
-    storage discipline)."""
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    return grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-
-
 def drop_hot_grams_sql() -> str:
-    """DuckDB mirror of :func:`drop_hot_grams` over relation ``grams``."""
+    """DuckDB mirror of ``scale.drop_hot(grams, ["gram"])`` over relation
+    ``grams``: the same MAX_GRAM_DF hub cap, the one other place that
+    compares a document frequency with it."""
     return f"""
   SELECT g.* FROM grams g WHERE g.gram NOT IN (
-    SELECT gram FROM grams GROUP BY gram HAVING count(*) > {MAX_GRAM_DF})"""
+    SELECT gram FROM grams GROUP BY gram HAVING count(*) > {scale.MAX_GRAM_DF})"""
 
 
 def gram_overlap(grams: DataFrame, pairs: str) -> DataFrame:
     """(a, b, shared, na, nb): document pairs meeting ``pairs`` that
-    share at least one gram, their shared-gram count and both gram-set
-    sizes.  The gram-equality join only meets rows sharing a gram, so it
-    shuffles by gram and never forms unrelated pairs."""
+    share at least one gram (scale.co_occurrence over the distinct
+    (doc_id, gram) rows), their shared-gram count and both gram-set
+    sizes."""
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        grams.alias("x")
-        .join(grams.alias("y"), F.expr(f"x.gram = y.gram AND {pairs}"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
     return (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
+        scale.co_occurrence(grams, "doc_id", ["gram"], pairs)
+        .join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
         .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
         .select("a", "b", "shared", F.col("sa.n").alias("na"), F.col("sb.n").alias("nb"))
     )
 
 
 def gram_overlap_sql(grams: str, pairs: str) -> str:
-    """DuckDB mirror of :func:`gram_overlap` over relation ``grams``."""
+    """DuckDB mirror of :func:`gram_overlap` over relation ``grams``: its
+    ``inter`` CTE is the scale.co_occurrence self-join."""
     return f"""
   WITH sizes AS (
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM {grams} GROUP BY doc_id
@@ -201,7 +170,7 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Skew guard (round-3 verdict item 5): grams with document frequency
     > MAX_GRAM_DF are dropped on BOTH sides (Spark and oracle) before
     the join, so no shuffle bucket can exceed MAX_GRAM_DF² candidate
-    pairs at any corpus size (drop_hot_grams).  Jaccard sizes are
+    pairs at any corpus size (scale.drop_hot).  Jaccard sizes are
     computed over the same capped gram sets, keeping the metric
     internally consistent.
 
@@ -212,7 +181,7 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key winner (tables.winner_document, mirrored in the oracle)
     restores set semantics; 0 <= jac <= 1 is pytest-pinned."""
     d = load_table(spark, sf_dir, "documents")
-    overlap = gram_overlap(drop_hot_grams(doc_trigrams(d)), PROBE_PAIRS)
+    overlap = gram_overlap(scale.drop_hot(doc_trigrams(d), ["gram"]), PROBE_PAIRS)
     jac = F.expr(JACCARD)
     return overlap.filter(jac >= 0.5).select("a", "b", F.round(jac, 6).alias("jac"))
 
@@ -574,7 +543,7 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     texts' gram sets and containment leaves [0,1] (probed: 2.0 — a
     silent wrong answer)."""
     d = load_table(spark, sf_dir, "documents")
-    overlap = gram_overlap(drop_hot_grams(doc_trigrams(d)), PROBE_PAIRS)
+    overlap = gram_overlap(scale.drop_hot(doc_trigrams(d), ["gram"]), PROBE_PAIRS)
     contain = F.expr(_CONTAINMENT)
     return overlap.filter(contain >= 0.6).select(
         "a", "b", F.round(contain, 6).alias("containment")
@@ -642,7 +611,7 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram SIGNATURE lane is prefix-capped (bounded-prefix contract);
     # the exact lane above stays whole-document md5 by design
     near = (
-        gram_overlap(drop_hot_grams(doc_trigrams(d)), BATCH_PAIRS)
+        gram_overlap(scale.drop_hot(doc_trigrams(d), ["gram"]), BATCH_PAIRS)
         .filter(F.expr(JACCARD) >= 0.5)
         .groupBy(F.col("a").alias("doc_id"))
         .agg(F.min("b").alias("near_match"))

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from un_datapipeline_spark import scale
 from un_datapipeline_spark.session import ckpt, iteration_scope
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table
@@ -39,23 +40,36 @@ def _cust_supp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected (u, v), u < v, of parts sharing ≥ 2 distinct orders —
-    the signal edges of the co-purchase graph.  Checkpointed once: every
-    consumer (kcore's peel, the BFS/LPA bidir union's two branches)
-    re-reads it, and the pair-join build behind it is the expensive plan."""
+def _supplier_pairs(e: DataFrame) -> DataFrame:
+    """(s1, s2, n_common), s1 < s2: supplier pairs with their number of
+    common customers over the distinct (cust, supp) edges ``e``."""
+    return scale.co_occurrence(e, "supp", ["cust"], "x.supp < y.supp").select(
+        F.col("a").alias("s1"), F.col("b").alias("s2"), F.col("shared").alias("n_common")
+    )
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v, shared), u < v: parts bought together in ``shared``
+    distinct orders — the co-purchase graph, scale.co_occurrence over
+    the distinct (order, part) rows."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
+    return scale.co_occurrence(
+        li, "l_partkey", ["l_orderkey"], "x.l_partkey < y.l_partkey"
+    ).select(F.col("a").alias("u"), F.col("b").alias("v"), "shared")
+
+
+def _repeat_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected (u, v), u < v, of parts sharing ≥ 2 distinct orders —
+    the signal edges of the co-purchase graph.  Checkpointed once: every
+    consumer (kcore's peel, the BFS/LPA bidir union's two branches)
+    re-reads it, and the pair-join build behind it is the expensive plan."""
     return (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
+        _copurchase_pairs(spark, sf_dir)
+        .filter(F.col("shared") >= 2)
         .select("u", "v")
         .transform(ckpt())
     )
@@ -233,32 +247,23 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Node similarity by neighborhood overlap: for every supplier pair,
     Jaccard of their customer sets (shared customers / union), top-20.
 
-    Pair generation is the per-customer self-join — fan-out per customer
-    is (suppliers-of-customer)², which is safe HERE because the supplier
-    axis is a bounded dimension (every customer buys from at most
-    |supplier| vendors), and that bound is what makes the exact oracle
-    feasible.  On an unbounded graph (doc↔shingle, user↔item) the same
-    statement must go through the capped/bucketed machinery instead:
-    llm_dedup_ngram_jaccard's MAX_GRAM_DF hub cap, or MinHash
-    (llm_dedup_near_minhash) when even capped exact counting is too
-    wide — this operator is the exact-small-graph end of that ladder.
+    Pair generation is the per-customer self-join (scale.co_occurrence)
+    — fan-out per customer is (suppliers-of-customer)², which is safe
+    HERE because the supplier axis is a bounded dimension (every
+    customer buys from at most |supplier| vendors), and that bound is
+    what makes the exact oracle feasible.  On an unbounded graph
+    (doc↔shingle, user↔item) the same kernel must run behind its hub
+    cap instead (scale.drop_hot, as llm_dedup_ngram_jaccard does), or
+    MinHash (llm_dedup_near_minhash) when even capped exact counting is
+    too wide — this operator is the exact-small-graph end of that
+    ladder.
     One shuffle for distinct edges, one for the pair counts, broadcast
     degree join, deterministic (jaccard DESC, s1, s2) order; the
     division is a single float op on exact integers, so it hash-matches
     bit-for-bit."""
     e = _cust_supp_edges(spark, sf_dir)
     deg = e.groupBy("supp").agg(F.count(F.lit(1)).alias("d"))
-    a = e.alias("a")
-    b = e.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.cust") == F.col("b.cust"))
-            & (F.col("a.supp") < F.col("b.supp")),
-        )
-        .groupBy(F.col("a.supp").alias("s1"), F.col("b.supp").alias("s2"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    common = _supplier_pairs(e)
     d1 = deg.select(F.col("supp").alias("s1"), F.col("d").alias("d1"))
     d2 = deg.select(F.col("supp").alias("s2"), F.col("d").alias("d2"))
     return (
@@ -285,13 +290,6 @@ def _degree_oriented_edges(
     undirected edge oriented from its lower-(degree, id) endpoint,
     (src, dst, dst_d) with dst_d the degree of dst.  Shared by
     graph_triangle_count and graph_local_clustering."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
     # Materialize the edge list and (below) the oriented table ONCE:
     # both feed 3-4 downstream branches (degrees, orientation, both
     # wedge sides, closure), and without the checkpoint each branch
@@ -300,9 +298,8 @@ def _degree_oriented_edges(
     # this is the standard materialize-reused-dataset pattern; the
     # checkpointed data is shuffle-sized (the edge list itself).
     e = (
-        a.join(b, (a.k == b.k) & (F.col("u") < F.col("v")))
+        _copurchase_pairs(spark, sf_dir)
         .select("u", "v")
-        .distinct()
         # DISK_ONLY: the edge list is shuffle-sized — default
         # MEMORY_AND_DISK pins it on the executor heap for the session
         # and OOMs a default-memory driver at 10x data (probed at
@@ -335,11 +332,11 @@ def _degree_oriented_edges(
     return deg, o
 
 
-# ---------------------------------------------------------------------------
-# Triangle counting (degree-oriented compact-forward)
-# ---------------------------------------------------------------------------
-
-_TRIANGLE_ORACLE = """
+# DuckDB twin of _degree_oriented_edges, the WITH clause its two oracles
+# continue: li (distinct order lines), e (the co-purchase edges, the
+# scale.co_occurrence self-join), deg, o (edges oriented from the
+# lower-(degree, id) endpoint) and od (o with dst's degree).
+_ORIENTED_EDGES_SQL = """
 WITH li AS (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
 ), e AS (
@@ -359,7 +356,14 @@ WITH li AS (
   FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
 ), od AS (
   SELECT o.src, o.dst, d.d AS dst_d FROM o JOIN deg d ON d.node = o.dst
-), wedge AS (
+"""
+
+
+# ---------------------------------------------------------------------------
+# Triangle counting (degree-oriented compact-forward)
+# ---------------------------------------------------------------------------
+
+_TRIANGLE_ORACLE = _ORIENTED_EDGES_SQL + """), wedge AS (
   SELECT w1.dst AS v, w2.dst AS w
   FROM od w1 JOIN od w2
     ON w2.src = w1.src
@@ -493,31 +497,29 @@ def graph_link_predict_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     common neighbor, so ln is never zero.
 
     Scale shape: like graph_jaccard_neighbors this is the
-    exact-small-graph end of the ladder — the per-customer self-join is
-    O(deg²); at 100 TB you cap or sample high-degree hubs first
-    (MAX_GRAM_DF discipline) or fall back to the MinHash/LSH end."""
+    exact-small-graph end of the ladder — the per-customer self-join
+    (scale.co_occurrence) is O(deg²); at 100 TB you cap high-degree
+    hubs first (scale.drop_hot) or fall back to the MinHash/LSH end."""
     e = _cust_supp_edges(spark, sf_dir)
     cdeg = e.groupBy("cust").agg(F.count(F.lit(1)).alias("d"))
-    a, b = e.alias("a"), e.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.cust") == F.col("b.cust")) & (F.col("a.supp") < F.col("b.supp")),
-    ).select(
-        F.col("a.supp").alias("s1"), F.col("b.supp").alias("s2"), F.col("a.cust").alias("cust")
-    )
     # Rank FIRST on the cheap exact count (TakeOrdered over the bounded
     # pair-count table), THEN collect/fold the 1/ln(deg) terms for the 20
     # survivors only — collecting per-pair term arrays for EVERY pair is
-    # the memory hazard the oracle also avoids.
-    top = (
-        pairs.groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .orderBy(F.desc("n_common"), "s1", "s2")
-        .limit(20)
-    )
-    terms = pairs.join(F.broadcast(top), ["s1", "s2"]).join(cdeg, "cust").select(
-        "s1", "s2", "n_common",
-        F.struct(F.col("cust"), (F.lit(1.0) / F.log(F.col("d"))).alias("t")).alias("ct"),
+    # the memory hazard the oracle also avoids.  The survivors' common
+    # customers come from their own two edge lists, so the pair
+    # expansion runs once, inside the count.
+    top = _supplier_pairs(e).orderBy(F.desc("n_common"), "s1", "s2").limit(20)
+    e1 = e.select(F.col("supp").alias("s1"), "cust")
+    e2 = e.select(F.col("supp").alias("s2"), "cust")
+    terms = (
+        F.broadcast(top)
+        .join(e1, "s1")
+        .join(e2, ["s2", "cust"])
+        .join(cdeg, "cust")
+        .select(
+            "s1", "s2", "n_common",
+            F.struct(F.col("cust"), (F.lit(1.0) / F.log(F.col("d"))).alias("t")).alias("ct"),
+        )
     )
     agg = terms.groupBy("s1", "s2", "n_common").agg(
         F.aggregate(
@@ -533,27 +535,7 @@ def graph_link_predict_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Local clustering coefficients (per-node triangle credit)
 # ---------------------------------------------------------------------------
 
-_LOCAL_CC_ORACLE = """
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), e AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b
-    ON b.l_orderkey = a.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-), deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-    SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e
-  ) GROUP BY node
-), o AS (
-  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND e.u < e.v)
-              THEN e.u ELSE e.v END AS src,
-         CASE WHEN du.d < dv.d OR (du.d = dv.d AND e.u < e.v)
-              THEN e.v ELSE e.u END AS dst
-  FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-), od AS (
-  SELECT o.src, o.dst, d.d AS dst_d FROM o JOIN deg d ON d.node = o.dst
-), wedge AS (
+_LOCAL_CC_ORACLE = _ORIENTED_EDGES_SQL + """), wedge AS (
   SELECT w1.src AS s, w1.dst AS v, w2.dst AS w
   FROM od w1 JOIN od w2
     ON w2.src = w1.src

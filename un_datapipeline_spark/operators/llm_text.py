@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from un_datapipeline_spark import scale
 from un_datapipeline_spark.session import ckpt, scratch_dir
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table
@@ -326,14 +327,9 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
             F.xxhash64(*cols).alias("bucket"),
         )
         bands = b if bands is None else bands.unionByName(b)
-    left = bands.select("band", "bucket", F.col("doc_id").alias("a"))
-    right = bands.select("band", "bucket", F.col("doc_id").alias("b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    return scale.co_occurrence(
+        bands, "doc_id", ["band", "bucket"], "x.doc_id < y.doc_id"
+    ).select("a", "b")
 
 
 def verify_candidates_jaccard(
@@ -437,18 +433,10 @@ def llm_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lower("w").alias("w"))
         .distinct()
     )
-    a = toks.filter(F.col("doc_id") % 2 == 0).alias("a")
-    b = toks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("b.doc_id") == F.col("a.doc_id") + 1)
-            & (F.col("a.w") == F.col("b.w")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.countDistinct("a.w").alias("n_common"))
+    pairs = scale.co_occurrence(
+        toks, "doc_id", ["w"], "x.doc_id % 2 = 0 AND y.doc_id = x.doc_id + 1"
+    ).select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), F.col("shared").alias("n_common")
     )
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sizes.alias("sa")

@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.storagelevel import StorageLevel
 
+from un_datapipeline_spark import scale
 from un_datapipeline_spark.session import ckpt
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table
@@ -285,43 +286,22 @@ def llm_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible in the oracle; identity invariants live in
     tests/test_llm_invariants.py."""
     d = load_table(spark, sf_dir, "documents")
-    # The fingerprint stream (explode every 8-char shingle, hash, keep
-    # ~6%) feeds THREE branches (per-doc counts and both pair-join
-    # sides); materialize the post-filter sample once so the shingle
-    # explosion runs once, not per branch.
-    from un_datapipeline_spark.operators.dedup_extras import MAX_GRAM_DF
-
     # Round-12 optimization: the fingerprint stream (shingle explosion +
-    # hash + mod-16 filter — the op's expensive stage) fed both the
-    # df-cap aggregate AND the anti-join left side, so it evaluated
-    # TWICE inside the fp materialization.  Checkpointing the ~6% sample
-    # once halves the heavy stage (solo sf0.1: 23.0 s → 13.7 s).
+    # hash + mod-16 filter — the op's expensive stage) feeds both the
+    # df-cap aggregate AND the anti-join left side; checkpointing the ~6%
+    # sample once runs the heavy stage once (solo sf0.1: 23.0 s → 13.7 s).
     raw = _fingerprints(d).transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
-    # df-cap before the self-join (round-12 scale audit — the same
-    # MAX_GRAM_DF contract every gram-equality join in the dedup family
-    # carries): a boilerplate fingerprint present in df documents
-    # contributes df² rows to the h-join bucket, unbounded at corpus
-    # scale.  Dropping h with df > MAX_GRAM_DF on BOTH the pair sides
-    # AND the per-doc counts keeps `shared == n_fp` consistent over the
-    # surviving sample; boilerplate hashes carry no containment signal
-    # (a doc whose every fingerprint is boilerplate leaves the candidate
-    # set — the documented MAX_GRAM_DF trade, dedup_extras.py:59).
-    hot = (
-        raw.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("h")
-    )
-    fp = raw.join(F.broadcast(hot), "h", "left_anti").transform(ckpt(storage_level=StorageLevel.DISK_ONLY))
+    # The hub cap before the self-join (scale.drop_hot): a boilerplate
+    # fingerprint present in df documents contributes df² rows to the
+    # h-join bucket, unbounded at corpus scale.  Dropping it on BOTH the
+    # pair sides AND the per-doc counts keeps `shared == n_fp` consistent
+    # over the surviving sample; boilerplate hashes carry no containment
+    # signal (a doc whose every fingerprint is boilerplate leaves the
+    # candidate set — the documented trade at scale.MAX_GRAM_DF).
+    fp = scale.drop_hot(raw, ["h"])
     counts = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     # containment: pairs sharing fingerprints, scored by overlap count
-    pairs = (
-        fp.alias("x")
-        .join(fp.alias("y"), F.col("x.h") == F.col("y.h"))
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    pairs = scale.co_occurrence(fp, "doc_id", ["h"], "x.doc_id < y.doc_id")
     return (
         pairs.join(counts.withColumnRenamed("doc_id", "a"), "a")
         .filter(F.col("shared") == F.col("n_fp"))  # a fully contained in b

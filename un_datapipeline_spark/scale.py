@@ -1,7 +1,7 @@
-"""Scale machinery: bucketed co-located joins and salted skew joins —
-the two techniques that keep fact⋈fact joins alive at 100 TB
-(SCALING.md §B-C), packaged as reusable utilities with plan-level tests
-(tests/test_scale.py).
+"""Scale machinery: bucketed co-located joins, salted skew joins and the
+one co-occurrence kernel — the join shapes that keep fact⋈fact joins and
+pair generation alive at 100 TB (SCALING.md §B-C), packaged as reusable
+utilities with plan-level tests (tests/test_scale.py).
 
 - **Bucketing**: persist both join sides bucketed+sorted on the key;
   subsequent joins read co-located buckets and skip BOTH shuffles
@@ -11,12 +11,30 @@ the two techniques that keep fact⋈fact joins alive at 100 TB
   explode the hot side's key space by a salt in [0,N) and replicate the
   other side N×; the shuffle spreads the hot key over N reducers.
   Results are identical to the plain join (asserted in tests).
+- **Co-occurrence**: pairs of sets that share an element, with the
+  shared count (:func:`co_occurrence`), after dropping hub elements
+  whose document frequency would make one join bucket quadratic
+  (:func:`drop_hot`).  Dedup, containment, LSH banding, ROUGE overlap
+  and the graph neighbor ops are all this one self-join.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
+
+from un_datapipeline_spark.session import ckpt
+
+# Elements held by more than this many sets are hubs (boilerplate grams,
+# template fingerprints) and are dropped before the element-equality
+# self-join: an element of document frequency df produces up to df²
+# candidate pairs in its shuffle bucket, so the cap bounds every bucket
+# at MAX_GRAM_DF² pairs regardless of corpus size (an absolute cap, NOT
+# a corpus fraction — 1% of 1B docs would still be a 10^14-pair
+# bucket).  Hub elements carry no near-dup signal anyway (C4/Gopher drop
+# boilerplate grams for quality reasons too).
+MAX_GRAM_DF = 100
 
 
 def parallelize_scan(df: DataFrame) -> DataFrame:
@@ -110,3 +128,50 @@ def salted_join(
         how,
     )
     return joined.drop("_salt")
+
+
+def drop_hot(rel: DataFrame, elem_cols: list[str]) -> DataFrame:
+    """``rel`` without the elements (``elem_cols``) held by more than
+    MAX_GRAM_DF rows — the hub cap ahead of :func:`co_occurrence`.
+
+    The hot-element set is tiny by construction (a vocabulary-bounded
+    groupBy with map-side combine finds it; only elements clearing the
+    cap survive), so it broadcasts and the filter is a broadcast
+    anti-join — the fact-side stream never shuffles on a hot key.  The
+    capped stream feeds several branches (set sizes and both join
+    sides), so it is materialized once; DISK_ONLY because it is
+    data-sized (SCALING.md storage discipline).  Its DuckDB mirror for
+    the gram family is dedup_extras.drop_hot_grams_sql."""
+    hot = (
+        rel.groupBy(*elem_cols)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > MAX_GRAM_DF)
+        .select(*elem_cols)
+    )
+    return rel.join(F.broadcast(hot), elem_cols, "left_anti").transform(
+        ckpt(storage_level=StorageLevel.DISK_ONLY)
+    )
+
+
+def co_occurrence(
+    rel: DataFrame, set_col: str, elem_cols: list[str], pairs: str
+) -> DataFrame:
+    """(a, b, shared): pairs of sets (``set_col`` values) that hold an
+    equal element (``elem_cols``) and meet ``pairs``, with the number of
+    element rows they share.
+
+    ``rel`` is self-joined as ``x`` (the a side) and ``y`` (the b side);
+    ``pairs`` is a SQL predicate over them, e.g. ``x.doc_id < y.doc_id``.
+    The element-equality join only meets rows sharing an element, so it
+    shuffles by element and never forms unrelated pairs; a hub element
+    of frequency df still costs df² rows, which :func:`drop_hot` bounds.
+
+    Precondition: ``rel`` holds distinct (set, element) rows.  Otherwise
+    ``shared`` counts multiplicity — the pair set is still exact."""
+    on = " AND ".join(f"x.{c} = y.{c}" for c in elem_cols)
+    return (
+        rel.alias("x")
+        .join(rel.alias("y"), F.expr(f"{on} AND {pairs}"))
+        .groupBy(F.col(f"x.{set_col}").alias("a"), F.col(f"y.{set_col}").alias("b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
