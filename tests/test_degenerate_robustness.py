@@ -8,37 +8,28 @@ the ordinary pytest loop.  See ROUND_NOTES.md round-6 for the catalog.
 
 from __future__ import annotations
 
-import importlib.util
-import sys
 from pathlib import Path
 
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tests import corpora
 
 
-def _tool():
-    spec = importlib.util.spec_from_file_location(
-        "sweep_degenerate", REPO / "tools" / "sweep_degenerate.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("sweep_degenerate", mod)
-    spec.loader.exec_module(mod)
-    return mod
+def _built(tmp_path_factory, build) -> str:
+    """A fresh dir holding the corpus ``build`` writes."""
+    d = tmp_path_factory.mktemp(build.__name__)
+    build(str(d))
+    return str(d)
 
 
 @pytest.fixture(scope="module")
 def tiny_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("tinysf")
-    _tool().build_tiny_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.tiny)
 
 
 @pytest.fixture(scope="module")
 def degen_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("degensf")
-    _tool().build_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.degenerate)
 
 
 @pytest.fixture(scope="module")
@@ -95,9 +86,7 @@ def test_degenerate_corpus_class(both, degen_sf, name):
 
 @pytest.fixture(scope="module")
 def unicode_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("unisf")
-    _tool().build_unicode_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.unicode)
 
 
 # one representative per round-7 --unicode class
@@ -110,9 +99,7 @@ UNICODE_OPS = [
 
 @pytest.fixture(scope="module")
 def ties_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("tiessf")
-    _tool().build_ties_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.ties)
 
 
 # one representative per round-7 --ties class
@@ -138,9 +125,7 @@ def test_ties_corpus_class(both, ties_sf, name):
 
 @pytest.fixture(scope="module")
 def nonfinite_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("nonfinsf")
-    _tool().build_nonfinite_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.nonfinite)
 
 
 # one representative per round-8 --nonfinite class
@@ -168,9 +153,7 @@ def test_nonfinite_corpus_class(both, nonfinite_sf, name):
 
 @pytest.fixture(scope="module")
 def nulls_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("nullssf")
-    _tool().build_nulls_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.nulls)
 
 
 # one representative per round-9 --nulls class (R09_NULLS_PLAN.md)
@@ -450,9 +433,7 @@ def test_vector_norms_empty_and_null_embeddings(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def timewarp_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("timewarpsf")
-    _tool().build_timewarp_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.timewarp)
 
 
 # one representative per timestamp-validity hazard class (tables.py
@@ -506,9 +487,7 @@ def test_valid_ts_window_not_decayed():
 
 @pytest.fixture(scope="module")
 def magnitude_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("magsf")
-    _tool().build_magnitude_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.magnitude)
 
 
 # one representative per round-10 --magnitude mechanism
@@ -553,9 +532,7 @@ def test_magnitude_corpus_class(both, magnitude_sf, name):
 
 @pytest.fixture(scope="module")
 def mixdim_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("mixdimsf")
-    _tool().build_mixdim_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.mixdim)
 
 
 # one representative per --mixdim mechanism (sweep_degenerate.py)
@@ -640,24 +617,54 @@ def ties_permuted_sfs(ties_sf, tmp_path_factory):
     return dirs
 
 
+@pytest.fixture(scope="module")
+def permuted_sf(tmp_path_factory):
+    return _built(tmp_path_factory, corpora.permuted)
+
+
 @pytest.mark.parametrize("name", ["llm_simsearch_ivf", "llm_simsearch_hnsw"])
-def test_ann_ops_row_order_invariant(spark, ties_sf, ties_permuted_sfs, name):
+def test_ann_ops_row_order_invariant(spark, ties_sf, ties_permuted_sfs, permuted_sf, name):
     """Exact-duplicate vectors tie bitwise; the in-batch pick must break
-    ties by id (probe_search's _topk_idx), not by the file's row order."""
+    ties by id (probe_search's _topk_idx), not by the file's row order.
+    The --permuted corpus (every base table in another row order) must
+    give the base corpus's answer too."""
     from un_datapipeline_spark.registry import all_operators
 
     fn = all_operators()[name].fn
-    base = sorted(tuple(r) for r in fn(spark, ties_sf).collect())
-    assert base
-    for d in ties_permuted_sfs:
-        assert sorted(tuple(r) for r in fn(spark, d).collect()) == base, d
+    for base, copies in ((ties_sf, ties_permuted_sfs), (corpora.BASE, [permuted_sf])):
+        want = sorted(tuple(r) for r in fn(spark, base).collect())
+        assert want
+        for d in copies:
+            assert sorted(tuple(r) for r in fn(spark, d).collect()) == want, d
+
+
+@pytest.fixture(scope="module")
+def wide_sf(tmp_path_factory):
+    return _built(tmp_path_factory, corpora.wide)
+
+
+# ops whose plans change once a scan splits: parallelize_scan gets a
+# multi-task input, and each write's file count follows its input tasks
+WIDE_OPS = ["fn_xml_roundtrip", "etl_compact_files", "sink_bucketed_write"]
+
+
+@pytest.mark.parametrize("name", WIDE_OPS)
+def test_wide_layout_class(spark, both, wide_sf, name):
+    """--wide: 64 row groups per file, read under the mode's split size
+    (corpora.scan_partitions), where lineitem scans in at least
+    defaultParallelism tasks.  The session's split size is restored
+    after."""
+    from un_datapipeline_spark.session import conf_scope
+
+    key = "spark.sql.files.maxPartitionBytes"
+    with conf_scope(spark, {key: spark.conf.get(key)}):
+        assert corpora.scan_partitions(spark, wide_sf) >= spark.sparkContext.defaultParallelism
+        both(wide_sf, name)
 
 
 @pytest.fixture(scope="module")
 def bigdoc_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("bigdocsf")
-    _tool().build_bigdoc_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.bigdoc)
 
 
 # one representative per round-10 --bigdoc mechanism (R10_BIGDOC_PLAN;
@@ -683,9 +690,7 @@ def test_bigdoc_corpus_class(both, bigdoc_sf, name):
 
 @pytest.fixture(scope="module")
 def ctrlchars_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("ctrlsf")
-    _tool().build_ctrlchars_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.ctrlchars)
 
 
 CTRLCHARS_OPS = [
@@ -718,9 +723,7 @@ def test_text_lines_contract_violation_is_typed(spark, ctrlchars_sf):
 
 @pytest.fixture(scope="module")
 def badjson_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("badjsonsf")
-    _tool().build_badjson_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.badjson)
 
 
 # one representative per round-10 --badjson mechanism (R10_BADJSON_PLAN)
@@ -747,9 +750,7 @@ def test_badjson_corpus_class(both, badjson_sf, name):
 
 @pytest.fixture(scope="module")
 def empty_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("emptysf")
-    _tool().build_empty_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.empty)
 
 
 # one representative per round-10 --empty class (R10_EMPTY_PLAN.md)
@@ -778,9 +779,7 @@ def test_empty_corpus_class(both, empty_sf, name):
 
 @pytest.fixture(scope="module")
 def dupkeys_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("dupsf")
-    _tool().build_dupkeys_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.dupkeys)
 
 
 # one representative per round-10 --dupkeys class (R10_DUPKEYS_PLAN.md)
@@ -962,30 +961,12 @@ def test_props_fixtures_are_flat():
         ).fetchall()
         assert_flat((r[0] for r in rows), f"testdata/{sf}")
 
-    import importlib.util as _ilu
-    from pathlib import Path
-
-    spec = _ilu.spec_from_file_location(
-        "sweep_degenerate", Path(__file__).parent.parent / "tools" / "sweep_degenerate.py"
-    )
-    sw = _ilu.module_from_spec(spec)
-    spec.loader.exec_module(sw)
-    src = (Path(__file__).parent.parent / "tools" / "sweep_degenerate.py").read_text()
-    import re as _re
-
-    m = _re.search(r"bad = \[(.*?)\]", src, _re.S)
-    assert m, "badjson stripe list moved — update this tripwire"
-    stripe = [
-        _s for _s in _re.findall(r"'((?:[^'\\]|\\.)*)'", m.group(1))
-    ]
-    assert_flat(stripe, "sweep badjson stripe")
+    assert_flat(corpora.BAD_JSON, "sweep badjson stripe")
 
 
 @pytest.fixture(scope="module")
 def orphans_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("orphanssf")
-    _tool().build_orphans_dataset(str(d))
-    return str(d)
+    return _built(tmp_path_factory, corpora.orphans)
 
 
 # one representative per orphan-FK risk class the round-12 probe named

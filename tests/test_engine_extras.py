@@ -71,7 +71,8 @@ def test_compact_preserves_rows_and_hits_layout(spark, sf_smoke):
 def test_compact_contract_on_multi_file_tiny_input(spark, tmp_path):
     """The round-6 accepted residual, now closed (VERDICT r06 item 6 /
     ADVICE r06): >=4 rows arriving in SEVERAL tiny input files used to
-    round-robin-collide below 4 written files and undershoot the
+    collide below 4 written files (round-robin then, hashed on
+    l_orderkey now) and undershoot the
     oracle's LEAST(4, GREATEST(rows,1)).  partitions_after now reports
     the contract value (placement-independent); this fixture pins it on
     a 6-row lineitem split across 6 genuinely separate input files."""

@@ -103,18 +103,11 @@ def test_salted_join_spreads_hot_key(spark, tmp_path):
     largest (key, salt) reducer group must shrink toward hot/n_salts,
     which is the entire point of salting at 100 TB (one reducer no
     longer owns half the table)."""
-    import importlib.util
-    from pathlib import Path
+    from tests.corpora import skew
 
-    spec = importlib.util.spec_from_file_location(
-        "sweep_degenerate",
-        Path(__file__).parent.parent / "tools" / "sweep_degenerate.py",
-    )
-    sw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sw)
     d = tmp_path / "skewsf"
     d.mkdir()
-    sw.build_skew_dataset(str(d))
+    skew(str(d))
 
     ev = load_table(spark, str(d), "events").select("event_id", "user_id", "value")
     cust = load_table(spark, str(d), "customer").select("c_custkey", "c_mktsegment")

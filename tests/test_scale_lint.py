@@ -359,8 +359,8 @@ ALLOWED_WIDTHS = {
         "repartition(defaultParallelism) shrinks wide input; ROADMAP 2(a), open"
     ),
     "etl:etl_compact_files": (
-        "the op's layout contract: its oracle pins exactly 32 files written "
-        "by repartition(32) and 4 after coalesce(4)"
+        "the op's layout contract: its oracle pins exactly 32 partitions "
+        "written by repartition(32, l_orderkey) and 4 after coalesce(4)"
     ),
 }
 

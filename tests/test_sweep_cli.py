@@ -11,11 +11,14 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
 
 import pytest
+
+from tests import corpora
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -34,11 +37,27 @@ def sw():
 
 
 def test_every_mode_maps_to_an_existing_builder(sw):
-    assert None in sw.MODES and len(sw.MODES) == 16
+    assert sw.MODES is corpora.MODES and len(sw.MODES) == 18
+    assert sw.MODES[None] is corpora.degenerate
     for flag, build in sw.MODES.items():
-        assert flag is None or flag.startswith("--")
-        assert build.__name__.startswith("build_") and build.__name__.endswith("_dataset")
-        assert getattr(sw, build.__name__) is build, flag
+        assert build.__module__ == "tests.corpora", flag
+        assert getattr(corpora, build.__name__) is build, flag
+        assert flag is None or flag == f"--{build.__name__}"
+
+
+def test_wide_corpus_that_does_not_split_aborts(spark, tmp_path):
+    """A many-row-group corpus whose lineitem still scans in fewer than
+    defaultParallelism tasks aborts the run instead of going green: here
+    lineitem is the shipped one-row-group file, which the split size
+    derived from the other (larger) wide files leaves under-split."""
+    from un_datapipeline_spark.session import conf_scope
+
+    corpora.wide(str(tmp_path))
+    shutil.copy(f"{corpora.BASE}/lineitem.parquet", tmp_path / "lineitem.parquet")
+    key = "spark.sql.files.maxPartitionBytes"
+    with conf_scope(spark, {key: spark.conf.get(key)}):
+        with pytest.raises(SystemExit, match="lineitem scans in"):
+            corpora.scan_partitions(spark, str(tmp_path))
 
 
 @pytest.mark.parametrize(
@@ -46,11 +65,15 @@ def test_every_mode_maps_to_an_existing_builder(sw):
     [
         ["--no-such-mode"],
         ["--tiny", "--skew"],
+        ["--wide", "--permuted"],
         ["--sf", "/some/corpus", "--tiny"],
         ["--timeout", "30", "--skew"],
         ["--sf"],
     ],
-    ids=["unknown_flag", "two_modes", "sf_with_mode", "timeout_without_solo", "sf_no_dir"],
+    ids=[
+        "unknown_flag", "two_modes", "wide_and_permuted", "sf_with_mode",
+        "timeout_without_solo", "sf_no_dir",
+    ],
 )
 def test_misuse_aborts(sw, argv):
     with pytest.raises(SystemExit):
@@ -59,13 +82,13 @@ def test_misuse_aborts(sw, argv):
 
 def test_solo_skew_parse(sw):
     a = sw.parse_args(["--solo", "--timeout", "30", "--skew", "a", "b"])
-    assert (a.build, a.solo, a.timeout, a.only) == (sw.build_skew_dataset, True, 30, {"a", "b"})
+    assert (a.build, a.solo, a.timeout, a.only) == (corpora.skew, True, 30, {"a", "b"})
     assert a.sf is None
 
 
 def test_defaults_and_sf(sw):
     a = sw.parse_args([])
-    assert (a.build, a.sf, a.solo, a.timeout, a.only) == (sw.build_dataset, None, False, 120, set())
+    assert (a.build, a.sf, a.solo, a.timeout, a.only) == (corpora.degenerate, None, False, 120, set())
     a = sw.parse_args(["--sf", "/some/corpus", "op_x"])
     assert (a.build, a.sf, a.only) == (None, "/some/corpus", {"op_x"})
 

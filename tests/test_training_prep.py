@@ -91,12 +91,12 @@ def test_fuzzy_neighborhood_covers_every_honest_block():
     exception: its hot template block is adversarial BY DESIGN and must
     instead stay LARGER than the window, or the skew sweep stops
     exercising the bounded-W contract at all."""
-    import importlib.util as _ilu
     import tempfile
     from pathlib import Path
 
     import duckdb
 
+    from tests.corpora import MODES
     from un_datapipeline_spark.operators.training_prep import FUZZY_NEIGHBORHOOD
 
     def max_block(doc_path: str) -> int:
@@ -114,30 +114,23 @@ def test_fuzzy_neighborhood_covers_every_honest_block():
             FUZZY_NEIGHBORHOOD + 1
         ), f"testdata/{sf} ships an honest block wider than the window"
 
-    spec = _ilu.spec_from_file_location(
-        "sweep_degenerate",
-        Path(__file__).parent.parent / "tools" / "sweep_degenerate.py",
-    )
-    sw = _ilu.module_from_spec(spec)
-    spec.loader.exec_module(sw)
-    builders = sorted(n for n in dir(sw) if n.startswith("build_") and n.endswith("_dataset"))
-    assert "build_skew_dataset" in builders
+    assert "--skew" in MODES
     checked = 0
-    for name in builders:
+    for flag, build in MODES.items():
         with tempfile.TemporaryDirectory() as d:
-            getattr(sw, name)(d)
+            build(d)
             doc = f"{d}/documents.parquet"
             if not Path(doc).exists():
                 continue
             width = max_block(doc)
-            if name == "build_skew_dataset":
+            if flag == "--skew":
                 assert width > FUZZY_NEIGHBORHOOD + 1, (
                     "the skew corpus must keep a hot block WIDER than the "
                     "window — it pins the bounded-W recall contract"
                 )
             else:
                 assert width <= FUZZY_NEIGHBORHOOD + 1, (
-                    f"{name} now ships an honest (lang, prefix) block of "
+                    f"{build.__name__} now ships an honest (lang, prefix) block of "
                     f"{width} docs — wider than FUZZY_NEIGHBORHOOD+1; "
                     "re-derive the window (training_prep.py) before "
                     "trusting fuzzy-dedup recall"

@@ -339,7 +339,11 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         return len(fs.globStatus(parts))
 
     small_dir = scratch_dir(spark, "udps_small_")
-    fragmented = li.repartition(32)
+    # Hash on the key, not round-robin: Spark sorts every row before a
+    # round-robin exchange to keep it deterministic on retry
+    # (spark.sql.execution.sortBeforeRepartition, SPARK-23207); a hash
+    # exchange is deterministic without that sort.
+    fragmented = li.repartition(32, "l_orderkey")
     # The planned exchange's width, read without running anything: under
     # AQE, ``.rdd.getNumPartitions()`` runs the shuffle map stage as its
     # own job and the write then recomputes it.  ``sparkPlan`` (not
@@ -386,8 +390,8 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.schema(fragmented.schema).parquet(compact_dir)
     # Contract: coalesce(4) promises AT MOST 4, and below 4 rows the
     # physical count is placement-dependent (the writer skips all-empty
-    # tasks, and round-robin placement of k<4 rows across 32 partitions
-    # is start-offset-dependent).  The hash row therefore reports the
+    # tasks, and k<4 rows can hash to fewer than k of the 32
+    # partitions).  The hash row therefore reports the
     # CONTRACT value LEAST(4, GREATEST(rows, 1)) — the same expression
     # as the oracle, closing the round-6 accepted residual (a multi-
     # input-partition tiny corpus whose >=4 rows round-robin-collide
